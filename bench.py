@@ -173,7 +173,6 @@ def compose_output(detail: dict) -> tuple[str, str]:
             ("sustained100x", "events_per_sec_sessionize_sustained_100x"),
             ("hotkey", "events_per_sec_sessionize_hotkey_500k_1key"),
             ("stream", "events_per_sec_sessionize_streaming_steady"),
-            ("peruser", "events_per_sec_streaming_peruser_steady"),
             ("dedup", "events_per_sec_streaming_dedup_steady"),
         ]
         if detail.get(k) is not None
@@ -424,28 +423,20 @@ def main() -> None:
     # sessionizer (the reference's actual runtime shape) — the same 10×
     # replication (1 M events, 15 k keys) split into 4 files → 4
     # micro-batches, so per-batch fixed costs amortize and steady state is
-    # measurable. Two variants, both event-for-event identical in output:
-    #
-    # * bucketed (PRIMARY, the reference's own state layout —
-    #   Sessionize.scala:5 keyBy(hashCode % 1200) +
-    #   SessionizeGroupMapFunction.scala:13 MapState[ip, SessionState]):
-    #   groups by pmod(xxhash64(key), 128) and keeps the per-user map
-    #   inside each bucket, amortizing applyInPandasWithState's per-group
-    #   Arrow round trip (~2-3 ms/group/batch measured) over ~hundreds of
-    #   users. Measured r3: ~160 k ev/s steady on local[32] (≈5 k
-    #   ev/s/core vs the reference's 6 k/s per-subtask design assumption,
-    #   SessionizeGroupMapFunction.scala:99).
-    # * per-user (kept for comparison): one Spark group per key — the
-    #   natural Spark formulation; ~50 k ev/s steady at 15 k keys, bounded
-    #   by the per-group Arrow channel.
+    # measurable. The sessionizer uses the reference's own state layout
+    # (Sessionize.scala:5 keyBy(hashCode % 1200) +
+    # SessionizeGroupMapFunction.scala:13 MapState[ip, SessionState]): it
+    # groups by pmod(xxhash64(key), 128) and keeps the per-user map inside
+    # each bucket, amortizing applyInPandasWithState's per-group Arrow
+    # round trip (~2-3 ms/group/batch measured) over ~hundreds of users.
+    # Measured r3: ~160 k ev/s steady on local[32] (≈5 k ev/s/core vs the
+    # reference's 6 k/s per-subtask design assumption,
+    # SessionizeGroupMapFunction.scala:99).
     import json as _json
     import shutil
     import tempfile
 
-    from flink_realtime_sessionize_sample_spark.streaming import (
-        sessionize_stream,
-        sessionize_stream_bucketed,
-    )
+    from flink_realtime_sessionize_sample_spark.streaming import sessionize_stream_bucketed
 
     # The 1 M-event replay source is identical for every measured run —
     # write it ONCE and give each run only a fresh checkpoint dir (the
@@ -509,7 +500,6 @@ def main() -> None:
         "user_id", "ts", "event_id"
     )
     measure_stream(lambda s: sessionize_stream_bucketed(s), source_df=warm_events)
-    measure_stream(lambda s: sessionize_stream(s), source_df=warm_events)
 
     def best_stream(
         builder, runs: int = 3, **kw
@@ -536,9 +526,6 @@ def main() -> None:
 
     streaming_eps, streaming_steady_eps, n_data_batches, streaming_runs, streaming_spread = best_stream(
         lambda s: sessionize_stream_bucketed(s)
-    )
-    peruser_eps, peruser_steady_eps, _, peruser_runs, peruser_spread = best_stream(
-        lambda s: sessionize_stream(s)
     )
 
     # Streaming exact-dedup throughput: dropDuplicatesWithinWatermark over
@@ -888,10 +875,6 @@ def main() -> None:
                 "events_per_sec_sessionize_streaming_steady": streaming_steady_eps,
                 "events_per_sec_sessionize_streaming_steady_runs": streaming_runs,
                 "events_per_sec_sessionize_streaming_steady_spread": streaming_spread,
-                "events_per_sec_streaming_peruser_wall": peruser_eps,
-                "events_per_sec_streaming_peruser_steady": peruser_steady_eps,
-                "events_per_sec_streaming_peruser_steady_runs": peruser_runs,
-                "events_per_sec_streaming_peruser_steady_spread": peruser_spread,
                 "events_per_sec_streaming_dedup_wall": dedup_eps,
                 "events_per_sec_streaming_dedup_steady": dedup_steady_eps,
                 "events_per_sec_streaming_dedup_steady_runs": dedup_runs,

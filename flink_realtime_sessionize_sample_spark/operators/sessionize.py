@@ -23,9 +23,13 @@ The size/duration caps make exact sessionization inherently sequential
 from) — not expressible in window functions. But the whole cut chain is
 **forward-only**, so the operator is ONE shuffle on the key, ONE
 in-partition sort, and ONE Arrow-streamed ``mapInPandas`` pass with O(1)
-state carried across batches (``sessionize``). The common case inside a
-batch is pure vectorized numpy; only cap-tripping segments loop. The
-gap-only rule IS window-expressible and ships as the zero-Python
+state carried across batches (``sessionize``). The cut chain itself is one
+numpy kernel, ``make_session_kernel``: rows sorted by key and time plus a
+carried state per key in, per-row session start/duration plus state out.
+Batch carries state between Arrow batches; the streaming sessionizer
+(``streaming.sessionize_stream_bucketed``) carries it between micro-batches.
+The common case is pure vectorized numpy; only cap-tripping segments loop.
+The gap-only rule IS window-expressible and ships as the zero-Python
 ``sessionize_gap_only`` — the shape Catalyst optimizes end-to-end — for
 workloads that don't need the caps.
 
@@ -58,6 +62,117 @@ def _sec(col: str | Column) -> Column:
     return (F.unix_micros(c) / F.lit(1000000)).cast("long")  # micros are non-negative here; / then cast = floor
 
 
+def make_session_kernel(
+    gap_seconds: int = GAP_SECONDS,
+    max_events: int = MAX_SESSION_EVENTS,
+    max_duration_seconds: int = MAX_SESSION_DURATION_SECONDS,
+):
+    """Build THE session cut chain (SessionizeGroupMapFunction.scala:19-84)
+    shared by batch ``sessionize`` and ``streaming.sessionize_stream_bucketed``.
+
+    Returns ``(key_runs, cut_sessions)`` as CLOSURES, not module functions:
+    the pandas functions that call them ship to Python workers via
+    cloudpickle, which serializes dynamically-created functions BY VALUE but
+    module-level ones BY REFERENCE — and the workers of a caller-owned
+    SparkSession may not be able to import this package.
+
+    * ``key_runs(k)`` → start index of each run of equal keys in ``k``.
+    * ``cut_sessions(r0, sec, us, carry)`` takes rows sorted by (key, ts,
+      tiebreakers) as epoch ``sec``/``us`` arrays, their key-run starts
+      ``r0``, and the carried ``SessionState`` (SessionState.scala:3-9) of
+      each run as an int64 ``(4, len(r0))`` array of rows ``start_us,
+      first_sec, last_sec, count`` (count 0 = no open session). Returns
+      per-row session start micros, per-row duration seconds, and the
+      carry-out array of the same shape.
+
+    The carried state may be NEWER than the rows (a late micro-batch): until
+    a run's first cut its rows continue the carried session, with the gap
+    measured against the monotonic-max guarded ``last_sec``
+    (SessionizeGroupMapFunction.scala:72-77) — closed-form in the row index,
+    so it vectorizes. From the first cut on, the run is a fresh sorted
+    sequence: gap boundaries by shifted compare, cap-clean segments by
+    ``np.repeat``, and only segments that trip the 1499-event / 12 h caps
+    (rare by construction) take a sequential loop.
+    """
+
+    def key_runs(k):
+        import numpy as np
+
+        new = np.empty(len(k), dtype=bool)
+        new[0] = True
+        new[1:] = k[1:] != k[:-1]
+        return np.flatnonzero(new)
+
+    def cut_sessions(r0, sec, us, carry):
+        import numpy as np
+
+        n = len(sec)
+        c_start, c_first, c_last, c_count = carry
+        run_len = np.diff(np.append(r0, n))
+        prev = np.empty(n, dtype=np.int64)
+        prev[0] = sec[0]
+        prev[1:] = sec[:-1]
+        is_new = sec - prev > gap_seconds  # :31-45
+        is_new[r0] = True
+        cont = np.zeros(n, dtype=bool)  # row continues its run's carried session
+        cr = np.flatnonzero(c_count > 0)
+        if len(cr):
+            lens = run_len[cr]
+            crow = np.repeat(cr, lens)
+            pos = np.arange(lens.sum()) - np.repeat(np.cumsum(lens) - lens, lens)
+            ci = r0[crow] + pos
+            last = c_last[crow]
+            prev_eff = np.where(pos > 0, np.maximum(last, prev[ci]), last)
+            cut = (
+                (sec[ci] - prev_eff > gap_seconds)
+                | (c_count[crow] + pos >= max_events)
+                | (sec[ci] - c_first[crow] > max_duration_seconds)
+            )
+            n_cut = np.cumsum(cut)
+            n_cut -= np.repeat(n_cut[pos == 0] - cut[pos == 0], lens)  # cuts so far in the run
+            cont[ci] = n_cut == 0
+            is_new[ci] = (n_cut > 0) & (is_new[ci] | (cut & (n_cut == 1)))
+
+        # Segments: every session opening, plus each run start (a carried
+        # prefix is a segment whose anchor comes from the carry).
+        seg = is_new.copy()
+        seg[r0] = True
+        i0 = np.flatnonzero(seg)
+        i1 = np.append(i0[1:], n)
+        seg_len = i1 - i0
+        fs = sec[i0].copy()
+        fu = us[i0].copy()
+        c0 = np.zeros(len(i0), dtype=np.int64)
+        cs = np.flatnonzero(cont[i0])
+        if len(cs):
+            rs = np.searchsorted(r0, i0[cs])
+            fs[cs], fu[cs], c0[cs] = c_first[rs], c_start[rs], c_count[rs]
+        # Cap-clean iff the closing count is within budget and the last
+        # (latest) row is inside the 12 h span; a carried prefix always is.
+        ok = (c0 + seg_len <= max_events) & (sec[i1 - 1] - fs <= max_duration_seconds)
+        row_fs = np.repeat(fs, seg_len)
+        row_fu = np.repeat(fu, seg_len)
+        c_end = c0 + seg_len
+        for si in np.flatnonzero(~ok):
+            # Exact sequential cut chain (:47-68); gap cuts cannot fire
+            # inside a gap segment.
+            f, u, c = int(fs[si]), int(fu[si]), int(c0[si])
+            for i in range(i0[si], i1[si]):
+                c += 1
+                if c > max_events or sec[i] - f > max_duration_seconds:
+                    f, u, c = int(sec[i]), int(us[i]), 1
+                row_fs[i] = f
+                row_fu[i] = u
+            fs[si], fu[si], c_end[si] = f, u, c
+
+        ls = np.searchsorted(i0, r0 + run_len) - 1  # last segment of each run
+        last = sec[r0 + run_len - 1]
+        last = np.where(cont[i0[ls]], np.maximum(c_last, last), last)
+        return row_fu, sec - row_fs, np.stack((fu[ls], fs[ls], last, c_end[ls]))
+
+    return key_runs, cut_sessions
+
+
 def sessionize(
     df: DataFrame,
     key: str = "user_id",
@@ -75,19 +190,16 @@ def sessionize(
     Spark and DuckDB render identically.
 
     Implementation: ONE shuffle on ``key``, ONE in-partition sort, ONE
-    Arrow-streamed ``mapInPandas`` pass. The cut chain
-    (SessionizeGroupMapFunction.scala:35-83) is **forward-only** — every
-    event's session assignment depends only on earlier events of the same
-    key — so a single streaming pass with O(1) carry state between Arrow
-    batches computes it exactly; nothing ever needs to look ahead or buffer.
-    Within a batch the common case is fully vectorized: gap boundaries via
-    shifted compares, per-segment first/duration via ``np.repeat``; only
-    segments that actually trip the 1499-event / 12 h caps (rare by
-    construction) take a sequential loop. This replaced a window-function
-    fast-path + ``applyInPandas`` refinement design whose DAG branch point
-    recomputed the sort+window stack per branch (Catalyst column pruning
-    specializes each branch's subtree, defeating ReuseExchange) — measured
-    1.9× slower than this single pass at 1M rows / local[32].
+    Arrow-streamed ``mapInPandas`` pass through ``make_session_kernel``. The
+    cut chain (SessionizeGroupMapFunction.scala:35-83) is **forward-only** —
+    every event's session assignment depends only on earlier events of the
+    same key — so a single streaming pass that hands the last key run's
+    carry-out to the next Arrow batch computes it exactly; nothing ever needs
+    to look ahead or buffer. This replaced a window-function fast-path +
+    ``applyInPandas`` refinement design whose DAG branch point recomputed the
+    sort+window stack per branch (Catalyst column pruning specializes each
+    branch's subtree, defeating ReuseExchange) — measured 1.9× slower than
+    this single pass at 1M rows / local[32].
     """
     tiebreakers = list(tiebreakers)
     in_cols = list(df.columns)
@@ -109,85 +221,27 @@ def sessionize(
         .repartition(F.col(key))
         .sortWithinPartitions(key, ts, *tiebreakers)
     )
+    key_runs, cut_sessions = make_session_kernel(gap_seconds, max_events, max_duration_seconds)
 
     def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         import numpy as np
 
-        ck = None  # carried key value (None = no open session)
-        c_first_sec = c_first_us = 0
-        c_count = 0
-        c_prev_sec = 0
+        ck = carry = None  # last key of the previous batch and its carry-out
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             k = pdf[key].to_numpy()
             us = pdf.pop("_us").to_numpy()
             # floor-division == the reference's ts/1000 integer math (_sec)
             sec = us // 1_000_000
-
-            new_key = np.empty(n, dtype=bool)
-            new_key[0] = ck is None or k[0] != ck
-            new_key[1:] = k[1:] != k[:-1]
-            prev_sec = np.empty(n, dtype=np.int64)
-            prev_sec[0] = sec[0] if new_key[0] else c_prev_sec
-            prev_sec[1:] = sec[:-1]
-            is_new = new_key | (sec - prev_sec > gap_seconds)
-
-            # Gap-session segments. If row 0 continues the carried session,
-            # segment 0 starts "before" the batch with the carried state.
-            starts = np.flatnonzero(is_new)
-            cont = not is_new[0]
-            bounds = np.concatenate(([0], starts, [n])) if cont else np.concatenate((starts, [n]))
-            seg_i0 = bounds[:-1]
-            seg_i1 = bounds[1:]  # exclusive
-            seg_len = seg_i1 - seg_i0
-            nseg = len(seg_len)
-
-            seg_first_sec = sec[seg_i0].copy()
-            seg_first_us = us[seg_i0].copy()
-            seg_count0 = np.zeros(nseg, dtype=np.int64)
-            if cont:
-                seg_first_sec[0] = c_first_sec
-                seg_first_us[0] = c_first_us
-                seg_count0[0] = c_count
-
-            # A segment is cap-clean iff no size/duration cut can fire inside
-            # it: final count within budget AND last event inside the 12 h
-            # span (both monotone → checking the last row suffices).
-            last_sec = sec[seg_i1 - 1]
-            ok = (seg_count0 + seg_len <= max_events) & (
-                last_sec - seg_first_sec <= max_duration_seconds
-            )
-
-            row_first_sec = np.repeat(seg_first_sec, seg_len)
-            row_first_us = np.repeat(seg_first_us, seg_len)
-            # carry-out defaults (overwritten below if the last segment loops)
-            c_first_sec = int(seg_first_sec[-1])
-            c_first_us = int(seg_first_us[-1])
-            c_count = int(seg_count0[-1] + seg_len[-1])
-
-            for si in np.flatnonzero(~ok):
-                # Exact sequential cut chain, mirroring
-                # SessionizeGroupMapFunction.scala:35-83 (gap cuts cannot
-                # fire here — consecutive gaps ≤ gap_seconds by construction).
-                fs = int(seg_first_sec[si])
-                fu = int(seg_first_us[si])
-                cnt = int(seg_count0[si])
-                for i in range(seg_i0[si], seg_i1[si]):
-                    cnt += 1
-                    if cnt > max_events or sec[i] - fs > max_duration_seconds:
-                        fs, fu, cnt = int(sec[i]), int(us[i]), 1
-                    row_first_sec[i] = fs
-                    row_first_us[i] = fu
-                if si == nseg - 1:
-                    c_first_sec, c_first_us, c_count = fs, fu, cnt
-
-            ck = k[-1]
-            c_prev_sec = int(sec[-1])
-
-            pdf["_start_us"] = row_first_us
-            pdf["duration"] = (sec - row_first_sec).astype("int32")
+            r0 = key_runs(k)
+            c = np.zeros((4, len(r0)), dtype=np.int64)
+            if carry is not None and k[0] == ck:
+                c[:, 0] = carry
+            start_us, dur, c = cut_sessions(r0, sec, us, c)
+            ck, carry = k[-1], c[:, -1]
+            pdf["_start_us"] = start_us
+            pdf["duration"] = dur.astype("int32")
             yield pdf
 
     out = d.mapInPandas(run, schema=kernel_schema)
@@ -197,6 +251,29 @@ def sessionize(
             "session_id"
         ),
         "duration",
+    )
+
+
+def _gap_window(df: DataFrame, key: str, ts: str, tiebreakers: Iterable[str], gap: Column) -> DataFrame:
+    """Gap-only sessionization as one window pass: a row opens a session when
+    its predecessor is more than ``gap`` seconds earlier."""
+    order_asc = [F.col(ts).asc()] + [F.col(c).asc() for c in tiebreakers]
+    w = Window.partitionBy(key).orderBy(*order_asc)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    base = (
+        df.withColumn("_sec", _sec(ts))
+        .withColumn("_us", F.unix_micros(F.col(ts)))
+        .withColumn("_prev_sec", F.lag("_sec").over(w))
+        .withColumn(
+            "_is_new",
+            F.col("_prev_sec").isNull() | (F.col("_sec") - F.col("_prev_sec") > gap),
+        )
+    )
+    start = F.max(F.when(F.col("_is_new"), F.struct("_sec", "_us"))).over(run)
+    return (
+        base.withColumn("session_id", F.concat_ws("-", F.col(key).cast("string"), start["_us"].cast("string")))
+        .withColumn("duration", (F.col("_sec") - start["_sec"]).cast("int"))
+        .select(*df.columns, "session_id", "duration")
     )
 
 
@@ -213,25 +290,7 @@ def sessionize_gap_only(
     Catalyst optimizes end-to-end — and matches the reference whenever no
     session reaches the 1499-event / 12 h caps.
     """
-    tiebreakers = list(tiebreakers)
-    order_asc = [F.col(ts).asc()] + [F.col(c).asc() for c in tiebreakers]
-    w = Window.partitionBy(key).orderBy(*order_asc)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    base = (
-        df.withColumn("_sec", _sec(ts))
-        .withColumn("_us", F.unix_micros(F.col(ts)))
-        .withColumn("_prev_sec", F.lag("_sec").over(w))
-        .withColumn(
-            "_is_new",
-            F.col("_prev_sec").isNull() | (F.col("_sec") - F.col("_prev_sec") > gap_seconds),
-        )
-    )
-    start = F.max(F.when(F.col("_is_new"), F.struct("_sec", "_us"))).over(run)
-    return (
-        base.withColumn("session_id", F.concat_ws("-", F.col(key).cast("string"), start["_us"].cast("string")))
-        .withColumn("duration", (F.col("_sec") - start["_sec"]).cast("int"))
-        .select(*df.columns, "session_id", "duration")
-    )
+    return _gap_window(df, key, ts, tiebreakers, F.lit(gap_seconds))
 
 
 def session_durations(sessionized: DataFrame, key: str = "user_id") -> DataFrame:
@@ -273,10 +332,6 @@ def sessionize_dynamic_gap(
     the boundary predicate silently holds the session open, and a missing
     policy row becomes silently-wrong sessions instead of an error.
     """
-    tiebreakers = list(tiebreakers)
-    order_asc = [F.col(ts).asc()] + [F.col(c).asc() for c in tiebreakers]
-    w = Window.partitionBy(key).orderBy(*order_asc)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     checked_gap = F.when(F.col(gap_col).isNotNull(), F.col(gap_col)).otherwise(
         F.raise_error(
             F.concat(
@@ -286,22 +341,4 @@ def sessionize_dynamic_gap(
             )
         )
     )
-    base = (
-        df.withColumn("_sec", _sec(ts))
-        .withColumn("_us", F.unix_micros(F.col(ts)))
-        .withColumn("_prev_sec", F.lag("_sec").over(w))
-        .withColumn(
-            "_is_new",
-            F.col("_prev_sec").isNull()
-            | (F.col("_sec") - F.col("_prev_sec") > checked_gap),
-        )
-    )
-    start = F.max(F.when(F.col("_is_new"), F.struct("_sec", "_us"))).over(run)
-    return (
-        base.withColumn(
-            "session_id",
-            F.concat_ws("-", F.col(key).cast("string"), start["_us"].cast("string")),
-        )
-        .withColumn("duration", (F.col("_sec") - start["_sec"]).cast("int"))
-        .select(*df.columns, "session_id", "duration")
-    )
+    return _gap_window(df, key, ts, tiebreakers, checked_gap)

@@ -183,39 +183,13 @@ SELECT event_id, user_id, session_id, duration FROM sessionized
 """,
 )
 def sessionize_stateful_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 STREAMING formulation, oracle-checked: the applyInPandasWithState
-    per-event sessionizer (streaming/sessionize_stream.py) run over a
-    bounded file stream with availableNow into a memory sink. Proves the
-    stateful streaming operator computes the same sessions as the batch
-    window formulation AND the recursive-CTE oracle — the reference's own
-    batch/realtime consistency goal (README.md:31)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from flink_realtime_sessionize_sample_spark.streaming import (
-        build_events_file_stream,
-        sessionize_stream,
-    )
-
-    qn = f"sessionize_stateful_{uuid.uuid4().hex[:8]}"
-    src = tempfile.mkdtemp(prefix="sess_stateful_src_")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    stream = build_events_file_stream(spark, src)
-    out = sessionize_stream(stream.withWatermark("ts", "60 seconds")).select(
-        "event_id", "user_id", "session_id", "duration"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qn)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(600)
-    if not finished:  # pragma: no cover — defensive: never leak a query
-        q.stop()
-    return spark.table(qn)
+    """X1 STREAMING formulation, oracle-checked: the stateful per-event
+    sessionizer (streaming/sessionize_stream.py) run over a bounded file
+    stream with availableNow into a memory sink. Proves the stateful
+    streaming operator computes the same sessions as the batch kernel AND
+    the recursive-CTE oracle — the reference's own batch/realtime
+    consistency goal (README.md:31)."""
+    return _bucketed_replay(spark, sf_dir, "sessionize_stateful")
 
 
 @query(
@@ -231,9 +205,13 @@ def sessionize_bucketed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``hashCode % 1200``) and keeps a per-user map within each bucket
     (≙ ``SessionizeGroupMapFunction.scala:13``'s
     ``MapState[ip, SessionState]``), amortizing the per-group Arrow
-    exchange over all of a bucket's users. Must produce exactly the same
-    sessions as the per-user path, the batch kernel, and the
-    recursive-CTE oracle."""
+    exchange over all of a bucket's users."""
+    return _bucketed_replay(spark, sf_dir, "sessionize_bucketed")
+
+
+def _bucketed_replay(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Replay ``events`` as a bounded file stream through
+    ``sessionize_stream_bucketed`` (availableNow) into a memory sink."""
     import shutil
     import tempfile
     import uuid
@@ -243,8 +221,8 @@ def sessionize_bucketed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessionize_stream_bucketed,
     )
 
-    qn = f"sessionize_bucketed_{uuid.uuid4().hex[:8]}"
-    src = tempfile.mkdtemp(prefix="sess_bucketed_src_")
+    qn = f"{name}_{uuid.uuid4().hex[:8]}"
+    src = tempfile.mkdtemp(prefix=f"{name}_src_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     stream = build_events_file_stream(spark, src)
     out = sessionize_stream_bucketed(stream.withWatermark("ts", "60 seconds")).select(

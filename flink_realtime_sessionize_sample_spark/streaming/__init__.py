@@ -1,10 +1,6 @@
 """Structured Streaming: per-event stateful sessionization, sources, sinks."""
 
-from flink_realtime_sessionize_sample_spark.streaming.sessionize_stream import (
-    sessionize_stream,
-    sessionize_stream_bucketed,
-)
-from flink_realtime_sessionize_sample_spark.streaming.sessionize_tws import sessionize_stream_tws
+from flink_realtime_sessionize_sample_spark.streaming.sessionize_stream import sessionize_stream_bucketed
 from flink_realtime_sessionize_sample_spark.streaming.pipeline import (
     build_events_file_stream,
     dedup_stream,
@@ -21,9 +17,7 @@ from flink_realtime_sessionize_sample_spark.streaming.pipeline import (
 )
 
 __all__ = [
-    "sessionize_stream",
     "sessionize_stream_bucketed",
-    "sessionize_stream_tws",
     "build_events_file_stream",
     "build_kafka_line_source",
     "dedup_stream",

@@ -5,7 +5,7 @@ Kafka/file source → parse → (debug ts-shift) → watermark → keyBy →
 stateful sessionize → JSON encode → Kafka/file sink.
 
 Spark assembly: ``readStream`` → identical batch column expressions →
-``withWatermark`` → ``sessionize_stream`` → ``to_json(struct(*))`` →
+``withWatermark`` → ``sessionize_stream_bucketed`` → ``to_json(struct(*))`` →
 ``writeStream``. Each piece is usable à la carte; ``run_sessionize_pipeline``
 wires the whole thing.
 
@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from flink_realtime_sessionize_sample_spark.sources.logs import parse_access_logs
 from flink_realtime_sessionize_sample_spark.streaming.sessionize_stream import (
     STATE_TTL_MS,
-    sessionize_stream,
+    sessionize_stream_bucketed,
 )
 
 WATERMARK_DELAY = "60 seconds"  # W1: RealtimeSessionize.scala:131
@@ -302,33 +302,23 @@ def run_sessionize_pipeline(
     tiebreakers=("event_id",),
     trigger_available_now: bool = False,
     queryName: str = "realtime-sessionize",
-    bucketed: bool = True,
 ):
     """Assemble parse → watermark → sessionize → JSON → sink and start it.
 
     ``raw_lines=True`` runs the reference's actual input shape (access-log
-    lines, key=ip); otherwise the events-table shape. ``bucketed=True``
-    (default) uses the coarse-key state layout — the reference's own
-    (``Sessionize.scala:5`` + ``SessionizeGroupMapFunction.scala:13``) and
-    ~3× the per-user layout's throughput at high key cardinality; outputs
-    are event-for-event identical either way. Returns the started
-    ``StreamingQuery``.
+    lines, key=ip); otherwise the events-table shape. Sessionizes with the
+    reference's coarse-key state layout (``sessionize_stream_bucketed``).
+    Returns the started ``StreamingQuery``.
     """
-    from flink_realtime_sessionize_sample_spark.streaming.sessionize_stream import (
-        sessionize_stream_bucketed,
-    )
-
     if raw_lines:
         parsed = parse_access_logs(source)
         key, ts, tiebreakers = "ip", "ts", ()
     else:
         parsed = source
-    watermarked = parsed.withWatermark(ts, WATERMARK_DELAY)
     # 12 h idle-state TTL only for continuous runs: processing-time timers
     # prevent an availableNow replay from ever terminating.
-    builder = sessionize_stream_bucketed if bucketed else sessionize_stream
-    sessionized = builder(
-        watermarked,
+    sessionized = sessionize_stream_bucketed(
+        parsed.withWatermark(ts, WATERMARK_DELAY),
         key=key,
         ts=ts,
         tiebreakers=tiebreakers,

@@ -7,23 +7,24 @@ with its session id and running duration (per-event emission is the
 reference's explicit design goal; it rejects window-close emission,
 ``README.md:69-76``).
 
-Spark mapping: ``applyInPandasWithState`` in **update** output mode, one
-state object per key — Spark's grouping replaces Flink's explicit
-``MapState[ip, SessionState]`` (the coarse ``hashCode % 1200`` pre-key,
-``Sessionize.scala:5``, is Flink skew plumbing that hash partitioning already
-does — SURVEY §2.5). State record ≙ ``SessionState.scala:3-9``:
-``(start_us, first_sec, last_sec, count)``. The 12 h state TTL
-(``SessionizeGroupMapFunction.scala:93-104``) maps to a processing-time
-timeout that clears idle state.
+Spark mapping: ``applyInPandasWithState`` grouped by a coarse hash bucket of
+the key, with a per-user state map inside each bucket — the reference's own
+layout (``Sessionize.scala:5`` keys by ``ip.hashCode % 1200``,
+``SessionizeGroupMapFunction.scala:13`` keeps ``MapState[ip, SessionState]``
+within each coarse key). State entry ≙ ``SessionState.scala:3-9``:
+``(start_us, first_sec, last_sec, count)``. The cut chain itself is the
+batch operator's kernel, ``operators.sessionize.make_session_kernel``. The
+12 h state TTL (``SessionizeGroupMapFunction.scala:93-104``) maps to a
+processing-time timeout plus per-user pruning.
 
 Ordering semantics (SURVEY §2.4): the reference's watermark is inert for a
 map-only pipeline — it sessionizes in ARRIVAL order with a monotonic-max
 guard on ``lastTimestamp`` (``:72-77``), and its own docs reconcile the
 resulting duration dips downstream with MAX(duration). We keep exactly that:
 arrival order across micro-batches, deterministic (ts, tiebreaker) order
-within a batch, same monotonic-max guard. On in-order input this equals the
-batch formulation event-for-event; on late data it matches after the
-MAX-collapse, which is the reference's own contract.
+within a micro-batch, same monotonic-max guard. On in-order input this
+equals the batch formulation event-for-event; on late data it matches after
+the MAX-collapse, which is the reference's own contract.
 
 Scale: state is one fixed-size tuple per active key, partitioned by the
 shuffle; RocksDB state store + changelog checkpointing handle 100 M+ keys
@@ -38,6 +39,7 @@ from typing import Any, Iterable, Iterator, Tuple
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -52,16 +54,7 @@ from flink_realtime_sessionize_sample_spark.operators.sessionize import (
     GAP_SECONDS,
     MAX_SESSION_DURATION_SECONDS,
     MAX_SESSION_EVENTS,
-)
-
-# SessionState.scala:3-9 (epoch-seconds fields, like the reference stores).
-_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("first_sec", LongType()),
-        StructField("last_sec", LongType()),
-        StructField("count", IntegerType()),
-    ]
+    make_session_kernel,
 )
 
 STATE_TTL_MS = MAX_SESSION_DURATION_SECONDS * 1000  # 12 h, :93-104
@@ -75,213 +68,8 @@ STATE_TTL_MS = MAX_SESSION_DURATION_SECONDS * 1000  # 12 h, :93-104
 DEFAULT_SESSION_BUCKETS = 128
 
 
-def _make_kernel_fns():
-    """Build the numpy session-kernel helpers as CLOSURES, not module
-    functions. The stateful pandas functions ship to Python workers via
-    cloudpickle, which serializes dynamically-created functions BY VALUE but
-    module-level functions BY REFERENCE — and the workers of a caller-owned
-    SparkSession (the external harness's plain session) cannot import this
-    package. Factory-produced closures make the shipped kernel
-    self-contained. Returns ``(run_user, ts_micros)``."""
-
-    def pack_fresh(sec, us, gap_seconds, max_events, max_duration_seconds):
-        """Vectorized cut chain assuming row 0 OPENS a session
-        (SessionizeGroupMapFunction.scala:19-29): gap segmentation by
-        shifted compare (:31-45), cap-clean segments assigned with
-        np.repeat, only cap-tripping segments loop (:47-68). Returns
-        per-row (session start us, duration) + closing state
-        ``(start_us, first_sec, last_sec, count)``."""
-        import numpy as np
-
-        n = len(sec)
-        is_new = np.empty(n, dtype=bool)
-        is_new[0] = True
-        is_new[1:] = (sec[1:] - sec[:-1]) > gap_seconds
-        bounds = np.append(np.flatnonzero(is_new), n)
-        seg_i0, seg_i1 = bounds[:-1], bounds[1:]
-        seg_len = seg_i1 - seg_i0
-        seg_fs = sec[seg_i0].copy()
-        seg_fu = us[seg_i0].copy()
-        ok = (seg_len <= max_events) & (sec[seg_i1 - 1] - seg_fs <= max_duration_seconds)
-        row_fs = np.repeat(seg_fs, seg_len)
-        row_fu = np.repeat(seg_fu, seg_len)
-        fin = (int(seg_fu[-1]), int(seg_fs[-1]), int(sec[-1]), int(seg_len[-1]))
-        for si in np.flatnonzero(~ok):
-            fs, fu, cnt = int(seg_fs[si]), int(seg_fu[si]), 0
-            for i in range(seg_i0[si], seg_i1[si]):
-                cnt += 1
-                if cnt > max_events or sec[i] - fs > max_duration_seconds:
-                    fs, fu, cnt = int(sec[i]), int(us[i]), 1
-                row_fs[i] = fs
-                row_fu[i] = fu
-            if si == len(seg_len) - 1:
-                fin = (fu, fs, int(sec[-1]), cnt)
-        return row_fu, sec - row_fs, fin
-
-    def run_user(sec, us, st, gap_seconds, max_events, max_duration_seconds):
-        """One user's (ts-sorted) rows against optional carried state.
-
-        ``st`` is ``None`` (no open session) or ``(start_us, first_sec,
-        last_sec, count)`` ≙ SessionState.scala:3-9. Until the FIRST cut,
-        every row continues the stored session, so the three cut predicates
-        are closed-form in the row index — gap vs the monotonic-max guarded
-        last (SessionizeGroupMapFunction.scala:72-77), size vs carried
-        count (:47), duration vs carried first (:59). First hit = j0; rows
-        from j0 are a fresh pack. Returns (row session-start us, row
-        durations, new state)."""
-        import numpy as np
-
-        n = len(sec)
-        row_fu = np.empty(n, dtype=np.int64)
-        row_dur = np.empty(n, dtype=np.int64)
-        j0 = 0
-        if st is not None:
-            start_us_c, first_c, last_c, cnt_c = st
-            prev_eff = np.maximum(last_c, np.concatenate(([last_c], sec[:-1])))
-            cut = (
-                (sec - prev_eff > gap_seconds)
-                | (cnt_c + np.arange(n) >= max_events)
-                | (sec - first_c > max_duration_seconds)
-            )
-            j0 = int(np.argmax(cut)) if cut.any() else n
-            row_fu[:j0] = start_us_c
-            row_dur[:j0] = sec[:j0] - first_c
-            if j0 == n:
-                st = (start_us_c, first_c, max(int(last_c), int(sec[-1])), cnt_c + n)
-        if j0 < n:
-            fu_t, dur_t, st = pack_fresh(
-                sec[j0:], us[j0:], gap_seconds, max_events, max_duration_seconds
-            )
-            row_fu[j0:] = fu_t
-            row_dur[j0:] = dur_t
-        return row_fu, row_dur, st
-
-    def ts_micros(pdf, ts_col):
-        """Timestamp column → int64 epoch micros (pandas ns-resolution guard)."""
-        us = pdf[ts_col].astype("int64").to_numpy()
-        if str(pdf[ts_col].dtype).endswith("[ns]"):
-            us = us // 1000
-        return us
-
-    return run_user, ts_micros
-
-
-# Driver-side (test) handles; worker-bound code must call _make_kernel_fns()
-# inside the builder so the closures travel by value.
-_run_user, _ts_micros = _make_kernel_fns()
-
-
-def _inner_schema(carry_fields: list) -> StructType:
-    # The Python kernel emits the NUMERIC session start (micros); the
-    # session_id string is concatenated JVM-side (codegen) — per-row string
-    # formatting in pandas measured ~10% of kernel time in the batch twin.
-    return StructType(
-        list(carry_fields)
-        + [
-            StructField("session_start_us", LongType()),
-            StructField("duration", IntegerType()),
-        ]
-    )
-
-
-def sessionize_stream(
-    df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    tiebreakers: Iterable[str] = ("event_id",),
-    gap_seconds: int = GAP_SECONDS,
-    max_events: int = MAX_SESSION_EVENTS,
-    max_duration_seconds: int = MAX_SESSION_DURATION_SECONDS,
-    output_mode: str = "append",
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """Streaming DataFrame → per-event (all columns + session_id + duration).
-
-    Each input row is emitted exactly once (a stateful flatMap, not a
-    windowed aggregate), so **append** mode is the natural fit and enables
-    file sinks; update mode works identically for console/memory/Kafka.
-    Works on bounded batch DataFrames too (Spark runs the same operator),
-    which the equivalence tests exploit.
-
-    ``state_ttl_ms`` arms the reference's 12 h idle-state TTL
-    (``SessionizeGroupMapFunction.scala:93-104``) via a processing-time
-    timeout — pass ``STATE_TTL_MS`` for long-running deployments. Leave
-    ``None`` for bounded replays: with processing-time timers armed, an
-    ``availableNow`` run never terminates (Spark keeps scheduling
-    state-cleanup micro-batches until the timers fire, i.e. for 12 hours).
-    """
-    tiebreakers = list(tiebreakers)
-    carry = [f for f in df.schema.fields]
-    inner_schema = _inner_schema(carry)
-    out_cols = [f.name for f in carry] + ["session_start_us", "duration"]
-    key_col, ts_col = key, ts
-    # Closure-bound kernels: ship to workers by value (the caller's session
-    # may not have this package on the worker path — see _make_kernel_fns).
-    run_user, ts_micros = _make_kernel_fns()
-
-    def fn(
-        key_tuple: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # 12 h idle → drop state (TTL cleanup, NeverReturnExpired ≙ we
-            # simply never see expired state again).
-            state.remove()
-            return
-        st = state.get if state.exists else None  # (start_us, first, last, count)
-
-        for pdf in pdfs:
-            # Deterministic intra-batch order; across batches arrival order
-            # stands, like the reference's per-record processing.
-            pdf = pdf.sort_values([ts_col, *tiebreakers], kind="mergesort")
-            n = len(pdf)
-            if n == 0:
-                continue
-            us = ts_micros(pdf, ts_col)
-            sec = us // 1_000_000
-            row_fu, row_dur, st = run_user(
-                sec, us, st, gap_seconds, max_events, max_duration_seconds
-            )
-            # sort_values already returned a private copy — assign in place
-            # (a further pdf.copy() here measured as pure waste).
-            pdf["session_start_us"] = row_fu
-            pdf["duration"] = pd.array(row_dur, dtype="int32")
-            yield pdf[out_cols]
-
-        if st is not None:
-            state.update(tuple(st))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-
-    inner = df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=inner_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode=output_mode,
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-    # "{key}-{session_start_us}" ≙ SessionizeGroupMapFunction.scala:107's
-    # "{ip}-{first timestamp}" id format — built in codegen, not pandas.
-    from pyspark.sql import functions as F
-
-    return inner.select(
-        *[f.name for f in carry],
-        F.concat_ws("-", F.col(key_col).cast("string"),
-                    F.col("session_start_us").cast("string")).alias("session_id"),
-        "duration",
-    )
-
-
-# Coarse-key state layout ≙ the reference EXACTLY: Sessionize.scala:5 keys
-# the stream by ``ip.hashCode % 1200`` and SessionizeGroupMapFunction.scala:13
-# keeps ``MapState[ip, SessionState]`` WITHIN each coarse key. Stored here as
-# parallel arrays (one GroupState row per bucket): ``keys[i]`` ↔ the i-th
-# user's SessionState fields.
+# Stored as parallel arrays (one GroupState row per bucket): ``keys[i]`` ↔
+# the i-th user's SessionState fields, sorted by key.
 _BUCKET_STATE_SCHEMA = StructType(
     [
         StructField("keys", ArrayType(StringType())),
@@ -305,43 +93,50 @@ def sessionize_stream_bucketed(
     output_mode: str = "append",
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Per-event sessionization with the reference's COARSE-KEY state layout:
-    group by ``pmod(xxhash64(key), n_buckets)`` (≙ ``Sessionize.scala:5``'s
+    """Streaming DataFrame → per-event (all columns + session_id + duration),
+    with the reference's COARSE-KEY state layout: group by
+    ``pmod(xxhash64(key), n_buckets)`` (≙ ``Sessionize.scala:5``'s
     ``hashCode % 1200``, non-negative) and keep a per-user map within each
     bucket (≙ ``SessionizeGroupMapFunction.scala:13``'s
     ``MapState[ip, SessionState]``).
 
-    Identical output to ``sessionize_stream`` — the bucket count is pure
-    physical layout (per-user state and cut chain are unchanged). The win is
-    throughput: ``applyInPandasWithState`` pays a per-GROUP Arrow round trip
-    (~2-3 ms/group/batch measured on local[32]), so grouping by bucket
-    instead of by user amortizes that cost over all the bucket's users —
-    1500 users at 128 buckets is ~12× fewer Arrow exchanges per micro-batch.
-    Inside the kernel, per-user runs of the (key, ts)-sorted batch are
-    processed by the same vectorized numpy routine as the per-user path
-    (``_run_user``), so semantics — arrival order across batches, monotonic
-    lastTimestamp guard, gap/size/duration cuts — carry over verbatim.
+    Each input row is emitted exactly once (a stateful flatMap, not a
+    windowed aggregate), so **append** mode is the natural fit and enables
+    file sinks. Works on bounded batch DataFrames too. The bucket count is
+    pure physical layout; the win is throughput: ``applyInPandasWithState``
+    pays a per-GROUP Arrow round trip, so grouping by bucket instead of by
+    user amortizes that cost over all the bucket's users (measured 124.7 k
+    against 12.0 k ev/s for one group per user, local[4]).
 
+    Per micro-batch, all of a bucket's Arrow chunks are concatenated and
+    sorted once by (key, ts, tiebreakers), each user's carry is looked up in
+    the bucket's sorted state, and the shared kernel
+    (``make_session_kernel``) runs once — so a user whose rows straddle
+    Arrow chunks is still processed in event-time order within the batch.
     State keys are stored as strings (``str(key_value)``) — stable for the
     int/string key types this engine supports.
 
     TTL (``state_ttl_ms``): a processing-time timeout on each BUCKET's state
-    (refreshed every batch it sees data), plus per-USER pruning inside the
-    kernel — users idle longer than the TTL relative to the bucket's max
-    observed event time are dropped, mirroring the reference's per-entry
-    12 h MapState TTL (``SessionizeGroupMapFunction.scala:93-104``).
-    Pruning is semantics-neutral: any later event for a pruned user is
-    > gap_seconds stale by construction, so it would open a new session
-    with or without the state entry.
+    (refreshed every batch it sees data), plus per-USER pruning — users idle
+    longer than the TTL relative to the bucket's max observed event time are
+    dropped, mirroring the reference's per-entry 12 h MapState TTL
+    (``SessionizeGroupMapFunction.scala:93-104``). Pruning is
+    semantics-neutral: any later event for a pruned user is > gap_seconds
+    stale by construction, so it would open a new session with or without
+    the state entry. Leave ``None`` for bounded replays: with processing-time
+    timers armed, an ``availableNow`` run keeps scheduling state-cleanup
+    micro-batches until the timers fire.
     """
-    tiebreakers = list(tiebreakers)
-    carry = [f for f in df.schema.fields]
-    inner_schema = _inner_schema(carry)
-    out_cols = [f.name for f in carry] + ["session_start_us", "duration"]
-    key_col, ts_col = key, ts
+    sort_cols = [key, "_us", *tiebreakers]
+    out_cols = list(df.columns) + ["session_start_us", "duration"]
+    # The kernel emits the NUMERIC session start; the session_id string is
+    # concatenated JVM-side (codegen), not per row in pandas.
+    inner_schema = StructType(
+        list(df.schema.fields)
+        + [StructField("session_start_us", LongType()), StructField("duration", IntegerType())]
+    )
     ttl_sec = (state_ttl_ms // 1000) if state_ttl_ms is not None else None
-    # Closure-bound kernels: ship to workers by value (see _make_kernel_fns).
-    run_user, ts_micros = _make_kernel_fns()
+    key_runs, cut_sessions = make_session_kernel(gap_seconds, max_events, max_duration_seconds)
 
     def fn(
         key_tuple: Tuple[Any, ...],
@@ -353,82 +148,49 @@ def sessionize_stream_bucketed(
         if state.hasTimedOut:
             state.remove()
             return
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        if len(pdf) == 0:
+            return
+        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+        k = pdf[key].to_numpy()
+        us = pdf.pop("_us").to_numpy()
+        sec = us // 1_000_000
+        r0 = key_runs(k)
+        run_keys = k[r0].astype(str)
+        carry = np.zeros((4, len(r0)), dtype=np.int64)
         if state.exists:
-            ks, sus, fss, lss, cns = state.get
-            table: dict[str, tuple] = {
-                k: (int(su), int(f), int(l), int(c))
-                for k, su, f, l, c in zip(ks, sus, fss, lss, cns)
-            }
+            stored = state.get
+            s_keys = np.array(stored[0], dtype=str)
+            s_vals = np.array(stored[1:], dtype=np.int64)
+            at = np.minimum(np.searchsorted(s_keys, run_keys), len(s_keys) - 1)
+            hit = s_keys[at] == run_keys
+            carry[:, hit] = s_vals[:, at[hit]]
+            kept = np.ones(len(s_keys), dtype=bool)
+            kept[at[hit]] = False
+            s_keys, s_vals = s_keys[kept], s_vals[:, kept]
         else:
-            table = {}
-        max_sec_seen = None
+            s_keys, s_vals = run_keys[:0], carry[:, :0]
+        start_us, dur, carry = cut_sessions(r0, sec, us, carry)
+        pdf["session_start_us"] = start_us
+        pdf["duration"] = dur.astype("int32")
+        yield pdf[out_cols]
 
-        for pdf in pdfs:
-            # (key, ts, tiebreaker) sort: per-user runs are contiguous and
-            # ts-ordered — the same deterministic intra-batch order as the
-            # per-user path, arrival order across batches.
-            pdf = pdf.sort_values([key_col, ts_col, *tiebreakers], kind="mergesort")
-            n = len(pdf)
-            if n == 0:
-                continue
-            us = ts_micros(pdf, ts_col)
-            sec = us // 1_000_000
-            kvals = pdf[key_col].to_numpy()
-
-            new_key = np.empty(n, dtype=bool)
-            new_key[0] = True
-            new_key[1:] = kvals[1:] != kvals[:-1]
-            bounds = np.append(np.flatnonzero(new_key), n)
-
-            row_fu = np.empty(n, dtype=np.int64)
-            row_dur = np.empty(n, dtype=np.int64)
-            # Per-user-run loop: python-level iteration is per USER per
-            # batch (cheap), all row math inside is vectorized numpy.
-            for r0, r1 in zip(bounds[:-1], bounds[1:]):
-                uk = str(kvals[r0])
-                fu, dur, st = run_user(
-                    sec[r0:r1],
-                    us[r0:r1],
-                    table.get(uk),
-                    gap_seconds,
-                    max_events,
-                    max_duration_seconds,
-                )
-                row_fu[r0:r1] = fu
-                row_dur[r0:r1] = dur
-                table[uk] = tuple(st)
-            # sorted by (key, ts) — not globally by ts — so take the max
-            m = int(sec.max())
-            max_sec_seen = m if max_sec_seen is None else max(max_sec_seen, m)
-
-            pdf["session_start_us"] = row_fu
-            pdf["duration"] = pd.array(row_dur, dtype="int32")
-            yield pdf[out_cols]
-
-        if ttl_sec is not None and max_sec_seen is not None:
+        s_keys = np.concatenate((s_keys, run_keys))
+        s_vals = np.concatenate((s_vals, carry), axis=1)
+        if ttl_sec is not None:
             # Per-user TTL ≙ the reference's per-entry MapState TTL.
-            cutoff = max_sec_seen - ttl_sec
-            table = {k: v for k, v in table.items() if v[2] >= cutoff}
-        if table:
-            items = sorted(table.items())  # deterministic state bytes
-            state.update(
-                (
-                    [k for k, _ in items],
-                    [v[0] for _, v in items],
-                    [v[1] for _, v in items],
-                    [v[2] for _, v in items],
-                    [v[3] for _, v in items],
-                )
-            )
+            live = s_vals[2] >= int(sec.max()) - ttl_sec
+            s_keys, s_vals = s_keys[live], s_vals[:, live]
+        if len(s_keys):
+            order = np.argsort(s_keys, kind="stable")  # deterministic state bytes
+            state.update((s_keys[order].tolist(), *s_vals[:, order].tolist()))
         elif state.exists:
             state.remove()
         if state_ttl_ms is not None:
             state.setTimeoutDuration(state_ttl_ms)
 
-    from pyspark.sql import functions as F
-
-    bucketed = df.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
+    bucketed = df.withColumn("_us", F.unix_micros(F.col(ts))).withColumn(
+        "_bucket", F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets))
     )
     inner = bucketed.groupBy("_bucket").applyInPandasWithState(
         fn,
@@ -442,9 +204,9 @@ def sessionize_stream_bucketed(
         ),
     )
     return inner.select(
-        *[f.name for f in carry],
+        *df.columns,
         F.concat_ws(
-            "-", F.col(key_col).cast("string"), F.col("session_start_us").cast("string")
+            "-", F.col(key).cast("string"), F.col("session_start_us").cast("string")
         ).alias("session_id"),
         "duration",
     )

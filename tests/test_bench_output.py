@@ -35,10 +35,6 @@ def _detail(query_names) -> dict:
         "events_per_sec_sessionize_streaming_steady": 210261,
         "events_per_sec_sessionize_streaming_steady_runs": [1, 2, 3],
         "events_per_sec_sessionize_streaming_steady_spread": 0.05,
-        "events_per_sec_streaming_peruser_wall": 79357,
-        "events_per_sec_streaming_peruser_steady": 79987,
-        "events_per_sec_streaming_peruser_steady_runs": [1, 2, 3],
-        "events_per_sec_streaming_peruser_steady_spread": 0.05,
         "events_per_sec_streaming_dedup_wall": 261281,
         "events_per_sec_streaming_dedup_steady": 268456,
         "events_per_sec_streaming_dedup_steady_runs": [1, 2, 3],

@@ -8,41 +8,18 @@ from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from flink_realtime_sessionize_sample_spark.operators.sessionize import (
-    GAP_SECONDS,
-    MAX_SESSION_DURATION_SECONDS,
-    MAX_SESSION_EVENTS,
+    make_session_kernel,
     sessionize,
 )
+from session_reference import reference_sessionize
 
 BASE_US = 1_500_000_000_000_000  # 2017-07-14, arbitrary
-
-
-def reference_sessionize(events):
-    """Pure-Python transcription of §2.6 over (key, ts_us, event_id) rows,
-    processed per key in (ts, event_id) order."""
-    out = {}
-    by_key: dict = {}
-    for key, us, eid in sorted(events, key=lambda r: (r[0], r[1], r[2])):
-        sec = us // 1_000_000
-        st_ = by_key.get(key)
-        if (
-            st_ is None
-            or sec - st_["last"] > GAP_SECONDS
-            or st_["count"] + 1 >= MAX_SESSION_EVENTS + 1
-            or sec - st_["first"] > MAX_SESSION_DURATION_SECONDS
-        ):
-            st_ = {"start_us": us, "first": sec, "last": sec, "count": 1}
-            by_key[key] = st_
-            out[eid] = (f"{key}-{us}", 0)
-        else:
-            st_["last"] = max(st_["last"], sec)
-            st_["count"] += 1
-            out[eid] = (f"{key}-{st_['start_us']}", int(sec - st_["first"]))
-    return out
 
 
 # Deltas engineered to hit the cut boundaries exactly: 1800 s (no cut,
@@ -67,9 +44,26 @@ def event_sets(draw):
     return rows
 
 
+_ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@pytest.fixture(params=[None, 3], ids=["default", "3"])
+def max_records_per_batch(request, spark):
+    """Run with the default Arrow batch size, and with 3 rows per batch so the
+    kernel's carry between Arrow batches is exercised."""
+    old = spark.conf.get(_ARROW_BATCH, None)
+    if request.param is not None:
+        spark.conf.set(_ARROW_BATCH, str(request.param))
+    yield request.param
+    if old is None:
+        spark.conf.unset(_ARROW_BATCH)
+    else:
+        spark.conf.set(_ARROW_BATCH, old)
+
+
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(event_sets())
-def test_window_formulation_matches_reference_procedure(spark, events):
+def test_window_formulation_matches_reference_procedure(spark, max_records_per_batch, events):
     df = spark.createDataFrame(
         [
             (k, dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=us), e)
@@ -83,3 +77,77 @@ def test_window_formulation_matches_reference_procedure(spark, events):
     }
     ref = reference_sessionize(events)
     assert got == ref
+
+
+def _kernel_in_arrival_order(chunks, **caps):
+    """Drive the shared kernel the way the streaming layer does: one call per
+    chunk, rows sorted by (key, ts, event_id), per-key state carried across
+    calls. Returns ``{event_id: (session_id, duration)}``."""
+    key_runs, cut_sessions = make_session_kernel(**caps)
+    state: dict = {}
+    out = {}
+    for chunk in chunks:
+        if not chunk:
+            continue
+        rows = sorted(chunk, key=lambda r: (r[0], r[1], r[2]))
+        k = np.array([r[0] for r in rows])
+        us = np.array([r[1] for r in rows], dtype=np.int64)
+        r0 = key_runs(k)
+        carry = np.array(
+            [state.get(int(k[i]), (0, 0, 0, 0)) for i in r0], dtype=np.int64
+        ).T
+        start_us, dur, carry = cut_sessions(r0, us // 1_000_000, us, carry)
+        for i, ri in enumerate(r0):
+            state[int(k[ri])] = tuple(carry[:, i])
+        for (key, _, eid), s, d in zip(rows, start_us, dur):
+            out[eid] = (f"{key}-{s}", int(d))
+    return out
+
+
+@st.composite
+def late_arrivals(draw):
+    """Small caps so every cut fires often, and event-time-ordered rows
+    delivered in chunks where some rows arrive one or two chunks late."""
+    caps = {
+        "gap_seconds": draw(st.sampled_from([2, 3, 5])),
+        "max_events": draw(st.sampled_from([1, 2, 3, 4])),
+        "max_duration_seconds": draw(st.sampled_from([3, 4, 7])),
+    }
+    n = draw(st.integers(1, 60))
+    t = 0
+    rows = []
+    for eid in range(n):
+        t += draw(st.sampled_from([0, 0, 400_000, 1_000_000, 2_000_000, 3_000_001, 6_000_000]))
+        rows.append((draw(st.integers(1, 3)), t, eid))
+    n_chunks = draw(st.integers(1, 6))
+    chunks = [[] for _ in range(n_chunks)]
+    for i, r in enumerate(rows):
+        late = draw(st.sampled_from([0, 0, 0, 1, 2]))
+        chunks[min(n_chunks - 1, i * n_chunks // n + late)].append(r)
+    return caps, rows, chunks
+
+
+@settings(max_examples=300, deadline=None, suppress_health_check=list(HealthCheck))
+@given(late_arrivals())
+def test_kernel_carry_matches_arrival_order_reference(case):
+    """The shared kernel, fed call by call with carried state, equals the
+    one-event-at-a-time procedure in arrival order — late rows included."""
+    caps, rows, chunks = case
+    assert _kernel_in_arrival_order(chunks, **caps) == reference_sessionize(
+        rows, chunks=chunks, **caps
+    )
+
+
+def test_kernel_late_row_cap_cut_drops_carried_last():
+    """A late row trips the event cap while the carried ``last_sec`` (200) is
+    newer than it (50). After that cut the session restarts at 50, so the
+    next row (1851) is a gap cut measured from 50, not from the carried 200.
+    (The 12 h cap cannot fire on such a row: a session's last is never more
+    than 12 h past its first.)"""
+    s = 1_000_000
+    chunks = [[(1, 0, 0), (1, 100 * s, 1), (1, 200 * s, 2)], [(1, 50 * s, 3), (1, 1851 * s, 4)]]
+    rows = [r for c in chunks for r in c]
+    got = _kernel_in_arrival_order(chunks, max_events=3)
+    assert got == reference_sessionize(rows, chunks=chunks, max_events=3)
+    assert got[3] == (f"1-{50 * s}", 0)
+    assert got[4] == (f"1-{1851 * s}", 0)

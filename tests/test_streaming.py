@@ -9,7 +9,6 @@ import json
 import shutil
 
 import pandas as pd
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -20,7 +19,7 @@ from flink_realtime_sessionize_sample_spark.streaming import (
     dedup_stream,
     enrich_stream_static,
     run_sessionize_pipeline,
-    sessionize_stream,
+    sessionize_stream_bucketed,
     windowed_user_counts,
     write_foreach_batch_dedup,
 )
@@ -39,37 +38,10 @@ def _stage_events_dir(sf_dir: str, tmp_path) -> str:
     return str(d)
 
 
-def test_stream_matches_batch_per_event(spark, sf_small, tmp_path):
-    """applyInPandasWithState over a bounded file stream ≡ the batch window
-    formulation, event for event (input is in-order within micro-batches)."""
-    batch = load_table(spark, sf_small, "events")
-    expected = _norm(
-        sessionize(batch).select("event_id", "session_id", "duration").toPandas()
-    )
-
-    stream = build_events_file_stream(spark, _stage_events_dir(sf_small, tmp_path))
-    out = sessionize_stream(stream.withWatermark("ts", "60 seconds"))
-    q = (
-        out.selectExpr("event_id", "session_id", "duration")
-        .writeStream.format("memory")
-        .queryName("sess_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "availableNow replay must terminate"
-    got = _norm(spark.sql("select * from sess_stream_test").toPandas())
-
-    assert len(got) == len(expected)
-    pd.testing.assert_frame_equal(got, expected, check_dtype=False)
-
-
 def test_bucketed_stream_matches_batch_per_event(spark, sf_small, tmp_path):
     """sessionize_stream_bucketed (coarse-key MapState layout ≙
     Sessionize.scala:5 + SessionizeGroupMapFunction.scala:13) ≡ the batch
     window formulation, event for event."""
-    from flink_realtime_sessionize_sample_spark.streaming import sessionize_stream_bucketed
-
     batch = load_table(spark, sf_small, "events")
     expected = _norm(
         sessionize(batch).select("event_id", "session_id", "duration").toPandas()
@@ -100,7 +72,6 @@ def test_bucketed_stream_multibatch_state_carry(spark, sf_small, tmp_path):
     import time as _time
 
     from pyspark.sql import Window
-    from flink_realtime_sessionize_sample_spark.streaming import sessionize_stream_bucketed
 
     ev = load_table(spark, sf_small, "events")
     n = ev.count()
@@ -238,45 +209,47 @@ def test_foreach_batch_dedup_sink(spark, sf_small, tmp_path):
     assert spark.read.parquet(out).count() == n_unique
 
 
-def test_tws_stream_matches_batch_per_event(spark, sf_small, tmp_path):
-    """transformWithStateInPandas sessionizer (Spark 4 stateful API) ≡ the
-    batch window formulation, event for event. Requires protobuf (the TWS
-    state-server protocol) — skipped where unavailable."""
-    pytest.importorskip("google.protobuf")
-    from flink_realtime_sessionize_sample_spark.streaming import sessionize_stream_tws
+def test_bucketed_stream_sorts_whole_group_across_arrow_chunks(spark, tmp_path):
+    """One client's rows written newest-first and split into 2-row Arrow
+    chunks (``maxRecordsPerBatch=2``) inside ONE micro-batch: the streaming
+    sessionizer must order the whole micro-batch of the group before cutting,
+    so its output equals batch ``sessionize`` event for event (two sessions,
+    durations 0/50/100 and 0/300/1300)."""
+    import datetime as dt
 
-    batch = load_table(spark, sf_small, "events")
-    expected = _norm(
-        sessionize(batch).select("event_id", "session_id", "duration").toPandas()
-    )
-    stream = build_events_file_stream(spark, _stage_events_dir(sf_small, tmp_path))
-    out = sessionize_stream_tws(stream.withWatermark("ts", "60 seconds"))
-    q = (
-        out.selectExpr("event_id", "session_id", "duration")
-        .writeStream.format("memory")
-        .queryName("sess_tws_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "availableNow replay must terminate"
-    got = _norm(spark.sql("select * from sess_tws_test").toPandas())
-    assert len(got) == len(expected)
-    pd.testing.assert_frame_equal(got, expected, check_dtype=False)
+    t0 = dt.datetime(2020, 1, 1, 0, 0, 0)
+    offsets = [0, 50, 100, 3000, 3300, 4300]
+    rows = [(1, t0 + dt.timedelta(seconds=o), i) for i, o in enumerate(offsets)][::-1]
+    ev = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long")
+    src = tmp_path / "newest_first_src"
+    ev.coalesce(1).write.parquet(str(src))
 
-
-def test_tws_gate_without_protobuf(spark):
-    """Without protobuf the TWS builder must fail fast with guidance (the
-    raw in-worker failure is an opaque crash)."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf, None)
+    spark.conf.set(conf, "2")
     try:
-        import google.protobuf  # noqa: F401
-        pytest.skip("protobuf installed — gate not reachable")
-    except ImportError:
-        pass
-    from flink_realtime_sessionize_sample_spark.streaming import sessionize_stream_tws
-
-    with pytest.raises(ImportError, match="protobuf"):
-        sessionize_stream_tws(spark.range(1))
+        stream = spark.readStream.schema(ev.schema).parquet(str(src))
+        q = (
+            sessionize_stream_bucketed(stream.withWatermark("ts", "60 seconds"))
+            .selectExpr("event_id", "session_id", "duration")
+            .writeStream.format("memory")
+            .queryName("sess_newest_first_test")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "availableNow replay must terminate"
+        got = _norm(spark.sql("select * from sess_newest_first_test").toPandas())
+        expected = _norm(
+            sessionize(ev).select("event_id", "session_id", "duration").toPandas()
+        )
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
+    assert sorted(expected["duration"]) == [0, 0, 50, 100, 300, 1300]
+    pd.testing.assert_frame_equal(got, expected, check_dtype=False)
 
 
 def test_late_event_duration_dip_and_max_collapse(spark, tmp_path):
@@ -309,7 +282,7 @@ def test_late_event_duration_dip_and_max_collapse(spark, tmp_path):
         .parquet(str(src) + "/*")
     )
     q = (
-        sessionize_stream(stream.withWatermark("ts", "60 seconds"))
+        sessionize_stream_bucketed(stream.withWatermark("ts", "60 seconds"))
         .selectExpr("event_id", "session_id", "duration")
         .writeStream.format("memory")
         .queryName("late_test")
@@ -394,7 +367,7 @@ def test_checkpoint_kill_and_resume_exactly_once(spark, sf_small, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src) + "/*")
         )
-        sess = sessionize_stream(stream.withWatermark("ts", "60 seconds"))
+        sess = sessionize_stream_bucketed(stream.withWatermark("ts", "60 seconds"))
         q = (
             write_foreach_batch_batchdir_overwrite(sess, out_dir, ckpt)
             .trigger(availableNow=True)
