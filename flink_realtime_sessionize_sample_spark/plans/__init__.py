@@ -156,9 +156,9 @@ _CHANGED_SINCE_EXTERNAL: list[str] = [
 # lapses, and test_mechanized_rotation_inside_window fails until the new
 # diff is re-swept and re-pinned. Regenerate both digests with
 # tools/rotation_map.py + hashlib ONLY after re-sweeping.
-_R16_OPT_REVERIFIED_COUNT = 63
-_R16_OPT_REVERIFIED_SHA256 = "PENDING-R16-CLOSE"
-_R16_OPT_REVERIFIED_DIFF_SHA256 = "PENDING-R16-CLOSE"
+_R16_OPT_REVERIFIED_COUNT = 92
+_R16_OPT_REVERIFIED_SHA256 = "a45bdcc8256ededf1af66f6d741b73763e636ab3247d051aa63c06b45ad8b5db"
+_R16_OPT_REVERIFIED_DIFF_SHA256 = "c5d7a120cef1cd3549a327f676f4f95be89b85cf2171e837f64f0df44c6f2d95"
 
 # The 34 queries built + oracle-paired + locally swept during round 7 in
 # plans/staging_r8.py, registered live in round 8 — all 34 went green in
