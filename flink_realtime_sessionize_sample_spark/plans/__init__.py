@@ -1,7 +1,8 @@
 """Query plans: the driver-facing registry of (PySpark query, DuckDB oracle SQL) pairs.
 
 Importing this package imports every query module, which registers its
-queries as a side effect of the ``@query`` decorators.
+queries as a side effect of the ``@query`` decorators. Registry order is
+import order.
 """
 
 from flink_realtime_sessionize_sample_spark.plans.registry import QUERIES, ORACLES, query
@@ -17,710 +18,12 @@ from flink_realtime_sessionize_sample_spark.plans import analytics_queries  # no
 from flink_realtime_sessionize_sample_spark.plans import tpch_queries  # noqa: F401
 from flink_realtime_sessionize_sample_spark.plans import feature_queries  # noqa: F401
 from flink_realtime_sessionize_sample_spark.plans import ml_eval_queries  # noqa: F401
-from flink_realtime_sessionize_sample_spark.plans import staging_r8  # noqa: F401  (promoted round 8)
+from flink_realtime_sessionize_sample_spark.plans import staging_r8  # noqa: F401
 from flink_realtime_sessionize_sample_spark.plans import round9_queries  # noqa: F401
-from flink_realtime_sessionize_sample_spark.plans import staging_r10  # noqa: F401  (promoted round 10)
-from flink_realtime_sessionize_sample_spark.plans import staging_r11  # noqa: F401  (promoted round 11)
-from flink_realtime_sessionize_sample_spark.plans import staging_r12  # noqa: F401  (promoted round 12)
-from flink_realtime_sessionize_sample_spark.plans import staging_r13  # noqa: F401  (promoted round 13)
-from flink_realtime_sessionize_sample_spark.plans import staging_r14  # noqa: F401  (promoted round 14)
-
-# The external correctness harness snapshots exactly the first 50 entries of
-# this registry (``list(queries())[:50]``). Through round 2 the registry was
-# in build-phase order, which pinned the same 50 queries into that window
-# every round and left later registrations without an external correctness
-# row. ``_DRIVER_WINDOW`` re-prioritizes the iteration order: a few
-# long-green anchor queries for cross-round continuity, then every query
-# that has not yet had an external row, then (implicitly) everything
-# already verified in earlier rounds. Registration itself is unchanged —
-# this only reorders the dict, so names/oracles/semantics are untouched.
-# STANDING RULE (adopted round 6, permanent): any query whose plan or
-# operator code changed since its most recent green external row goes
-# BACK into the window — a green row only certifies the code that was
-# live when the driver ran it. ``_CHANGED_SINCE_EXTERNAL`` below is the
-# per-round worklist for that rule; `tests/test_registry_window.py`
-# asserts every name in it sits inside the first-50 window, alongside
-# every query not yet externally green (new registrations).
-#
-# ROUND-15 ROTATION (OPTIMIZATION ROUND): round 14 closed 50/50 green
-# (361/361 cumulative). Round 15 changed NO query's semantics — it is
-# the first of the two mandated optimization rounds — but its
-# performance work (operators/mat.py materialization, the PPJoin
-# aggregated bounds + single-intersect verify, the global-order branch-2
-# exchange cut, shared train/score frames; see OPTIMIZATION_r15.md)
-# touches shared operator/plan symbols whose mechanized rotation closure
-# covers 216 registered queries: far more than the 50-name driver window
-# can re-certify. The freshness rule's INTENT (changed code must be
-# re-verified against the oracles before the round closes) was met
-# directly instead of via windowing: TWO full-registry driver-replica
-# sweeps at sf0.01 (361/361 green each, before each optimization
-# commit), a full sweep under spark.sql.adaptive.enabled=false (361/361
-# green — the config that exposes exchange-reuse-dependent bugs), and
-# further adversarial sweeps recorded in OPTIMIZATION_r15.md. The
-# mechanized-window test recognizes exactly this verified rotation set
-# via the SHA-256 pin below: if ANY further symbol changes after the
-# pin was computed, the derived set's hash no longer matches, the
-# exemption lapses, and the test fails until the new diff is re-swept
-# and re-pinned — the same cannot-under-rotate guarantee, adapted to a
-# round where the whole registry was re-verified wholesale.
-#
-# MECHANIZED (judge r7 item 3, completed r9): rotation lists are the
-# output of
-#   python tools/rotation_map.py --since <round-open commit>
-# at SYMBOL granularity (only consumers of the top-level symbols whose
-# AST actually changed rotate; comment-only edits are invisible,
-# docstring edits rotate their one symbol). ``_ROUND_OPEN_COMMIT`` pins
-# the round-open ref, and ``tests/test_registry_window.py::
-# test_mechanized_rotation_inside_window`` re-derives the rotation at
-# test time.
-_ROUND_OPEN_COMMIT = "3c5323a"
-
-# ROUND-16 ROTATION (optimization round 2 of 2): the r16 performance
-# diff (bloom literal build-time fix, BPE one-corpus-pass, fan_out
-# metadata-only probe, CC materialize() routing, mat.py storage level)
-# has a mechanized rotation closure of 63 registered names — still more
-# than the 50-name window holds alongside the judge-mandated re-checks.
-# Unlike round 15, the window now carries the closure DIRECTLY as far as
-# it fits: all 45 highest-risk rotated names are in `_CHANGED_SINCE_
-# EXTERNAL` below (every dedup/CC/BPE/bloom/NB/dsir/ks/rfm/item-cooc/
-# geometric-median consumer the r15 verdict listed, plus this round's
-# touched queries), and `customer_pareto_abc` + `doc_zipf_fit` enter per
-# verdict item 1 even though their operator is AST-unchanged. The 18
-# remaining rotated names (7 ANN-family fan_out consumers whose new
-# metadata-only split estimate is test-pinned to reproduce the old
-# probe's decisions, and 11 mat.py-only consumers whose sole change is
-# an explicit StorageLevel argument) are covered by the wholesale
-# re-verification pin below instead.
-_CHANGED_SINCE_EXTERNAL: list[str] = [
-    "ann_cosine_topk",
-    "ann_ivf_exact_kmeans_topk",
-    "bloom_pruned_join",
-    "bpe_encode_corpus",
-    "bpe_train_merges",
-    "capture_recapture_dedup_estimate",
-    "cdc_chunk_dedup",
-    "contamination_ngram_overlap",
-    "contamination_winnow_spans",
-    "corpus_selection_pipeline",
-    "customer_rfm_segments",
-    "dedup_aware_split",
-    "dedup_cluster_canonical",
-    "dedup_containment",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_incremental_index",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_survivor_corpus",
-    "doc_dup_cluster_sizes",
-    "dsir_importance_sampling",
-    "geometric_median_embeddings",
-    "item_cooccurrence_topk",
-    "kmeans_lloyd_2iter",
-    "ks_drift_detection",
-    "label_prop_neardup_communities",
-    "mcc_nb_classifier",
-    "minhash_recall_audit",
-    "naive_bayes_eval_f1",
-    "naive_bayes_lang_classify",
-    "near_dup_triangles",
-    "negative_sampling_contrastive",
-    "pagerank_neardup_3iter",
-    "quality_filter_pipeline",
-    "reciprocal_nn_dedup",
-    "semantic_dedup_exact_kmeans",
-    "semantic_dedup_semdedup",
-    "source_contamination_matrix",
-    "split_leakage_neardup",
-    "stream_incremental_index_dedup",
-    "stream_index_update_roundtrip",
-    "substring_dedup_coverage",
-    "substring_dedup_spans",
-]
-
-# Wholesale re-verification pin for the 18 rotated names the window
-# cannot also hold (see the round-16 note above). Receipts: full-registry
-# driver-replica sweeps at sf0.01 (361/361) including adversarial configs
-# (spark.sql.adaptive.enabled=false, spark.sql.exchange.reuse=false) —
-# recorded in OPTIMIZATION_r16.md. CONTENT-INCLUSIVE (r15 ADVICE #1): the
-# r15 pin hashed only the sorted NAME list, so a later edit to the same
-# already-rotated symbols derived the identical name set and silently
-# inherited the exemption. _DIFF_SHA256 additionally hashes the worktree
-# CONTENT of every changed package file (tools/rotation_map.py::
-# content_digest — plans/__init__.py itself excluded: the pin lives here,
-# and this file only reorders the registry dict and records governance
-# state; its rotation effect, zero consumers, is already covered by the
-# name-set component). ANY code change to a touched file after the sweep
-# — same symbols or not — breaks the content digest, the exemption
-# lapses, and test_mechanized_rotation_inside_window fails until the new
-# diff is re-swept and re-pinned. Regenerate both digests with
-# tools/rotation_map.py + hashlib ONLY after re-sweeping.
-_R16_OPT_REVERIFIED_COUNT = 92
-_R16_OPT_REVERIFIED_SHA256 = "a45bdcc8256ededf1af66f6d741b73763e636ab3247d051aa63c06b45ad8b5db"
-_R16_OPT_REVERIFIED_DIFF_SHA256 = "c5d7a120cef1cd3549a327f676f4f95be89b85cf2171e837f64f0df44c6f2d95"
-
-# The 34 queries built + oracle-paired + locally swept during round 7 in
-# plans/staging_r8.py, registered live in round 8 — all 34 went green in
-# CORRECTNESS_r08 (kept as a list: it feeds _EXTERNALLY_GREEN_THROUGH_R8).
-_ROUND8_PROMOTIONS: list[str] = [
-    "tokenizer_fertility_by_lang",
-    "mann_whitney_en_tokens",
-    "welch_t_chars_ab",
-    "permutation_test_chars",
-    "mmd_linear_label_drift",
-    "kcenter_greedy_diversity",
-    "curriculum_pacing_stages",
-    "label_prop_neardup_communities",
-    "ab_power_mde",
-    "hill_tail_doc_length",
-    "trimmed_mean_chars_by_source",
-    "cohort_retention_weekly",
-    "stream_ab_guardrail_welch",
-    "neyman_allocation_by_source",
-    "cusum_changepoint_hourly",
-    "wasserstein_split_drift",
-    "kendall_tau_chars_words",
-    "good_turing_unseen_mass",
-    "k_anonymity_audit",
-    "ams_f2_user_events",
-    "theil_sen_daily_trend",
-    "retrieval_known_item_eval",
-    "knn_hubness_audit",
-    "source_vocab_jaccard",
-    "event_overdispersion_test",
-    "stream_cusum_hourly_monitor",
-    "nb_uncertainty_sampling",
-    "quantile_normalize_lengths",
-    "embedding_anisotropy_audit",
-    "brown_forsythe_length_variance",
-    "shard_rebalance_preview",
-    "join_skew_preflight",
-    "l_diversity_audit",
-    "linear_multitouch_attribution",
-]
-
-# The 10 queries registered live in round 9 (plans/round9_queries.py) —
-# all 10 went green in CORRECTNESS_r09 (kept as a list: it feeds
-# _EXTERNALLY_GREEN_THROUGH_R9).
-_ROUND9_REGISTRATIONS: list[str] = [
-    "prefix_filter_jaccard_join",
-    "runs_test_daily_revenue",
-    "ols_chars_model",
-    "token_drift_top_movers",
-    "mutual_info_source_lang",
-    "obrien_fleming_ab_looks",
-    "sprt_purchase_rate_monitor",
-    "krippendorff_alpha_agreement",
-    "js_divergence_source_matrix",
-    "kaplan_meier_session_survival",
-]
-
-# The 22 queries built + oracle-paired + both-scale swept + adversarial-
-# config verified during round 9 in plans/staging_r10.py, registered live
-# in round 10 (promotion pattern identical to _ROUND8_PROMOTIONS).
-_ROUND10_PROMOTIONS: list[str] = [
-    "t_closeness_audit",
-    "mantel_haenszel_stratified_ab",
-    "cochran_armitage_trend",
-    "cochran_q_three_raters",
-    "quantile_treatment_effects",
-    "logrank_test_session_survival",
-    "session_bot_signals",
-    "intersession_return_km",
-    "reciprocal_nn_dedup",
-    "heaps_law_fit",
-    "cramers_v_source_lang",
-    "smd_covariate_balance",
-    "chao1_vocab_richness",
-    "jackknife_source_sensitivity",
-    "capture_recapture_dedup_estimate",
-    "filter_disparity_audit",
-    "rbo_sparse_vs_dense",
-    "pii_cooccurrence_audit",
-    "mcc_nb_classifier",
-    "friedman_test_event_mix",
-    "page_hinkley_drift",
-    "stream_page_hinkley_monitor",
-]
-
-# The 11 queries built + oracle-paired + three-scale swept (sf0.001 +
-# sf0.01 + sf0.1) + adversarial-config verified during round 10 in
-# plans/staging_r11.py, registered live in round 11 (promotion pattern
-# identical to _ROUND8_PROMOTIONS / _ROUND10_PROMOTIONS).
-_ROUND11_PROMOTIONS: list[str] = [
-    "goodman_kruskal_lambda_source_lang",
-    "kruskal_wallis_length_by_source",
-    "mann_kendall_daily_trend",
-    "cuped_stratified_ab",
-    "e_value_rate_monitor",
-    "stream_e_value_monitor",
-    "contamination_winnow_spans",
-    "dunn_posthoc_length_pairs",
-    "cvm_drift_two_sample",
-    "matryoshka_truncation_audit",
-    "stream_dist_drift_monitor",
-]
-
-# The 19 queries built + oracle-paired + three-scale swept (sf0.001 +
-# sf0.01 + sf0.1) + adversarial-config verified during round 11 in
-# plans/staging_r12.py, registered live in round 12 (promotion pattern
-# identical to _ROUND8/10/11_PROMOTIONS). The round-11 ADVICE fixes
-# (lin moment guard, true-floor bucketing, kuiper degenerate guard)
-# landed in the same module immediately before this promotion and were
-# re-swept at all scales/configs.
-_ROUND12_PROMOTIONS: list[str] = [
-    "cluster_robust_ab_readout",
-    "stratified_logrank_survival",
-    "delta_method_ratio_ab",
-    "nelson_aalen_cumhaz",
-    "jonckheere_terpstra_daily_trend",
-    "energy_distance_drift",
-    "stream_delta_ratio_guardrail",
-    "mood_median_test",
-    "rmst_survival_difference",
-    "brunner_munzel_en_vs_rest",
-    "hosmer_lemeshow_calibration",
-    "spiegelhalter_z_calibration",
-    "kuiper_tod_drift",
-    "lin_regression_adjusted_ab",
-    "dersimonian_laird_daily_ab",
-    "delong_auc_ci",
-    "stream_dersimonian_laird_monitor",
-    "weighted_logrank_family",
-    "combined_pvalue_daily_ab",
-]
-
-# The 12 queries built + oracle-paired + three-scale swept (sf0.001 +
-# sf0.01 + sf0.1) + adversarial-config verified during round 12 in
-# plans/staging_r13.py, registered live in round 13 (promotion pattern
-# identical to _ROUND8/10/11/12_PROMOTIONS). The round-12 ADVICE fixes
-# (alpha-spending DECIMAL(38,0) q-guard, Page dense-rank coefficients,
-# theil-sen true-floor day bucketing) landed in the same module
-# immediately before this promotion and were re-swept at all
-# scales/configs.
-_ROUND13_PROMOTIONS: list[str] = [
-    "bca_bootstrap_mean_ci",
-    "lin_ancova_two_cov_ab",
-    "alpha_spending_gst_ab",
-    "tost_equivalence_ab",
-    "fligner_killeen_scale_by_source",
-    "hodges_lehmann_shift_ab",
-    "page_trend_test_tod",
-    "wilcoxon_signed_rank_prepost",
-    "bartlett_variance_by_source",
-    "stream_tost_guardrail",
-    "theil_sen_ci_daily_trend",
-    "sign_test_prepost",
-]
-
-# The 12 queries built + oracle-paired + three-scale swept (sf0.001 +
-# sf0.01 + sf0.1) + adversarial-config verified during round 13 in
-# plans/staging_r14.py, registered live in round 14 (promotion pattern
-# identical to _ROUND8/10/11/12/13_PROMOTIONS). The round-13 ADVICE #2
-# fix (single-site splice asserts on the streaming-twin oracle rewrites)
-# landed in the same module immediately before this promotion and was
-# re-swept at all scales/configs.
-_ROUND14_PROMOTIONS: list[str] = [
-    "storey_qvalue_segments",
-    "benjamini_yekutieli_segments",
-    "stream_storey_qvalue_monitor",
-    "cox_ph_score_test",
-    "mantel_logrank_trend_tod",
-    "jarque_bera_event_values",
-    "ansari_bradley_scale_ab",
-    "breslow_day_or_homogeneity",
-    "stream_jarque_bera_monitor",
-    "fisher_z_corr_diff_ab",
-    "ljung_box_daily_autocorr",
-    "bowker_symmetry_transitions",
-]
-
-_DRIVER_WINDOW: list[str] = [
-    # Anchors — kept in-window every round for continuity.
-    "sessionize_events",
-    "user_total_durations",
-    "parse_access_logs",
-    # Verdict r15 item 1: the global_order branch-2 consumers whose r15
-    # driver walls contradicted the builder A/Bs — AST-unchanged this
-    # round (the re-A/B kept the r15 shape, plans/r16/ab_log_r16.md §1)
-    # but both MUST get a fresh oracle row + driver wall this round.
-    "customer_pareto_abc",
-    "doc_zipf_fit",
-    # Changed-code re-checks (standing rule above): the 45 highest-risk
-    # names of the round-16 mechanized rotation closure — includes every
-    # name on the r15 verdict's item-2 list. The r14 promotions leave the
-    # window (green driver rows in BOTH CORRECTNESS_r14 and _r15, code
-    # untouched since — see _EXTERNALLY_GREEN_THROUGH_R15).
-    *_CHANGED_SINCE_EXTERNAL,
-]
-
-
-
-# Frozen record of every query with a green external correctness row
-# through round 4 (CORRECTNESS_r01..r04: rows+schema+hash matched, err
-# null). The registry-window tests use this to enforce that any query
-# NOT in this set sits inside the first-50 driver window — i.e. no
-# round may register work behind the window again.
-_EXTERNALLY_GREEN_THROUGH_R4: frozenset[str] = frozenset({
-    "ann_cosine_topk",
-    "ann_ivf_pq_topk",
-    "ann_ivf_topk",
-    "ann_ivf_trained_topk",
-    "ann_lsh_topk",
-    "ann_pq_adc_topk",
-    "anomaly_rolling_zscore",
-    "approx_distinct_users",
-    "approx_price_quantiles",
-    "asof_clicks_views",
-    "balance_band_reconciliation",
-    "basket_part_associations",
-    "bilateral_shipping_volume",
-    "bloom_pruned_join",
-    "bm25_doc_search",
-    "cms_point_frequency",
-    "conditional_agg",
-    "contamination_ngram_overlap",
-    "corpus_selection_pipeline",
-    "cube_part_stats",
-    "customer_order_distribution",
-    "customer_pareto_abc",
-    "customer_rfm_segments",
-    "customer_running_total",
-    "customers_without_orders",
-    "data_quality_report",
-    "debug_ts_shift",
-    "dedup_cluster_canonical",
-    "dedup_containment",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_stream_events",
-    "disjunctive_brand_revenue",
-    "doc_bigram_logprob",
-    "doc_boilerplate_overlap",
-    "doc_chunk_tokens",
-    "doc_fingerprint",
-    "doc_lang_id",
-    "doc_quality_score",
-    "doc_repetition_signals",
-    "doc_tfidf_topk",
-    "doc_token_count_bpe",
-    "doc_token_stats",
-    "doc_top_token_ratio",
-    "doc_unigram_entropy",
-    "doc_unigram_logprob",
-    "doc_winnowing_fingerprint",
-    "doc_zipf_fit",
-    "domain_mixture_sample",
-    "embedding_array_stats",
-    "embedding_covariance",
-    "embedding_knn_join",
-    "embedding_mean_pool",
-    "embedding_quantize_int8",
-    "event_gap_percentiles",
-    "event_lag_lead",
-    "event_sequence_trigrams",
-    "events_hourly_windows",
-    "funnel_stage_conversion",
-    "fuzzy_edit_distance_join",
-    "gap_fill_hourly",
-    "global_topk_orders",
-    "grouping_sets_revenue",
-    "heavy_hitters_bigrams",
-    "heavy_hitters_stream_events",
-    "hll_mergeable_distinct",
-    "important_parts",
-    "json_extract_events",
-    "kll_mergeable_quantiles",
-    "large_quantity_orders",
-    "latest_event_per_user",
-    "multimodal_byte_features",
-    "multimodal_decode",
-    "multimodal_decode_real",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "nation_revenue",
-    "near_dup_triangles",
-    "order_priority_count",
-    "order_value_histogram",
-    "orders_trend_decomposition",
-    "orders_with_heavy_items_semi",
-    "pack_sequences",
-    "parse_access_logs",
-    "pii_redact",
-    "pivot_event_type_counts",
-    "price_percentiles",
-    "pricing_summary",
-    "profit_by_nation_year",
-    "quality_filter_pipeline",
-    "range_join_error_windows",
-    "ranking_family",
-    "retention_cohorts",
-    "rolling_30d_customer_spend",
-    "rollup_revenue",
-    "salted_skew_join",
-    "salted_user_event_totals",
-    "sample_k_per_group",
-    "sample_stratified_docs",
-    "sample_weighted_docs",
-    "scalar_date_funcs",
-    "scalar_math_funcs",
-    "scalar_string_funcs",
-    "scan_csv_lines",
-    "scan_json_lines",
-    "scd2_customer_orders",
-    "session_durations",
-    "session_event_features",
-    "session_funnel_conversion",
-    "session_stats",
-    "session_window_durations",
-    "session_window_stream_durations",
-    "sessionize_access_logs",
-    "sessionize_bucketed",
-    "sessionize_dynamic_gap",
-    "sessionize_events",
-    "sessionize_gap_only",
-    "sessionize_stateful",
-    "setop_except",
-    "setop_except_all",
-    "setop_intersect",
-    "setop_intersect_all",
-    "setop_union",
-    "small_quantity_revenue",
-    "snapshot_diff_cdc",
-    "supplier_customer_same_nation",
-    "table_fingerprint",
-    "theta_set_algebra_distinct",
-    "time_bucket_rollup",
-    "token_frequency_topk",
-    "token_pmi_cooccurrence",
-    "tokenizer_bpe_pair_counts",
-    "top_orders_per_customer",
-    "top_revenue_orders",
-    "top_supplier_revenue",
-    "train_val_test_split",
-    "unpivot_user_value_stats",
-    "user_total_durations",
-    "value_winsorized",
-    "waiting_suppliers_q21",
-})
-
-# Round 5 window: 50/50 green (CORRECTNESS_r05). Union = every query with
-# a green external row through round 5 — i.e. the whole 190-query registry
-# as of round 5's close. Queries in ``_CHANGED_SINCE_EXTERNAL`` are still
-# members (their *older* code was green); the standing rule, not this set,
-# forces their re-check.
-_EXTERNALLY_GREEN_THROUGH_R5: frozenset[str] = _EXTERNALLY_GREEN_THROUGH_R4 | frozenset({
-    "ab_test_two_proportions",
-    "array_set_funcs",
-    "avg_account_balance_q22",
-    "benford_digit_audit",
-    "bootstrap_mean_ci",
-    "customer_order_distribution_q13",
-    "doc_chunk_overlap_rag",
-    "doc_dup_cluster_sizes",
-    "doc_ngram_novelty",
-    "doc_source_contingency_chi2",
-    "doc_sparse_cosine_pairs",
-    "embedding_pca_power_iteration",
-    "equi_depth_histogram",
-    "event_outliers_mad",
-    "events_sliding_windows",
-    "excess_stock_suppliers_q20",
-    "forecast_revenue_q6",
-    "global_sales_channel_q7",
-    "item_cooccurrence_topk",
-    "ks_drift_detection",
-    "label_centroid_similarity",
-    "last_touch_attribution",
-    "late_data_accounting",
-    "line_dedup_c4",
-    "local_supplier_volume_q5",
-    "min_cost_supplier_q2",
-    "minhash_recall_audit",
-    "national_market_share_q8",
-    "negative_sampling_contrastive",
-    "orders_yoy_growth",
-    "pagerank_neardup_3iter",
-    "pareto_skyline_parts",
-    "parse_access_logs",
-    "parts_supplier_relationship_q16",
-    "pipeline_json_sink_roundtrip",
-    "promo_revenue_share_q14",
-    "psi_value_drift",
-    "returned_item_customers_q10",
-    "robust_scaler_features",
-    "rolling_7d_distinct_users",
-    "session_markov_transitions",
-    "sessionize_events",
-    "shipping_modes_q12",
-    "shipping_priority_q3",
-    "source_unigram_kl",
-    "stratified_sample_exact",
-    "stream_stream_interval_join",
-    "user_total_durations",
-    "user_value_ewma",
-    "zorder_cluster_stats",
-})
-
-
-# Round 6 window: 50/50 green (CORRECTNESS_r06). Union = every query with
-# a green external row through round 6 — the whole 224-query registry as
-# of round 6's close. Queries in ``_CHANGED_SINCE_EXTERNAL`` are still
-# members (their *older* code was green); the standing rule, not this set,
-# forces their re-check.
-_EXTERNALLY_GREEN_THROUGH_R6: frozenset[str] = _EXTERNALLY_GREEN_THROUGH_R5 | frozenset({
-    "ab_test_cuped",
-    "ann_ivf_exact_kmeans_topk",
-    "ann_jl_recall_audit",
-    "bpe_encode_corpus",
-    "bpe_train_merges",
-    "calibration_reliability_brier",
-    "ccnet_perplexity_buckets",
-    "cdc_chunk_dedup",
-    "cohens_kappa_agreement",
-    "conformal_interval_coverage",
-    "dedup_incremental_index",
-    "dedup_survivor_corpus",
-    "doc_trigram_backoff_logprob",
-    "dsir_importance_sampling",
-    "geometric_median_embeddings",
-    "hybrid_rrf_retrieval",
-    "jl_project_embeddings",
-    "kmeans_lloyd_2iter",
-    "minhash_s_curve",
-    "naive_bayes_eval_f1",
-    "naive_bayes_lang_classify",
-    "ndcg_jl_ranking",
-    "roc_auc_token_count",
-    "semantic_dedup_exact_kmeans",
-    "semantic_dedup_semdedup",
-    "source_contamination_matrix",
-    "split_leakage_neardup",
-    "stream_incremental_index_dedup",
-    "stream_index_update_roundtrip",
-    "stream_naive_bayes_score",
-    "substring_dedup_coverage",
-    "substring_dedup_spans",
-    "token_budget_waterfill",
-    "token_gini_concentration",
-})
-
-
-# Round 7 window: 50/50 green at HEAD (CORRECTNESS_r07). Union = every
-# query with a green external row through round 7 — the whole 241-query
-# registry as of round 7's close. Queries in ``_CHANGED_SINCE_EXTERNAL``
-# are still members (their *older* code was green); the standing rule,
-# not this set, forces their re-check.
-_EXTERNALLY_GREEN_THROUGH_R7: frozenset[str] = _EXTERNALLY_GREEN_THROUGH_R6 | frozenset({
-    "ab_segment_bh_fdr",
-    "ann_ivf_nprobe_sweep",
-    "chisq_source_language",
-    "dedup_aware_split",
-    "dsir_ess_diagnostic",
-    "expected_calibration_error",
-    "gopher_quality_by_source",
-    "gopher_quality_rules",
-    "gopher_rule_ablation",
-    "mcnemar_nb_vs_heuristic",
-    "mixture_temperature_weights",
-    "padding_efficiency_buckets",
-    "source_language_mix_entropy",
-    "spearman_chars_tokens",
-    "stream_gopher_filter",
-    "vocab_coverage_curve",
-    "zca_whitening_newton_schulz",
-})
-
-
-# Round 8 window: 50/50 green at HEAD (CORRECTNESS_r08) — 3 anchors, the
-# 4 changed-code re-checks, all 34 staging_r8 promotions, 9 fill-ins.
-# Union = every query with a green external row through round 8 — the
-# whole 275-query registry, with ZERO verification-stale rows at the
-# round-8 close. Queries in ``_CHANGED_SINCE_EXTERNAL`` are still
-# members (their *older* code was green); the standing rule, not this
-# set, forces their re-check.
-_EXTERNALLY_GREEN_THROUGH_R8: frozenset[str] = _EXTERNALLY_GREEN_THROUGH_R7 | frozenset(
-    _ROUND8_PROMOTIONS
-)
-
-
-# Round 9 window: 50/50 green at post-HEAD mtime (CORRECTNESS_r09) — 3
-# anchors, the 25 mechanized changed-code re-checks, all 10 round9_queries
-# registrations, 12 fill-ins. Union = every query with a green external
-# row through round 9 — the whole 285-query registry, with ZERO
-# verification-stale rows at the round-9 close. Queries in
-# ``_CHANGED_SINCE_EXTERNAL`` are still members (their *older* code was
-# green); the standing rule, not this set, forces their re-check.
-_EXTERNALLY_GREEN_THROUGH_R9: frozenset[str] = _EXTERNALLY_GREEN_THROUGH_R8 | frozenset(
-    _ROUND9_REGISTRATIONS
-)
-
-
-# Round 10 window: 50/50 green at post-HEAD mtime (CORRECTNESS_r10) — 3
-# anchors, the 4 mechanized changed-code re-checks, all 22 staging_r10
-# promotions, 21 fill-ins. Union = every query with a green external row
-# through round 10 — the whole 307-query registry, with zero
-# verification-stale rows at the round-10 close (judge-verified union
-# over CORRECTNESS_r01–r10).
-_EXTERNALLY_GREEN_THROUGH_R10: frozenset[str] = (
-    _EXTERNALLY_GREEN_THROUGH_R9 | frozenset(_ROUND10_PROMOTIONS)
-)
-
-
-# Round 11 window: 50/50 green at post-HEAD mtime (CORRECTNESS_r11) — 3
-# anchors, the 2 mechanized changed-code re-checks, all 11 staging_r11
-# promotions, 34 fill-ins. Union = every query with a green external row
-# through round 11 — the whole 318-query registry, with zero
-# verification-stale rows at the round-11 close (judge-verified union
-# over CORRECTNESS_r01–r11).
-_EXTERNALLY_GREEN_THROUGH_R11: frozenset[str] = (
-    _EXTERNALLY_GREEN_THROUGH_R10 | frozenset(_ROUND11_PROMOTIONS)
-)
-
-
-# Round 12 window: 50/50 green at post-HEAD mtime (CORRECTNESS_r12) — 3
-# anchors, all 19 staging_r12 promotions, 28 fill-ins. Union = every
-# query with a green external row through round 12 — the whole 337-query
-# registry, with zero verification-stale rows at the round-12 close
-# (judge-verified union over CORRECTNESS_r01–r12).
-_EXTERNALLY_GREEN_THROUGH_R12: frozenset[str] = (
-    _EXTERNALLY_GREEN_THROUGH_R11 | frozenset(_ROUND12_PROMOTIONS)
-)
-
-# CORRECTNESS_r13 window: 3 anchors, the ab_segment_bh_fdr rotation, all
-# 12 staging_r13 promotions, 34 fill-ins — 50/50 green. Union = every
-# query with a green external row through round 13 — the whole 349-query
-# registry, with zero verification-stale rows at the round-13 close
-# (judge-verified union over CORRECTNESS_r01–r13).
-_EXTERNALLY_GREEN_THROUGH_R13: frozenset[str] = (
-    _EXTERNALLY_GREEN_THROUGH_R12 | frozenset(_ROUND13_PROMOTIONS)
-)
-
-# Rounds 14 and 15 ran the identical 50-name window and both closed
-# 50/50 green (CORRECTNESS_r14, CORRECTNESS_r15: rows+schema+hash
-# matched, err null on every row — the r15 verdict set-diffed the two
-# windows to zero). The only names not already green through r13 were
-# the 12 round-14 promotions, so they now carry TWO green driver rows
-# each and leave the window. Nothing was registered in round 15 or 16
-# (optimization rounds add no queries).
-_EXTERNALLY_GREEN_THROUGH_R15: frozenset[str] = (
-    _EXTERNALLY_GREEN_THROUGH_R13 | frozenset(_ROUND14_PROMOTIONS)
-)
-
-
-def _apply_driver_window() -> None:
-    ordered = {n: QUERIES[n] for n in _DRIVER_WINDOW if n in QUERIES}
-    for name, fn in QUERIES.items():
-        if name not in ordered:
-            ordered[name] = fn
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_apply_driver_window()
+from flink_realtime_sessionize_sample_spark.plans import staging_r10  # noqa: F401
+from flink_realtime_sessionize_sample_spark.plans import staging_r11  # noqa: F401
+from flink_realtime_sessionize_sample_spark.plans import staging_r12  # noqa: F401
+from flink_realtime_sessionize_sample_spark.plans import staging_r13  # noqa: F401
+from flink_realtime_sessionize_sample_spark.plans import staging_r14  # noqa: F401
 
 __all__ = ["QUERIES", "ORACLES", "query"]

@@ -1,5 +1,4 @@
-"""Round-9 capability queries — registered live (the round-9 window has
-slots: 3 anchors + 25 mechanized rotation re-checks leaves 22).
+"""Round-9 capability queries (10 queries).
 
 Families completed this round:
 

@@ -1,19 +1,9 @@
-"""Round-10 capability queries: staged during round 9, PROMOTED round 10.
+"""Round-10 capability queries (22 queries).
 
-The round-9 driver window closed at exactly 50/50, and the standing
-no-new-backlog rule in tests/test_registry_window.py forbids live
-registration the driver can't verify within the round — so these 22
-operators were built, oracle-paired, both-scale swept (sf0.001 + sf0.01,
-the stream/PH family also sf0.1) and adversarial-config verified during
-round 9 while held in a staging dict the driver never saw. At round-10
-open the promotion landed exactly as planned (the r7→r8 pattern,
-``plans/staging_r8.py:47-57``): ``staged`` below now delegates to
-``registry.query`` (identical signature), ``plans/__init__`` imports this
-module, and every name sits inside ``_DRIVER_WINDOW`` for an external
-correctness row this round. ``STAGED_QUERIES``/``STAGED_ORACLES`` remain
-as the record of the promoted set (tests/test_staging_r10.py pins each
-query's semantics against independent Python brute-force references
-through them).
+Each query is registered with ``registry.query``, checked against its
+DuckDB oracle by the full-registry sweep (tools/verify_drive.py), and
+pinned against an independent Python brute-force reference in
+tests/test_staging_r10.py.
 
 Families this batch:
 * privacy trio completion: ``t_closeness_audit`` (variational-distance
@@ -50,26 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
-from flink_realtime_sessionize_sample_spark.plans.registry import QueryFn, query
+from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
-
-STAGED_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def staged(name: str, oracle: str | None = None):
-    """Round-10 promotion: registers LIVE via ``registry.query`` and keeps
-    the staging dicts as the promoted-set record for the semantics tests."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        fn = query(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 def _as_erfc_poly() -> str:
     from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
@@ -145,7 +117,7 @@ FROM agg a CROSS JOIN mx m
 """
 
 
-@staged("t_closeness_audit", oracle=_tc_oracle())
+@query("t_closeness_audit", oracle=_tc_oracle())
 def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit completing the release-governance privacy trio
     (k_anonymity_audit / l_diversity_audit / this): for each
@@ -307,7 +279,7 @@ FROM xt
 """
 
 
-@staged("mantel_haenszel_stratified_ab", oracle=_mh_oracle())
+@query("mantel_haenszel_stratified_ab", oracle=_mh_oracle())
 def mantel_haenszel_stratified_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran-Mantel-Haenszel stratified A/B test + Mantel-Haenszel
     pooled odds ratio: does the treatment arm convert better CONTROLLING
@@ -435,7 +407,7 @@ FROM xt
 """
 
 
-@staged("cochran_armitage_trend", oracle=_ca_oracle())
+@query("cochran_armitage_trend", oracle=_ca_oracle())
 def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran-Armitage test for TREND: does the proportion of English
     documents rise or fall MONOTONICALLY with document length (ordered
@@ -550,7 +522,7 @@ FROM q
     )
 
 
-@staged("cochran_q_three_raters", oracle=_cq_oracle())
+@query("cochran_q_three_raters", oracle=_cq_oracle())
 def cochran_q_three_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran's Q across THREE matched binary classifiers on the same
     held-out documents — naive Bayes, the marker-word heuristic, and
@@ -657,7 +629,7 @@ FROM hit a JOIN hit b ON a.q = b.q AND a.g = 0 AND b.g = 1
 """
 
 
-@staged("quantile_treatment_effects", oracle=_qte_oracle())
+@query("quantile_treatment_effects", oracle=_qte_oracle())
 def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-decile quantile treatment effects of the hash A/B split on
     document length: the decile-by-decile shift between the two arms'
@@ -791,7 +763,7 @@ FROM xt
     )
 
 
-@staged("logrank_test_session_survival", oracle=_lr_oracle())
+@query("logrank_test_session_survival", oracle=_lr_oracle())
 def logrank_test_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-arm log-rank (Mantel-Cox) test on session lifetime under the
     reference's session semantics: do the two user hash-arms' sessions
@@ -925,7 +897,7 @@ FROM b CROSS JOIN tot t
     )
 
 
-@staged("session_bot_signals", oracle=_bot_oracle())
+@query("session_bot_signals", oracle=_bot_oracle())
 def session_bot_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bot-vs-organic triage of sessionized traffic — THE classic
     downstream of access-log sessionization (the reference's own
@@ -1046,7 +1018,7 @@ FROM cum
     )
 
 
-@staged("intersession_return_km", oracle=_ret_oracle())
+@query("intersession_return_km", oracle=_ret_oracle())
 def intersession_return_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier estimate of user RETURN time — the gap from a
     session's last event to the user's NEXT session start, with each
@@ -1217,7 +1189,7 @@ JOIN embeddings lb ON lb.vec_id = m.vec_b
 """
 
 
-@staged("reciprocal_nn_dedup", oracle=_rnn_oracle())
+@query("reciprocal_nn_dedup", oracle=_rnn_oracle())
 def reciprocal_nn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-nearest-neighbor near-duplicate candidates: pairs
     where EACH vector is in the other's k = {_RNN_K} cosine kNN list —
@@ -1345,7 +1317,7 @@ FROM m
 """
 
 
-@staged("heaps_law_fit", oracle=_heaps_oracle())
+@query("heaps_law_fit", oracle=_heaps_oracle())
 def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law fit V = K * N^beta of 3-SHINGLE vocabulary growth
     against corpus size — the companion of ``doc_zipf_fit`` (the two
@@ -1450,10 +1422,7 @@ from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (  # 
 
 
 def _cv_oracle() -> str:
-    # Local import (not module-level): the guarded-sum constant arrived in
-    # round 11, and widening the module's import-binding table would make
-    # tools/rotation_map.py fall back to whole-module rotation — a local
-    # import keeps the blast radius at exactly this query's two symbols.
+    # Local import: only this oracle uses the guarded-sum constant.
     from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
         _CHISQ_SUM_E9 as _CV_SUM_E9,
     )
@@ -1497,7 +1466,7 @@ FROM chi CROSS JOIN dims d CROSS JOIN tot t
 """
 
 
-@staged("cramers_v_source_lang", oracle=_cv_oracle())
+@query("cramers_v_source_lang", oracle=_cv_oracle())
 def cramers_v_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramer's V of the source x language contingency — the [0, 1]
     NORMALIZED effect size that completes the dependence triple:
@@ -1617,7 +1586,7 @@ FROM m
 """
 
 
-@staged("smd_covariate_balance", oracle=_smd_oracle())
+@query("smd_covariate_balance", oracle=_smd_oracle())
 def smd_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standardized-mean-difference balance table of the hash A/B split
     across the document covariates (chars, words, distinct words) — the
@@ -1702,7 +1671,7 @@ FROM s
 """
 
 
-@staged("chao1_vocab_richness", oracle=_chao1_oracle())
+@query("chao1_vocab_richness", oracle=_chao1_oracle())
 def chao1_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chao1 lower-bound estimate of TOTAL 3-shingle vocabulary richness
     (bias-corrected form V + f1(f1-1)/(2(f2+1)), defined even with no
@@ -1777,7 +1746,7 @@ FROM per p CROSS JOIN tot t
 """
 
 
-@staged("jackknife_source_sensitivity", oracle=_jk_oracle())
+@query("jackknife_source_sensitivity", oracle=_jk_oracle())
 def jackknife_source_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-source-out sensitivity of the corpus-level statistics
     (mean document length, English share): for each source, the metric
@@ -1867,7 +1836,7 @@ FROM m
 """
 
 
-@staged("capture_recapture_dedup_estimate", oracle=_cr_oracle())
+@query("capture_recapture_dedup_estimate", oracle=_cr_oracle())
 def capture_recapture_dedup_estimate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1991,7 +1960,7 @@ FROM xt
     )
 
 
-@staged("filter_disparity_audit", oracle=_fd_oracle())
+@query("filter_disparity_audit", oracle=_fd_oracle())
 def filter_disparity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language disparity audit of the Gopher quality filter: pass
     rate by language vs the rest of the corpus, risk ratio against the
@@ -2143,7 +2112,7 @@ SELECT (SELECT count(*) FROM common)::BIGINT AS overlap_at_{_RBO_K},
 """
 
 
-@staged("rbo_sparse_vs_dense", oracle=_rbo_oracle())
+@query("rbo_sparse_vs_dense", oracle=_rbo_oracle())
 def rbo_sparse_vs_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-biased overlap (Webber et al. 2010; p = {_RBO_P}, truncated
     at depth {_RBO_K}, no extrapolation) between the BM25 lexical and
@@ -2291,7 +2260,7 @@ FROM b CROSS JOIN t
 """
 
 
-@staged("pii_cooccurrence_audit", oracle=_pii_co_oracle())
+@query("pii_cooccurrence_audit", oracle=_pii_co_oracle())
 def pii_cooccurrence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc-level PII co-occurrence audit joining the content-risk scan
     (``pii_redact``'s email / long-number detectors over an
@@ -2432,7 +2401,7 @@ FROM tot CROSS JOIN ag
     )
 
 
-@staged("mcc_nb_classifier", oracle=_mcc_oracle())
+@query("mcc_nb_classifier", oracle=_mcc_oracle())
 def mcc_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiclass Matthews correlation (Gorodkin 2004 R_K) of the
     held-out naive-Bayes language predictions — the single-number
@@ -2581,7 +2550,7 @@ FROM q
 """
 
 
-@staged("friedman_test_event_mix", oracle=_fried_oracle())
+@query("friedman_test_event_mix", oracle=_fried_oracle())
 def friedman_test_event_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tie-corrected Friedman test (Friedman 1937; Conover's tie
     correction) of whether users engage with the three funnel actions
@@ -2737,7 +2706,7 @@ def _ph_readout(d: DataFrame) -> DataFrame:
     )
 
 
-@staged("page_hinkley_drift", oracle=_ph_oracle())
+@query("page_hinkley_drift", oracle=_ph_oracle())
 def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-Hinkley sequential drift detector on the daily mean event
     value — the third change-detection lens next to
@@ -2782,7 +2751,7 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ph_readout(d)
 
 
-@staged(
+@query(
     "stream_page_hinkley_monitor",
     oracle=_ph_oracle("WHERE event_id % 2 = 1"),
 )

@@ -1,18 +1,9 @@
-"""Round-11 capability queries: staged during round 10, PROMOTED round 11.
+"""Round-11 capability queries (11 queries).
 
-The round-10 driver window closed at exactly 50/50, and the standing
-no-new-backlog rule in tests/test_registry_window.py forbids live
-registration the driver can't verify within the round — so these 11
-operators were built, oracle-paired, three-scale swept (sf0.001 + sf0.01
-+ sf0.1) and adversarial-config verified during round 10 while held in a
-staging dict the driver never saw. At round-11 open the promotion landed
-exactly as planned (the r7→r8→r10 pattern, ``plans/staging_r10.py:60-70``):
-``staged`` below now delegates to ``registry.query`` (identical
-signature), ``plans/__init__`` imports this module, and every name sits
-inside ``_DRIVER_WINDOW`` for an external correctness row this round.
-``STAGED_QUERIES``/``STAGED_ORACLES`` remain as the record of the
-promoted set (tests/test_staging_r11.py pins each query's semantics
-against independent Python brute-force references through them).
+Each query is registered with ``registry.query``, checked against its
+DuckDB oracle by the full-registry sweep (tools/verify_drive.py), and
+pinned against an independent Python brute-force reference in
+tests/test_staging_r11.py.
 
 Families this batch (continuing the measured-needs pattern — judge r9
 item 8 named always-valid inference and stratified CUPED; the rest
@@ -52,26 +43,8 @@ from flink_realtime_sessionize_sample_spark.functions import text as T
 from flink_realtime_sessionize_sample_spark.operators.global_order import (
     with_global_rank,
 )
-from flink_realtime_sessionize_sample_spark.plans.registry import QueryFn, query
+from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
-
-STAGED_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def staged(name: str, oracle: str | None = None):
-    """Round-11 promotion: registers LIVE via ``registry.query`` and keeps
-    the staging dicts as the promoted-set record for the semantics tests."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        fn = query(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 def _as_erfc_poly() -> str:
     from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
@@ -120,7 +93,7 @@ FROM agg
 """
 
 
-@staged("goodman_kruskal_lambda_source_lang", oracle=_gk_oracle())
+@query("goodman_kruskal_lambda_source_lang", oracle=_gk_oracle())
 def goodman_kruskal_lambda_source_lang(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -257,7 +230,7 @@ FROM xt
 """
 
 
-@staged("kruskal_wallis_length_by_source", oracle=_kw_oracle())
+@query("kruskal_wallis_length_by_source", oracle=_kw_oracle())
 def kruskal_wallis_length_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tie-corrected Kruskal-Wallis H: do the k = |sources| document-length
     distributions share one location, without assuming normality? The
@@ -403,7 +376,7 @@ FROM xt
 """
 
 
-@staged("mann_kendall_daily_trend", oracle=_mk_oracle())
+@query("mann_kendall_daily_trend", oracle=_mk_oracle())
 def mann_kendall_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall monotone-trend test on daily event volume — the
     SIGNIFICANCE companion to the registered ``theil_sen_daily_trend``
@@ -569,7 +542,7 @@ FROM agg
 """
 
 
-@staged("cuped_stratified_ab", oracle=_cuped_s_oracle())
+@query("cuped_stratified_ab", oracle=_cuped_s_oracle())
 def cuped_stratified_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-stratified CUPED A/B readout (Deng et al. 2013 §5): users are
     stratified by PRE-PERIOD activity band (low/mid/high pre-period event
@@ -847,7 +820,7 @@ def _ev_day_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged("e_value_rate_monitor", oracle=_ev_oracle())
+@query("e_value_rate_monitor", oracle=_ev_oracle())
 def e_value_rate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Always-valid e-value monitor for a >= 25% purchase-rate lift: the
     likelihood-ratio e-process (test martingale — Ramdas et al. 2023
@@ -879,7 +852,7 @@ def e_value_rate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ev_readout(_ev_day_frame(spark, sf_dir))
 
 
-@staged("stream_e_value_monitor", oracle=_ev_oracle("WHERE event_id % 2 = 1"))
+@query("stream_e_value_monitor", oracle=_ev_oracle("WHERE event_id % 2 = 1"))
 def stream_e_value_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The e-value monitor computed ON THE INGEST PATH — the 7th
     streaming twin (the ``stream_page_hinkley_monitor`` pattern): the
@@ -998,7 +971,7 @@ FROM agg WHERE n_hit > 0
 """
 
 
-@staged("contamination_winnow_spans", oracle=_winnow_oracle())
+@query("contamination_winnow_spans", oracle=_winnow_oracle())
 def contamination_winnow_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination audit via winnowing fingerprints
     (Schleimer et al. 2003): per training document, how many of its
@@ -1182,7 +1155,7 @@ FROM kk
 """
 
 
-@staged("dunn_posthoc_length_pairs", oracle=_dunn_oracle())
+@query("dunn_posthoc_length_pairs", oracle=_dunn_oracle())
 def dunn_posthoc_length_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dunn's (1964) tie-corrected post-hoc test: WHICH source pairs
     differ in document-length location, after the omnibus
@@ -1359,7 +1332,7 @@ FROM s
 """
 
 
-@staged("cvm_drift_two_sample", oracle=_cvm_oracle())
+@query("cvm_drift_two_sample", oracle=_cvm_oracle())
 def cvm_drift_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Cramér-von Mises drift statistic between the first and
     second half of the event stream's time range — the INTEGRAL (L2)
@@ -1497,7 +1470,7 @@ a AS (
 """
 
 
-@staged("matryoshka_truncation_audit", oracle=_mrl_oracle())
+@query("matryoshka_truncation_audit", oracle=_mrl_oracle())
 def matryoshka_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style prefix-truncation audit of the embedding space
     (Kusupati et al. 2022): for d in {8, 16, 32} of 64 dims, recall@5 of
@@ -1758,7 +1731,7 @@ def _sdd_readout(d: DataFrame) -> DataFrame:
     )
 
 
-@staged("stream_dist_drift_monitor", oracle=_sdd_oracle())
+@query("stream_dist_drift_monitor", oracle=_sdd_oracle())
 def stream_dist_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift monitor (two-sample KS + CvM over a day-rank
     split) computed ON THE INGEST PATH — the 8th streaming twin: the

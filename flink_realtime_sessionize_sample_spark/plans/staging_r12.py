@@ -1,22 +1,13 @@
-"""Round-12 capability queries — STAGED during round 11, PROMOTED at the
-round-12 open (the r7→r8→r10→r11 staging pattern: the round-11 driver
-window closed at 50/50, and the standing no-new-backlog rule in
-tests/test_registry_window.py forbids live registration the driver can't
-verify within the round).
+"""Round-12 capability queries (19 queries).
 
-``staged`` now registers LIVE via ``registry.query`` (exactly how
-``plans/staging_r11.py`` flipped at the round-11 open);
-``STAGED_QUERIES``/``STAGED_ORACLES`` remain as the promoted-set record
-for the semantics tests. Before promotion each query was verified by
-tools/staged_verify.py (STAGED_MODULE=staging_r12) at sf0.001 + sf0.01 +
-sf0.1 (plus the five adversarial configs), and is pinned by independent
-Python references in tests/test_staging_r12.py. At the promotion the
-three round-11 ADVICE items were fixed in-place (all three land with the
-promotion rotation): the lin second-order moments ride the DECIMAL(38,0)
-symmetric-overflow guard, every local bucketing pair is TRUE-floor on
-both engines (measured: Spark ``div`` AND DuckDB integer ``//`` both
-truncate — see ``_fdiv_spark``), and the kuiper degenerate split NULLs
-loud in both engines instead of Spark-NULL-vs-DuckDB-NaN.
+Each query is registered with ``registry.query``, checked against its
+DuckDB oracle by the full-registry sweep (tools/verify_drive.py), and
+pinned by independent Python references in tests/test_staging_r12.py.
+The lin second-order moments ride the DECIMAL(38,0) symmetric-overflow
+guard, every local bucketing pair is TRUE-floor on both engines
+(measured: Spark ``div`` AND DuckDB integer ``//`` both truncate — see
+``_fdiv_spark``), and the kuiper degenerate split NULLs loud in both
+engines instead of Spark-NULL-vs-DuckDB-NaN.
 
 Families this batch (judge r10 item 6 named the first two; the rest
 complete started families):
@@ -90,7 +81,7 @@ from flink_realtime_sessionize_sample_spark.functions import text as T
 from flink_realtime_sessionize_sample_spark.operators.global_order import (
     with_global_rank,
 )
-from flink_realtime_sessionize_sample_spark.plans.registry import QueryFn, query
+from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.plans.round9_queries import (
     _session_obs,
 )
@@ -100,25 +91,6 @@ from flink_realtime_sessionize_sample_spark.plans.staging_r10 import (
     _LR_Z,
 )
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
-
-STAGED_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def staged(name: str, oracle: str | None = None):
-    """Round-12 promotion: registers LIVE via ``registry.query`` and keeps
-    the staging dicts as the promoted-set record for the semantics tests
-    (the r8/r10/r11 pattern)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        fn = query(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 def _as_erfc_poly() -> str:
     from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
@@ -277,7 +249,7 @@ FROM xt
     )
 
 
-@staged("cluster_robust_ab_readout", oracle=_crab_oracle())
+@query("cluster_robust_ab_readout", oracle=_crab_oracle())
 def cluster_robust_ab_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-robust A/B readout for a session-level metric randomized at
     USER level — the experimentation family's judge-named gap (r10 item
@@ -474,7 +446,7 @@ FROM xt
     )
 
 
-@staged("stratified_logrank_survival", oracle=_slr_oracle())
+@query("stratified_logrank_survival", oracle=_slr_oracle())
 def stratified_logrank_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRATIFIED log-rank test on session lifetime — the judge-named
     survival-family completion (r10 item 6): the two-arm
@@ -699,7 +671,7 @@ FROM xt
 """
 
 
-@staged("delta_method_ratio_ab", oracle=_dmr_oracle())
+@query("delta_method_ratio_ab", oracle=_dmr_oracle())
 def delta_method_ratio_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-method A/B readout for a RATIO metric (purchases per event)
     randomized at user level — the second clustered-experimentation
@@ -881,7 +853,7 @@ FROM cum
     )
 
 
-@staged("nelson_aalen_cumhaz", oracle=_na_oracle())
+@query("nelson_aalen_cumhaz", oracle=_na_oracle())
 def nelson_aalen_cumhaz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative-hazard estimator of session lifetime under
     the reference's exact session semantics — the second canonical
@@ -1046,7 +1018,7 @@ FROM xt
 """
 
 
-@staged("jonckheere_terpstra_daily_trend", oracle=_jt_oracle())
+@query("jonckheere_terpstra_daily_trend", oracle=_jt_oracle())
 def jonckheere_terpstra_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jonckheere-Terpstra test for an ORDERED trend in event value across
     the four time-of-day bands (night → morning → afternoon → evening) —
@@ -1237,7 +1209,7 @@ FROM sums s CROSS JOIN tot t
 """
 
 
-@staged("energy_distance_drift", oracle=_ed_oracle())
+@query("energy_distance_drift", oracle=_ed_oracle())
 def energy_distance_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample ENERGY-distance drift statistic between the first and
     second half of the event stream's time range — completing the
@@ -1370,7 +1342,7 @@ def energy_distance_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "stream_delta_ratio_guardrail",
     oracle=_dmr_oracle("WHERE event_id % 2 = 1"),
 )
@@ -1506,7 +1478,7 @@ FROM xt
 """
 
 
-@staged("mood_median_test", oracle=_mood_oracle())
+@query("mood_median_test", oracle=_mood_oracle())
 def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mood's median test across the k = |sources| document-length
     groups: compute the GRAND (pooled low) median, classify every
@@ -1771,7 +1743,7 @@ FROM xt
     )
 
 
-@staged("rmst_survival_difference", oracle=_rmst_oracle())
+@query("rmst_survival_difference", oracle=_rmst_oracle())
 def rmst_survival_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Restricted-mean-survival-time difference at tau = 30 min between
     the two user hash-arms, under the reference's session semantics —
@@ -2048,7 +2020,7 @@ FROM xt
 """
 
 
-@staged("brunner_munzel_en_vs_rest", oracle=_bm_oracle())
+@query("brunner_munzel_en_vs_rest", oracle=_bm_oracle())
 def brunner_munzel_en_vs_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brunner-Munzel test of stochastic equality between English and
     non-English document lengths — the Behrens-Fisher completion of the
@@ -2242,7 +2214,7 @@ FROM xt
     )
 
 
-@staged("hosmer_lemeshow_calibration", oracle=_hl_oracle())
+@query("hosmer_lemeshow_calibration", oracle=_hl_oracle())
 def hosmer_lemeshow_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hosmer-Lemeshow goodness-of-calibration TEST over the house
     calibration score — the hypothesis-test completion of the
@@ -2403,7 +2375,7 @@ FROM xt
     )
 
 
-@staged("spiegelhalter_z_calibration", oracle=_spz_oracle())
+@query("spiegelhalter_z_calibration", oracle=_spz_oracle())
 def spiegelhalter_z_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spiegelhalter's Z calibration test (Spiegelhalter 1986) over the
     house calibration score — the UNBINNED completion of the calibration
@@ -2566,7 +2538,7 @@ FROM lamt
 """
 
 
-@staged("kuiper_tod_drift", oracle=_kp_oracle())
+@query("kuiper_tod_drift", oracle=_kp_oracle())
 def kuiper_tod_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kuiper two-sample drift test on event TIME-OF-DAY between the
     first and second half of the stream's time range — the CIRCULAR-data
@@ -2786,7 +2758,7 @@ FROM xt
 """
 
 
-@staged("lin_regression_adjusted_ab", oracle=_lin_oracle())
+@query("lin_regression_adjusted_ab", oracle=_lin_oracle())
 def lin_regression_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regression-adjusted ATE with per-arm slopes (Lin 2013, "Agnostic
     notes on regression adjustments to experimental data") — the
@@ -3070,7 +3042,7 @@ FROM xt
 """
 
 
-@staged("dersimonian_laird_daily_ab", oracle=_dl_oracle())
+@query("dersimonian_laird_daily_ab", oracle=_dl_oracle())
 def dersimonian_laird_daily_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DerSimonian-Laird random-effects pooled A/B across day strata —
     the heterogeneity-aware counterpart of the registered
@@ -3323,7 +3295,7 @@ FROM xt
 """
 
 
-@staged("delong_auc_ci", oracle=_dlg_oracle())
+@query("delong_auc_ci", oracle=_dlg_oracle())
 def delong_auc_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DeLong AUC variance and 95% CI (DeLong et al. 1988) for the house
     ROC-AUC (token count predicting ``lang = 'en'``) — the INFERENCE
@@ -3444,7 +3416,7 @@ def delong_auc_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "stream_dersimonian_laird_monitor",
     oracle=_dl_oracle("WHERE event_id % 2 = 1"),
 )
@@ -3642,7 +3614,7 @@ FROM zz
     )
 
 
-@staged("weighted_logrank_family", oracle=_wlr_oracle())
+@query("weighted_logrank_family", oracle=_wlr_oracle())
 def weighted_logrank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The weighted log-rank family over session survival — log-rank
     (w = 1), Gehan-Breslow (w proportional to the risk-set size: most
@@ -3827,7 +3799,7 @@ FROM xf
 """
 
 
-@staged("combined_pvalue_daily_ab", oracle=_pc_oracle())
+@query("combined_pvalue_daily_ab", oracle=_pc_oracle())
 def combined_pvalue_daily_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fisher's and Stouffer's combined p-values across day strata — the
     p-COMBINATION leg of the multi-day inference triangle this batch

@@ -1,15 +1,8 @@
-"""Round-13 capability queries — staged during round 12, REGISTERED LIVE
-at the round-13 open (the r7→r8→r10→r11→r12 staging pattern: built and
-verified one round ahead, promoted when the driver window has room).
+"""Round-13 capability queries (12 queries).
 
-``staged`` now delegates to ``registry.query`` (the promotion flip);
-``STAGED_QUERIES``/``STAGED_ORACLES`` remain as the promoted-set record
-for the semantics tests. Each query was verified by
-tools/staged_verify.py (STAGED_MODULE=staging_r13) at sf0.001 + sf0.01 +
-sf0.1 (plus the five adversarial configs) before promotion — and
-re-swept after the three ADVICE r12 fixes landed in this module at the
-round-13 open — and is pinned by independent Python references in
-tests/test_staging_r13.py.
+Each query is registered with ``registry.query``, checked against its
+DuckDB oracle by the full-registry sweep (tools/verify_drive.py), and
+pinned by independent Python references in tests/test_staging_r13.py.
 
 The batch (the three round-11 verdict "next round #6" picks, each a
 measured-need family completion):
@@ -61,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
-from flink_realtime_sessionize_sample_spark.plans.registry import QueryFn, query
+from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.plans.round9_queries import (
     _OBF_Z_MICRO,
 )
@@ -73,25 +66,6 @@ from flink_realtime_sessionize_sample_spark.plans.staging_r12 import (
     _pmod_duck,
 )
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
-
-STAGED_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def staged(name: str, oracle: str | None = None):
-    """Round-13 promotion: registers LIVE via ``registry.query`` and keeps
-    the staging dicts as the promoted-set record for the semantics tests
-    (the r8/r10/r11/r12 pattern)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        fn = query(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 def _as_erfc_poly() -> str:
     from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
@@ -300,7 +274,7 @@ FROM point p, rks r, stats s, sel e
 """
 
 
-@staged("bca_bootstrap_mean_ci", oracle=_bca_oracle())
+@query("bca_bootstrap_mean_ci", oracle=_bca_oracle())
 def bca_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BCa (bias-corrected and accelerated) bootstrap 95% interval for
     mean order value — Efron (1987), "Better bootstrap confidence
@@ -609,7 +583,7 @@ FROM xt
 """
 
 
-@staged("lin_ancova_two_cov_ab", oracle=_a2_oracle())
+@query("lin_ancova_two_cov_ab", oracle=_a2_oracle())
 def lin_ancova_two_cov_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regression-adjusted ATE with per-arm fits on TWO covariates —
     Lin (2013) / classical ANCOVA with full treatment interactions: the
@@ -922,7 +896,7 @@ FROM zz
 """
 
 
-@staged("alpha_spending_gst_ab", oracle=_gs_oracle())
+@query("alpha_spending_gst_ab", oracle=_gs_oracle())
 def alpha_spending_gst_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-sequential A/B readout with Lan–DeMets ALPHA-SPENDING
     boundaries (Lan & DeMets 1983) in both canonical families —
@@ -1229,7 +1203,7 @@ def _tost_readout(m: DataFrame) -> DataFrame:
     )
 
 
-@staged("tost_equivalence_ab", oracle=_tost_oracle())
+@query("tost_equivalence_ab", oracle=_tost_oracle())
 def tost_equivalence_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOST equivalence test (Schuirmann 1987, "two one-sided tests") on
     the event-value metric between the user-hash arms — the inference the
@@ -1392,7 +1366,7 @@ FROM xt
 """
 
 
-@staged("fligner_killeen_scale_by_source", oracle=_fk_oracle())
+@query("fligner_killeen_scale_by_source", oracle=_fk_oracle())
 def fligner_killeen_scale_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fligner-Killeen test: do the k = |sources| document-length
     distributions share one SCALE? The rank-based robust completion of
@@ -1667,7 +1641,7 @@ def _hl_frame(e: DataFrame) -> DataFrame:
     )
 
 
-@staged("hodges_lehmann_shift_ab", oracle=_hl_oracle())
+@query("hodges_lehmann_shift_ab", oracle=_hl_oracle())
 def hodges_lehmann_shift_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hodges-Lehmann shift estimate with Moses 95% bounds between the
     user-hash arms on the event-value metric — the EFFECT SIZE the rank
@@ -1779,7 +1753,7 @@ FROM xt
 """
 
 
-@staged("page_trend_test_tod", oracle=_pg_oracle())
+@query("page_trend_test_tod", oracle=_pg_oracle())
 def page_trend_test_tod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page's trend test (Page 1963) for a monotone diurnal effect: do
     mean event values RISE across the four ordered 6-hour time-of-day
@@ -1970,7 +1944,7 @@ FROM xt
 """
 
 
-@staged("wilcoxon_signed_rank_prepost", oracle=_ws_oracle())
+@query("wilcoxon_signed_rank_prepost", oracle=_ws_oracle())
 def wilcoxon_signed_rank_prepost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilcoxon signed-rank test on PAIRED per-user spend (post-midpoint
     minus pre-midpoint cents) — the paired member completing the rank
@@ -2159,7 +2133,7 @@ FROM xt
 """
 
 
-@staged("bartlett_variance_by_source", oracle=_bl_oracle())
+@query("bartlett_variance_by_source", oracle=_bl_oracle())
 def bartlett_variance_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bartlett's test: are the k = |sources| document-length VARIANCES
     equal, under the normal-theory sharpest test? Completes the
@@ -2254,7 +2228,7 @@ def bartlett_variance_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- streaming TOST guardrail twin -------------------------------------------------
 
 
-@staged(
+@query(
     "stream_tost_guardrail",
     oracle=_tost_oracle(where="WHERE event_id % 2 = 1"),
 )
@@ -2417,7 +2391,7 @@ FROM ms, med, sel
 """
 
 
-@staged("theil_sen_ci_daily_trend", oracle=_tsc_oracle())
+@query("theil_sen_ci_daily_trend", oracle=_tsc_oracle())
 def theil_sen_ci_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sen's distribution-free 95% confidence bounds for the Theil-Sen
     daily-volume slope (Sen 1968; the Gilbert 1987 field form) — the
@@ -2579,7 +2553,7 @@ FROM xt
 """
 
 
-@staged("sign_test_prepost", oracle=_sg_oracle())
+@query("sign_test_prepost", oracle=_sg_oracle())
 def sign_test_prepost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign test on the paired per-user pre/post spend differences —
     completing the paired-inference trio: the Welch-style mean tests

@@ -1,15 +1,8 @@
-"""Round-14 capability queries — staged during round 13, REGISTERED LIVE
-at the round-14 open (the r7→r8→r10→r11→r12→r13 staging pattern: built
-and verified one round ahead, promoted when the driver window has room).
+"""Round-14 capability queries (12 queries).
 
-``staged`` now delegates to ``registry.query`` (the promotion flip);
-``STAGED_QUERIES``/``STAGED_ORACLES`` remain as the promoted-set record
-for the semantics tests. Each query was verified by
-tools/staged_verify.py (STAGED_MODULE=staging_r14) at sf0.001 + sf0.01 +
-sf0.1 (plus the five adversarial configs) before promotion — and
-re-swept after the ADVICE r13 oracle-splice guard landed in this module
-at the round-14 open — and is pinned by independent Python references
-in tests/test_staging_r14.py.
+Each query is registered with ``registry.query``, checked against its
+DuckDB oracle by the full-registry sweep (tools/verify_drive.py), and
+pinned by independent Python references in tests/test_staging_r14.py.
 
 The batch (the three round-12 verdict "next round #4" picks, each a
 measured-need family completion, plus five further completions):
@@ -72,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
-from flink_realtime_sessionize_sample_spark.plans.registry import QueryFn, query
+from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.plans.staging_r12 import (
     _dec_sum_bigint,
     _fdiv_duck,
@@ -80,25 +73,6 @@ from flink_realtime_sessionize_sample_spark.plans.staging_r12 import (
     _pmod_duck,
 )
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
-
-STAGED_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def staged(name: str, oracle: str | None = None):
-    """Round-14 promotion: registers LIVE via ``registry.query`` and keeps
-    the staging dicts as the promoted-set record for the semantics tests
-    (the r8/r10/r11/r12/r13 pattern)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        fn = query(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 def _as_erfc_poly() -> str:
     from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
@@ -157,7 +131,7 @@ FROM qv
     )
 
 
-@staged("storey_qvalue_segments", oracle=_storey_oracle())
+@query("storey_qvalue_segments", oracle=_storey_oracle())
 def storey_qvalue_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Storey pi0 + q-values over the per-segment A/B battery — the
     FDR-family completion the round-12 verdict named: the registered
@@ -260,7 +234,7 @@ FROM kk
     )
 
 
-@staged("benjamini_yekutieli_segments", oracle=_by_oracle())
+@query("benjamini_yekutieli_segments", oracle=_by_oracle())
 def benjamini_yekutieli_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini-Yekutieli (2001) step-up FDR over the per-segment A/B
     battery — the dependence-robust member completing the FDR trio: BH
@@ -517,7 +491,7 @@ FROM xt
     )
 
 
-@staged("cox_ph_score_test", oracle=_cox_oracle())
+@query("cox_ph_score_test", oracle=_cox_oracle())
 def cox_ph_score_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cox proportional-hazards SCORE test (Cox 1972; Breslow ties) at
     beta = 0: does session lifetime depend on the session's START HOUR?
@@ -660,7 +634,7 @@ FROM xt CROSS JOIN piv
     )
 
 
-@staged("mantel_logrank_trend_tod", oracle=_mt_oracle())
+@query("mantel_logrank_trend_tod", oracle=_mt_oracle())
 def mantel_logrank_trend_tod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mantel's (1963) conditional log-rank TREND across the four
     ordered time-of-day start bands (night/morning/afternoon/evening =
@@ -857,7 +831,7 @@ FROM l4
 """
 
 
-@staged("jarque_bera_event_values", oracle=_jb_oracle())
+@query("jarque_bera_event_values", oracle=_jb_oracle())
 def jarque_bera_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jarque-Bera moment-based normality readout of the event-value
     distribution — the parametric normality member next to the
@@ -1002,7 +976,7 @@ FROM xt
 """
 
 
-@staged("ansari_bradley_scale_ab", oracle=_ab_oracle())
+@query("ansari_bradley_scale_ab", oracle=_ab_oracle())
 def ansari_bradley_scale_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ansari-Bradley rank test for a SCALE difference between the
     user-hash arms on the event-value metric — the two-sample member
@@ -1208,7 +1182,7 @@ FROM xt
 """
 
 
-@staged("breslow_day_or_homogeneity", oracle=_bd_oracle())
+@query("breslow_day_or_homogeneity", oracle=_bd_oracle())
 def breslow_day_or_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Breslow-Day test of odds-ratio HOMOGENEITY across the event-type
     strata — the diagnostic the registered
@@ -1385,7 +1359,7 @@ FROM qv
     )
 
 
-@staged("stream_storey_qvalue_monitor", oracle=_stream_storey_oracle())
+@query("stream_storey_qvalue_monitor", oracle=_stream_storey_oracle())
 def stream_storey_qvalue_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 12th streaming twin: Storey pi0/q-values recomputed as events
     arrive — per micro-batch, ONE map-side-combined aggregate reduces
@@ -1491,7 +1465,7 @@ def _stream_jb_oracle() -> str:
     return restricted
 
 
-@staged("stream_jarque_bera_monitor", oracle=_stream_jb_oracle())
+@query("stream_jarque_bera_monitor", oracle=_stream_jb_oracle())
 def stream_jarque_bera_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 13th streaming twin: the Jarque-Bera normality readout
     recomputed as events arrive — per micro-batch ONE map-side-combined
@@ -1642,7 +1616,7 @@ FROM xt
 """
 
 
-@staged("fisher_z_corr_diff_ab", oracle=_fz_oracle())
+@query("fisher_z_corr_diff_ab", oracle=_fz_oracle())
 def fisher_z_corr_diff_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fisher-z test for a DIFFERENCE in correlation between the two
     doc-hash arms: is the chars-tokens correlation the same in both
@@ -1821,7 +1795,7 @@ FROM xt
 """
 
 
-@staged("ljung_box_daily_autocorr", oracle=_lb_oracle())
+@query("ljung_box_daily_autocorr", oracle=_lb_oracle())
 def ljung_box_daily_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ljung-Box portmanteau test on the daily event-count series (the
     first 7 lags — one week of serial structure): is there ANY
@@ -1995,7 +1969,7 @@ FROM xt
     )
 
 
-@staged("bowker_symmetry_transitions", oracle=_bw_oracle())
+@query("bowker_symmetry_transitions", oracle=_bw_oracle())
 def bowker_symmetry_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bowker's symmetry test on the within-session event-type
     transition matrix: is A->B as common as B->A for every off-diagonal

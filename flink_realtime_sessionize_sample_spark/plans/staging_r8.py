@@ -1,17 +1,10 @@
-"""Round-8 capability queries: staged during round 7, PROMOTED round 8.
+"""Round-8 capability queries: two-sample rank and kernel tests,
+tokenizer statistics and coverage/curriculum selection (34 queries).
 
-The round-7 driver window closed at 50/50, so these 34 operators were
-built, oracle-paired and locally verified during round 7 but held in a
-staging dict the driver never saw (registering them would have created
-unverifiable backlog, which the standing no-new-backlog rule in
-tests/test_registry_window.py forbids). At round-8 open the promotion
-landed exactly as planned: ``staged`` below now delegates to
-``registry.query`` (identical signature), ``plans/__init__`` imports this
-module, and every name sits inside ``_DRIVER_WINDOW`` for an external
-correctness row this round. ``STAGED_QUERIES``/``STAGED_ORACLES`` remain
-as the record of the promoted set (tests/test_staging_r8.py pins each
-query's semantics against independent Python brute-force references
-through them).
+Each query is registered with ``registry.query``, checked against its
+DuckDB oracle by the full-registry sweep (tools/verify_drive.py), and
+pinned against an independent Python brute-force reference in
+tests/test_staging_r8.py.
 
 Every query here follows the established cross-engine exactness
 discipline: integer (or quantized-integer) arithmetic for every
@@ -37,26 +30,8 @@ from flink_realtime_sessionize_sample_spark.functions import text as T
 from flink_realtime_sessionize_sample_spark.operators.global_order import (
     with_global_rank,
 )
-from flink_realtime_sessionize_sample_spark.plans.registry import QueryFn, query
+from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
-
-STAGED_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def staged(name: str, oracle: str | None = None):
-    """Round-8 promotion: registers LIVE via ``registry.query`` and keeps
-    the staging dicts as the promoted-set record for the semantics tests."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        fn = query(name, oracle)(fn)
-        STAGED_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 _TOKS_S = T.tokens_spark("text")
 _TOKS_D = T.tokens_duck("text")
@@ -70,7 +45,7 @@ _BPE_PAT = "[a-z0-9]+|[^a-z0-9 ]"
 # --- tokenizer fertility ---------------------------------------------------
 
 
-@staged(
+@query(
     "tokenizer_fertility_by_lang",
     oracle=f"""
 WITH m AS (
@@ -211,7 +186,7 @@ FROM xt
 """
 
 
-@staged("mann_whitney_en_tokens", oracle=_mw_oracle())
+@query("mann_whitney_en_tokens", oracle=_mw_oracle())
 def mann_whitney_en_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U / Wilcoxon rank-sum test with EXACT tie correction:
     do English documents draw from the same token-count distribution as
@@ -419,7 +394,7 @@ FROM xt
 """
 
 
-@staged("welch_t_chars_ab", oracle=_welch_oracle())
+@query("welch_t_chars_ab", oracle=_welch_oracle())
 def welch_t_chars_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t-test of document length across the
     portable-hash A/B split — run as the A/A sanity check every
@@ -520,7 +495,7 @@ FROM ob o CROSS JOIN cnt c
 """
 
 
-@staged("permutation_test_chars", oracle=_perm_oracle())
+@query("permutation_test_chars", oracle=_perm_oracle())
 def permutation_test_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic two-sample permutation test — the assumption-free
     twin of ``welch_t_chars_ab`` on the same split and metric: is the
@@ -619,7 +594,7 @@ def permutation_test_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EMB_DIM = 64
 
 
-@staged(
+@query(
     "mmd_linear_label_drift",
     oracle=f"""
 WITH e AS (
@@ -784,7 +759,7 @@ UNION ALL
 """
 
 
-@staged("kcenter_greedy_diversity", oracle=_kc_oracle())
+@query("kcenter_greedy_diversity", oracle=_kc_oracle())
 def kcenter_greedy_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center (farthest-point-first, Gonzalez 1985) diversity
     selection over the embedding corpus — the COVERAGE-style data
@@ -907,7 +882,7 @@ FROM s GROUP BY stage
 """
 
 
-@staged("curriculum_pacing_stages", oracle=_curriculum_oracle())
+@query("curriculum_pacing_stages", oracle=_curriculum_oracle())
 def curriculum_pacing_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum-learning pacing schedule: rank the corpus easiest-first
     by the shared heuristic quality score (``doc_quality_score``
@@ -1036,7 +1011,7 @@ FROM conv GROUP BY lab
     )
 
 
-@staged("label_prop_neardup_communities", oracle=_lp_oracle())
+@query("label_prop_neardup_communities", oracle=_lp_oracle())
 def label_prop_neardup_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous min-label propagation (3 fixed rounds) over the
     symmetrized MinHash near-dup graph, with a per-community CONVERGENCE
@@ -1155,7 +1130,7 @@ FROM x
 """
 
 
-@staged("ab_power_mde", oracle=_power_oracle())
+@query("ab_power_mde", oracle=_power_oracle())
 def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experiment power planning from the live corpus: the minimum
     detectable effect of the CURRENT A/B split (two-sided alpha=5%,
@@ -1248,7 +1223,7 @@ FROM s LEFT JOIN ref ON TRUE
 """
 
 
-@staged("hill_tail_doc_length", oracle=_hill_oracle())
+@query("hill_tail_doc_length", oracle=_hill_oracle())
 def hill_tail_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill (1975) tail-index estimate of the document-length
     distribution from the top-32 order statistics: alpha^-1 = mean of
@@ -1316,7 +1291,7 @@ def hill_tail_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- per-source trimmed means ----------------------------------------------
 
 
-@staged(
+@query(
     "trimmed_mean_chars_by_source",
     oracle="""
 WITH r AS (
@@ -1408,7 +1383,7 @@ def trimmed_mean_chars_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WEEK_US = 7 * 86400 * 1000000
 
 
-@staged(
+@query(
     "cohort_retention_weekly",
     oracle=f"""
 WITH ev AS (
@@ -1487,7 +1462,7 @@ FROM xt
 """
 
 
-@staged("stream_ab_guardrail_welch", oracle=_stream_guardrail_oracle())
+@query("stream_ab_guardrail_welch", oracle=_stream_guardrail_oracle())
 def stream_ab_guardrail_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch A/B guardrail computed ON THE INGEST PATH: the odd-event_id
     half of the event stream replays as 2 micro-batches; each batch
@@ -1590,7 +1565,7 @@ _NEY_WQ = (
 )
 
 
-@staged(
+@query(
     "neyman_allocation_by_source",
     oracle=f"""
 WITH m AS (
@@ -1735,7 +1710,7 @@ FROM s
 """
 
 
-@staged("cusum_changepoint_hourly", oracle=_cusum_oracle())
+@query("cusum_changepoint_hourly", oracle=_cusum_oracle())
 def cusum_changepoint_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sided CUSUM change-point scan over the hourly event rate — the
     TEMPORAL member of the drift family (KS/PSI/chi-square/MMD compare
@@ -1852,7 +1827,7 @@ FROM terms
 """
 
 
-@staged("wasserstein_split_drift", oracle=_wass_oracle())
+@query("wasserstein_split_drift", oracle=_wass_oracle())
 def wasserstein_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wasserstein-1 (earth-mover) distance between the two hash-split
     arms' document-length distributions, with the KS sup-distance beside
@@ -1982,7 +1957,7 @@ FROM n CROSS JOIN pq CROSS JOIN mx CROSS JOIN my
 """
 
 
-@staged("kendall_tau_chars_words", oracle=_kendall_oracle())
+@query("kendall_tau_chars_words", oracle=_kendall_oracle())
 def kendall_tau_chars_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall tau-b rank correlation between document length and word
     count, computed EXACTLY from the bucket-grid contingency table —
@@ -2133,7 +2108,7 @@ a AS (
 """
 
 
-@staged("good_turing_unseen_mass", oracle=_gt_oracle())
+@query("good_turing_unseen_mass", oracle=_gt_oracle())
 def good_turing_unseen_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Good-Turing frequency-of-frequencies readout: for r = 1..5 the
     count-of-counts N_r, the smoothed count r* = (r+1)N_(r+1)/N_r, and
@@ -2199,7 +2174,7 @@ _KA_BANDS = "CASE WHEN gs = 1 THEN 'k=1' WHEN gs < 5 THEN 'k=2-4' \
 WHEN gs < 10 THEN 'k=5-9' WHEN gs < 25 THEN 'k=10-24' ELSE 'k>=25' END"
 
 
-@staged(
+@query(
     "k_anonymity_audit",
     oracle=f"""
 WITH g AS (
@@ -2289,7 +2264,7 @@ FROM m
 """.replace("//", "//")
 
 
-@staged("ams_f2_user_events", oracle=_ams_oracle())
+@query("ams_f2_user_events", oracle=_ams_oracle())
 def ams_f2_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AMS (Alon-Matias-Szegedy) second-frequency-moment sketch of the
     event stream's user-key distribution, reported against the exact F2
@@ -2387,7 +2362,7 @@ FROM o CROSS JOIN med
 """
 
 
-@staged("theil_sen_daily_trend", oracle=_ts_oracle())
+@query("theil_sen_daily_trend", oracle=_ts_oracle())
 def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend of the daily event volume — the median of
     all pairwise day-to-day slopes — reported beside the OLS slope. The
@@ -2531,7 +2506,7 @@ FROM rk
 """
 
 
-@staged("retrieval_known_item_eval", oracle=_ki_oracle())
+@query("retrieval_known_item_eval", oracle=_ki_oracle())
 def retrieval_known_item_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Known-item retrieval evaluation: a 1-in-{_KI_MOD} hash sample of
     documents becomes the query set (each query = the document's first
@@ -2711,7 +2686,7 @@ FROM h CROSS JOIN t
 """
 
 
-@staged("knn_hubness_audit", oracle=_hub_oracle())
+@query("knn_hubness_audit", oracle=_hub_oracle())
 def knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hubness audit of the embedding space: the in-degree distribution
     of the k = {_HUB_K} cosine kNN graph — how many vectors are nobody's
@@ -2770,7 +2745,7 @@ def knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- pairwise source vocabulary overlap ---------------------------------------
 
 
-@staged(
+@query(
     "source_vocab_jaccard",
     oracle=f"""
 WITH tok AS (
@@ -2893,7 +2868,7 @@ FROM xt
 """
 
 
-@staged("event_overdispersion_test", oracle=_disp_oracle())
+@query("event_overdispersion_test", oracle=_disp_oracle())
 def event_overdispersion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson overdispersion test of the hourly event-arrival process:
     the index of dispersion D = (n-1) * variance / mean of the hourly
@@ -2947,7 +2922,7 @@ def event_overdispersion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- streaming twin: CUSUM monitor over replayed ingest -----------------------
 
 
-@staged(
+@query(
     "stream_cusum_hourly_monitor",
     oracle=_cusum_oracle("WHERE event_id % 2 = 1"),
 )
@@ -3029,7 +3004,7 @@ FROM m ORDER BY margin_micro ASC, doc_id ASC LIMIT {_UNC_TOP}
     )
 
 
-@staged("nb_uncertainty_sampling", oracle=_unc_oracle())
+@query("nb_uncertainty_sampling", oracle=_unc_oracle())
 def nb_uncertainty_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Active-learning batch selection: the {_UNC_TOP} test documents
     where the naive-Bayes language classifier is LEAST sure — smallest
@@ -3101,7 +3076,7 @@ def nb_uncertainty_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- quantile normalization of per-source length distributions -----------------
 
 
-@staged(
+@query(
     "quantile_normalize_lengths",
     oracle="""
 WITH p AS (
@@ -3201,7 +3176,7 @@ def quantile_normalize_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANISO_BANDS = 10
 
 
-@staged(
+@query(
     "embedding_anisotropy_audit",
     oracle=f"""
 WITH e AS (
@@ -3365,7 +3340,7 @@ FROM xt
 """
 
 
-@staged("brown_forsythe_length_variance", oracle=_bf_oracle())
+@query("brown_forsythe_length_variance", oracle=_bf_oracle())
 def brown_forsythe_length_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe test for equality of document-length VARIANCE
     across sources — the robust (median-centered) Levene ANOVA on
@@ -3487,7 +3462,7 @@ def _hrw_duck(n: int) -> str:
     return f"greatest({terms}) % 32"
 
 
-@staged(
+@query(
     "shard_rebalance_preview",
     oracle=f"""
 WITH a AS (
@@ -3563,7 +3538,7 @@ _SKEW_PARTS = 32
 _SKEW_TOP = 5
 
 
-@staged(
+@query(
     "join_skew_preflight",
     oracle=f"""
 WITH k AS (
@@ -3667,7 +3642,7 @@ def join_skew_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- l-diversity audit over quasi-identifier groups ----------------------------
 
 
-@staged(
+@query(
     "l_diversity_audit",
     oracle="""
 WITH g AS (
@@ -3735,7 +3710,7 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- linear multi-touch attribution --------------------------------------------
 
 
-@staged(
+@query(
     "linear_multitouch_attribution",
     oracle="""
 WITH ev AS (

@@ -1,9 +1,8 @@
-"""Round-10 queries (plans/staging_r10.py, staged r9 → promoted r10):
-promotion invariants, plan lint, and independent Python brute-force
-references (the staging_r8/round9 discipline — cross-engine parity
-proves the engines AGREE, these pin the statistics against INTENT).
-Oracle parity for the promoted set now runs through the registry-wide
-``tests/test_oracle_parity.py`` (they register live since round 10)."""
+"""Round-10 queries (plans/staging_r10.py): plan shape and independent
+Python brute-force references (the staging_r8/round9 discipline —
+cross-engine parity proves the engines AGREE, these pin the statistics
+against INTENT). Oracle parity runs through the registry-wide
+``tests/test_oracle_parity.py``."""
 
 from __future__ import annotations
 
@@ -41,32 +40,7 @@ def _write_tables(tmp_path, **tables) -> str:
     return str(tmp_path)
 
 
-# --- staging invariants ------------------------------------------------------
-
-
-def test_promoted_names_are_registered_live():
-    # Round-10 promotion invariant, durable form (the test_staging_r8
-    # precedent): every staged query registers into the live registry
-    # (same function object) and — now that CORRECTNESS_r10 went 50/50
-    # green — carries a green external row. The original round-10
-    # assertion that the promotions sit INSIDE the first-50 window was
-    # window-rotation-specific and retired when the round-11 rotation
-    # reclaimed those slots.
-    missing = [n for n in S.STAGED_QUERIES if n not in plans.QUERIES]
-    assert not missing, f"promoted queries missing from the live registry: {missing}"
-    same = [n for n in S.STAGED_QUERIES if plans.QUERIES[n] is S.STAGED_QUERIES[n]]
-    assert len(same) == len(S.STAGED_QUERIES)
-    ungreen = [
-        n for n in S.STAGED_QUERIES
-        if n not in plans._EXTERNALLY_GREEN_THROUGH_R10
-    ]
-    assert not ungreen, f"promoted queries without a green external row: {ungreen}"
-    assert set(S.STAGED_QUERIES) == set(plans._ROUND10_PROMOTIONS)
-
-
-def test_every_staged_query_is_oracle_paired():
-    missing = [n for n in S.STAGED_QUERIES if n not in S.STAGED_ORACLES]
-    assert not missing, f"staged queries without oracles: {missing}"
+# --- plan shape --------------------------------------------------------------
 
 
 def _explain(df) -> str:
@@ -75,20 +49,10 @@ def _explain(df) -> str:
     return jqe.explainString(mode.fromString("extended"))
 
 
-def test_staged_plan_lint(spark, sf_small):
-    offenders = {}
-    for name, fn in S.STAGED_QUERIES.items():
-        p = _explain(fn(spark, sf_small))
-        bad = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"staged plan lint failed: {offenders}"
-
-
 def test_return_km_cumulatives_are_banded(spark, sf_small):
     # The unbounded-domain KM must ride the banded rank operator, never
     # a range exchange / global sort.
-    p = _explain(S.STAGED_QUERIES["intersession_return_km"](spark, sf_small))
+    p = _explain(plans.QUERIES["intersession_return_km"](spark, sf_small))
     assert "rangepartitioning" not in p.lower()
     assert "_pid" in p
 
@@ -117,7 +81,7 @@ def test_t_closeness_matches_python(spark, tmp_path):
             abs(cells.get((g, lab), 0) / gs - nl[lab] / N) for lab in nl
         )
         tvals[g] = t
-    out = S.STAGED_QUERIES["t_closeness_audit"](spark, sf).collect()
+    out = plans.QUERIES["t_closeness_audit"](spark, sf).collect()
     max_t = max(tvals.values())
     for r in out:
         assert abs(r["max_t"] - max_t) < 2e-9 * 1e9 / 1e9 + 1e-6
@@ -183,7 +147,7 @@ def test_mantel_haenszel_matches_python(spark, tmp_path):
         ad += round(1e9 * a * d / nt) / 1e9
         bc += round(1e9 * b * c / nt) / 1e9
     z = (a_sum - e_sum) / math.sqrt(v_sum)
-    out = S.STAGED_QUERIES["mantel_haenszel_stratified_ab"](spark, sf).collect()[0]
+    out = plans.QUERIES["mantel_haenszel_stratified_ab"](spark, sf).collect()[0]
     assert out["n_strata"] == len(tables)
     assert out["a_sum"] == int(a_sum)
     assert abs(out["z_stat"] - z) < 2e-6
@@ -217,7 +181,7 @@ def test_cochran_armitage_matches_python(spark, tmp_path):
     num = n * swa - A * swn
     var = (A * (n - A) / n) * (n * sw2n - swn * swn)
     z = num / math.sqrt(var)
-    out = S.STAGED_QUERIES["cochran_armitage_trend"](spark, sf).collect()[0]
+    out = plans.QUERIES["cochran_armitage_trend"](spark, sf).collect()[0]
     assert out["n_docs"] == n and out["n_en"] == A
     assert abs(out["z_stat"] - z) < 2e-6
     assert out["z_stat"] > 2  # the engineered trend must be detected
@@ -245,7 +209,7 @@ def test_cochran_q_formula_equals_definition(seed):
 
 
 def test_cochran_q_output_bounds(spark, sf_small):
-    out = S.STAGED_QUERIES["cochran_q_three_raters"](spark, sf_small).collect()[0]
+    out = plans.QUERIES["cochran_q_three_raters"](spark, sf_small).collect()[0]
     assert out["n_docs"] > 0 and out["q_stat"] >= 0
     assert 0.0 <= out["p_chi2_df2"] <= 1.0
     assert abs(out["p_chi2_df2"] - math.exp(-out["q_stat"] / 2)) < 2e-6
@@ -265,7 +229,7 @@ def test_qte_matches_python_order_stats(spark, tmp_path):
     for g in arms:
         arms[g].sort()
     out = sorted(
-        S.STAGED_QUERIES["quantile_treatment_effects"](spark, sf).collect(),
+        plans.QUERIES["quantile_treatment_effects"](spark, sf).collect(),
         key=lambda r: r["q"],
     )
     assert [r["q"] for r in out] == list(range(1, 10))
@@ -317,7 +281,7 @@ def test_logrank_matches_python(spark, tmp_path):
         if n > 1:
             v += round(1e9 * d * n1 * (n - n1) * (n - d) / (n * n * (n - 1))) / 1e9
     z = (o1 - e1) / math.sqrt(v)
-    out = S.STAGED_QUERIES["logrank_test_session_survival"](spark, sf).collect()[0]
+    out = plans.QUERIES["logrank_test_session_survival"](spark, sf).collect()[0]
     assert out["o1"] == int(o1)
     assert abs(out["e1"] - e1) < 1e-6
     assert abs(out["z_stat"] - z) < 2e-6
@@ -346,7 +310,7 @@ def test_bot_bands_on_engineered_sessions(spark, tmp_path):
     add(4, [0, 600, 1200, 1800, 2400, 3000])  # metronome: 5 equal gaps
     add(5, [0, 100, 800, 1500, 1510, 2800])  # organic: irregular
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
-    out = {r["band"]: r for r in S.STAGED_QUERIES["session_bot_signals"](spark, sf).collect()}
+    out = {r["band"]: r for r in plans.QUERIES["session_bot_signals"](spark, sf).collect()}
     assert set(out) == {"single", "burst", "short", "metronome", "organic"}
     assert all(r["n_sessions"] == 1 for r in out.values())
     assert out["burst"]["n_events"] == 6 and out["burst"]["total_sec"] == 5
@@ -383,7 +347,7 @@ def test_return_km_matches_hand_curve(spark, tmp_path):
     # times asc: deaths at 5000 (n_risk: all with t>=5000 -> 10000,5000,
     # 89800,95000 = 4), then 10000 (n_risk 3).
     out = sorted(
-        S.STAGED_QUERIES["intersession_return_km"](spark, sf).collect(),
+        plans.QUERIES["intersession_return_km"](spark, sf).collect(),
         key=lambda r: r["t_sec"],
     )
     got = [(r["t_sec"], r["n_risk"], r["n_events"]) for r in out]
@@ -417,7 +381,7 @@ def test_reciprocal_nn_is_mutual_subset(spark, sf_small):
     want = {
         (a, b) for (a, b) in edges if (b, a) in edges and a < b
     }
-    out = S.STAGED_QUERIES["reciprocal_nn_dedup"](spark, sf_small).collect()
+    out = plans.QUERIES["reciprocal_nn_dedup"](spark, sf_small).collect()
     got = {(r["vec_a"], r["vec_b"]) for r in out}
     assert got == want
     assert all(-1.0 <= r["cosine"] <= 1.0 for r in out)
@@ -476,7 +440,7 @@ def test_heaps_fit_matches_python(spark, tmp_path):
     sxy = sum(x * y for x, y in pts)
     beta = (k * sxy - sx * sy) / (k * sxx - sx * sx)
     kk = math.exp((sy - sx * beta) / (1e6 * k))
-    out = S.STAGED_QUERIES["heaps_law_fit"](spark, sf).collect()[0]
+    out = plans.QUERIES["heaps_law_fit"](spark, sf).collect()[0]
     assert out["n_checkpoints"] == k
     assert abs(out["heaps_beta"] - beta) < 2e-6
     assert abs(out["heaps_k"] - kk) < 2e-5
@@ -512,7 +476,7 @@ def test_cramers_v_matches_python(spark, tmp_path):
         for l in nl
     )
     v = math.sqrt(chi2 / (N * (min(len(ns), len(nl)) - 1)))
-    out = S.STAGED_QUERIES["cramers_v_source_lang"](spark, sf).collect()[0]
+    out = plans.QUERIES["cramers_v_source_lang"](spark, sf).collect()[0]
     assert out["n_sources"] == len(ns) and out["n_langs"] == len(nl)
     assert abs(out["chi2"] - chi2) < 2e-6
     assert abs(out["cramers_v"] - v) < 2e-6
@@ -531,7 +495,7 @@ def test_cramers_v_includes_absent_cell_mass(spark, tmp_path):
             i += 1
             rows.append((i, "x", lang, src, 1))
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    out = S.STAGED_QUERIES["cramers_v_source_lang"](spark, sf).collect()[0]
+    out = plans.QUERIES["cramers_v_source_lang"](spark, sf).collect()[0]
     cells = {("s1", "en"): 10, ("s2", "en"): 5, ("s2", "de"): 5}
     ns = {"s1": 10, "s2": 10}
     nl = {"en": 15, "de": 10}
@@ -567,7 +531,7 @@ def test_smd_matches_python(spark, tmp_path):
         covs["n_chars"].setdefault(g, []).append(r[4])
         covs["n_words"].setdefault(g, []).append(len(toks(r[1])))
         covs["n_distinct_words"].setdefault(g, []).append(len(set(toks(r[1]))))
-    out = {r["covariate"]: r for r in S.STAGED_QUERIES["smd_covariate_balance"](spark, sf).collect()}
+    out = {r["covariate"]: r for r in plans.QUERIES["smd_covariate_balance"](spark, sf).collect()}
     for name, arms in covs.items():
         a0, a1 = arms[0], arms[1]
         m0, m1 = sum(a0) / len(a0), sum(a1) / len(a1)
@@ -608,7 +572,7 @@ def test_chao1_matches_counter(spark, tmp_path):
     f1 = sum(1 for x in c.values() if x == 1)
     f2 = sum(1 for x in c.values() if x == 2)
     chao1 = v + f1 * (f1 - 1) / (2 * (f2 + 1))
-    out = S.STAGED_QUERIES["chao1_vocab_richness"](spark, sf).collect()[0]
+    out = plans.QUERIES["chao1_vocab_richness"](spark, sf).collect()[0]
     assert (out["v_obs"], out["n_total"], out["f1"], out["f2"]) == (v, n, f1, f2)
     assert abs(out["chao1"] - chao1) < 1e-6
     assert abs(out["turing_coverage"] - (1 - f1 / n)) < 1e-6
@@ -629,7 +593,7 @@ def test_jackknife_matches_python(spark, tmp_path):
     N = len(rows)
     SC = sum(r[4] for r in rows)
     SE = sum(1 for r in rows if r[2] == "en")
-    out = {r["source"]: r for r in S.STAGED_QUERIES["jackknife_source_sensitivity"](spark, sf).collect()}
+    out = {r["source"]: r for r in plans.QUERIES["jackknife_source_sensitivity"](spark, sf).collect()}
     for src in ("s1", "s2", "s3"):
         sub = [r for r in rows if r[3] == src]
         ns, sc = len(sub), sum(r[4] for r in sub)
@@ -647,7 +611,7 @@ def test_jackknife_matches_python(spark, tmp_path):
 def test_capture_recapture_chapman_formula(spark, sf_small):
     """Chapman estimate recomputed from the emitted counts, and the
     overlap bounded by both captures."""
-    out = S.STAGED_QUERIES["capture_recapture_dedup_estimate"](spark, sf_small).collect()[0]
+    out = plans.QUERIES["capture_recapture_dedup_estimate"](spark, sf_small).collect()[0]
     n1, n2, m = out["n_minhash_pairs"], out["n_simhash_pairs"], out["n_both"]
     assert 0 <= m <= min(n1, n2)
     chapman = (n1 + 1) * (n2 + 1) / (m + 1) - 1
@@ -661,7 +625,7 @@ def test_capture_recapture_oracle_embeds_registered_oracles():
     # dedup oracles as subqueries.
     from flink_realtime_sessionize_sample_spark.plans.registry import ORACLES
 
-    cr = S.STAGED_ORACLES["capture_recapture_dedup_estimate"]
+    cr = plans.ORACLES["capture_recapture_dedup_estimate"]
     assert ORACLES["dedup_minhash_lsh"].strip().rstrip(";") in cr
     assert ORACLES["dedup_simhash"].strip().rstrip(";") in cr
 
@@ -672,7 +636,7 @@ def test_capture_recapture_oracle_embeds_registered_oracles():
 def test_filter_disparity_rates_and_flags(spark, sf_small):
     """Rates, risk ratios, and the flag recomputed from the emitted
     integer counts; z against Python two-proportion arithmetic."""
-    out = S.STAGED_QUERIES["filter_disparity_audit"](spark, sf_small).collect()
+    out = plans.QUERIES["filter_disparity_audit"](spark, sf_small).collect()
     N = sum(r["n_docs"] for r in out)
     K = sum(r["n_kept"] for r in out)
     for r in out:
@@ -741,14 +705,10 @@ def test_rbo_matches_python_from_leg_frames(spark, sf_small):
     }
     common = set(sparse) & set(dense)
     rbo_e9 = sum(S._RBO_C_E9[max(sparse[d], dense[d]) - 1] for d in common)
-    out = plans_or_staged("rbo_sparse_vs_dense")(spark, sf_small).collect()[0]
+    out = plans.QUERIES["rbo_sparse_vs_dense"](spark, sf_small).collect()[0]
     assert out[f"overlap_at_{S._RBO_K}"] == len(common)
     assert abs(out["rbo_p9"] - round(rbo_e9 / 1e9, 6)) < 1e-9
     assert 0.0 <= out["rbo_p9"] <= 1.0
-
-
-def plans_or_staged(name):
-    return S.STAGED_QUERIES.get(name) or plans.QUERIES[name]
 
 
 # --- PII x QI co-occurrence audit ---------------------------------------------
@@ -809,7 +769,7 @@ def test_pii_cooccurrence_tiers_match_python(spark, tmp_path):
         tr.update(n_groups=1, gs=g["gs"], ne=g["ne"], nn=g["nn"], nb=g["nb"])
     lift = round(tot["n"] * tot["nb"] / (tot["ne"] * tot["nn"]), 6)
 
-    out = {r["risk_tier"]: r for r in S.STAGED_QUERIES["pii_cooccurrence_audit"](spark, sf).collect()}
+    out = {r["risk_tier"]: r for r in plans.QUERIES["pii_cooccurrence_audit"](spark, sf).collect()}
     assert set(out) == set(tiers) == {
         "cooccurring_pii", "small_group_pii", "single_type_pii", "no_pii",
     }
@@ -844,7 +804,7 @@ def test_mcc_matches_python_gorodkin(spark, sf_small):
         s * s - sum(v * v for v in tc.values())
     )
     mcc = (c * s - spt) / math.sqrt(den)
-    out = S.STAGED_QUERIES["mcc_nb_classifier"](spark, sf_small).collect()[0]
+    out = plans.QUERIES["mcc_nb_classifier"](spark, sf_small).collect()[0]
     assert out["n_test"] == s
     assert out["n_correct"] == c
     assert out["n_classes"] == len(classes)
@@ -926,7 +886,7 @@ def test_friedman_matches_python_definition(spark, tmp_path):
     ev.append((eid, base.isoformat(), 6, "error", 1.0, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
     n, rsums, tie_t, q, p = _friedman_python(list(counts.values()))
-    out = S.STAGED_QUERIES["friedman_test_event_mix"](spark, sf).collect()[0]
+    out = plans.QUERIES["friedman_test_event_mix"](spark, sf).collect()[0]
     assert out["n_users"] == n == 6
     # Column double-rank sums and per-block identity sum_j r2_j = 12.
     assert (out["r2_view"], out["r2_click"], out["r2_purchase"]) == tuple(
@@ -947,7 +907,7 @@ def test_friedman_all_tied_is_null(spark, tmp_path):
         for i, typ in enumerate(("view", "click", "purchase")):
             ev.append((uid * 10 + i, (base + pd.Timedelta(seconds=uid * 10 + i)).isoformat(), uid, typ, 1.0, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
-    out = S.STAGED_QUERIES["friedman_test_event_mix"](spark, sf).collect()[0]
+    out = plans.QUERIES["friedman_test_event_mix"](spark, sf).collect()[0]
     assert out["n_users"] == 2
     assert out["tie_t"] == 48
     assert out["q_stat"] is None and out["p_value"] is None
@@ -991,7 +951,7 @@ def test_page_hinkley_detects_injected_shift(spark, tmp_path):
             ev.append((eid, (base + pd.Timedelta(days=d, hours=i)).isoformat(), 1, "view", mean, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
     ph_ref, alarm_ref = _ph_python(day_means)
-    out = S.STAGED_QUERIES["page_hinkley_drift"](spark, sf).collect()[0]
+    out = plans.QUERIES["page_hinkley_drift"](spark, sf).collect()[0]
     assert out["n_days"] == 30
     assert out["drift_detected"] is True
     assert alarm_ref is not None and out["alarm_day"] == alarm_ref
@@ -1008,7 +968,7 @@ def test_page_hinkley_quiet_on_constant_series(spark, tmp_path):
             eid += 1
             ev.append((eid, (base + pd.Timedelta(days=d, hours=i)).isoformat(), 1, "view", 42.0, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
-    out = S.STAGED_QUERIES["page_hinkley_drift"](spark, sf).collect()[0]
+    out = plans.QUERIES["page_hinkley_drift"](spark, sf).collect()[0]
     # Constant means: every deviation is exactly -delta, m decreases
     # monotonically, PH stays 0.
     assert out["ph_max"] == 0.0
@@ -1050,7 +1010,7 @@ def test_friedman_property_random_blocks(spark, tmp_path_factory, blocks):
         ev.append((eid, (base + pd.Timedelta(seconds=eid)).isoformat(), uid, "error", 1.0, "{}"))
     sf = _write_tables(tmp_path_factory.mktemp("fried"), events=_events_pdf(ev))
     n, rsums, tie_t, q, p = _friedman_python(blocks)
-    out = S.STAGED_QUERIES["friedman_test_event_mix"](spark, sf).collect()[0]
+    out = plans.QUERIES["friedman_test_event_mix"](spark, sf).collect()[0]
     assert out["n_users"] == n
     assert (out["r2_view"], out["r2_click"], out["r2_purchase"]) == tuple(
         int(2 * r) for r in rsums
@@ -1087,7 +1047,7 @@ def test_page_hinkley_property_random_series(spark, tmp_path_factory, means):
             ev.append((eid, (base + pd.Timedelta(days=d, hours=i)).isoformat(), 1, "view", float(mean), "{}"))
     sf = _write_tables(tmp_path_factory.mktemp("ph"), events=_events_pdf(ev))
     ph_ref, alarm_ref = _ph_python(day_means)
-    out = S.STAGED_QUERIES["page_hinkley_drift"](spark, sf).collect()[0]
+    out = plans.QUERIES["page_hinkley_drift"](spark, sf).collect()[0]
     assert out["n_days"] == len(means)
     assert abs(out["ph_max"] - ph_ref) < 1e-9
     assert out["alarm_day"] == alarm_ref
@@ -1111,7 +1071,7 @@ def test_stream_ph_twin_equals_batch_path(spark, tmp_path):
             ev.append((eid, (base + pd.Timedelta(days=d, hours=i)).isoformat(), 1, "view", mean, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
     ph_ref, alarm_ref = _ph_python(day_means)
-    out = S.STAGED_QUERIES["stream_page_hinkley_monitor"](spark, sf).collect()[0]
+    out = plans.QUERIES["stream_page_hinkley_monitor"](spark, sf).collect()[0]
     assert out["n_days"] == 30
     assert abs(out["ph_max"] - ph_ref) < 1e-9
     assert out["alarm_day"] == alarm_ref

@@ -1,7 +1,7 @@
-"""Round-11 staged queries (plans/staging_r11.py): staging invariants,
-plan lint, and independent Python brute-force references (the
-staging_r8/r10 discipline — cross-engine parity proves the engines
-AGREE, these pin the statistics against INTENT)."""
+"""Round-11 queries (plans/staging_r11.py): plan shape and
+independent Python brute-force references (the staging_r8/r10
+discipline — cross-engine parity proves the engines AGREE, these pin the
+statistics against INTENT)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from collections import Counter
 import pandas as pd
 
 from flink_realtime_sessionize_sample_spark import plans
-from flink_realtime_sessionize_sample_spark.plans import staging_r11 as S
 
 
 def _h48(s: str) -> int:
@@ -51,53 +50,15 @@ def _explain(df) -> str:
     return jqe.explainString(mode.fromString("extended"))
 
 
-# --- staging invariants ------------------------------------------------------
-
-
-def test_promoted_names_are_registered_live():
-    # Round-11 promotion invariant, durable form (the test_staging_r8/r10
-    # precedent): every staged query registers into the live registry
-    # (same function object) and — now that CORRECTNESS_r11 went 50/50
-    # green — carries a green external row. The original round-11
-    # assertion that the promotions sit INSIDE the first-50 window was
-    # window-rotation-specific and retired when the round-12 rotation
-    # reclaimed those slots.
-    missing = [n for n in S.STAGED_QUERIES if n not in plans.QUERIES]
-    assert not missing, f"promoted queries missing from the live registry: {missing}"
-    same = [n for n in S.STAGED_QUERIES if plans.QUERIES[n] is S.STAGED_QUERIES[n]]
-    assert len(same) == len(S.STAGED_QUERIES)
-    ungreen = [
-        n for n in S.STAGED_QUERIES
-        if n not in plans._EXTERNALLY_GREEN_THROUGH_R11
-    ]
-    assert not ungreen, f"promoted queries without a green external row: {ungreen}"
-    assert set(plans._ROUND11_PROMOTIONS) == set(S.STAGED_QUERIES)
-
-
-def test_every_staged_query_is_oracle_paired():
-    missing = [n for n in S.STAGED_QUERIES if n not in S.STAGED_ORACLES]
-    assert not missing, f"staged queries without oracles: {missing}"
-
-
-def test_staged_plan_lint(spark, sf_small):
-    offenders = {}
-    for name, fn in S.STAGED_QUERIES.items():
-        if name.startswith("stream_"):
-            continue  # executes a stream replay on construction
-        p = _explain(fn(spark, sf_small))
-        bad = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"staged plan lint failed: {offenders}"
+# --- plan shape --------------------------------------------------------------
 
 
 def test_stream_twin_readout_plan_lint(spark):
-    """ADVICE r10 #4: test_staged_plan_lint skips stream_* names (their
-    construction executes a replay), which left the two streaming twins'
-    shared readouts unlinted. Build the readouts directly over small
-    static frames — the exact post-merge shapes the twins feed them
-    ((day, n, k) for the e-value monitor, (day, value, n) for the
-    distribution-drift monitor) — and lint those plans."""
+    """Lint the two streaming twins' shared readouts without running a
+    replay (building a stream_* query executes one). Build the readouts
+    directly over small static frames — the exact post-merge shapes the
+    twins feed them ((day, n, k) for the e-value monitor, (day, value, n)
+    for the distribution-drift monitor) — and lint those plans."""
     from flink_realtime_sessionize_sample_spark.plans.staging_r11 import (
         _ev_readout,
         _sdd_readout,
@@ -154,7 +115,7 @@ def test_gk_lambda_perfect_association(spark, tmp_path):
     for i in range(10, 20):
         rows.append((i, "t", "ly", "src_b", 5))
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    out = S.STAGED_QUERIES["goodman_kruskal_lambda_source_lang"](spark, sf).collect()[0]
+    out = plans.QUERIES["goodman_kruskal_lambda_source_lang"](spark, sf).collect()[0]
     assert out["n_docs"] == 20
     assert out["lambda_lang_given_source"] == 1.0
     assert out["lambda_source_given_lang"] == 1.0
@@ -166,7 +127,7 @@ def test_gk_lambda_matches_python(spark, sf_small):
     rows = load_table(spark, sf_small, "documents").select("source", "lang").collect()
     cells = Counter((r["source"], r["lang"]) for r in rows)
     l_ls, l_sl, n = _gk_python(cells)
-    out = S.STAGED_QUERIES["goodman_kruskal_lambda_source_lang"](
+    out = plans.QUERIES["goodman_kruskal_lambda_source_lang"](
         spark, sf_small
     ).collect()[0]
     assert out["n_docs"] == n
@@ -210,7 +171,7 @@ def test_kruskal_wallis_matches_python(spark, sf_small):
     )
     pairs = [(r["source"], r["n_chars"]) for r in rows]
     h_ref, k_ref, n_ref = _kw_python(pairs)
-    out = S.STAGED_QUERIES["kruskal_wallis_length_by_source"](
+    out = plans.QUERIES["kruskal_wallis_length_by_source"](
         spark, sf_small
     ).collect()[0]
     assert out["n_docs"] == n_ref
@@ -233,7 +194,7 @@ def test_kruskal_wallis_detects_shifted_group(spark, tmp_path):
             rows.append((did, "t", "en", s, 100 + (i % 7) + shift))
             did += 1
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    out = S.STAGED_QUERIES["kruskal_wallis_length_by_source"](spark, sf).collect()[0]
+    out = plans.QUERIES["kruskal_wallis_length_by_source"](spark, sf).collect()[0]
     h_ref, k_ref, _ = _kw_python(
         [(r[3], r[4]) for r in rows]
     )
@@ -280,7 +241,7 @@ def test_mann_kendall_matches_python(spark, sf_small):
     )
     counts = [r["count"] for r in rows]
     s_ref, var18_ref, z_ref = _mk_python(counts)
-    out = S.STAGED_QUERIES["mann_kendall_daily_trend"](spark, sf_small).collect()[0]
+    out = plans.QUERIES["mann_kendall_daily_trend"](spark, sf_small).collect()[0]
     assert out["n_days"] == len(counts)
     assert out["s_stat"] == s_ref
     assert out["var18"] == var18_ref
@@ -300,7 +261,7 @@ def test_mann_kendall_monotone_series(spark, tmp_path):
                  1, "view", 1.0, "{}")
             )
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
-    out = S.STAGED_QUERIES["mann_kendall_daily_trend"](spark, sf).collect()[0]
+    out = plans.QUERIES["mann_kendall_daily_trend"](spark, sf).collect()[0]
     assert out["s_stat"] == n_days * (n_days - 1) // 2
     assert out["z_stat"] > 4
     assert out["p_two_sided"] < 1e-4
@@ -317,7 +278,7 @@ def test_mann_kendall_constant_series_is_null(spark, tmp_path):
                  1, "view", 1.0, "{}")
             )
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
-    out = S.STAGED_QUERIES["mann_kendall_daily_trend"](spark, sf).collect()[0]
+    out = plans.QUERIES["mann_kendall_daily_trend"](spark, sf).collect()[0]
     # All days tied: the tie term exhausts the variance -> NULL z/p.
     assert out["s_stat"] == 0 and out["var18"] == 0
     assert out["z_stat"] is None and out["p_two_sided"] is None
@@ -395,7 +356,7 @@ def test_cuped_stratified_matches_python(spark, sf_small):
     ref = _cuped_python(pu)
     out = {
         r["stratum"]: r
-        for r in S.STAGED_QUERIES["cuped_stratified_ab"](spark, sf_small).collect()
+        for r in plans.QUERIES["cuped_stratified_ab"](spark, sf_small).collect()
     }
     assert set(out) == set(ref)
     for st, e in ref.items():
@@ -422,7 +383,7 @@ def test_cuped_stratified_reduces_variance_on_correlated_users(spark, tmp_path):
                  uid, "purchase", level, "{}")
             )
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
-    rows = S.STAGED_QUERIES["cuped_stratified_ab"](spark, sf).collect()
+    rows = plans.QUERIES["cuped_stratified_ab"](spark, sf).collect()
     assert {r["stratum"] for r in rows} == {"low", "mid", "high"}
     for r in rows:
         if r["var_reduction"] is not None:
@@ -489,7 +450,7 @@ def test_e_value_alarms_on_lifted_rate(spark, tmp_path):
     ev, days = _rate_events([(10, 2)] * 20 + [(10, 5)] * 20)
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
     ref = _ev_python(days)
-    out = S.STAGED_QUERIES["e_value_rate_monitor"](spark, sf).collect()[0]
+    out = plans.QUERIES["e_value_rate_monitor"](spark, sf).collect()[0]
     for kk in ref:
         got = out[kk]
         if isinstance(ref[kk], float):
@@ -504,7 +465,7 @@ def test_e_value_quiet_on_stationary_rate(spark, tmp_path):
     ev, days = _rate_events([(10, 2)] * 30)
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
     ref = _ev_python(days)
-    out = S.STAGED_QUERIES["e_value_rate_monitor"](spark, sf).collect()[0]
+    out = plans.QUERIES["e_value_rate_monitor"](spark, sf).collect()[0]
     assert out["rejected"] is False and out["alarm_day"] is None
     assert abs(out["log_e_final"] - ref["log_e_final"]) < 1e-9
     # The martingale loses money betting on an absent lift.
@@ -527,7 +488,7 @@ def test_stream_e_value_twin_equals_batch_half(spark, tmp_path):
         per_day[day] = (n + 1, k + (1 if et == "purchase" else 0))
     days = [(d, n, k) for d, (n, k) in per_day.items()]
     ref = _ev_python(days)
-    out = S.STAGED_QUERIES["stream_e_value_monitor"](spark, sf).collect()[0]
+    out = plans.QUERIES["stream_e_value_monitor"](spark, sf).collect()[0]
     for kk in ref:
         got = out[kk]
         if isinstance(ref[kk], float):
@@ -590,7 +551,7 @@ def test_winnow_guarantee_catches_8_token_overlap(spark, tmp_path):
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
     out = {
         r["doc_id"]: r
-        for r in S.STAGED_QUERIES["contamination_winnow_spans"](spark, sf).collect()
+        for r in plans.QUERIES["contamination_winnow_spans"](spark, sf).collect()
     }
     ref = _winnow_ref_rows(docs)
     assert 1 in out and 1 in ref  # the guarantee
@@ -614,7 +575,7 @@ def test_winnow_matches_python_on_corpus(spark, sf_small):
     ref = _winnow_ref_rows(docs)
     out = {
         r["doc_id"]: r
-        for r in S.STAGED_QUERIES["contamination_winnow_spans"](
+        for r in plans.QUERIES["contamination_winnow_spans"](
             spark, sf_small
         ).collect()
     }
@@ -668,7 +629,7 @@ def test_dunn_matches_python(spark, sf_small):
     for r in rows:
         data.setdefault(r["source"], []).append(r["n_chars"])
     ref = _dunn_python(data)
-    out = S.STAGED_QUERIES["dunn_posthoc_length_pairs"](spark, sf_small).collect()
+    out = plans.QUERIES["dunn_posthoc_length_pairs"](spark, sf_small).collect()
     assert len(out) == len(ref)
     for r in out:
         z_ref = ref[(r["source_a"], r["source_b"])]
@@ -695,7 +656,7 @@ def test_dunn_separates_shifted_group(spark, tmp_path):
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
     out = {
         (r["source_a"], r["source_b"]): r
-        for r in S.STAGED_QUERIES["dunn_posthoc_length_pairs"](spark, sf).collect()
+        for r in plans.QUERIES["dunn_posthoc_length_pairs"](spark, sf).collect()
     }
     assert out[("a", "c")]["rejected"] is True
     assert out[("b", "c")]["rejected"] is True
@@ -743,7 +704,7 @@ def test_cvm_matches_python(spark, sf_small):
     s1 = [v for u, v in us if u < mid]
     s2 = [v for u, v in us if u >= mid]
     t_ref, mean_ref, var_ref = _cvm_python(s1, s2)
-    out = S.STAGED_QUERIES["cvm_drift_two_sample"](spark, sf_small).collect()[0]
+    out = plans.QUERIES["cvm_drift_two_sample"](spark, sf_small).collect()[0]
     assert (out["n_early"], out["n_late"]) == (len(s1), len(s2))
     assert abs(out["t_stat"] - t_ref) < 1e-4  # e6 per-value quantization
     assert abs(out["t_null_mean"] - mean_ref) < 1e-6
@@ -764,7 +725,7 @@ def test_cvm_detects_shifted_half(spark, tmp_path):
                  1, "view", float((i % 10) + shift), "{}")
             )
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
-    out = S.STAGED_QUERIES["cvm_drift_two_sample"](spark, sf).collect()[0]
+    out = plans.QUERIES["cvm_drift_two_sample"](spark, sf).collect()[0]
     s1 = [float(i % 10) for _ in range(10) for i in range(30)]
     s2 = [float((i % 10) + 5) for _ in range(10) for i in range(30)]
     t_ref, _, _ = _cvm_python(s1, s2)
@@ -783,7 +744,7 @@ def test_cvm_quiet_on_identical_halves(spark, tmp_path):
                  1, "view", float(i % 10), "{}")
             )
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
-    out = S.STAGED_QUERIES["cvm_drift_two_sample"](spark, sf).collect()[0]
+    out = plans.QUERIES["cvm_drift_two_sample"](spark, sf).collect()[0]
     # Identical halves: T = 0 exactly, far below the null mean.
     assert out["t_stat"] == 0.0
     assert out["drift_at_3sd"] is False and out["z_score"] < 0
@@ -840,7 +801,7 @@ def test_matryoshka_matches_python(spark, sf_small):
     ref = _mrl_python(vecs)
     out = {
         r["trunc_dim"]: r
-        for r in S.STAGED_QUERIES["matryoshka_truncation_audit"](
+        for r in plans.QUERIES["matryoshka_truncation_audit"](
             spark, sf_small
         ).collect()
     }
@@ -914,7 +875,7 @@ def test_stream_dist_drift_detects_shifted_days(spark, tmp_path):
         if eid_ % 2 == 1
     ]
     n1, n2, ks_ref, t_ref = _sdd_python(held)
-    out = S.STAGED_QUERIES["stream_dist_drift_monitor"](spark, sf).collect()[0]
+    out = plans.QUERIES["stream_dist_drift_monitor"](spark, sf).collect()[0]
     assert (out["n_early"], out["n_late"]) == (n1, n2)
     assert abs(out["ks_stat"] - ks_ref) < 1e-9
     assert abs(out["t_stat"] - t_ref) < 1e-4
@@ -933,7 +894,7 @@ def test_stream_dist_drift_quiet_on_stationary_days(spark, tmp_path):
                  1, "view", float(i % 10), "{}")
             )
     sf = _write_tables(tmp_path, events=_events_pdf(ev))
-    out = S.STAGED_QUERIES["stream_dist_drift_monitor"](spark, sf).collect()[0]
+    out = plans.QUERIES["stream_dist_drift_monitor"](spark, sf).collect()[0]
     # Identical day distributions: KS = 0 exactly, CvM T = 0 exactly.
     assert out["ks_stat"] == 0.0 and out["t_stat"] == 0.0
     assert out["ks_drift_at_95"] is False and out["drift_at_3sd"] is False
@@ -964,7 +925,7 @@ def test_mann_kendall_property_random_series(spark, tmp_path_factory, counts):
             )
     sf = _write_tables(tmp_path_factory.mktemp("mk"), events=_events_pdf(ev))
     s_ref, var18_ref, z_ref = _mk_python(counts)
-    out = S.STAGED_QUERIES["mann_kendall_daily_trend"](spark, sf).collect()[0]
+    out = plans.QUERIES["mann_kendall_daily_trend"](spark, sf).collect()[0]
     assert out["n_days"] == len(counts)
     assert out["s_stat"] == s_ref
     assert out["var18"] == var18_ref
@@ -999,7 +960,7 @@ def test_e_value_property_random_days(spark, tmp_path_factory, specs):
         return
     sf = _write_tables(tmp_path_factory.mktemp("ev"), events=_events_pdf(ev))
     ref = _ev_python(days)
-    out = S.STAGED_QUERIES["e_value_rate_monitor"](spark, sf).collect()[0]
+    out = plans.QUERIES["e_value_rate_monitor"](spark, sf).collect()[0]
     for kk in ref:
         got = out[kk]
         if isinstance(ref[kk], float):

@@ -1,7 +1,7 @@
-"""Round-12 staged queries (plans/staging_r12.py): staging invariants,
-plan lint, and independent Python brute-force references (the
-staging_r8/r10/r11 discipline — cross-engine parity proves the engines
-AGREE, these pin the statistics against INTENT)."""
+"""Round-12 queries (plans/staging_r12.py): plan shape and
+independent Python brute-force references (the staging_r8/r10/r11
+discipline — cross-engine parity proves the engines AGREE, these pin the
+statistics against INTENT)."""
 
 from __future__ import annotations
 
@@ -92,44 +92,7 @@ def _sessions_py(pdf: pd.DataFrame):
     return out
 
 
-# --- staging invariants ------------------------------------------------------
-
-
-def test_promoted_names_are_registered_live():
-    # Round-12 promotion invariant, durable form (the test_staging_r8/r10/
-    # r11 precedent): every staged query registers into the live registry
-    # (same function object) and — now that CORRECTNESS_r12 went 50/50
-    # green — carries a green external row. The original round-12
-    # assertion that the promotions sit INSIDE the first-50 window was
-    # window-rotation-specific and retired when the round-13 rotation
-    # reclaimed those slots.
-    missing = [n for n in S.STAGED_QUERIES if n not in plans.QUERIES]
-    assert not missing, f"promoted queries missing from the live registry: {missing}"
-    same = [n for n in S.STAGED_QUERIES if plans.QUERIES[n] is S.STAGED_QUERIES[n]]
-    assert len(same) == len(S.STAGED_QUERIES)
-    ungreen = [
-        n for n in S.STAGED_QUERIES
-        if n not in plans._EXTERNALLY_GREEN_THROUGH_R12
-    ]
-    assert not ungreen, f"promoted queries without a green external row: {ungreen}"
-    assert set(plans._ROUND12_PROMOTIONS) == set(S.STAGED_QUERIES)
-
-
-def test_every_staged_query_is_oracle_paired():
-    missing = [n for n in S.STAGED_QUERIES if n not in S.STAGED_ORACLES]
-    assert not missing, f"staged queries without oracles: {missing}"
-
-
-def test_staged_plan_lint(spark, sf_small):
-    offenders = {}
-    for name, fn in S.STAGED_QUERIES.items():
-        if name.startswith("stream_"):
-            continue  # executes a replay on construction; readout linted below
-        p = _explain(fn(spark, sf_small))
-        bad = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"staged plan lint failed: {offenders}"
+# --- plan shape --------------------------------------------------------------
 
 
 def test_stream_twin_readout_plan_lint(spark):
@@ -199,7 +162,7 @@ def _crab_py(pdf: pd.DataFrame) -> dict:
 
 def test_cluster_robust_matches_python(spark, sf_small):
     exp = _crab_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["cluster_robust_ab_readout"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["cluster_robust_ab_readout"](spark, sf_small).collect()[0]
     for k in ("n_users0", "n_users1", "n_sessions0", "n_sessions1"):
         assert row[k] == exp[k], k
     for k in (
@@ -225,7 +188,7 @@ def test_cluster_robust_deff_exceeds_one_on_heavy_users(spark, tmp_path):
             eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
     exp = _crab_py(_load_events(sf))
-    row = S.STAGED_QUERIES["cluster_robust_ab_readout"](spark, sf).collect()[0]
+    row = plans.QUERIES["cluster_robust_ab_readout"](spark, sf).collect()[0]
     assert row["design_effect"] is not None and row["design_effect"] > 1.0
     assert abs(row["design_effect"] - exp["design_effect"]) < 2e-6
     assert row["se_cluster"] > row["se_naive"]
@@ -288,7 +251,7 @@ def _dmr_py(pdf: pd.DataFrame) -> dict:
 
 def test_delta_method_matches_python(spark, sf_small):
     exp = _dmr_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["delta_method_ratio_ab"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["delta_method_ratio_ab"](spark, sf_small).collect()[0]
     for k in ("n_users0", "n_users1", "events0", "events1",
               "purchases0", "purchases1"):
         assert row[k] == exp[k], k
@@ -351,7 +314,7 @@ def _slr_py(pdf: pd.DataFrame) -> dict:
 
 def test_stratified_logrank_matches_python(spark, sf_small):
     exp = _slr_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["stratified_logrank_survival"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["stratified_logrank_survival"](spark, sf_small).collect()[0]
     assert row["n_strata"] == exp["n_strata"]
     assert row["n_death_times"] == exp["n_death_times"]
     assert row["o1"] == exp["o1"]
@@ -378,7 +341,7 @@ def test_stratified_logrank_single_stratum_reduces_to_twoarm(spark, tmp_path):
     # censoring is uniform FALSE (still within stratum 0's day window).
     rows.append((eid, base + pd.Timedelta(hours=4), 999, "view", 1.0, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    strat = S.STAGED_QUERIES["stratified_logrank_survival"](spark, sf).collect()[0]
+    strat = plans.QUERIES["stratified_logrank_survival"](spark, sf).collect()[0]
     assert strat["n_strata"] == 1
     two = plans.QUERIES["logrank_test_session_survival"](spark, sf).collect()[0]
     assert strat["o1"] == two["o1"]
@@ -423,7 +386,7 @@ def _na_py(pdf: pd.DataFrame) -> list[dict]:
 def test_nelson_aalen_matches_python(spark, sf_small):
     exp = _na_py(_load_events(sf_small))
     rows = sorted(
-        S.STAGED_QUERIES["nelson_aalen_cumhaz"](spark, sf_small).collect(),
+        plans.QUERIES["nelson_aalen_cumhaz"](spark, sf_small).collect(),
         key=lambda r: r["t_sec"],
     )
     assert len(rows) == len(exp)
@@ -441,7 +404,7 @@ def test_nelson_aalen_breslow_dominates_km(spark, sf_small):
     cross-estimator sanity relation."""
     na = {
         r["t_sec"]: r["breslow_survival"]
-        for r in S.STAGED_QUERIES["nelson_aalen_cumhaz"](spark, sf_small).collect()
+        for r in plans.QUERIES["nelson_aalen_cumhaz"](spark, sf_small).collect()
     }
     km = {
         r["t_sec"]: r["survival"]
@@ -504,7 +467,7 @@ def _jt_py(pdf: pd.DataFrame) -> dict:
 
 def test_jt_matches_python(spark, sf_small):
     exp = _jt_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["jonckheere_terpstra_daily_trend"](
+    row = plans.QUERIES["jonckheere_terpstra_daily_trend"](
         spark, sf_small
     ).collect()[0]
     assert row["n_events"] == exp["n_events"]
@@ -525,13 +488,13 @@ def test_jt_perfect_increasing_trend(spark, tmp_path):
             rows.append((eid, t, 1 + eid, "view", float(b + 1), "{}"))
             eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["jonckheere_terpstra_daily_trend"](spark, sf).collect()[0]
+    row = plans.QUERIES["jonckheere_terpstra_daily_trend"](spark, sf).collect()[0]
     n = [8, 8, 8, 8]
     jmax2 = 2 * sum(n[i] * n[j] for i in range(4) for j in range(i + 1, 4))
     assert row["jt_u2"] == jmax2
     assert row["z_stat"] > 0
     assert row["p_value"] < 0.01
-    assert row == S.STAGED_QUERIES["jonckheere_terpstra_daily_trend"](
+    assert row == plans.QUERIES["jonckheere_terpstra_daily_trend"](
         spark, sf
     ).collect()[0]  # deterministic
 
@@ -592,7 +555,7 @@ def _ed_py(pdf: pd.DataFrame) -> dict:
 
 def test_energy_distance_matches_python(spark, sf_small):
     exp = _ed_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["energy_distance_drift"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["energy_distance_drift"](spark, sf_small).collect()[0]
     for k in ("n_early", "n_late", "sxx", "syy", "sxy"):
         assert row[k] == exp[k], (k, row[k], exp[k])
     assert abs(row["energy_dist"] - exp["energy_dist"]) < 2e-6
@@ -612,7 +575,7 @@ def test_energy_distance_zero_on_identical_halves(spark, tmp_path):
             )
             eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["energy_distance_drift"](spark, sf).collect()[0]
+    row = plans.QUERIES["energy_distance_drift"](spark, sf).collect()[0]
     assert row["n_early"] == row["n_late"] == 20
     assert row["sxx"] == row["syy"]
     assert row["energy_dist"] == 0.0
@@ -629,7 +592,7 @@ def test_stream_delta_matches_batch_python_on_half(spark, sf_small):
     filtered corpus, not against the Spark batch query."""
     pdf = _load_events(sf_small)
     exp = _dmr_py(pdf[pdf["event_id"] % 2 == 1])
-    row = S.STAGED_QUERIES["stream_delta_ratio_guardrail"](
+    row = plans.QUERIES["stream_delta_ratio_guardrail"](
         spark, sf_small
     ).collect()[0]
     for k in ("n_users0", "n_users1", "events0", "events1",
@@ -688,7 +651,7 @@ def _mood_py(pdf) -> dict:
 def test_mood_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/documents.parquet")
     exp = _mood_py(pdf)
-    row = S.STAGED_QUERIES["mood_median_test"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["mood_median_test"](spark, sf_small).collect()[0]
     for k in ("n_docs", "n_groups", "grand_median", "n_above", "dof"):
         assert row[k] == exp[k], (k, row[k], exp[k])
     for k in ("chi2", "z_stat", "p_value"):
@@ -708,7 +671,7 @@ def test_mood_separated_groups(spark, tmp_path):
         rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
     ).astype({"doc_id": "int64", "n_chars": "int64"})
     sf = _write_tables(tmp_path, documents=pdf)
-    row = S.STAGED_QUERIES["mood_median_test"](spark, sf).collect()[0]
+    row = plans.QUERIES["mood_median_test"](spark, sf).collect()[0]
     exp = _mood_py(pdf)
     assert row["grand_median"] == exp["grand_median"]
     assert row["n_above"] == 40
@@ -798,7 +761,7 @@ def _rmst_py(pdf) -> dict:
 
 def test_rmst_matches_python(spark, sf_small):
     exp = _rmst_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["rmst_survival_difference"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["rmst_survival_difference"](spark, sf_small).collect()[0]
     assert row["n_sessions0"] == exp["n_sessions0"]
     assert row["n_sessions1"] == exp["n_sessions1"]
     for k in ("rmst0", "rmst1", "rmst_diff", "se_diff", "z_stat", "p_value"):
@@ -814,7 +777,7 @@ def test_rmst_all_censored_gives_tau(spark, tmp_path):
     for uid in range(1, 11):
         rows.append((uid, base + pd.Timedelta(seconds=uid), uid, "view", 1.0, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["rmst_survival_difference"](spark, sf).collect()[0]
+    row = plans.QUERIES["rmst_survival_difference"](spark, sf).collect()[0]
     assert row["rmst0"] == float(_TAU)
     assert row["rmst1"] == float(_TAU)
     assert row["rmst_diff"] == 0.0
@@ -892,7 +855,7 @@ def test_brunner_munzel_matches_python(spark, sf_small):
     xs = [int(v) for v, l in zip(pdf["n_chars"], pdf["lang"]) if l != "en"]
     ys = [int(v) for v, l in zip(pdf["n_chars"], pdf["lang"]) if l == "en"]
     exp = _bm_py(xs, ys)
-    row = S.STAGED_QUERIES["brunner_munzel_en_vs_rest"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["brunner_munzel_en_vs_rest"](spark, sf_small).collect()[0]
     assert row["n_rest"] == exp["n_rest"] and row["n_en"] == exp["n_en"]
     for k in ("p_hat", "w_stat", "df_welch", "p_normal"):
         assert abs(row[k] - exp[k]) < 2e-6, (k, row[k], exp[k])
@@ -910,7 +873,7 @@ def test_brunner_munzel_stochastic_dominance(spark, tmp_path):
         rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
     ).astype({"doc_id": "int64", "n_chars": "int64"})
     sf = _write_tables(tmp_path, documents=pdf)
-    row = S.STAGED_QUERIES["brunner_munzel_en_vs_rest"](spark, sf).collect()[0]
+    row = plans.QUERIES["brunner_munzel_en_vs_rest"](spark, sf).collect()[0]
     assert row["p_hat"] == 1.0
     # Fully separated samples have ZERO within-group deviation variance
     # (pooled rank - within rank is constant inside each group), so the
@@ -976,7 +939,7 @@ def _hl_py(pdf) -> dict:
 def test_hosmer_lemeshow_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/documents.parquet")
     exp = _hl_py(pdf)
-    row = S.STAGED_QUERIES["hosmer_lemeshow_calibration"](
+    row = plans.QUERIES["hosmer_lemeshow_calibration"](
         spark, sf_small
     ).collect()[0]
     for k in ("n_bins", "n_docs", "dof", "degenerate_bins"):
@@ -999,7 +962,7 @@ def test_energy_distance_unit_calibration(spark, tmp_path):
         (1, base + pd.Timedelta(hours=48), 2, "view", 2.0, "{}"),
     ]
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["energy_distance_drift"](spark, sf).collect()[0]
+    row = plans.QUERIES["energy_distance_drift"](spark, sf).collect()[0]
     assert row["n_early"] == 1 and row["n_late"] == 1
     assert row["sxy"] == 100  # |100 - 200| cents, one cross pair
     assert row["energy_dist"] == 2.0
@@ -1030,7 +993,7 @@ def test_stratified_logrank_all_censored_stratum_not_counted(spark, tmp_path):
         )
         eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["stratified_logrank_survival"](spark, sf).collect()[0]
+    row = plans.QUERIES["stratified_logrank_survival"](spark, sf).collect()[0]
     assert row["n_strata"] == 1
     exp = _slr_py(_load_events(sf))
     assert row["n_strata"] == exp["n_strata"]
@@ -1075,7 +1038,7 @@ def _spz_py(pdf) -> dict:
 def test_spiegelhalter_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/documents.parquet")
     exp = _spz_py(pdf)
-    row = S.STAGED_QUERIES["spiegelhalter_z_calibration"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["spiegelhalter_z_calibration"](spark, sf_small).collect()[0]
     assert row["n_docs"] == exp["n_docs"]
     assert row["sum_dev_e12"] == exp["sum_dev_e12"]
     assert row["var_e9"] == exp["var_e9"]
@@ -1097,7 +1060,7 @@ def test_spiegelhalter_degenerate_constant_score(spark, tmp_path):
         }
     )
     sf = _write_tables(tmp_path, documents=docs)
-    row = S.STAGED_QUERIES["spiegelhalter_z_calibration"](spark, sf).collect()[0]
+    row = plans.QUERIES["spiegelhalter_z_calibration"](spark, sf).collect()[0]
     assert row["var_e9"] == 0
     assert row["z_stat"] is None and row["p_two_sided"] is None
 
@@ -1154,7 +1117,7 @@ def _kp_py(pdf) -> dict:
 
 def test_kuiper_matches_python(spark, sf_small):
     exp = _kp_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["kuiper_tod_drift"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["kuiper_tod_drift"](spark, sf_small).collect()[0]
     assert row["n_early"] == exp["n_early"] and row["n_late"] == exp["n_late"]
     assert row["drift_at_95"] == exp["drift_at_95"]
     for k in ("d_plus", "d_minus", "kuiper_v", "p_value"):
@@ -1180,8 +1143,8 @@ def test_kuiper_rotation_invariant(spark, tmp_path):
         d.mkdir()
         return _write_tables(d, events=_events_pdf(rows))
 
-    r0 = S.STAGED_QUERIES["kuiper_tod_drift"](spark, mk(0)).collect()[0]
-    r7 = S.STAGED_QUERIES["kuiper_tod_drift"](spark, mk(7 * 3600)).collect()[0]
+    r0 = plans.QUERIES["kuiper_tod_drift"](spark, mk(0)).collect()[0]
+    r7 = plans.QUERIES["kuiper_tod_drift"](spark, mk(7 * 3600)).collect()[0]
     assert r0["kuiper_v"] == r7["kuiper_v"]
     assert r0["p_value"] == r7["p_value"]
 
@@ -1269,7 +1232,7 @@ def _lin_py(pdf) -> dict:
 
 def test_lin_matches_python(spark, sf_small):
     exp = _lin_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["lin_regression_adjusted_ab"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["lin_regression_adjusted_ab"](spark, sf_small).collect()[0]
     for k in ("n_users0", "n_users1", "beta0_micro", "beta1_micro"):
         assert row[k] == exp[k], (k, row[k], exp[k])
     for k in (
@@ -1301,7 +1264,7 @@ def test_lin_recovers_per_arm_slopes(spark, tmp_path):
         rows.append((eid, base + pd.Timedelta(hours=1, seconds=eid), uid, "view", x / 100, "{}")); eid += 1
         rows.append((eid, base + pd.Timedelta(days=4, seconds=eid), uid, "view", 3 * x / 100, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["lin_regression_adjusted_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["lin_regression_adjusted_ab"](spark, sf).collect()[0]
     assert row["beta1_micro"] == 2000000
     assert row["beta0_micro"] == 3000000
     exp = _lin_py(_load_events(sf))
@@ -1405,7 +1368,7 @@ def _dl_py(pdf) -> dict:
 
 def test_dersimonian_laird_matches_python(spark, sf_small):
     exp = _dl_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["dersimonian_laird_daily_ab"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["dersimonian_laird_daily_ab"](spark, sf_small).collect()[0]
     for k in ("k_strata", "k_dropped", "degenerate", "tau2_e9"):
         assert row[k] == exp[k], (k, row[k], exp[k])
     for k in (
@@ -1433,7 +1396,7 @@ def test_dersimonian_laird_homogeneous_days(spark, tmp_path):
         for et in ("purchase", "view", "view", "view"):
             rows.append((eid, base + pd.Timedelta(days=day, seconds=eid % 800), arm0, et, 1.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["dersimonian_laird_daily_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["dersimonian_laird_daily_ab"](spark, sf).collect()[0]
     assert row["k_strata"] == 5 and row["k_dropped"] == 0
     assert row["tau2_e9"] == 0
     assert row["rd_random"] == row["rd_fixed"] == 0.25
@@ -1455,7 +1418,7 @@ def test_dersimonian_laird_all_days_dropped(spark, tmp_path):
                  arm1, et, 1.0, "{}")
             )
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    out = S.STAGED_QUERIES["dersimonian_laird_daily_ab"](spark, sf).collect()
+    out = plans.QUERIES["dersimonian_laird_daily_ab"](spark, sf).collect()
     assert len(out) == 1
     row = out[0]
     assert row["k_strata"] == 0 and row["k_dropped"] == 3
@@ -1525,7 +1488,7 @@ def _dlg_py(pdf) -> dict:
 def test_delong_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/documents.parquet")
     exp = _dlg_py(pdf)
-    row = S.STAGED_QUERIES["delong_auc_ci"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["delong_auc_ci"](spark, sf_small).collect()[0]
     for k in ("n_pos", "n_neg", "auc_micro"):
         assert row[k] == exp[k], (k, row[k], exp[k])
     for k in ("se_delong", "ci95_lo", "ci95_hi", "z_vs_chance", "p_two_sided"):
@@ -1540,7 +1503,7 @@ def test_delong_point_estimate_equals_registered_auc(spark, sf_small):
     auc_micro exactly — same score, same label, same tie handling (the
     two eval readouts can never disagree)."""
     a = plans.QUERIES["roc_auc_token_count"](spark, sf_small).collect()[0]
-    b = S.STAGED_QUERIES["delong_auc_ci"](spark, sf_small).collect()[0]
+    b = plans.QUERIES["delong_auc_ci"](spark, sf_small).collect()[0]
     assert b["auc_micro"] == a["auc_micro"]
     assert b["n_pos"] == a["n_pos"] and b["n_neg"] == a["n_neg"]
 
@@ -1560,7 +1523,7 @@ def test_delong_perfect_separation_guards_null(spark, tmp_path):
         }
     )
     sf = _write_tables(tmp_path, documents=docs)
-    row = S.STAGED_QUERIES["delong_auc_ci"](spark, sf).collect()[0]
+    row = plans.QUERIES["delong_auc_ci"](spark, sf).collect()[0]
     assert row["auc_micro"] == 1000000
     assert row["se_delong"] is None and row["z_vs_chance"] is None
 
@@ -1597,7 +1560,7 @@ def test_kuiper_property_rotation_and_dominance(
                 eid += 1
         return _write_tables(tmp, events=_events_pdf(rows))
 
-    q = S.STAGED_QUERIES["kuiper_tod_drift"]
+    q = plans.QUERIES["kuiper_tod_drift"]
     r0 = q(spark, mk(tmp_path_factory.mktemp("k0"), 0)).collect()[0]
     rs = q(spark, mk(tmp_path_factory.mktemp("ks"), shift)).collect()[0]
     assert r0["kuiper_v"] == rs["kuiper_v"]
@@ -1636,7 +1599,7 @@ def test_lin_property_translation_invariance(spark, tmp_path_factory, xy, c):
                          uid, "view", (y + add) / 100, "{}")); eid += 1
         return _write_tables(tmp, events=_events_pdf(rows))
 
-    q = S.STAGED_QUERIES["lin_regression_adjusted_ab"]
+    q = plans.QUERIES["lin_regression_adjusted_ab"]
     r0 = q(spark, mk(tmp_path_factory.mktemp("l0"), 0)).collect()[0]
     rc = q(spark, mk(tmp_path_factory.mktemp("lc"), c)).collect()[0]
     exp0 = _lin_py(_load_events(mk(tmp_path_factory.mktemp("p0"), 0)))
@@ -1686,7 +1649,7 @@ def test_dl_property_random_days(spark, tmp_path_factory, days):
                          arm0, "view", 1.0, "{}")); eid += 1
     sf = _write_tables(tmp_path_factory.mktemp("dl"), events=_events_pdf(rows))
     exp = _dl_py(_load_events(sf))
-    row = S.STAGED_QUERIES["dersimonian_laird_daily_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["dersimonian_laird_daily_ab"](spark, sf).collect()[0]
     for k in ("k_strata", "k_dropped", "degenerate", "tau2_e9"):
         assert row[k] == exp[k], (k, row[k], exp[k])
     for k in ("q_stat", "i2", "rd_fixed", "rd_random", "se_random",
@@ -1727,7 +1690,7 @@ def test_delong_property_random_corpus(spark, tmp_path_factory, docs_spec):
     )
     sf = _write_tables(tmp_path_factory.mktemp("dlg"), documents=docs)
     exp = _dlg_py(docs)
-    row = S.STAGED_QUERIES["delong_auc_ci"](spark, sf).collect()[0]
+    row = plans.QUERIES["delong_auc_ci"](spark, sf).collect()[0]
     assert row["auc_micro"] == exp["auc_micro"]
     for k in ("se_delong", "ci95_lo", "ci95_hi", "z_vs_chance", "p_two_sided"):
         if exp[k] is None:
@@ -1743,9 +1706,8 @@ def test_delong_property_random_corpus(spark, tmp_path_factory, docs_spec):
 
 def test_dl_readout_plan_lint(spark):
     """ADVICE r10 #4 from birth: the DL twin's shared readout lints
-    directly over a small static (day, a, b, c, d) cell frame (the
-    stream_* skip in the staged lint would otherwise leave it
-    uncovered)."""
+    directly over a small static (day, a, b, c, d) cell frame, with no
+    replay."""
     df = S._dl_readout(
         spark.createDataFrame(
             [(d, 2 + d % 3, 3, 1 + d % 2, 4) for d in range(6)],
@@ -1763,7 +1725,7 @@ def test_stream_dl_matches_batch_python_on_half(spark, sf_small):
     including the day straddling the two micro-batches."""
     pdf = _load_events(sf_small)
     exp = _dl_py(pdf[pdf["event_id"] % 2 == 1])
-    row = S.STAGED_QUERIES["stream_dersimonian_laird_monitor"](
+    row = plans.QUERIES["stream_dersimonian_laird_monitor"](
         spark, sf_small
     ).collect()[0]
     for k in ("k_strata", "k_dropped", "degenerate", "tau2_e9"):
@@ -1833,7 +1795,7 @@ def _wlr_py(pdf) -> dict:
 
 def test_weighted_logrank_matches_python(spark, sf_small):
     exp = _wlr_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["weighted_logrank_family"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["weighted_logrank_family"](spark, sf_small).collect()[0]
     assert row["n_death_times"] == exp["n_death_times"]
     assert row["o1"] == exp["o1"]
     for k in ("z_logrank", "z_gehan", "z_tarone_ware",
@@ -1847,7 +1809,7 @@ def test_weighted_logrank_w1_equals_registered_logrank(spark, sf_small):
     logrank_test_session_survival's z_stat bit-for-bit (the two
     survival inferences can never disagree)."""
     a = plans.QUERIES["logrank_test_session_survival"](spark, sf_small).collect()[0]
-    b = S.STAGED_QUERIES["weighted_logrank_family"](spark, sf_small).collect()[0]
+    b = plans.QUERIES["weighted_logrank_family"](spark, sf_small).collect()[0]
     assert b["z_logrank"] == a["z_stat"]
     assert b["n_death_times"] == a["n_death_times"]
     assert b["o1"] == a["o1"]
@@ -1872,7 +1834,7 @@ def test_weighted_logrank_identical_arms_zero(spark, tmp_path):
                  1.0, "{}")
             ); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["weighted_logrank_family"](spark, sf).collect()[0]
+    row = plans.QUERIES["weighted_logrank_family"](spark, sf).collect()[0]
     assert row["z_logrank"] == 0.0
     assert row["z_gehan"] == 0.0
     assert row["z_tarone_ware"] == 0.0
@@ -1928,7 +1890,7 @@ def _pc_py(pdf) -> dict:
 
 def test_combined_pvalue_matches_python(spark, sf_small):
     exp = _pc_py(_load_events(sf_small))
-    row = S.STAGED_QUERIES["combined_pvalue_daily_ab"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["combined_pvalue_daily_ab"](spark, sf_small).collect()[0]
     assert row["k_days"] == exp["k_days"]
     assert row["fisher_dof"] == exp["fisher_dof"]
     for k in ("stouffer_z", "p_stouffer", "fisher_chi2", "fisher_z", "p_fisher"):
@@ -1953,7 +1915,7 @@ def test_combined_pvalue_null_days_near_one(spark, tmp_path):
                      uid, et, 1.0, "{}")
                 ); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["combined_pvalue_daily_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["combined_pvalue_daily_ab"](spark, sf).collect()[0]
     assert row["k_days"] == 4
     assert row["stouffer_z"] == 0.0
     assert row["p_stouffer"] == 1.0
@@ -2063,7 +2025,7 @@ def test_kuiper_degenerate_single_timestamp_nulls(spark, tmp_path):
     ts = pd.Timestamp("2024-03-01 12:00:00")
     rows = [(i, ts, i % 5, "view", 1.0, "{}") for i in range(20)]
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["kuiper_tod_drift"](spark, sf).collect()[0]
+    row = plans.QUERIES["kuiper_tod_drift"](spark, sf).collect()[0]
     assert row["n_early"] == 0 and row["n_late"] == 20
     for c in ("d_plus", "d_minus", "kuiper_v", "p_value", "drift_at_95"):
         assert row[c] is None, c
@@ -2071,6 +2033,6 @@ def test_kuiper_degenerate_single_timestamp_nulls(spark, tmp_path):
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet')"
     )
-    orow = con.execute(S.STAGED_ORACLES["kuiper_tod_drift"]).fetchone()
+    orow = con.execute(plans.ORACLES["kuiper_tod_drift"]).fetchone()
     assert orow[0] == 0 and orow[1] == 20
     assert all(v is None for v in orow[2:])

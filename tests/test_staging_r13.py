@@ -1,7 +1,7 @@
-"""Round-13 staged queries (plans/staging_r13.py): staging invariants,
-plan lint, probit-machinery pins, and independent Python brute-force
-references (the staging_r8/r10/r11/r12 discipline — cross-engine parity
-proves the engines AGREE, these pin the statistics against INTENT)."""
+"""Round-13 queries (plans/staging_r13.py): plan shape, probit-machinery
+pins, and independent Python brute-force references (the
+staging_r8/r10/r11/r12 discipline — cross-engine parity proves the engines AGREE, these pin the
+statistics against INTENT)."""
 
 from __future__ import annotations
 
@@ -95,44 +95,7 @@ def _explain(df) -> str:
     return jqe.explainString(mode.fromString("extended"))
 
 
-# --- staging invariants ------------------------------------------------------
-
-
-def test_promoted_names_are_registered_live():
-    # Round-13 promotion invariant, durable form (the test_staging_r8/r10/
-    # r11/r12 precedent): every staged query registers into the live
-    # registry (same function object) and — now that CORRECTNESS_r13 went
-    # 50/50 green — carries a green external row. The original round-13
-    # assertion that the promotions sit INSIDE the first-50 window was
-    # window-rotation-specific and retired when the round-14 rotation
-    # reclaimed those slots.
-    missing = [n for n in S.STAGED_QUERIES if n not in plans.QUERIES]
-    assert not missing, f"promoted queries missing from the live registry: {missing}"
-    same = [n for n in S.STAGED_QUERIES if plans.QUERIES[n] is S.STAGED_QUERIES[n]]
-    assert len(same) == len(S.STAGED_QUERIES)
-    ungreen = [
-        n for n in S.STAGED_QUERIES
-        if n not in plans._EXTERNALLY_GREEN_THROUGH_R13
-    ]
-    assert not ungreen, f"promoted queries without a green external row: {ungreen}"
-    assert set(plans._ROUND13_PROMOTIONS) == set(S.STAGED_QUERIES)
-
-
-def test_every_staged_query_is_oracle_paired():
-    missing = [n for n in S.STAGED_QUERIES if n not in S.STAGED_ORACLES]
-    assert not missing, f"staged queries without oracles: {missing}"
-
-
-def test_staged_plan_lint(spark, sf_small):
-    offenders = {}
-    for name, fn in S.STAGED_QUERIES.items():
-        if name.startswith("stream_"):
-            continue  # executes a stream replay on construction
-        p = _explain(fn(spark, sf_small))
-        bad = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"staged plan lint failed: {offenders}"
+# --- plan shape --------------------------------------------------------------
 
 
 def test_stream_twin_readout_plan_lint(spark):
@@ -264,7 +227,7 @@ def _bca_ref(sf_dir: str) -> dict:
 
 
 def test_bca_matches_python(spark, sf_small):
-    row = S.STAGED_QUERIES["bca_bootstrap_mean_ci"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["bca_bootstrap_mean_ci"](spark, sf_small).collect()[0]
     exp = _bca_ref(sf_small)
     assert row["n_replicas"] == exp["n_replicas"]
     for k in ("point_mean", "ci_lo", "ci_hi", "bca_lo", "bca_hi"):
@@ -289,7 +252,7 @@ def test_bca_symmetric_data_zero_acceleration(spark, tmp_path):
         {"o_orderkey": "int64"}
     )
     sf = _write_tables(tmp_path, orders=orders)
-    row = S.STAGED_QUERIES["bca_bootstrap_mean_ci"](spark, sf).collect()[0]
+    row = plans.QUERIES["bca_bootstrap_mean_ci"](spark, sf).collect()[0]
     assert row["accel"] == 0.0
     assert row["point_mean"] == 200.0
 
@@ -304,7 +267,7 @@ def test_bca_constant_data_degenerate(spark, tmp_path):
         columns=["o_orderkey", "o_totalprice"],
     ).astype({"o_orderkey": "int64"})
     sf = _write_tables(tmp_path, orders=orders)
-    row = S.STAGED_QUERIES["bca_bootstrap_mean_ci"](spark, sf).collect()[0]
+    row = plans.QUERIES["bca_bootstrap_mean_ci"](spark, sf).collect()[0]
     assert row["z0_bc"] == 0.0
     assert row["accel"] == 0.0
     assert row["bca_lo"] == row["ci_lo"] == 250.0
@@ -419,7 +382,7 @@ def test_ancova_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/events.parquet")
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     exp = _a2_ref(pdf)
-    row = S.STAGED_QUERIES["lin_ancova_two_cov_ab"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["lin_ancova_two_cov_ab"](spark, sf_small).collect()[0]
     for k, v in exp.items():
         if v is None:
             assert row[k] is None, k
@@ -465,7 +428,7 @@ def test_ancova_recovers_exact_two_cov_fit(spark, tmp_path):
             rows.append((eid, late + pd.Timedelta(seconds=eid), uid,
                          "purchase", ycents / 100.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["lin_ancova_two_cov_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["lin_ancova_two_cov_ab"](spark, sf).collect()[0]
     assert row["beta_spend1_micro"] == 3_000_000
     assert row["beta_count1_micro"] == 100_000_000
     assert row["beta_spend0_micro"] == 2_000_000
@@ -492,7 +455,7 @@ def test_ancova_collinear_falls_back_to_zero_slopes(spark, tmp_path):
             rows.append((eid, late + pd.Timedelta(seconds=eid), uid,
                          "purchase", post + j, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["lin_ancova_two_cov_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["lin_ancova_two_cov_ab"](spark, sf).collect()[0]
     assert row["beta_spend0_micro"] == 0 and row["beta_count0_micro"] == 0
     assert row["beta_spend1_micro"] == 0 and row["beta_count1_micro"] == 0
     assert row["ate_adj_cents"] == row["ate_raw_cents"]
@@ -562,7 +525,7 @@ def test_alpha_spending_matches_python(spark, sf_small):
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     exp = _gs_ref(pdf)
     rows = sorted(
-        S.STAGED_QUERIES["alpha_spending_gst_ab"](spark, sf_small).collect(),
+        plans.QUERIES["alpha_spending_gst_ab"](spark, sf_small).collect(),
         key=lambda r: r["look"],
     )
     assert len(rows) == len(exp)
@@ -586,7 +549,7 @@ def test_alpha_spending_single_look_is_fixed_sample(spark, tmp_path):
     ts = pd.Timestamp("2024-03-01 12:00:00")
     rows = [(i, ts, i % 10, "view", float(1 + i % 7), "{}") for i in range(40)]
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    rows_out = S.STAGED_QUERIES["alpha_spending_gst_ab"](spark, sf).collect()
+    rows_out = plans.QUERIES["alpha_spending_gst_ab"](spark, sf).collect()
     assert len(rows_out) == 1
     r = rows_out[0]
     assert r["look"] == 1 and r["t_info"] == 1.0
@@ -601,7 +564,7 @@ def test_alpha_spending_monotone_and_exhausted(spark, sf_small):
     families, ends at exactly alpha = 0.05, and the OBF-like boundary
     is strictly decreasing (the hallmark strict-early shape)."""
     rows = sorted(
-        S.STAGED_QUERIES["alpha_spending_gst_ab"](spark, sf_small).collect(),
+        plans.QUERIES["alpha_spending_gst_ab"](spark, sf_small).collect(),
         key=lambda r: r["look"],
     )
     obf = [r["alpha_spent_obf"] for r in rows]
@@ -703,7 +666,7 @@ def test_tost_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/events.parquet")
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     exp = _tost_ref(pdf)
-    row = S.STAGED_QUERIES["tost_equivalence_ab"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["tost_equivalence_ab"](spark, sf_small).collect()[0]
     for k, v in exp.items():
         if v is None:
             assert row[k] is None, k
@@ -727,7 +690,7 @@ def test_tost_identical_arms_equivalent(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(seconds=eid), u1, "view", v, "{}")); eid += 1
             rows.append((eid, base + pd.Timedelta(seconds=eid), u0, "view", v, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["tost_equivalence_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["tost_equivalence_ab"](spark, sf).collect()[0]
     assert row["diff_cents"] == 0.0
     assert row["equivalent_at_95"] is True
     assert row["p_tost"] < 0.05
@@ -747,7 +710,7 @@ def test_tost_separated_arms_not_equivalent(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(seconds=eid), u0, "view",
                          float(100 + j % 3), "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["tost_equivalence_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["tost_equivalence_ab"](spark, sf).collect()[0]
     assert row["equivalent_at_95"] is False
     assert row["p_tost"] > 0.5
 
@@ -821,7 +784,7 @@ def _fk_ref(docs: pd.DataFrame) -> dict:
 def test_fligner_killeen_matches_python(spark, sf_small):
     docs = pd.read_parquet(f"{sf_small}/documents.parquet")
     exp = _fk_ref(docs)
-    row = S.STAGED_QUERIES["fligner_killeen_scale_by_source"](
+    row = plans.QUERIES["fligner_killeen_scale_by_source"](
         spark, sf_small
     ).collect()[0]
     for k, v in exp.items():
@@ -845,7 +808,7 @@ def test_fligner_killeen_identical_dispersion_zero(spark, tmp_path):
         rows.append((did, "src_a", "en", "x" * ln_a)); did += 1
         rows.append((did, "src_b", "en", "x" * ln_b)); did += 1
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    row = S.STAGED_QUERIES["fligner_killeen_scale_by_source"](
+    row = plans.QUERIES["fligner_killeen_scale_by_source"](
         spark, sf
     ).collect()[0]
     assert row["n_groups"] == 2
@@ -861,7 +824,7 @@ def test_fligner_killeen_detects_scale_difference(spark, tmp_path):
         rows.append((did, "tight", "en", "x" * 200)); did += 1
         rows.append((did, "wide", "en", "x" * (50 + (j * 37) % 400))); did += 1
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    row = S.STAGED_QUERIES["fligner_killeen_scale_by_source"](
+    row = plans.QUERIES["fligner_killeen_scale_by_source"](
         spark, sf
     ).collect()[0]
     assert row["x2_stat"] is not None and row["x2_stat"] > 10
@@ -908,7 +871,7 @@ def test_hodges_lehmann_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/events.parquet")
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     exp = _hl_ref(pdf)
-    row = S.STAGED_QUERIES["hodges_lehmann_shift_ab"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["hodges_lehmann_shift_ab"](spark, sf_small).collect()[0]
     for k, v in exp.items():
         assert row[k] == v, (k, row[k], v)
 
@@ -929,7 +892,7 @@ def test_hodges_lehmann_pure_shift_recovered(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(seconds=eid), u1, "view",
                          v + 7.5, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["hodges_lehmann_shift_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["hodges_lehmann_shift_ab"](spark, sf).collect()[0]
     assert row["hl_shift_cents"] == 750
     assert row["ci_lo_cents"] <= 750 <= row["ci_hi_cents"]
 
@@ -950,7 +913,7 @@ def test_hodges_lehmann_identical_arms_zero(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(seconds=eid), u1, "view",
                          v, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["hodges_lehmann_shift_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["hodges_lehmann_shift_ab"](spark, sf).collect()[0]
     assert row["hl_shift_cents"] == 0
     assert row["ci_lo_cents"] == 0 and row["ci_hi_cents"] == 0
 
@@ -1000,7 +963,7 @@ def test_page_trend_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/events.parquet")
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     exp = _pg_ref(pdf)
-    row = S.STAGED_QUERIES["page_trend_test_tod"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["page_trend_test_tod"](spark, sf_small).collect()[0]
     for k, v in exp.items():
         if v is None:
             assert row[k] is None, k
@@ -1023,7 +986,7 @@ def test_page_trend_perfect_monotone(spark, tmp_path):
                 rows.append((eid, ts, eid % 7, et, float(10 * (band + 1)), "{}"))
                 eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["page_trend_test_tod"](spark, sf).collect()[0]
+    row = plans.QUERIES["page_trend_test_tod"](spark, sf).collect()[0]
     assert row["n_blocks"] == 3 and row["k_bands"] == 4
     assert row["l_stat"] == 90  # 3 blocks x sum j^2 = 3 x 30
     assert row["p_value"] < 0.01
@@ -1041,7 +1004,7 @@ def test_page_trend_anti_monotone(spark, tmp_path):
                 rows.append((eid, ts, eid % 7, et, float(10 * (4 - band)), "{}"))
                 eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["page_trend_test_tod"](spark, sf).collect()[0]
+    row = plans.QUERIES["page_trend_test_tod"](spark, sf).collect()[0]
     assert row["l_stat"] == 40  # 2 blocks x 20
     assert row["p_value"] > 0.95
 
@@ -1063,7 +1026,7 @@ def test_page_trend_absent_band_dense_coefficients(spark, tmp_path):
                 eid += 1
     pdf = _events_pdf(rows)
     sf = _write_tables(tmp_path, events=pdf)
-    row = S.STAGED_QUERIES["page_trend_test_tod"](spark, sf).collect()[0]
+    row = plans.QUERIES["page_trend_test_tod"](spark, sf).collect()[0]
     assert row["k_bands"] == 3 and row["n_blocks"] == 2
     assert row["l_stat"] == 28  # 2 blocks x sum(j^2) = 2 x 14
     assert row["p_value"] < 0.05
@@ -1123,7 +1086,7 @@ def test_wilcoxon_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/events.parquet")
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     exp = _ws_ref(pdf)
-    row = S.STAGED_QUERIES["wilcoxon_signed_rank_prepost"](
+    row = plans.QUERIES["wilcoxon_signed_rank_prepost"](
         spark, sf_small
     ).collect()[0]
     for k, v in exp.items():
@@ -1147,7 +1110,7 @@ def test_wilcoxon_all_positive_is_max(spark, tmp_path):
         rows.append((eid, late + pd.Timedelta(seconds=eid), uid, "purchase",
                      10.0 + uid, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["wilcoxon_signed_rank_prepost"](
+    row = plans.QUERIES["wilcoxon_signed_rank_prepost"](
         spark, sf
     ).collect()[0]
     n = row["n_nonzero"]
@@ -1173,7 +1136,7 @@ def test_wilcoxon_mirror_pairs_zero(spark, tmp_path):
         rows.append((eid, late + pd.Timedelta(seconds=eid), dn, "view",
                      10.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["wilcoxon_signed_rank_prepost"](
+    row = plans.QUERIES["wilcoxon_signed_rank_prepost"](
         spark, sf
     ).collect()[0]
     assert row["n_nonzero"] == 20
@@ -1222,7 +1185,7 @@ def _bl_ref(docs: pd.DataFrame) -> dict:
 def test_bartlett_matches_python(spark, sf_small):
     docs = pd.read_parquet(f"{sf_small}/documents.parquet")
     exp = _bl_ref(docs)
-    row = S.STAGED_QUERIES["bartlett_variance_by_source"](
+    row = plans.QUERIES["bartlett_variance_by_source"](
         spark, sf_small
     ).collect()[0]
     for k, v in exp.items():
@@ -1244,7 +1207,7 @@ def test_bartlett_equal_variances_zero(spark, tmp_path):
         rows.append((did, "src_a", "en", "x" * ln)); did += 1
         rows.append((did, "src_b", "en", "y" * (ln + 300))); did += 1
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    row = S.STAGED_QUERIES["bartlett_variance_by_source"](
+    row = plans.QUERIES["bartlett_variance_by_source"](
         spark, sf
     ).collect()[0]
     assert row["t_stat"] == 0.0
@@ -1258,7 +1221,7 @@ def test_bartlett_constant_group_nulls_loud(spark, tmp_path):
         rows.append((did, "const", "en", "x" * 100)); did += 1
         rows.append((did, "varied", "en", "x" * (100 + j * 13))); did += 1
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    row = S.STAGED_QUERIES["bartlett_variance_by_source"](
+    row = plans.QUERIES["bartlett_variance_by_source"](
         spark, sf
     ).collect()[0]
     assert row["t_stat"] is None and row["z_stat"] is None
@@ -1273,7 +1236,7 @@ def test_stream_tost_matches_batch_python_on_half(spark, sf_small):
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     half = pdf[pdf["event_id"] % 2 == 1]
     exp = _tost_ref(half)
-    row = S.STAGED_QUERIES["stream_tost_guardrail"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["stream_tost_guardrail"](spark, sf_small).collect()[0]
     for k, v in exp.items():
         if v is None:
             assert row[k] is None, k
@@ -1325,7 +1288,7 @@ def test_theil_sen_ci_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/events.parquet")
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     exp = _tsc_ref(pdf)
-    row = S.STAGED_QUERIES["theil_sen_ci_daily_trend"](
+    row = plans.QUERIES["theil_sen_ci_daily_trend"](
         spark, sf_small
     ).collect()[0]
     for k, v in exp.items():
@@ -1348,7 +1311,7 @@ def test_theil_sen_ci_exact_linear_trend(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(days=day, seconds=j), 1 + j,
                          "view", 1.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["theil_sen_ci_daily_trend"](spark, sf).collect()[0]
+    row = plans.QUERIES["theil_sen_ci_daily_trend"](spark, sf).collect()[0]
     assert row["n_days"] == 8 and row["n_pairs"] == 28
     assert row["sen_slope"] == 5.0
     assert row["ci_lo"] == 5.0 and row["ci_hi"] == 5.0
@@ -1365,7 +1328,7 @@ def test_theil_sen_ci_flat_not_significant(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(days=day, seconds=j), 1 + j,
                          "view", 1.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["theil_sen_ci_daily_trend"](spark, sf).collect()[0]
+    row = plans.QUERIES["theil_sen_ci_daily_trend"](spark, sf).collect()[0]
     assert row["sen_slope"] == 0.0
     assert row["ci_lo"] == 0.0 and row["ci_hi"] == 0.0
     assert row["trend_significant"] is False
@@ -1388,7 +1351,7 @@ def test_theil_sen_ci_pre_epoch_days_floor(spark, tmp_path):
     sf = _write_tables(tmp_path, events=pdf)
     exp = _tsc_ref(pdf.assign(ts=pdf["ts"].astype("datetime64[us]")))
     assert exp["n_days"] == 4  # the Python floor reference sees 4 days
-    row = S.STAGED_QUERIES["theil_sen_ci_daily_trend"](spark, sf).collect()[0]
+    row = plans.QUERIES["theil_sen_ci_daily_trend"](spark, sf).collect()[0]
     assert row["n_days"] == 4 and row["n_pairs"] == 6
     assert row["sen_slope"] == 2.0
     assert row["ci_lo"] == 2.0 and row["ci_hi"] == 2.0
@@ -1433,7 +1396,7 @@ def test_sign_test_matches_python(spark, sf_small):
     pdf = pd.read_parquet(f"{sf_small}/events.parquet")
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     exp = _sg_ref(pdf)
-    row = S.STAGED_QUERIES["sign_test_prepost"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["sign_test_prepost"](spark, sf_small).collect()[0]
     for k, v in exp.items():
         if v is None:
             assert row[k] is None, k
@@ -1461,6 +1424,6 @@ def test_sign_test_balanced_signs_zero(spark, tmp_path):
         rows.append((eid, late + pd.Timedelta(seconds=eid), dn, "view",
                      10.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["sign_test_prepost"](spark, sf).collect()[0]
+    row = plans.QUERIES["sign_test_prepost"](spark, sf).collect()[0]
     assert row["n_nonzero"] == 16 and row["n_positive"] == 8
     assert row["z_stat"] == 0.0 and row["p_two_sided"] == 1.0

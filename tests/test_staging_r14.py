@@ -1,7 +1,7 @@
-"""Round-14 staged queries (plans/staging_r14.py): staging invariants,
-plan lint, and independent Python brute-force references (the
-staging_r8/r10/r11/r12/r13 discipline — cross-engine parity proves the
-engines AGREE, these pin the statistics against INTENT)."""
+"""Round-14 queries (plans/staging_r14.py): plan shape and
+independent Python brute-force references (the staging_r8/r10/r11/r12/r13
+discipline — cross-engine parity proves the engines AGREE, these pin the
+statistics against INTENT)."""
 
 from __future__ import annotations
 
@@ -83,42 +83,7 @@ def _sessions_py(pdf: pd.DataFrame):
     return out
 
 
-# --- staging invariants ------------------------------------------------------
-
-
-def test_promoted_names_are_registered_live():
-    # Round-14 promotion invariant (the test_staging_r8/r10/r11/r12/r13
-    # durable form — the original "must NOT leak while staged" assertion
-    # inverted at the round-14 open): every staged query registers into
-    # the live registry (same function object), every name sits inside
-    # the round-14 driver window (all 12 are this round's new
-    # registrations), and the promotion list in plans/__init__ matches
-    # the staged set exactly.
-    missing = [n for n in S.STAGED_QUERIES if n not in plans.QUERIES]
-    assert not missing, f"promoted queries missing from the live registry: {missing}"
-    same = [n for n in S.STAGED_QUERIES if plans.QUERIES[n] is S.STAGED_QUERIES[n]]
-    assert len(same) == len(S.STAGED_QUERIES)
-    window = set(list(plans.QUERIES)[:50])
-    out = [n for n in S.STAGED_QUERIES if n not in window]
-    assert out == [], f"promoted queries outside the round-14 window: {out}"
-    assert set(plans._ROUND14_PROMOTIONS) == set(S.STAGED_QUERIES)
-
-
-def test_every_staged_query_is_oracle_paired():
-    missing = [n for n in S.STAGED_QUERIES if n not in S.STAGED_ORACLES]
-    assert not missing, f"staged queries without oracles: {missing}"
-
-
-def test_staged_plan_lint(spark, sf_small):
-    offenders = {}
-    for name, fn in S.STAGED_QUERIES.items():
-        if name.startswith("stream_"):
-            continue  # executes a stream replay on construction
-        p = _explain(fn(spark, sf_small))
-        bad = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"staged plan lint failed: {offenders}"
+# --- plan shape --------------------------------------------------------------
 
 
 def test_stream_twin_readout_plan_lint(spark):
@@ -210,7 +175,7 @@ def _assert_rows_match_ref(rows, ref, float_keys, int_keys, bool_keys):
 
 def test_storey_matches_python(spark, sf_small):
     ref = _storey_ref(_load_events(sf_small))
-    rows = S.STAGED_QUERIES["storey_qvalue_segments"](spark, sf_small).collect()
+    rows = plans.QUERIES["storey_qvalue_segments"](spark, sf_small).collect()
     _assert_rows_match_ref(
         rows, ref,
         float_keys=("z_stat", "p_value", "pi0", "q_value"),
@@ -224,7 +189,7 @@ def test_storey_q_monotone_and_rejects_bh_superset(spark, sf_small):
     because q = pi0 * (BH adjusted p) with pi0 <= 1, every segment the
     registered BH step-up rejects at 0.05 must also have q <= 0.05."""
     rows = sorted(
-        S.STAGED_QUERIES["storey_qvalue_segments"](spark, sf_small).collect(),
+        plans.QUERIES["storey_qvalue_segments"](spark, sf_small).collect(),
         key=lambda r: r["p_rank"],
     )
     qs = [r["q_value"] for r in rows]
@@ -263,7 +228,7 @@ def test_storey_all_null_battery(spark, tmp_path):
                          100.0 if conv else 1.0, "{}")
                     )
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    out = S.STAGED_QUERIES["storey_qvalue_segments"](spark, sf).collect()
+    out = plans.QUERIES["storey_qvalue_segments"](spark, sf).collect()
     assert len(out) == 8
     for r in out:
         assert r["z_stat"] == 0.0 and r["p_value"] == 1.0
@@ -295,7 +260,7 @@ def _by_ref(events: pd.DataFrame) -> dict:
 
 def test_by_matches_python(spark, sf_small):
     ref = _by_ref(_load_events(sf_small))
-    rows = S.STAGED_QUERIES["benjamini_yekutieli_segments"](
+    rows = plans.QUERIES["benjamini_yekutieli_segments"](
         spark, sf_small
     ).collect()
     _assert_rows_match_ref(
@@ -309,7 +274,7 @@ def test_by_matches_python(spark, sf_small):
 def test_by_rejections_subset_of_bh(spark, sf_small):
     """BY's threshold is BH's divided by H_m > 1 (m >= 2), so its
     rejection set is a subset of the registered BH step-up's."""
-    by = S.STAGED_QUERIES["benjamini_yekutieli_segments"](
+    by = plans.QUERIES["benjamini_yekutieli_segments"](
         spark, sf_small
     ).collect()
     bh = plans.QUERIES["ab_segment_bh_fdr"](spark, sf_small).collect()
@@ -326,7 +291,7 @@ def test_by_rejections_subset_of_bh(spark, sf_small):
 def test_stream_storey_matches_batch_python_on_half(spark, sf_small):
     pdf = _load_events(sf_small)
     ref = _storey_ref(pdf[pdf["user_id"] % 2 == 1])
-    rows = S.STAGED_QUERIES["stream_storey_qvalue_monitor"](
+    rows = plans.QUERIES["stream_storey_qvalue_monitor"](
         spark, sf_small
     ).collect()
     _assert_rows_match_ref(
@@ -375,7 +340,7 @@ def _jb_ref(events: pd.DataFrame) -> dict:
 
 def test_jarque_bera_matches_python(spark, sf_small):
     ref = _jb_ref(_load_events(sf_small))
-    row = S.STAGED_QUERIES["jarque_bera_event_values"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["jarque_bera_event_values"](spark, sf_small).collect()[0]
     for k, v in ref.items():
         if v is None:
             assert row[k] is None, k
@@ -393,7 +358,7 @@ def test_jarque_bera_two_point_exact(spark, tmp_path):
     rows = [(i, ts + pd.Timedelta(seconds=i), i % 5, "view",
              1.0 if i % 2 else -1.0, "{}") for i in range(40)]
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["jarque_bera_event_values"](spark, sf).collect()[0]
+    row = plans.QUERIES["jarque_bera_event_values"](spark, sf).collect()[0]
     assert row["n_events"] == 40
     assert row["mean_cents"] == 0.0
     assert row["skewness"] == 0.0
@@ -407,7 +372,7 @@ def test_jarque_bera_constant_nulls_loud(spark, tmp_path):
     rows = [(i, ts + pd.Timedelta(seconds=i), 1, "view", 5.0, "{}")
             for i in range(10)]
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["jarque_bera_event_values"](spark, sf).collect()[0]
+    row = plans.QUERIES["jarque_bera_event_values"](spark, sf).collect()[0]
     assert row["n_events"] == 10 and row["mean_cents"] == 500.0
     for k in ("skewness", "kurtosis_excess", "jb_stat", "p_value"):
         assert row[k] is None, k
@@ -456,7 +421,7 @@ def _ab_ref(events: pd.DataFrame) -> dict:
 
 def test_ansari_bradley_matches_python(spark, sf_small):
     ref = _ab_ref(_load_events(sf_small))
-    row = S.STAGED_QUERIES["ansari_bradley_scale_ab"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["ansari_bradley_scale_ab"](spark, sf_small).collect()[0]
     for k, v in ref.items():
         if v is None:
             assert row[k] is None, k
@@ -486,7 +451,7 @@ def test_ansari_bradley_identical_arms_zero(spark, tmp_path):
             rows.append((eid, ts + pd.Timedelta(seconds=eid), u, "view", val, "{}"))
             eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["ansari_bradley_scale_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["ansari_bradley_scale_ab"](spark, sf).collect()[0]
     assert row["n0"] == 3 and row["n1"] == 3
     assert row["z_stat"] == 0.0
     assert row["p_value"] == 1.0
@@ -509,7 +474,7 @@ def test_ansari_bradley_detects_scale_difference(spark, tmp_path):
                      1.0 if i % 2 else 100.0, "{}"))
         eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["ansari_bradley_scale_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["ansari_bradley_scale_ab"](spark, sf).collect()[0]
     assert row["z_stat"] < -2.0
     assert row["p_value"] < 0.05
 
@@ -577,7 +542,7 @@ def test_cox_score_matches_python(spark, sf_small):
     obs = _surv_obs_ref(_load_events(sf_small))
     ndt, o, e_e9, v_e9 = _cox_terms_ref(obs, lambda hr: hr)
     z, p = _cox_z_p(o, e_e9, v_e9)
-    row = S.STAGED_QUERIES["cox_ph_score_test"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["cox_ph_score_test"](spark, sf_small).collect()[0]
     assert row["n_death_times"] == ndt
     assert row["o_hours"] == o
     assert abs(row["e_hours"] - _rnd6(e_e9 / 1e9)) < 2e-6
@@ -605,7 +570,7 @@ def test_cox_binary_covariate_equals_logrank(spark, tmp_path):
     # censored; hour 0 = arm of a known arm-0 user id
     rows.append((eid, base + pd.Timedelta(days=30), a0[4], "view", 1.0, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    cox = S.STAGED_QUERIES["cox_ph_score_test"](spark, sf).collect()[0]
+    cox = plans.QUERIES["cox_ph_score_test"](spark, sf).collect()[0]
     lr = plans.QUERIES["logrank_test_session_survival"](spark, sf).collect()[0]
     assert cox["o_hours"] == lr["o1"]
     assert abs(cox["z_stat"] - lr["z_stat"]) < 2e-6
@@ -657,7 +622,7 @@ def _mt_ref(events: pd.DataFrame) -> dict:
 
 def test_mantel_trend_matches_python(spark, sf_small):
     ref = _mt_ref(_load_events(sf_small))
-    row = S.STAGED_QUERIES["mantel_logrank_trend_tod"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["mantel_logrank_trend_tod"](spark, sf_small).collect()[0]
     for k, v in ref.items():
         if isinstance(v, int):
             assert row[k] == v, (k, row[k], v)
@@ -678,7 +643,7 @@ def test_mantel_trend_single_band_degenerate(spark, tmp_path):
             eid += 1
     rows.append((eid, base + pd.Timedelta(days=20), 99, "view", 1.0, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["mantel_logrank_trend_tod"](spark, sf).collect()[0]
+    row = plans.QUERIES["mantel_logrank_trend_tod"](spark, sf).collect()[0]
     assert row["z_stat"] == 0.0
     assert row["o_b1"] == 0 and row["o_b2"] == 0 and row["o_b3"] == 0
     assert abs(row["e_b0"] - row["o_b0"]) < 2e-6
@@ -700,7 +665,7 @@ def test_mantel_trend_detects_monotone_hazard(spark, tmp_path):
             eid += 1
     rows.append((eid, base + pd.Timedelta(days=20), 99, "view", 1.0, "{}"))
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["mantel_logrank_trend_tod"](spark, sf).collect()[0]
+    row = plans.QUERIES["mantel_logrank_trend_tod"](spark, sf).collect()[0]
     assert row["z_stat"] > 2.0
     assert row["p_value"] < 0.05
 
@@ -778,7 +743,7 @@ def _bd_ref(events: pd.DataFrame) -> dict:
 
 def test_breslow_day_matches_python(spark, sf_small):
     ref = _bd_ref(_load_events(sf_small))
-    row = S.STAGED_QUERIES["breslow_day_or_homogeneity"](
+    row = plans.QUERIES["breslow_day_or_homogeneity"](
         spark, sf_small
     ).collect()[0]
     for k, v in ref.items():
@@ -812,7 +777,7 @@ def test_breslow_day_identical_strata_zero(spark, tmp_path):
     a0, a1 = _users_by_arm(4)
     cells = {et: (2, 2, 1, 3) for et in ("view", "click", "purchase")}
     sf = _write_tables(tmp_path, events=_bd_events(cells, a0, a1))
-    row = S.STAGED_QUERIES["breslow_day_or_homogeneity"](spark, sf).collect()[0]
+    row = plans.QUERIES["breslow_day_or_homogeneity"](spark, sf).collect()[0]
     assert row["n_strata"] == 3 and row["dof"] == 2
     assert row["or_mh"] == 3.0
     assert row["x2_stat"] == 0.0
@@ -826,7 +791,7 @@ def test_breslow_day_detects_heterogeneity(spark, tmp_path):
     a0, a1 = _users_by_arm(4)
     cells = {"view": (15, 5, 5, 15), "click": (5, 15, 15, 5)}
     sf = _write_tables(tmp_path, events=_bd_events(cells, a0, a1))
-    row = S.STAGED_QUERIES["breslow_day_or_homogeneity"](spark, sf).collect()[0]
+    row = plans.QUERIES["breslow_day_or_homogeneity"](spark, sf).collect()[0]
     assert row["n_strata"] == 2 and row["dof"] == 1
     assert row["x2_stat"] > 10.0
     assert row["p_value"] < 0.01
@@ -838,7 +803,7 @@ def test_breslow_day_detects_heterogeneity(spark, tmp_path):
 def test_stream_jb_matches_batch_python_on_half(spark, sf_small):
     pdf = _load_events(sf_small)
     ref = _jb_ref(pdf[pdf["event_id"] % 2 == 1])
-    row = S.STAGED_QUERIES["stream_jarque_bera_monitor"](
+    row = plans.QUERIES["stream_jarque_bera_monitor"](
         spark, sf_small
     ).collect()[0]
     for k, v in ref.items():
@@ -904,7 +869,7 @@ def _fz_ref(docs: pd.DataFrame) -> dict:
 def test_fisher_z_matches_python(spark, sf_small):
     docs = pd.read_parquet(f"{sf_small}/documents.parquet")
     ref = _fz_ref(docs)
-    row = S.STAGED_QUERIES["fisher_z_corr_diff_ab"](spark, sf_small).collect()[0]
+    row = plans.QUERIES["fisher_z_corr_diff_ab"](spark, sf_small).collect()[0]
     for k, v in ref.items():
         if v is None:
             assert row[k] is None, k
@@ -940,7 +905,7 @@ def test_fisher_z_identical_arms_zero(spark, tmp_path):
             # collinear (|r| = 1 would NULL the atanh by design)
             rows.append((did, "s", "en", _doc_of(2 + i, 3 * i + (i % 2) + 1)))
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    row = S.STAGED_QUERIES["fisher_z_corr_diff_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["fisher_z_corr_diff_ab"](spark, sf).collect()[0]
     assert row["n_a"] == 5 and row["n_b"] == 5
     assert row["r_a"] == row["r_b"]
     assert row["z_stat"] == 0.0
@@ -966,7 +931,7 @@ def test_fisher_z_perfect_correlation_nulls_loud(spark, tmp_path):
     ys = [len(t.strip().split(" ")) for t in sub["text"]]
     assert all(x == 3 * y for x, y in zip(xs, ys))
     sf = _write_tables(tmp_path, documents=docs)
-    row = S.STAGED_QUERIES["fisher_z_corr_diff_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["fisher_z_corr_diff_ab"](spark, sf).collect()[0]
     assert row["r_a"] == 1.0
     assert row["z_stat"] is None and row["p_value"] is None
 
@@ -981,7 +946,7 @@ def test_fisher_z_detects_structure_difference(spark, tmp_path):
     for i, did in enumerate(a1):  # decreasing chars with tokens (+noise)
         rows.append((did, "s", "en", _doc_of(2 + i, 60 - 4 * i + (i % 2))))
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    row = S.STAGED_QUERIES["fisher_z_corr_diff_ab"](spark, sf).collect()[0]
+    row = plans.QUERIES["fisher_z_corr_diff_ab"](spark, sf).collect()[0]
     assert row["r_a"] > 0.9 and row["r_b"] < -0.9
     assert row["z_stat"] < -4.0
     assert row["p_value"] < 0.001
@@ -1032,7 +997,7 @@ def _lb_ref(events: pd.DataFrame) -> dict:
 
 def test_ljung_box_matches_python(spark, sf_small):
     ref = _lb_ref(_load_events(sf_small))
-    row = S.STAGED_QUERIES["ljung_box_daily_autocorr"](
+    row = plans.QUERIES["ljung_box_daily_autocorr"](
         spark, sf_small
     ).collect()[0]
     for k, v in ref.items():
@@ -1052,7 +1017,7 @@ def test_ljung_box_constant_series_nulls_loud(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(days=day, seconds=j), 1 + j,
                          "view", 1.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["ljung_box_daily_autocorr"](spark, sf).collect()[0]
+    row = plans.QUERIES["ljung_box_daily_autocorr"](spark, sf).collect()[0]
     assert row["n_days"] == 12
     for k in ("r_lag1", "r_lag7", "q_stat", "z_stat", "p_value"):
         assert row[k] is None, k
@@ -1069,7 +1034,7 @@ def test_ljung_box_weekly_seasonality_detected(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(days=day, seconds=j), 1 + j,
                          "view", 1.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["ljung_box_daily_autocorr"](spark, sf).collect()[0]
+    row = plans.QUERIES["ljung_box_daily_autocorr"](spark, sf).collect()[0]
     assert row["r_lag7"] > 0.5
     assert row["q_stat"] > 30.0
     assert row["p_value"] < 0.01
@@ -1084,7 +1049,7 @@ def test_ljung_box_alternating_negative_lag1(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(days=day, seconds=j), 1 + j,
                          "view", 1.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["ljung_box_daily_autocorr"](spark, sf).collect()[0]
+    row = plans.QUERIES["ljung_box_daily_autocorr"](spark, sf).collect()[0]
     assert row["r_lag1"] < -0.5
     assert row["p_value"] < 0.01
 
@@ -1151,7 +1116,7 @@ def _bw_ref(events: pd.DataFrame) -> dict:
 
 def test_bowker_matches_python(spark, sf_small):
     ref = _bw_ref(_load_events(sf_small))
-    row = S.STAGED_QUERIES["bowker_symmetry_transitions"](
+    row = plans.QUERIES["bowker_symmetry_transitions"](
         spark, sf_small
     ).collect()[0]
     for k, v in ref.items():
@@ -1173,7 +1138,7 @@ def test_bowker_symmetric_chain_zero(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(hours=u, seconds=60 * j),
                          u, et, 1.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["bowker_symmetry_transitions"](spark, sf).collect()[0]
+    row = plans.QUERIES["bowker_symmetry_transitions"](spark, sf).collect()[0]
     assert row["dof"] == 1 and row["n_offdiag_transitions"] == 12
     assert row["x2_stat"] == 0.0
 
@@ -1189,7 +1154,7 @@ def test_bowker_directional_chain_detected(spark, tmp_path):
             rows.append((eid, base + pd.Timedelta(hours=u, seconds=60 * j),
                          u, et, 1.0, "{}")); eid += 1
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
-    row = S.STAGED_QUERIES["bowker_symmetry_transitions"](spark, sf).collect()[0]
+    row = plans.QUERIES["bowker_symmetry_transitions"](spark, sf).collect()[0]
     assert row["dof"] == 2
     assert row["x2_stat"] == 16.0
     assert row["p_value"] < 0.01

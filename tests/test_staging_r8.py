@@ -1,45 +1,15 @@
-"""Round-8 queries (plans/staging_r8.py, staged r7 → promoted r8): lint +
-handcrafted semantics.
+"""Round-8 queries (plans/staging_r8.py): plan shape and handcrafted
+semantics.
 
-Oracle parity for the promoted set now runs through the registry-wide
-``tests/test_oracle_parity.py`` (they register live since round 8); this
-module keeps the promotion invariants, the plan-shape lint, and the
-independent Python brute-force references that pin each statistic against
-INTENT, not just cross-engine agreement."""
+Oracle parity for these queries runs through the registry-wide
+``tests/test_oracle_parity.py`` and the full-registry sweep; this module
+keeps the plan-shape checks and the independent Python brute-force
+references that pin each statistic against INTENT, not just cross-engine
+agreement."""
 
 from __future__ import annotations
 
-import pytest
-
 from flink_realtime_sessionize_sample_spark import plans
-from flink_realtime_sessionize_sample_spark.plans import staging_r8 as S
-
-
-def test_promoted_names_are_registered_live():
-    # Round-8 promotion invariant, durable form: every staged query
-    # registers into the live registry (same function object) and — now
-    # that CORRECTNESS_r08 went 50/50 green — carries a green external
-    # row (_EXTERNALLY_GREEN_THROUGH_R8 membership). The original
-    # round-8 assertion that the promotions sit INSIDE the first-50
-    # window was window-rotation-specific and retired when the round-9
-    # rotation reclaimed those slots.
-    missing = [n for n in S.STAGED_QUERIES if n not in plans.QUERIES]
-    assert not missing, f"staged names not registered live: {missing}"
-    ungreen = [
-        n for n in S.STAGED_QUERIES
-        if n not in plans._EXTERNALLY_GREEN_THROUGH_R8
-    ]
-    assert not ungreen, f"promoted queries without a green external row: {ungreen}"
-    assert set(S.STAGED_QUERIES) == set(plans._ROUND8_PROMOTIONS)
-
-
-def test_every_staged_query_is_oracle_paired():
-    # Staging has no rows-only weaker path: promotion requires the full
-    # value-hash gate, so every staged query must carry an oracle.
-    missing = [n for n in S.STAGED_QUERIES if n not in S.STAGED_ORACLES]
-    assert not missing, f"staged queries without oracles: {missing}"
-    live_missing = [n for n in S.STAGED_ORACLES if plans.ORACLES.get(n) != S.STAGED_ORACLES[n]]
-    assert not live_missing, f"live oracle differs from staged: {live_missing}"
 
 
 def _explain(df) -> str:
@@ -48,23 +18,11 @@ def _explain(df) -> str:
     return jqe.explainString(mode.fromString("extended"))
 
 
-def test_staged_plan_lint(spark, sf_small):
-    # Same floor as test_plan_lint.py: no CartesianProduct, no
-    # row-at-a-time Python, in any staged plan.
-    offenders = {}
-    for name, fn in S.STAGED_QUERIES.items():
-        p = _explain(fn(spark, sf_small))
-        bad = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"staged plan lint failed: {offenders}"
-
-
 def test_staged_rank_passes_are_banded(spark, sf_small):
     # The Mann-Whitney midrank pass must ride the deterministic-banded
     # global-rank operator: band-partitioned window, no range exchange,
     # no single-partition data sort.
-    p = _explain(S.STAGED_QUERIES["mann_whitney_en_tokens"](spark, sf_small))
+    p = _explain(plans.QUERIES["mann_whitney_en_tokens"](spark, sf_small))
     assert "rangepartitioning" not in p.lower()
     assert "_pid" in p
 
@@ -120,7 +78,7 @@ def test_wasserstein_matches_bruteforce(spark, tmp_path):
         cb += b.count(v)
         ks = max(ks, abs(Fraction(ca, na) - Fraction(cb, nb)))
         prev = v
-    out = S.STAGED_QUERIES["wasserstein_split_drift"](spark, sf).collect()[0]
+    out = plans.QUERIES["wasserstein_split_drift"](spark, sf).collect()[0]
     assert out["n_a"] == na and out["n_b"] == nb
     assert abs(out["w1_chars"] - float(w1)) < 5e-4  # e6 height quantization
     assert abs(out["ks_d"] - float(ks)) < 2e-6
@@ -156,7 +114,7 @@ def test_kendall_matches_bruteforce(spark, tmp_path):
     import math
 
     tau = (conc - disc) / (math.sqrt(n0 - tx) * math.sqrt(n0 - ty))
-    out = S.STAGED_QUERIES["kendall_tau_chars_words"](spark, sf).collect()[0]
+    out = plans.QUERIES["kendall_tau_chars_words"](spark, sf).collect()[0]
     assert out["n_docs"] == n
     assert out["concordant"] == conc and out["discordant"] == disc
     assert out["ties_x_pairs"] == tx and out["ties_y_pairs"] == ty
@@ -182,7 +140,7 @@ def test_good_turing_matches_bruteforce(spark, tmp_path):
     total = sum(c.values())
     rows_out = {
         r["r"]: r
-        for r in S.STAGED_QUERIES["good_turing_unseen_mass"](spark, sf).collect()
+        for r in plans.QUERIES["good_turing_unseen_mass"](spark, sf).collect()
     }
     for r in range(1, 6):
         assert rows_out[r]["n_r"] == nr.get(r, 0)
@@ -213,7 +171,7 @@ def test_k_anonymity_bands_on_engineered_groups(spark, tmp_path):
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
     out = {
         r["risk_band"]: r
-        for r in S.STAGED_QUERIES["k_anonymity_audit"](spark, sf).collect()
+        for r in plans.QUERIES["k_anonymity_audit"](spark, sf).collect()
     }
     assert set(out) == {"k=1", "k=2-4", "k=5-9", "k>=25"}
     assert (out["k=1"]["n_groups"], out["k=1"]["n_rows"]) == (1, 1)
@@ -251,7 +209,7 @@ def test_ams_f2_exact_and_sketch_replicated(spark, tmp_path):
         for j in range(16)
     )
     med = (ests[7] + ests[8]) / 2.0
-    out = S.STAGED_QUERIES["ams_f2_user_events"](spark, sf).collect()[0]
+    out = plans.QUERIES["ams_f2_user_events"](spark, sf).collect()[0]
     assert out["n_users"] == len(counts)
     assert out["n_events"] == sum(counts.values())
     assert out["f2_exact"] == f2
@@ -285,7 +243,7 @@ def test_theil_sen_matches_bruteforce(spark, tmp_path):
     sdc = sum(d * c for d, c in zip(days, daily))
     sdd = sum(d * d for d in days)
     ols = Fraction(n * sdc - sd * sc, n * sdd - sd * sd)
-    out = S.STAGED_QUERIES["theil_sen_daily_trend"](spark, sf).collect()[0]
+    out = plans.QUERIES["theil_sen_daily_trend"](spark, sf).collect()[0]
     assert out["n_days"] == n and out["n_pairs"] == len(slopes)
     assert abs(out["theil_sen_slope"] - float(med)) < 2e-6
     assert abs(out["ols_slope"] - float(ols)) < 2e-6
@@ -302,7 +260,7 @@ def test_known_item_retrieval_is_perfect_on_unique_prefixes(spark, tmp_path):
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
     nq = sum(1 for i in range(1, 65) if _h48(str(i)) % 16 == 0)
     assert nq >= 1
-    out = S.STAGED_QUERIES["retrieval_known_item_eval"](spark, sf).collect()[0]
+    out = plans.QUERIES["retrieval_known_item_eval"](spark, sf).collect()[0]
     assert out["n_queries"] == nq
     assert out["hits_at_1"] == nq and out["hits_at_10"] == nq
     assert out["recall_at_1"] == 1.0 and out["recall_at_10"] == 1.0
@@ -329,7 +287,7 @@ def test_hubness_degrees_on_engineered_buckets(spark, tmp_path):
     pq.write_table(t, tmp_path / "embeddings.parquet")
     out = {
         r["in_degree"]: r
-        for r in S.STAGED_QUERIES["knn_hubness_audit"](spark, str(tmp_path)).collect()
+        for r in plans.QUERIES["knn_hubness_audit"](spark, str(tmp_path)).collect()
     }
     assert set(out) == {0, 3}
     assert out[3]["n_vectors"] == 4 and out[0]["n_vectors"] == 1
@@ -350,7 +308,7 @@ def test_source_vocab_jaccard_on_known_sets(spark, tmp_path):
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
     out = {
         (r["source_a"], r["source_b"]): r
-        for r in S.STAGED_QUERIES["source_vocab_jaccard"](spark, sf).collect()
+        for r in plans.QUERIES["source_vocab_jaccard"](spark, sf).collect()
     }
     assert set(out) == {("s1", "s2")}
     r = out[("s1", "s2")]
@@ -380,7 +338,7 @@ def test_overdispersion_matches_python_erfc(spark, tmp_path):
         ((d / kk) ** (1 / 3) - (1 - 2 / (9 * kk))) / math.sqrt(2 / (9 * kk)), 6
     )
     p_true = math.erfc(abs(z) / math.sqrt(2))
-    out = S.STAGED_QUERIES["event_overdispersion_test"](spark, sf).collect()[0]
+    out = plans.QUERIES["event_overdispersion_test"](spark, sf).collect()[0]
     assert out["n_hours"] == n and out["total_events"] == s1
     assert abs(out["dispersion_stat"] - d) < 1e-9
     assert abs(out["vmr"] - round((n * s2 - s1 * s1) / (s1 * kk), 6)) < 1e-9
@@ -425,7 +383,7 @@ def test_wasserstein_property_random_lengths(spark, lengths):
         cb += b.count(v)
         ks = max(ks, abs(Fraction(ca, na) - Fraction(cb, nb)))
         prev = v
-    out = S.STAGED_QUERIES["wasserstein_split_drift"](spark, sf).collect()[0]
+    out = plans.QUERIES["wasserstein_split_drift"](spark, sf).collect()[0]
     assert out["n_a"] == na and out["n_b"] == nb
     assert abs(out["w1_chars"] - float(w1)) < 5e-4
     assert abs(out["ks_d"] - float(ks)) < 2e-6
@@ -462,7 +420,7 @@ def test_kendall_property_random_grids(spark, pts):
             elif dx * dy < 0:
                 disc += 1
     n0 = n * (n - 1) // 2
-    out = S.STAGED_QUERIES["kendall_tau_chars_words"](spark, sf).collect()[0]
+    out = plans.QUERIES["kendall_tau_chars_words"](spark, sf).collect()[0]
     assert (out["concordant"], out["discordant"]) == (conc, disc)
     assert (out["ties_x_pairs"], out["ties_y_pairs"]) == (tx, ty)
     if n0 - tx <= 0 or n0 - ty <= 0:
@@ -497,7 +455,7 @@ def test_theil_sen_property_random_daily_counts(spark, daily):
         if m % 2
         else Fraction(slopes[m // 2 - 1] + slopes[m // 2], 2)
     )
-    out = S.STAGED_QUERIES["theil_sen_daily_trend"](spark, sf).collect()[0]
+    out = plans.QUERIES["theil_sen_daily_trend"](spark, sf).collect()[0]
     assert out["n_pairs"] == m
     assert abs(out["theil_sen_slope"] - float(med)) < 2e-6
 
@@ -509,7 +467,7 @@ def test_wasserstein_rank_passes_are_banded(spark, sf_small):
     """Both the two-sample-CDF rank pass and the predecessor prefix-max
     pass must be deterministic-banded: band-keyed windows, no range
     exchange, no single-partition sort of the distinct-value frame."""
-    p = _explain(S.STAGED_QUERIES["wasserstein_split_drift"](spark, sf_small))
+    p = _explain(plans.QUERIES["wasserstein_split_drift"](spark, sf_small))
     assert "rangepartitioning" not in p.lower()
     assert "_pid" in p
 
@@ -517,7 +475,7 @@ def test_wasserstein_rank_passes_are_banded(spark, sf_small):
 def test_theil_sen_median_is_banded_not_sorted(spark, sf_small):
     """The pair-frame median must ride the banded rank operator — no
     range exchange, no TakeOrderedAndProject of the O(days^2) frame."""
-    p = _explain(S.STAGED_QUERIES["theil_sen_daily_trend"](spark, sf_small))
+    p = _explain(plans.QUERIES["theil_sen_daily_trend"](spark, sf_small))
     assert "rangepartitioning" not in p.lower()
     assert "TakeOrderedAndProject" not in p
     assert "_pid" in p
@@ -528,7 +486,7 @@ def test_known_item_eval_never_sorts_the_corpus(spark, sf_small):
     candidate frame) must contain NO global sort or top-k of the scored
     frame — ranks come from per-query count aggregates — and the
     true-score join must be broadcast (one row per query)."""
-    p = _explain(S.STAGED_QUERIES["retrieval_known_item_eval"](spark, sf_small))
+    p = _explain(plans.QUERIES["retrieval_known_item_eval"](spark, sf_small))
     assert "rangepartitioning" not in p.lower()
     assert "TakeOrderedAndProject" not in p
     assert "BroadcastHashJoin" in p
@@ -537,7 +495,7 @@ def test_known_item_eval_never_sorts_the_corpus(spark, sf_small):
 def test_vocab_jaccard_joins_on_word(spark, sf_small):
     """The intersection self-join must be a word-keyed equi join (shuffle
     or broadcast hash join), never a nested-loop over source pairs."""
-    p = _explain(S.STAGED_QUERIES["source_vocab_jaccard"](spark, sf_small))
+    p = _explain(plans.QUERIES["source_vocab_jaccard"](spark, sf_small))
     assert "SortMergeJoin" in p or "BroadcastHashJoin" in p or "ShuffledHashJoin" in p
     assert "CartesianProduct" not in p
 
@@ -552,7 +510,7 @@ def test_stream_cusum_twin_equals_batch_on_same_half(spark, sf_small):
     from flink_realtime_sessionize_sample_spark.sources.registry import load_table
     from pyspark.sql import functions as F
 
-    twin = S.STAGED_QUERIES["stream_cusum_hourly_monitor"](spark, sf_small)
+    twin = plans.QUERIES["stream_cusum_hourly_monitor"](spark, sf_small)
     hc = (
         load_table(spark, sf_small, "events")
         .filter(F.col("event_id") % 2 == 1)
@@ -578,7 +536,7 @@ def test_quantile_normalize_on_engineered_sources(spark, tmp_path):
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
     out = {
         r["doc_id"]: r
-        for r in S.STAGED_QUERIES["quantile_normalize_lengths"](spark, sf).collect()
+        for r in plans.QUERIES["quantile_normalize_lengths"](spark, sf).collect()
     }
     expected = {1: 20, 2: 100, 3: 300, 4: 400, 5: 100, 6: 400}
     assert {d: r["norm_chars"] for d, r in out.items()} == expected
@@ -603,7 +561,7 @@ def test_anisotropy_on_engineered_vectors(spark, tmp_path):
     pq.write_table(t, tmp_path / "embeddings.parquet")
     out = {
         r["band"]: r
-        for r in S.STAGED_QUERIES["embedding_anisotropy_audit"](
+        for r in plans.QUERIES["embedding_anisotropy_audit"](
             spark, str(tmp_path)
         ).collect()
     }
@@ -648,7 +606,7 @@ def test_brown_forsythe_matches_python_reference(spark, tmp_path):
         6,
     )
     p_true = math.erfc(abs(zwh) / math.sqrt(2))
-    out = S.STAGED_QUERIES["brown_forsythe_length_variance"](spark, sf).collect()[0]
+    out = plans.QUERIES["brown_forsythe_length_variance"](spark, sf).collect()[0]
     assert (out["k_sources"], out["n_docs"]) == (k, n)
     assert out["num_e6"] == num_e6 and out["den_e6"] == den_e6
     assert abs(out["f_stat"] - f) < 1e-9
@@ -667,7 +625,7 @@ def test_shard_rebalance_hrw_invariant_and_python_replication(spark, tmp_path):
         return max(range(n), key=lambda s: (_h48(f"{doc_id}:{s}"), s))
 
     moved = sum(1 for i in range(1, 201) if hrw(i, 16) != hrw(i, 17))
-    out = S.STAGED_QUERIES["shard_rebalance_preview"](spark, sf).collect()
+    out = plans.QUERIES["shard_rebalance_preview"](spark, sf).collect()
     by_shard = {r["shard"]: r for r in out}
     assert all(r["n_moved"] == moved for r in out)
     for s, r in by_shard.items():
@@ -696,7 +654,7 @@ def test_join_skew_preflight_on_engineered_hot_key(spark, tmp_path):
     for u, c in counts.items():
         p = _h48(str(u)) % 32
         parts[p] = parts.get(p, 0) + c
-    out = S.STAGED_QUERIES["join_skew_preflight"](spark, sf).collect()
+    out = plans.QUERIES["join_skew_preflight"](spark, sf).collect()
     by_rnk = {r["rnk"]: r for r in out}
     assert by_rnk[1]["hot_key"] == 7 and by_rnk[1]["key_rows"] == 50
     assert abs(by_rnk[1]["key_share"] - 0.5) < 1e-9
@@ -723,7 +681,7 @@ def test_l_diversity_on_engineered_groups(spark, tmp_path):
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
     out = {
         r["l_div"]: r
-        for r in S.STAGED_QUERIES["l_diversity_audit"](spark, sf).collect()
+        for r in plans.QUERIES["l_diversity_audit"](spark, sf).collect()
     }
     assert set(out) == {1, 3}
     assert (out[1]["n_groups_at_l"], out[1]["n_docs_at_l"]) == (1, 3)
@@ -747,7 +705,7 @@ def test_linear_attribution_on_engineered_journeys(spark, tmp_path):
     sf = _write_tables(tmp_path, events=_events_pdf(rows))
     out = {
         r["touch_type"]: r
-        for r in S.STAGED_QUERIES["linear_multitouch_attribution"](
+        for r in plans.QUERIES["linear_multitouch_attribution"](
             spark, sf
         ).collect()
     }
@@ -792,7 +750,7 @@ def test_mann_whitney_matches_pair_counting(spark, tmp_path):
     aa = (n + 1) * n * (n - 1) - st
     z = round(u2num / math.sqrt(n1 * n2 * aa / (3 * n * (n - 1))), 6)
     p_true = math.erfc(abs(z) / math.sqrt(2))
-    out = S.STAGED_QUERIES["mann_whitney_en_tokens"](spark, sf).collect()[0]
+    out = plans.QUERIES["mann_whitney_en_tokens"](spark, sf).collect()[0]
     assert (out["n_en"], out["n_other"]) == (n1, n2)
     assert out["u2c_stat"] == u2num and out["tie_term"] == st
     assert abs(out["z_stat"] - z) < 1e-9
@@ -820,7 +778,7 @@ def test_welch_matches_python_reference(spark, tmp_path):
         (qq1 + qq0) ** 2 / (qq1 * qq1 / (n1 - 1) + qq0 * qq0 / (n0 - 1)), 6
     )
     p_true = math.erfc(abs(t) / math.sqrt(2))
-    out = S.STAGED_QUERIES["welch_t_chars_ab"](spark, sf).collect()[0]
+    out = plans.QUERIES["welch_t_chars_ab"](spark, sf).collect()[0]
     assert (out["n1"], out["n0"]) == (n1, n0)
     assert (out["vn1"], out["vn0"]) == (vn1, vn0)
     assert abs(out["t_stat"] - t) < 2e-6
@@ -842,7 +800,7 @@ def test_hill_matches_python_reference(spark, tmp_path):
     x_ref = ordered[32][0]
     sum_le6 = sum(round(math.log(v) * 1e6) for v in top)
     num = sum_le6 - 32 * round(math.log(x_ref) * 1e6)
-    out = S.STAGED_QUERIES["hill_tail_doc_length"](spark, sf).collect()[0]
+    out = plans.QUERIES["hill_tail_doc_length"](spark, sf).collect()[0]
     assert out["k"] == 32 and out["x_ref"] == x_ref
     assert out["sum_log_ratio_e6"] == num
     assert abs(out["hill_alpha"] - round(32 * 1e6 / num, 6)) < 1e-9
@@ -853,7 +811,7 @@ def test_hill_degenerate_small_corpus_visible(spark, tmp_path):
     x_ref/alpha), not silently zero rows (ADVICE r7). Both engines."""
     rows = [(i, "x", "en", "s", 50 + i) for i in range(1, 11)]
     sf = _write_tables(tmp_path, documents=_docs_pdf(rows))
-    out = S.STAGED_QUERIES["hill_tail_doc_length"](spark, sf).collect()
+    out = plans.QUERIES["hill_tail_doc_length"](spark, sf).collect()
     assert len(out) == 1
     r = out[0]
     assert r["k"] == 10
@@ -861,13 +819,11 @@ def test_hill_degenerate_small_corpus_visible(spark, tmp_path):
     assert r["hill_inv_alpha"] is None and r["sum_log_ratio_e6"] is None
     import duckdb
 
-    from flink_realtime_sessionize_sample_spark.plans import staging_r8 as _S
-
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
     )
-    odf = con.execute(_S.STAGED_ORACLES["hill_tail_doc_length"]).fetchdf()
+    odf = con.execute(plans.ORACLES["hill_tail_doc_length"]).fetchdf()
     assert len(odf) == 1 and odf["k"][0] == 10
     assert pd.isna(odf["x_ref"][0]) and pd.isna(odf["hill_alpha"][0])
 
@@ -890,7 +846,7 @@ def test_power_mde_matches_python_reference(spark, tmp_path):
     mean = (s0 + s1) / (n0 + n1)
     mde = round(zsum * math.sqrt(sp2 * (1 / n0 + 1 / n1)), 6)
     nreq = math.ceil(2 * sp2 * zsum * zsum / ((0.01 * mean) ** 2))
-    out = S.STAGED_QUERIES["ab_power_mde"](spark, sf).collect()[0]
+    out = plans.QUERIES["ab_power_mde"](spark, sf).collect()[0]
     assert (out["n0"], out["n1"]) == (n0, n1)
     assert abs(out["grand_mean"] - round(mean, 6)) < 1e-9
     assert abs(out["pooled_sd"] - round(math.sqrt(sp2), 6)) < 1e-9
@@ -927,7 +883,7 @@ def test_neyman_allocation_matches_python_reference(spark, tmp_path):
     alloc = {s: fl[s] + (1 if i < extra else 0) for i, s in enumerate(order)}
     out = {
         r["source"]: r
-        for r in S.STAGED_QUERIES["neyman_allocation_by_source"](spark, sf).collect()
+        for r in plans.QUERIES["neyman_allocation_by_source"](spark, sf).collect()
     }
     assert {s: r["neyman_weight_e3"] for s, r in out.items()} == wq
     assert {s: r["alloc"] for s, r in out.items()} == alloc

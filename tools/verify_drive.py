@@ -1,23 +1,31 @@
 """Driver-replica verify: run __spark_entry__ queries vs DuckDB oracles.
 
-Usage: copy to /tmp and run `python /tmp/verify_drive.py [sf_dir] [name ...]`
+Usage: `cd /tmp && python <repo>/tools/verify_drive.py [sf_dir] [name ...]`
 Defaults: sf_dir=/root/testdata/sf0.01, names = all registered oracles.
-Run from a cwd OUTSIDE the repo: module-level functions shipped to Python
-workers pickle by reference, and only a non-repo cwd catches workers that
-cannot import the package (see .claude/skills/verify/SKILL.md gotchas).
+The checkout verified is the one this script lives in. Run it from a cwd
+OUTSIDE the repo: module-level functions shipped to Python workers pickle
+by reference, and only a non-repo cwd catches workers that cannot import
+the package.
+
+The gate is the full registry under three configs, one command:
+
+    cd /tmp && for c in "" spark.sql.adaptive.enabled=false \
+        spark.sql.exchange.reuse=false; do
+      ADV_CONF="$c" python <repo>/tools/verify_drive.py || exit 1; done
 
 Comparison is EXACTLY tests/oracle_util.py's strict canonicalization
-(loaded from the repo checkout, so the two can never drift): both sides go
+(loaded from the same checkout, so the two can never drift): both sides go
 through pandas, columns sort by name, ints stay ints (dtype mismatches are
 caught), floats round at 6dp, NaN→None, rows repr-sorted.
 """
 
 import importlib.util
 import sys
+from pathlib import Path
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = str(Path(__file__).resolve().parents[1])
 sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession
@@ -48,8 +56,7 @@ def main():
         # when the round-9 adversarial sweeps ran concurrently).
         .config("spark.sql.warehouse.dir", f"/tmp/sparkwh_{os.getpid()}")
     )
-    # Adversarial-config sweeps (skill: once per round, at close): run the
-    # full registry under each hostile-but-legal config, e.g.
+    # Adversarial configs ("k=v;k=v"), e.g.
     #   ADV_CONF="spark.sql.adaptive.enabled=false" python verify_drive.py
     # The r5 generate-inlining and r6 range-partitioner bugs were both
     # default-green and wrong under a legal config.
