@@ -103,7 +103,7 @@ HEADLINE = [
     "dedup_incremental_index",
     "dedup_survivor_corpus",
     # round-6 continuation: target-distribution data selection and the
-    # declarative 5-round BPE trainer
+    # 5-round BPE trainer (one collected vocabulary, rounds in local Python)
     "dsir_importance_sampling",
     "bpe_train_merges",
     # round-6 second session: the model-adjacent evaluation family (NB

@@ -16,12 +16,15 @@ point: a LAZY ``localCheckpoint`` —
   reads the persisted blocks instead of re-running scan + tokenize +
   aggregate lineage (optimization-guide §2.4 "remove shuffles outright" /
   §5 caching: reuse > recompute when lineage dominates);
-* **lazy** (``eager=False``): no job runs at plan-build time — the blocks
-  materialize inside the first action that needs them, once, and are
-  shared by all later stages of the same (or a later) action via the
-  persisted RDD. Nothing is precomputed outside the timed query and
-  nothing survives the query's lifetime, so bench/oracle runs still
-  compute everything from the parquet inputs;
+* **lazy** (``eager=False``): the blocks are written inside the first
+  action that needs them, once, and are shared by all later stages of
+  the same (or a later) action via the persisted RDD. Lazy does NOT mean
+  jobless at plan-build time: under AQE, ``localCheckpoint`` builds the
+  frame's ``executedPlan``, and that runs every shuffle-map stage of the
+  checkpointed lineage right then (``dedup_minhash_lsh``: 4 jobs while
+  its DataFrame is built, 1 when it executes). Nothing survives the
+  query's lifetime, so bench/oracle runs still compute everything from
+  the parquet inputs;
 * **AQE-compatible**: downstream exchanges re-plan from runtime shuffle
   statistics, so join-strategy selection (broadcast vs shuffled) is
   unaffected even though an RDD leaf carries no static size estimate.
@@ -35,11 +38,6 @@ shuffle makes, paid once instead of N times. The standing caveat from
 ``connected_components``/``checkpoint_banded`` applies: localCheckpoint
 blocks do not survive executor loss; acceptable for ephemeral
 query-internal frames where recompute-on-failure restarts the query.
-
-``materialize_eager`` is the variant for ITERATIVE loops (BPE training)
-whose per-round state must not nest the previous round's plan tree —
-each round's 1-row/vocab-sized state is pinned by a micro-job, keeping
-the final plan tree constant-size instead of 2^rounds.
 """
 
 from __future__ import annotations
@@ -64,11 +62,11 @@ _LEVEL = StorageLevel.MEMORY_AND_DISK
 # plan to an RDD leaf, which would blind the registry-wide plan lint
 # (tests/test_plan_lint.py: no CartesianProduct / BatchEvalPython
 # anywhere) and the per-family plan-shape tests to everything inside the
-# checkpointed lineage. With SPARK_GRAFT_NO_MAT=1 both helpers become
-# identity, so lint/shape tests assert over the FULL logical tree — the
-# results are identical either way (materialization is semantics-neutral
-# by contract; pinned by tests/test_mat.py), only the physical reuse
-# differs.
+# checkpointed lineage. With SPARK_GRAFT_NO_MAT=1 :func:`materialize`
+# becomes identity, so lint/shape tests assert over the FULL logical
+# tree — the results are identical either way (materialization is
+# semantics-neutral by contract; pinned by tests/test_mat.py), only the
+# physical reuse differs.
 _DISABLE_ENV = "SPARK_GRAFT_NO_MAT"
 
 
@@ -95,11 +93,3 @@ def materialize_loop(df: DataFrame) -> DataFrame:
     repeat the same two operators."""
     return df.localCheckpoint(eager=False, storageLevel=_LEVEL)
 
-
-def materialize_eager(df: DataFrame) -> DataFrame:
-    """Eagerly localCheckpoint ``df`` (bounded frames in iterative loops
-    only — runs a micro-job now to pin the state and keep downstream plan
-    trees flat)."""
-    if os.environ.get(_DISABLE_ENV):
-        return df
-    return df.localCheckpoint(eager=True, storageLevel=_LEVEL)

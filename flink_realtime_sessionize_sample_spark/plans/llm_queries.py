@@ -17,10 +17,7 @@ from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
 from flink_realtime_sessionize_sample_spark.operators import dedup as D
-from flink_realtime_sessionize_sample_spark.operators.mat import (
-    materialize,
-    materialize_eager,
-)
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.operators.multimodal import (
     attach_binary_payload,
     attach_real_media,
@@ -2766,36 +2763,19 @@ def _bpe_oracle(n_merges: int, top_words: int) -> str:
     return _bpe_oracle_ctes(n_merges, top_words) + "\n" + selects
 
 
-def bpe_merge_plan(
-    docs: DataFrame,
-    n_merges: int = 5,
-    top_words: int = 200,
-    word_counts: DataFrame | None = None,
-) -> tuple[list[DataFrame], list[DataFrame]]:
-    """The BPE training loop over an arbitrary (doc_id, text) frame.
+def bpe_vocab_frame(
+    docs: DataFrame, top_words: int = 200, word_counts: DataFrame | None = None
+) -> DataFrame:
+    """The trainer's only Spark input: the top-``top_words`` corpus words
+    (count desc, word asc) as ``(cnt, sym)``, ``sym`` being the word's
+    character symbols from Spark's ``split(word, '')`` — code points, the
+    same split as the oracle's ``string_split(word, '')``.
 
-    Returns ``(merges, tops)``: per-round 1-row merge-table frames
-    (iteration, left_sym, right_sym, pair_count) and the matching raw
-    top-pair frames (a, b, c) — the trained artifact in the form the
-    ENCODER needs (``bpe_encode_frame`` broadcast-applies each top in
-    round order). Shared by ``bpe_train_merges``, ``bpe_encode_corpus``,
-    and the canonical-reference unit test.
-
-    ``word_counts`` (r16 opt): a precomputed (word, cnt) corpus frequency
-    frame — when the CALLER already pays a corpus tokenize pass (the
-    encoder's (doc, word) table), its per-word rollup replaces the
-    trainer's own corpus explode+aggregate, cutting the composed query to
-    ONE corpus pass (guide §2.3 "aggregate before you shuffle" /
-    §5 reuse>recompute). Counts are identical integer sums, so the
-    trained merges are bit-identical."""
-    # materialize(): the bounded top-`top_words` word state is the root of
-    # every training round AND both encode branches — without the
-    # checkpoint the corpus explode+aggregate re-ran once per plan leaf
-    # (the r15 audit counted 62 parquet scans in bpe_train's static plan:
-    # each round's state references the previous round TWICE — once in the
-    # pair count, once in the merge apply — so the plan tree doubled per
-    # round). Lazy: the 200-row state materializes inside round 1's
-    # micro-job.
+    ``word_counts``: a precomputed (word, cnt) corpus frequency frame.
+    When the caller already pays a corpus tokenize pass (the encoder's
+    (doc, word) table), its per-word rollup replaces the corpus
+    explode + aggregate here, so the composed query reads the corpus
+    once. The counts are the same integer sums."""
     if word_counts is None:
         word_counts = (
             docs.select(F.explode(F.expr(_TOKS_S)).alias("w"))
@@ -2803,74 +2783,82 @@ def bpe_merge_plan(
             .groupBy(F.col("w").alias("word"))
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-    vocab = materialize(
-        word_counts.orderBy(F.col("cnt").desc(), F.col("word").asc()).limit(top_words)
+    return (
+        word_counts.orderBy(F.col("cnt").desc(), F.col("word").asc())
+        .limit(top_words)
+        .select("cnt", F.expr("split(word, '')").alias("sym"))
     )
-    state = vocab.select(
-        "word",
-        "cnt",
-        F.concat(F.lit(" "), F.array_join(F.expr("split(word, '')"), " "), F.lit(" ")).alias("s"),
-    )
+
+
+def _bpe_replace(a: str, b: str) -> tuple[str, str]:
+    """The oracle's merge of pair (a, b) on a space-joined symbol string:
+    replace the first string by the second, in TWO leftmost
+    non-overlapping passes (see the comment in ``_bpe_oracle_ctes``)."""
+    return f" {a} {b} ", f" {a}{b} "
+
+
+def bpe_merge_plan(
+    docs: DataFrame,
+    n_merges: int = 5,
+    top_words: int = 200,
+    word_counts: DataFrame | None = None,
+) -> list[tuple[str, str, int]]:
+    """Train the tokenizer: the learned merges ``(a, b, pair_count)`` in
+    round order. Shared by ``bpe_train_frame``, ``bpe_encode_frame`` and
+    the reference-trainer unit tests.
+
+    One Spark action collects ``bpe_vocab_frame`` — at most ``top_words``
+    rows at any corpus size; the corpus explode, aggregate and top-k stay
+    distributed — and the rounds then run in local Python over that table,
+    one job in total instead of one per round. Each round is the oracle's
+    (``_bpe_oracle_ctes``): frequency-weighted adjacent-pair counts, the
+    top pair by (count desc, a asc, b asc) — Python's code-point order is
+    the UTF-8 byte order both engines sort strings by — then the two-pass
+    merge. A round with no adjacent pair (an empty corpus, or every word a
+    single symbol) ends training early, like the oracle's empty ``top``."""
+    states = [
+        (r["cnt"], " " + " ".join(r["sym"]) + " ")
+        for r in bpe_vocab_frame(docs, top_words, word_counts).collect()
+    ]
     merges = []
-    tops = []
-    pair_expr = (
-        "case when size(sym) >= 2 then "
-        "transform(sequence(1, size(sym) - 1), "
-        "i -> struct(element_at(sym, i) as a, element_at(sym, i + 1) as b)) "
-        "else cast(null as array<struct<a:string,b:string>>) end"
-    )
-    for i in range(1, n_merges + 1):
-        pairs = (
-            state.withColumn("sym", F.expr("split(trim(s), ' ')"))
-            .select("cnt", F.explode_outer(F.expr(pair_expr)).alias("p"))
-            .filter(F.col("p").isNotNull())
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").cast("long").alias("c"))
-        )
-        # materialize_eager(): pin each round's 1-row winner with a
-        # micro-job. Round i+1's state and the encoder both consume it, so
-        # without the pin the merge plan nests round i's whole subtree
-        # under every later round (2^rounds tree — the 62-scan plan above);
-        # with it each round is a flat vocab-sized frame ⨝ 1-row broadcast.
-        top = materialize_eager(
-            pairs.orderBy(F.col("c").desc(), F.col("a").asc(), F.col("b").asc()).limit(1)
-        )
-        tops.append(top)
-        merges.append(top.select(F.lit(i).alias("iteration"),
-                                 F.col("a").alias("left_sym"),
-                                 F.col("b").alias("right_sym"),
-                                 F.col("c").alias("pair_count")))
-        # Two passes — see the oracle comment: back-to-back occurrences
-        # share a separator space, so one leftmost scan under-merges.
-        state = state.crossJoin(F.broadcast(top)).select(
-            "word",
-            "cnt",
-            F.expr(
-                "replace(replace(s, concat(' ', a, ' ', b, ' '), concat(' ', a, b, ' ')), "
-                "concat(' ', a, ' ', b, ' '), concat(' ', a, b, ' '))"
-            ).alias("s"),
-        )
-    return merges, tops
+    for _ in range(n_merges):
+        counts: dict[tuple[str, str], int] = {}
+        for cnt, s in states:
+            sym = s.strip(" ").split(" ")
+            for pair in zip(sym, sym[1:]):
+                counts[pair] = counts.get(pair, 0) + cnt
+        if not counts:
+            break
+        (a, b), c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((a, b, c))
+        old, new = _bpe_replace(a, b)
+        states = [(cnt, s.replace(old, new).replace(old, new)) for cnt, s in states]
+    return merges
+
+
+_BPE_MERGE_TYPE = (
+    "array<struct<iteration:int,left_sym:string,right_sym:string,pair_count:bigint>>"
+)
 
 
 def bpe_train_frame(
     docs: DataFrame, n_merges: int = 5, top_words: int = 200
 ) -> DataFrame:
     """The learned merge table (iteration, left_sym, right_sym,
-    pair_count) — the trained-tokenizer artifact as one frame."""
-    merges, _ = bpe_merge_plan(docs, n_merges, top_words)
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionAll(m)
-    return out
-
-
-# The encoder's two-pass leftmost non-overlapping merge — identical
-# expression to the trainer's state update (see the oracle comment there).
-_BPE_MERGE_EXPR = (
-    "replace(replace(s, concat(' ', a, ' ', b, ' '), concat(' ', a, b, ' ')), "
-    "concat(' ', a, ' ', b, ' '), concat(' ', a, b, ' '))"
-)
+    pair_count) — the trained-tokenizer artifact as one frame, built from
+    literals (no input file; executing it runs no Python worker)."""
+    rows = [
+        F.struct(
+            F.lit(i).alias("iteration"),
+            F.lit(a).alias("left_sym"),
+            F.lit(b).alias("right_sym"),
+            F.lit(c).cast("long").alias("pair_count"),
+        )
+        for i, (a, b, c) in enumerate(bpe_merge_plan(docs, n_merges, top_words), 1)
+    ]
+    return docs.sparkSession.range(1).select(
+        F.inline(F.array(*rows).cast(_BPE_MERGE_TYPE))
+    )
 
 
 def bpe_encode_frame(
@@ -2880,46 +2868,41 @@ def bpe_encode_frame(
     learned merges, in round order, to every distinct word, then roll
     per-document token counts up from the (doc, word) occurrence table.
 
-    Scale shape: training touches only the bounded top-``top_words`` word
-    state (see ``bpe_merge_plan``); encoding applies each 1-row broadcast
-    merge to the DISTINCT-word table (vocabulary-sized, not corpus-sized
-    — the standard word-level BPE encoding trick), and the only
-    corpus-sized operations are the (doc_id, word) count aggregate and
-    the final per-doc sum — two hash aggregates, no window, no Python.
-    Output per doc: occurrence count, pre-merge character-symbol count,
-    and post-merge BPE token count — all exact integer sums."""
-    # materialize(): the (doc, word) occurrence table feeds the distinct-
-    # word encode branch AND the final per-doc rollup join — one corpus
-    # explode+aggregate instead of two (r15 opt).
+    Scale shape: training collects only the bounded top-``top_words``
+    vocabulary (see ``bpe_merge_plan``); encoding applies the merges as a
+    chain of literal two-pass ``replace`` calls to the DISTINCT-word table
+    (vocabulary-sized, not corpus-sized — the standard word-level BPE
+    encoding trick), and the only corpus-sized operations are the
+    (doc_id, word) count aggregate and the final per-doc sum — two hash
+    aggregates, no window, no Python. Output per doc: occurrence count,
+    pre-merge character-symbol count, and post-merge BPE token count — all
+    exact integer sums."""
+    # materialize(): the (doc, word) occurrence table feeds the trainer's
+    # word counts, the distinct-word encode branch AND the final per-doc
+    # rollup join — all three share one corpus explode+aggregate.
     dw = materialize(
         docs.select("doc_id", F.explode(F.expr(_TOKS_S)).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("doc_id", F.col("w").alias("word"))
         .agg(F.count(F.lit(1)).alias("n_occ"))
     )
-    # r16 opt: the trainer's corpus word-frequency table rolls up from the
-    # pinned (doc, word) frame (sum of per-doc counts ≡ the direct corpus
-    # count, exact integers) instead of re-running a second corpus-sized
-    # explode+aggregate — the whole train+encode query now reads the
-    # corpus ONCE (guide §2.3/§5). Interleaved A/B at sf0.1 (ab_log_r16.md
-    # §2): neutral-to-positive (mins 2.51 vs 2.75, then 2.28 vs 2.28) —
-    # the sf0.1 wall is dominated by the 5 sequential per-round training
-    # micro-jobs, but at the 100 TB design point the corpus pass IS the
-    # cost, and this halves it.
+    # The trainer's corpus word-frequency table rolls up from the (doc,
+    # word) frame (sum of per-doc counts = the direct corpus count, exact
+    # integers) instead of a second corpus-sized explode+aggregate.
     wc = dw.groupBy("word").agg(F.sum("n_occ").cast("long").alias("cnt"))
-    _, tops = bpe_merge_plan(docs, n_merges, top_words, word_counts=wc)
-    words = dw.select("word").distinct().select(
-        "word",
-        F.concat(
-            F.lit(" "), F.array_join(F.expr("split(word, '')"), " "), F.lit(" ")
-        ).alias("s"),
-    )
-    for top in tops:
-        words = words.crossJoin(F.broadcast(top)).select(
-            "word", F.expr(_BPE_MERGE_EXPR).alias("s")
-        )
+    merges = bpe_merge_plan(docs, n_merges, top_words, word_counts=wc)
+    s = F.concat(F.lit(" "), F.array_join(F.expr("split(word, '')"), " "), F.lit(" "))
+    for a, b, _ in merges:
+        old, new = (F.lit(x) for x in _bpe_replace(a, b))
+        s = F.replace(F.replace(s, old, new), old, new)
+    words = dw.select("word").distinct()
+    if len(merges) < n_merges:
+        # A round with no pair to merge empties the oracle's word state
+        # (its CROSS JOIN against an empty top-pair row), so a tokenizer
+        # that stopped short of n_merges encodes no document.
+        words = words.limit(0)
     wtok = words.select(
-        "word", F.size(F.expr("split(trim(s), ' ')")).cast("long").alias("n_sym")
+        "word", F.size(F.split(F.trim(s), " ")).cast("long").alias("n_sym")
     )
     return (
         dw.join(wtok, "word")
@@ -2978,7 +2961,8 @@ GROUP BY dw.doc_id
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer APPLY — the other half of the BPE story: encode every
     document with the 5-round tokenizer trained by ``bpe_train_merges``
-    (train-then-apply in one lineage, no driver collect). Per document:
+    (train on one collected top-200 vocabulary, then apply the merges as
+    literals to the distinct words). Per document:
     word occurrences, pre-merge character-symbol count, post-merge BPE
     token count — i.e. the compression the learned merges actually buy,
     the number a token-budgeted 100 TB pipeline bills by. See
@@ -2993,17 +2977,18 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     words (frequency-weighted, character-initialized). Each round picks
     the globally top adjacent symbol pair (count desc, pair asc) and
     merges it everywhere — leftmost non-overlapping in symbol space, via
-    the two-pass string replace (equals the canonical array-walk merge;
-    unit-tested against a Python reference trainer on adversarial runs).
+    the oracle's two-pass string replace. That equals the canonical
+    array-walk merge except inside runs of five or more equal symbols
+    (unit-tested against a Python reference trainer on adversarial runs,
+    and against the oracle on those runs).
 
-    Fully DECLARATIVE unrolled loop — no driver collect anywhere: the
-    1-row top-pair frame broadcast-cross-joins back onto the word states,
-    so each round is (pair explode → 2-column hash agg → 1-row top-k →
-    broadcast map). At 100 TB the vocabulary aggregate is the only
-    corpus-sized shuffle (it runs once); the training loop itself touches
-    the bounded word-state table. Output: the learned merge table
-    (iteration, left_sym, right_sym, pair_count) — the trained tokenizer
-    artifact."""
+    One Spark action: the corpus explode + word aggregate + top-200 run
+    distributed and the ≤200-row vocabulary is collected; the rounds then
+    run in local Python over that bounded table (see ``bpe_merge_plan``).
+    At 100 TB the vocabulary aggregate is the only corpus-sized shuffle
+    and it runs once. Output: the learned merge table (iteration,
+    left_sym, right_sym, pair_count) — the trained tokenizer artifact, as
+    a literal frame."""
     return bpe_train_frame(load_table(spark, sf_dir, "documents"), 5, 200)
 
 

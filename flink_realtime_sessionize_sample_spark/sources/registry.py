@@ -9,8 +9,12 @@ against the parquet scans for free.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -24,6 +28,48 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+# The parquet-inference confs a session can change; their values are part
+# of the schema-cache key.
+_INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+# absolute path -> (file version + inference confs, inferred schema); one
+# entry per path, so the cache is bounded by the number of table files.
+# Process-wide on purpose: the key holds everything inference depends on,
+# so every session and caller may share an entry.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring each file's schema once.
+
+    Schema inference runs a Spark job even for one local file (it reads
+    the footer inside a parallelized task). A later load of the same
+    unchanged regular local file, under the same inference confs, passes
+    the stored schema to ``spark.read.schema`` instead, which runs no job.
+    The key is the file's size, mtime and inode plus ``_INFER_CONFS``; a
+    path that is not a regular local file (a directory, a URI) infers on
+    every load."""
+    full = os.path.abspath(path)
+    try:
+        st = os.stat(full)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (st.st_size, st.st_mtime_ns, st.st_ino) + tuple(
+        spark.conf.get(k) for k in _INFER_CONFS
+    )
+    hit = _SCHEMAS.get(full)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[full] = (key, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -45,7 +91,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # read as LTZ are then value-identical to DuckDB's naive interpretation
     # in every tz-dependent expression (date_trunc, casts, formatting).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "timestamp_ntz":
         # Defensive: schema captured before the conf took effect.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))

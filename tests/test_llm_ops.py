@@ -5,6 +5,8 @@ contract. SURVEY.md §5 strategy, phase-3 scope."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -672,6 +674,106 @@ def test_bpe_encode_matches_canonical_apply(spark):
         assert r["n_word_occurrences"] == 1
         assert r["n_char_syms"] == len(w)
         assert r["n_bpe_tokens"] == expected[w], w
+
+
+@pytest.mark.parametrize("text", ["", "a b c"])
+def test_bpe_zero_merges_give_typed_empty_frames(spark, text):
+    """No adjacent pair to merge (an empty corpus, or only one-character
+    words): both frames are empty and keep their schemas."""
+    from flink_realtime_sessionize_sample_spark.plans.llm_queries import (
+        bpe_encode_frame,
+        bpe_train_frame,
+    )
+
+    docs = _docs(spark, [(1, text)])
+    train = bpe_train_frame(docs, n_merges=5, top_words=200)
+    encode = bpe_encode_frame(docs, n_merges=5, top_words=200)
+    assert train.collect() == [] and encode.collect() == []
+    assert train.schema.simpleString() == (
+        "struct<iteration:int,left_sym:string,right_sym:string,pair_count:bigint>"
+    )
+    assert encode.schema.simpleString() == (
+        "struct<doc_id:bigint,n_word_occurrences:bigint,n_char_syms:bigint,"
+        "n_bpe_tokens:bigint>"
+    )
+
+
+# Crafted corpus for the BPE oracle edge cases. Round 3 is an equal-count
+# tie that code-point order breaks to U+FF5E before U+1D11E (an astral
+# character); UTF-16 order would pick U+1D11E. "e\u0301" carries a
+# combining accent (its own code point, so its own symbol; round 5),
+# "caf\u00e9" the precomposed one. The runs of 'a' are where the two-pass
+# merge and an array walk differ: round 2 is (aa, a), not (aa, aa).
+_BPE_EDGE_TEXTS = [
+    " ".join(["\uff5ea \U0001d11ea"] * 4),
+    "e\u0301 e\u0301 e\u0301 caf\u00e9",
+    "aaaaaa aaaaa aaaaaa",
+    "x\U0001d11ey x\U0001d11ey zz zz",
+]
+
+
+def test_bpe_oracle_parity_on_edge_cases(spark, sf_small, tmp_path):
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_realtime_sessionize_sample_spark.plans.llm_queries import bpe_merge_plan
+    from tests.oracle_util import TABLES, compare_query
+
+    words = sorted({w for t in _BPE_EDGE_TEXTS for w in t.split(" ")})
+    syms = sorted({c for w in words for c in w})
+    con = duckdb.connect()
+    # Spark split(w, ''), DuckDB string_split(w, '') and list(w) give the
+    # same code points, and the three engines order strings the same way.
+    spark_split = {
+        r["w"]: list(r["s"])
+        for r in spark.createDataFrame([(w,) for w in words], "w string")
+        .select("w", F.expr("split(w, '')").alias("s"))
+        .collect()
+    }
+    duck_split = dict(
+        con.execute(
+            "SELECT w, string_split(w, '') FROM (SELECT unnest(?::VARCHAR[]) AS w)",
+            [words],
+        ).fetchall()
+    )
+    assert spark_split == duck_split == {w: list(w) for w in words}
+    spark_order = [
+        r["s"] for r in spark.createDataFrame([(s,) for s in syms], "s string")
+        .orderBy("s").collect()
+    ]
+    duck_order = [
+        r[0] for r in con.execute(
+            "SELECT s FROM (SELECT unnest(?::VARCHAR[]) AS s) ORDER BY s", [syms]
+        ).fetchall()
+    ]
+    assert spark_order == duck_order == syms
+
+    # the registered queries and their oracles on a crafted documents table
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(os.path.join(sf_small, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    n = len(_BPE_EDGE_TEXTS)
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(n), pa.int64()),
+            "text": _BPE_EDGE_TEXTS,
+            "lang": ["en"] * n,
+            "source": ["web"] * n,
+            "n_chars": pa.array([len(t) for t in _BPE_EDGE_TEXTS], pa.int64()),
+        }),
+        tmp_path / "documents.parquet",
+    )
+    docs = _docs(spark, list(enumerate(_BPE_EDGE_TEXTS)))
+    assert bpe_merge_plan(docs, 5, 200) == [
+        ("a", "a", 14),
+        ("aa", "a", 5),
+        ("\uff5e", "a", 4),
+        ("\U0001d11e", "a", 4),
+        ("e", "\u0301", 3),
+    ]
+    for name in ("bpe_train_merges", "bpe_encode_corpus"):
+        compare_query(spark, name, str(tmp_path))
 
 
 def test_geometric_median_resists_outlier(spark):

@@ -343,8 +343,15 @@ _GENERATE_HEAVY = [
     "substring_dedup_spans",
     "substring_dedup_coverage",
     "cdc_chunk_dedup",
-    "bpe_train_merges",
 ]
+
+
+def _assert_no_inlined_generate_filter(name: str, p: str) -> None:
+    for line in p.splitlines():
+        if "Filter" in line:
+            assert "array_distinct" not in line and "transform(sequence" not in line, (
+                f"{name}: inlined array expression in a Filter:\n{line.strip()[:200]}"
+            )
 
 
 @pytest.mark.parametrize("name", _GENERATE_HEAVY)
@@ -356,12 +363,20 @@ def test_no_inlined_generate_filter(spark, sf_oracle, name):
     per-element `element_at(split(...))` (measured 505 s vs ~1 s on the
     novelty 10x smoke). The fix pattern is CASE-gated `explode_outer` + a
     post-Generate null filter; this test pins it."""
-    p = _plan(spark, sf_oracle, name)
-    for line in p.splitlines():
-        if "Filter" in line:
-            assert "array_distinct" not in line and "transform(sequence" not in line, (
-                f"{name}: inlined array expression in a Filter:\n{line.strip()[:200]}"
-            )
+    _assert_no_inlined_generate_filter(name, _plan(spark, sf_oracle, name))
+
+
+def test_bpe_vocab_no_inlined_generate_filter(spark, sf_oracle):
+    """bpe_train_merges' own plan is a literal merge table; its corpus
+    explode lives in the vocabulary frame it collects, so the guard
+    checks that frame's plan."""
+    from flink_realtime_sessionize_sample_spark.plans.llm_queries import bpe_vocab_frame
+    from flink_realtime_sessionize_sample_spark.sources.registry import load_table
+
+    vocab = bpe_vocab_frame(load_table(spark, sf_oracle, "documents"))
+    p = vocab._jdf.queryExecution().executedPlan().toString()
+    assert "Generate explode" in p
+    _assert_no_inlined_generate_filter("bpe_train_merges", p)
 
 
 # --- round-6 second session: evaluation / vector-op scale contracts -------
