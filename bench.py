@@ -437,6 +437,10 @@ def main() -> None:
     import tempfile
 
     from flink_realtime_sessionize_sample_spark.streaming import sessionize_stream_bucketed
+    from flink_realtime_sessionize_sample_spark.streaming.replay import (
+        run_available_now,
+        scratch_dir,
+    )
 
     # The 1 M-event replay source is identical for every measured run —
     # write it ONCE and give each run only a fresh checkpoint dir (the
@@ -453,8 +457,7 @@ def main() -> None:
     def measure_stream(
         builder, source_df=None, prewatermark=True
     ) -> tuple[int, int | None, int]:
-        tmp = tempfile.mkdtemp(prefix="bench_stream_")
-        try:
+        with scratch_dir("bench_stream_") as tmp:
             if source_df is not None:
                 src = f"{tmp}/src"
                 source_df.select("user_id", "ts", "event_id").repartition(
@@ -470,15 +473,13 @@ def main() -> None:
             if prewatermark:
                 stream = stream.withWatermark("ts", "60 seconds")
             t0 = time.perf_counter()
-            q = (
+            q = run_available_now(
                 builder(stream)
                 .writeStream.format("noop")
                 .option("checkpointLocation", f"{tmp}/ckpt")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+                .outputMode("append"),
+                "bench streaming replay",
             )
-            assert q.awaitTermination(600), "streaming replay must terminate"
             wall = time.perf_counter() - t0
             progress = [_json.loads(p.json) for p in q.recentProgress]
             data_batches = [p for p in progress if p["numInputRows"] > 0]
@@ -489,8 +490,6 @@ def main() -> None:
                 round(rows_done / proc_sec) if proc_sec else None,
                 len(data_batches),
             )
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     # Warm the stateful-streaming machinery first (state-store providers,
     # Python worker pool, streaming codegen): the FIRST applyInPandasWithState

@@ -1348,32 +1348,23 @@ def dedup_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     just a row count.
     """
     import shutil as _shutil
-    import tempfile as _tempfile
-    import uuid as _uuid
 
     from flink_realtime_sessionize_sample_spark.streaming import (
         build_events_file_stream,
     )
     from flink_realtime_sessionize_sample_spark.streaming.pipeline import dedup_stream
-
-    src = _tempfile.mkdtemp(prefix="dedup_stream_src_")
-    _shutil.copy(f"{sf_dir}/events.parquet", f"{src}/replay_a.parquet")
-    _shutil.copy(f"{sf_dir}/events.parquet", f"{src}/replay_b.parquet")
-    stream = build_events_file_stream(spark, src, max_files_per_trigger=1)
-    dd = dedup_stream(stream.select("event_id", "ts"), ["event_id"], "ts")
-    qn = f"dedup_stream_{_uuid.uuid4().hex[:8]}"
-    q = (
-        dd.writeStream.format("memory")
-        .queryName(qn)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    from flink_realtime_sessionize_sample_spark.streaming.replay import (
+        drain_to_memory,
+        scratch_dir,
     )
-    finished = q.awaitTermination(600)
-    if not finished:  # pragma: no cover — a hang must not pass as success
-        q.stop()
-        raise RuntimeError("dedup_stream_events: replay did not terminate")
-    return spark.table(qn).agg(
+
+    with scratch_dir("dedup_stream_src_") as src:
+        _shutil.copy(f"{sf_dir}/events.parquet", f"{src}/replay_a.parquet")
+        _shutil.copy(f"{sf_dir}/events.parquet", f"{src}/replay_b.parquet")
+        stream = build_events_file_stream(spark, src, max_files_per_trigger=1)
+        dd = dedup_stream(stream.select("event_id", "ts"), ["event_id"], "ts")
+        survivors = drain_to_memory(dd, "dedup_stream_events")
+    return survivors.agg(
         F.count(F.lit(1)).alias("n_unique"),
         F.expr(f"bit_xor({h48_spark('cast(event_id as string)')})").cast("long").alias("xor_fp"),
     )
@@ -1414,29 +1405,25 @@ def heavy_hitters_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the captured state is O(num_buckets × capacity) rows — bounded sketch
     state, not data-proportional.
     """
+    import os as _os
     import shutil as _shutil
-    import tempfile as _tempfile
 
     import pandas as _pd
 
     from flink_realtime_sessionize_sample_spark.streaming import (
         build_events_file_stream,
     )
+    from flink_realtime_sessionize_sample_spark.streaming.replay import (
+        run_available_now,
+        scratch_dir,
+    )
     from flink_realtime_sessionize_sample_spark.streaming.sketch_stream import (
         heavy_hitters_stream,
     )
 
-    src = _tempfile.mkdtemp(prefix="hh_stream_src_")
-    ckpt = _tempfile.mkdtemp(prefix="hh_stream_ckpt_")
-    _shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    stream = build_events_file_stream(spark, src)
     make_item = F.when(
         F.col("event_id") % 3 == 0, F.concat(F.lit("hot|"), F.col("event_type"))
     ).otherwise(F.concat(F.lit("tail|"), F.col("event_id").cast("string")))
-    out = heavy_hitters_stream(
-        stream.select(make_item.alias("item")), "item", capacity=16, num_buckets=8
-    )
-
     captured: dict[int, _pd.DataFrame] = {}
 
     def _sink(batch_df, _batch_id) -> None:
@@ -1444,17 +1431,19 @@ def heavy_hitters_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in pdf["bucket"].unique():
             captured[int(b)] = pdf[pdf["bucket"] == b].reset_index(drop=True)
 
-    q = (
-        out.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(600)
-    if not finished:  # pragma: no cover — a hang must not pass as success
-        q.stop()
-        raise RuntimeError("heavy_hitters_stream_events: replay did not terminate")
+    with scratch_dir("hh_stream_") as base:
+        _os.mkdir(f"{base}/src")
+        _shutil.copy(f"{sf_dir}/events.parquet", f"{base}/src/events.parquet")
+        stream = build_events_file_stream(spark, f"{base}/src")
+        out = heavy_hitters_stream(
+            stream.select(make_item.alias("item")), "item", capacity=16, num_buckets=8
+        )
+        run_available_now(
+            out.writeStream.foreachBatch(_sink)
+            .outputMode("update")
+            .option("checkpointLocation", f"{base}/ckpt"),
+            "heavy_hitters_stream_events",
+        )
     snap = (
         _pd.concat(captured.values(), ignore_index=True)
         if captured

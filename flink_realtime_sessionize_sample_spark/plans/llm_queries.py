@@ -2505,13 +2505,13 @@ def stream_incremental_index_dedup(spark: SparkSession, sf_dir: str) -> DataFram
     the SAME full-corpus SQL as ``dedup_incremental_index`` — streaming
     probe ≡ batch probe ≡ full-corpus dedup restricted to the increment,
     all value-hash checked."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from flink_realtime_sessionize_sample_spark.operators.incremental import (
         build_dedup_index,
         incremental_probe_streams,
+    )
+    from flink_realtime_sessionize_sample_spark.streaming.replay import (
+        drain_to_memory,
+        scratch_dir,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2519,8 +2519,7 @@ def stream_incremental_index_dedup(spark: SparkSession, sf_dir: str) -> DataFram
     increment = docs.filter(F.col("doc_id") % 10 >= 8).select("doc_id", "text")
     build_dedup_index(corpus, "s_idx_exact", "s_idx_bands")
 
-    src = _tempfile.mkdtemp(prefix="inc_stream_src_")
-    try:
+    with scratch_dir("inc_stream_src_") as src:
         # Two parquet files → two micro-batches (deterministic split).
         increment.filter(F.col("doc_id") % 20 < 18).write.parquet(f"{src}/a")
         increment.filter(F.col("doc_id") % 20 >= 18).write.parquet(f"{src}/b")
@@ -2533,25 +2532,10 @@ def stream_incremental_index_dedup(spark: SparkSession, sf_dir: str) -> DataFram
         exact_s, near_s = incremental_probe_streams(
             spark, stream, "s_idx_exact", "s_idx_bands"
         )
-        qe = f"inc_exact_{_uuid.uuid4().hex[:8]}"
-        qn = f"inc_near_{_uuid.uuid4().hex[:8]}"
-        h1 = (
-            exact_s.writeStream.format("memory").queryName(qe)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        h2 = (
-            near_s.writeStream.format("memory").queryName(qn)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        if not (h1.awaitTermination(600) and h2.awaitTermination(600)):
-            h1.stop()
-            h2.stop()
-            raise RuntimeError("stream_incremental_index_dedup: replay hung")
-    finally:
-        _shutil.rmtree(src, ignore_errors=True)
+        exact_m = drain_to_memory(exact_s, "stream_incremental_index_dedup_exact")
+        near_rows = drain_to_memory(near_s, "stream_incremental_index_dedup_near")
 
-    exact_m = spark.table(qe)
-    near_m = spark.table(qn).groupBy("doc_id").agg(
+    near_m = near_rows.groupBy("doc_id").agg(
         F.min("_near_doc").alias("_near_doc")
     )
     verdict = (
@@ -3062,22 +3046,23 @@ def stream_index_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     replays the same three-round simulation in pure SQL — the value-hash
     row proves grow-as-you-ingest ≡ the sequential batch semantics."""
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
     import time as _time
 
     from flink_realtime_sessionize_sample_spark.operators.incremental import (
         build_plain_index,
         stream_index_update_writer,
     )
+    from flink_realtime_sessionize_sample_spark.streaming.replay import (
+        run_available_now,
+        scratch_dir,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 < 8)
     build_plain_index(corpus, "ui_idx_exact", "ui_idx_bands")
 
-    src = _tempfile.mkdtemp(prefix="idx_update_src_")
-    ckpt = _tempfile.mkdtemp(prefix="idx_update_ckpt_")
-    try:
+    with scratch_dir("idx_update_") as base:
+        src = f"{base}/src"
         # One part-file per batch; explicit mtimes pin the processing
         # order (FileStreamSource drains oldest-first).
         inc = docs.select("doc_id", "text").filter(F.col("doc_id") % 10 >= 8)
@@ -3094,18 +3079,11 @@ def stream_index_update_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        h = (
+        run_available_now(
             stream_index_update_writer(spark, stream, "ui_idx_exact", "ui_idx_bands")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", f"{base}/ckpt"),
+            "stream_index_update_roundtrip",
         )
-        if not h.awaitTermination(600):
-            h.stop()
-            raise RuntimeError("stream_index_update_roundtrip: ingest hung")
-    finally:
-        _shutil.rmtree(src, ignore_errors=True)
-        _shutil.rmtree(ckpt, ignore_errors=True)
 
     ex = spark.table("ui_idx_exact").select(
         F.lit("exact").alias("kind"),
@@ -3976,7 +3954,6 @@ def stream_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id long, text string",
         _filter_batch,
         "gopher_stream_keep",
-        src_prefix="gopher_stream_src_",
     )
     return out.select("doc_id", "n_failed", "keep")
 

@@ -584,7 +584,6 @@ def stream_naive_bayes_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, lang string, text string",
             _score_batch,
             "nb_stream_scores",
-            src_prefix="nb_stream_src_",
         )
         return out.select(
             "doc_id",

@@ -860,7 +860,6 @@ def sprt_purchase_rate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sprt_batch,
         "sprt_monitor_partials",
         split_col="event_id",
-        src_prefix="sprt_monitor_src_",
     )
     w = Window.orderBy("look").rowsBetween(Window.unboundedPreceding, 0)
     c = partials.select(

@@ -213,32 +213,23 @@ def _bucketed_replay(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Replay ``events`` as a bounded file stream through
     ``sessionize_stream_bucketed`` (availableNow) into a memory sink."""
     import shutil
-    import tempfile
-    import uuid
 
     from flink_realtime_sessionize_sample_spark.streaming import (
         build_events_file_stream,
         sessionize_stream_bucketed,
     )
+    from flink_realtime_sessionize_sample_spark.streaming.replay import (
+        drain_to_memory,
+        scratch_dir,
+    )
 
-    qn = f"{name}_{uuid.uuid4().hex[:8]}"
-    src = tempfile.mkdtemp(prefix=f"{name}_src_")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    stream = build_events_file_stream(spark, src)
-    out = sessionize_stream_bucketed(stream.withWatermark("ts", "60 seconds")).select(
-        "event_id", "user_id", "session_id", "duration"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qn)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(600)
-    if not finished:  # pragma: no cover — defensive: never leak a query
-        q.stop()
-    return spark.table(qn)
+    with scratch_dir(f"{name}_src_") as src:
+        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
+        stream = build_events_file_stream(spark, src)
+        out = sessionize_stream_bucketed(stream.withWatermark("ts", "60 seconds")).select(
+            "event_id", "user_id", "session_id", "duration"
+        )
+        return drain_to_memory(out, name)
 
 
 # --- parse path (P1/P2): render events into the reference's 15-field wire
@@ -443,67 +434,61 @@ def session_window_stream_durations_q(spark: SparkSession, sf_dir: str) -> DataF
     pattern for watermark-gated emission; in production the stream is
     unbounded and no sentinels exist.
     """
+    import glob as _glob
+    import os as _os
     import shutil
-    import tempfile
-    import uuid
+    import time as _time
 
     from flink_realtime_sessionize_sample_spark.streaming import (
         build_events_file_stream,
     )
+    from flink_realtime_sessionize_sample_spark.streaming.replay import (
+        drain_to_memory,
+        scratch_dir,
+    )
 
-    import glob as _glob
-    import os as _os
-    import time as _time
-
-    qn = f"swin_stream_{uuid.uuid4().hex[:8]}"
-    src = tempfile.mkdtemp(prefix="swin_stream_src_")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/0_events.parquet")
-    # The file source orders by modification time at MILLISECOND granularity;
-    # pin explicit strictly-increasing mtimes so the events→sentinel-1→
-    # sentinel-2 batch order can never collapse on a fast filesystem.
-    base_mtime = _time.time() - 60
-    _os.utime(f"{src}/0_events.parquet", (base_mtime, base_mtime))
-    ev_schema = spark.read.parquet(f"{src}/0_events.parquet")
     sentinel_user = -1
-    for i, days in ((1, 370), (2, 740)):
-        # The file source lists plain files, not nested Spark output dirs —
-        # write each sentinel aside and move its single part-file in.
-        aside = f"{src}_w{i}"
-        ev_schema.limit(1).select(
-            F.lit(10_000_000_000 + i).alias("event_id"),
-            (F.lit("2025-01-01").cast("timestamp") + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
-            F.lit(sentinel_user).cast("long").alias("user_id"),
-            F.lit("sentinel").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
-        ).coalesce(1).write.parquet(aside)
-        dest = f"{src}/{i}_sentinel.parquet"
-        shutil.move(_glob.glob(f"{aside}/part-*.parquet")[0], dest)
-        _os.utime(dest, (base_mtime + 10 * i, base_mtime + 10 * i))
-        shutil.rmtree(aside, ignore_errors=True)
-    stream = build_events_file_stream(spark, src, max_files_per_trigger=1)
-    out = (
-        stream.withWatermark("ts", "60 seconds")
-        .groupBy("user_id", F.session_window(F.col("ts"), "30 minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros("session_window.start").alias("window_start_us"),
-            F.unix_micros("session_window.end").alias("window_end_us"),
-            "n_events",
+    with scratch_dir("swin_stream_") as base:
+        src = f"{base}/src"
+        _os.mkdir(src)
+        shutil.copy(f"{sf_dir}/events.parquet", f"{src}/0_events.parquet")
+        # The file source orders by modification time at MILLISECOND
+        # granularity; pin explicit strictly-increasing mtimes so the
+        # events→sentinel-1→sentinel-2 batch order can never collapse on a
+        # fast filesystem.
+        base_mtime = _time.time() - 60
+        _os.utime(f"{src}/0_events.parquet", (base_mtime, base_mtime))
+        ev_schema = spark.read.parquet(f"{src}/0_events.parquet")
+        for i, days in ((1, 370), (2, 740)):
+            # The file source lists plain files, not nested Spark output
+            # dirs — write each sentinel aside and move its single
+            # part-file in.
+            aside = f"{base}/w{i}"
+            ev_schema.limit(1).select(
+                F.lit(10_000_000_000 + i).alias("event_id"),
+                (F.lit("2025-01-01").cast("timestamp") + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
+                F.lit(sentinel_user).cast("long").alias("user_id"),
+                F.lit("sentinel").alias("event_type"),
+                F.lit(0.0).alias("value"),
+                F.lit("{}").alias("props"),
+            ).coalesce(1).write.parquet(aside)
+            dest = f"{src}/{i}_sentinel.parquet"
+            shutil.move(_glob.glob(f"{aside}/part-*.parquet")[0], dest)
+            _os.utime(dest, (base_mtime + 10 * i, base_mtime + 10 * i))
+        stream = build_events_file_stream(spark, src, max_files_per_trigger=1)
+        out = (
+            stream.withWatermark("ts", "60 seconds")
+            .groupBy("user_id", F.session_window(F.col("ts"), "30 minutes"))
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                "user_id",
+                F.unix_micros("session_window.start").alias("window_start_us"),
+                F.unix_micros("session_window.end").alias("window_end_us"),
+                "n_events",
+            )
         )
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qn)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(600)
-    if not finished:  # pragma: no cover — defensive: never leak a query
-        q.stop()
-    return spark.table(qn).filter(F.col("user_id") != sentinel_user)
+        rows = drain_to_memory(out, "session_window_stream_durations")
+    return rows.filter(F.col("user_id") != sentinel_user)
 
 
 @query(
@@ -668,6 +653,8 @@ def pipeline_json_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch recursive-CTE sessionizer: stream bytes ≡ batch semantics, the
     reference's batch/realtime consistency goal (``README.md:31``).
     """
+    import atexit
+    import os
     import shutil
     import tempfile
     import uuid
@@ -678,24 +665,28 @@ def pipeline_json_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_realtime_sessionize_sample_spark.streaming.pipeline import (
         run_sessionize_pipeline,
     )
-
-    src = tempfile.mkdtemp(prefix="pipe_rt_src_")
-    base = tempfile.mkdtemp(prefix="pipe_rt_")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
-    stream = build_events_file_stream(spark, src)
-    q = run_sessionize_pipeline(
-        spark,
-        stream,
-        checkpoint_dir=f"{base}/ckpt",
-        out_path=f"{base}/out",
-        trigger_available_now=True,
-        queryName=f"pipe_rt_{uuid.uuid4().hex[:8]}",
+    from flink_realtime_sessionize_sample_spark.streaming.replay import (
+        await_stream,
+        scratch_dir,
     )
-    finished = q.awaitTermination(600)
-    if not finished:  # pragma: no cover — a hang must not pass as success
-        q.stop()
-        raise RuntimeError("pipeline_json_sink_roundtrip: replay did not terminate")
-    decoded = spark.read.json(f"{base}/out")
+
+    # The returned DataFrame reads the sink's JSON lazily: its dir lives
+    # until the process exits.
+    out_dir = tempfile.mkdtemp(prefix="pipe_rt_out_")
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    with scratch_dir("pipe_rt_") as base:
+        os.mkdir(f"{base}/src")
+        shutil.copy(f"{sf_dir}/events.parquet", f"{base}/src/events.parquet")
+        q = run_sessionize_pipeline(
+            spark,
+            build_events_file_stream(spark, f"{base}/src"),
+            checkpoint_dir=f"{base}/ckpt",
+            out_path=out_dir,
+            trigger_available_now=True,
+            queryName=f"pipe_rt_{uuid.uuid4().hex[:8]}",
+        )
+        await_stream(q, "pipeline_json_sink_roundtrip")
+    decoded = spark.read.json(out_dir)
     return (
         decoded.groupBy("user_id", "session_id")
         .agg(F.max("duration").alias("session_duration"))

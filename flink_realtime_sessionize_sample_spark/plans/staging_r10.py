@@ -2804,7 +2804,6 @@ def stream_page_hinkley_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         _daily_batch,
         "ph_daily_partials",
         split_col="event_id",
-        src_prefix="ph_monitor_src_",
     )
     merged = partials.groupBy("day").agg(
         F.sum("n").cast("long").alias("n"),

@@ -900,7 +900,6 @@ def stream_e_value_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         _daily_batch,
         "ev_daily_partials",
         split_col="event_id",
-        src_prefix="ev_monitor_src_",
     )
     merged = partials.groupBy("day").agg(
         F.sum("n").cast("long").alias("n"),
@@ -1788,7 +1787,6 @@ def stream_dist_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         _hist_batch,
         "dist_drift_partials",
         split_col="event_id",
-        src_prefix="dist_drift_src_",
     )
     merged = partials.groupBy("day", "value").agg(
         F.sum("n").cast("long").alias("n")

@@ -1396,7 +1396,6 @@ def stream_delta_ratio_guardrail(spark: SparkSession, sf_dir: str) -> DataFrame:
         _user_batch,
         "delta_user_partials",
         split_col="event_id",
-        src_prefix="delta_guard_src_",
     )
     merged = partials.groupBy("user_id").agg(
         F.sum("y").cast("long").alias("y"),
@@ -3476,7 +3475,6 @@ def stream_dersimonian_laird_monitor(
         _cell_batch,
         "dl_cell_partials",
         split_col="event_id",
-        src_prefix="dl_monitor_src_",
     )
     merged = partials.groupBy("day", "g").agg(
         F.sum("n").cast("long").alias("n"),

@@ -2282,7 +2282,6 @@ def stream_tost_guardrail(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cell_batch,
         "tost_arm_partials",
         split_col="event_id",
-        src_prefix="tost_guard_src_",
     )
     m = partials.agg(
         F.sum(F.when(F.col("arm") == 0, F.col("dn")).otherwise(0))

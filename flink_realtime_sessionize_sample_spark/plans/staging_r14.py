@@ -1437,7 +1437,6 @@ def stream_storey_qvalue_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cell_batch,
         "storey_seg_partials",
         split_col="user_id",
-        src_prefix="storey_mon_src_",
     )
     per = partials.groupBy("segment").agg(
         F.sum("dn0").cast("long").alias("n0"),
@@ -1520,7 +1519,6 @@ def stream_jarque_bera_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         _moment_batch,
         "jb_moment_partials",
         split_col="event_id",
-        src_prefix="jb_mon_src_",
     )
     s = partials.agg(
         F.sum("pn").cast("long").alias("nn"),

@@ -1517,7 +1517,6 @@ def stream_ab_guardrail_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _moments_batch,
         "ab_guardrail_partials",
         split_col="event_id",
-        src_prefix="ab_guardrail_src_",
     )
     merged = partials.agg(
         F.count(F.lit(1)).cast("long").alias("n_batches"),
@@ -2970,7 +2969,6 @@ def stream_cusum_hourly_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         _hourly_batch,
         "cusum_hourly_partials",
         split_col="event_id",
-        src_prefix="cusum_monitor_src_",
     )
     merged = partials.groupBy("hr").agg(F.sum("c").cast("long").alias("c"))
     return _cusum_readout(merged)

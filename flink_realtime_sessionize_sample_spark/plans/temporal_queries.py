@@ -133,11 +133,12 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the streaming member of the beyond-parity join family
     (batch as-of / range joins in ``operators/temporal_join.py``).
     """
-    import tempfile
-    import uuid
-
     from flink_realtime_sessionize_sample_spark.streaming.pipeline import (
         join_streams_interval,
+    )
+    from flink_realtime_sessionize_sample_spark.streaming.replay import (
+        drain_to_memory,
+        scratch_dir,
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -147,24 +148,13 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     views = ev.filter("event_type = 'view'").select(
         "user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("v_ts")
     )
-    base = tempfile.mkdtemp(prefix="ssj_")
-    cdir, vdir = f"{base}/clicks", f"{base}/views"
-    clicks.coalesce(1).write.parquet(cdir)
-    views.coalesce(1).write.parquet(vdir)
-    cs = spark.readStream.schema(clicks.schema).parquet(cdir)
-    vs = spark.readStream.schema(views.schema).parquet(vdir)
-    qn = f"ssj_{uuid.uuid4().hex[:8]}"
-    q = (
-        join_streams_interval(cs, vs, on="user_id", left_ts="c_ts", right_ts="v_ts")
-        .select("click_id", "view_id")
-        .writeStream.format("memory")
-        .queryName(qn)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(600)
-    if not finished:  # pragma: no cover — a hang must not pass as success
-        q.stop()
-        raise RuntimeError("stream_stream_interval_join: replay did not terminate")
-    return spark.table(qn)
+    with scratch_dir("ssj_") as base:
+        cdir, vdir = f"{base}/clicks", f"{base}/views"
+        clicks.coalesce(1).write.parquet(cdir)
+        views.coalesce(1).write.parquet(vdir)
+        cs = spark.readStream.schema(clicks.schema).parquet(cdir)
+        vs = spark.readStream.schema(views.schema).parquet(vdir)
+        pairs = join_streams_interval(
+            cs, vs, on="user_id", left_ts="c_ts", right_ts="v_ts"
+        ).select("click_id", "view_id")
+        return drain_to_memory(pairs, "stream_stream_interval_join")

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import stat
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,42 +73,38 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def read_normalized(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """Run ``read`` (a batch or streaming parquet read) under the pinned
+    timestamp confs and normalize its ``ts`` column to TimestampType.
+
+    events.ts arrived as parquet TIMESTAMP(NANOS) in earlier testdata
+    generations (Spark has no nanos type and refuses the file unless nanos
+    surface as LongType) and as naive TIMESTAMP(MICROS) in the current one
+    (which Spark would otherwise infer as TIMESTAMP_NTZ — a type
+    ``unix_micros``/watermarks reject). The confs are runtime-set so they
+    hold even under a caller-provided SparkSession (the driver builds its
+    own), and so column types never depend on table-load order. Session tz
+    is pinned UTC, so naive micros read as LTZ are value-identical to
+    DuckDB's naive interpretation in every tz-dependent expression."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    df = read()
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "timestamp_ntz":
+        # Defensive: schema captured before the conf took effect.
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    elif ts_type == "bigint":
+        # Epoch nanos → micros (exactly DuckDB's ns→us truncation); integer
+        # `div` keeps the math exact (epoch nanos exceed double's 2^53).
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # Timestamp normalization, applied uniformly so column types never
-    # depend on table-load order within a session: events.ts arrived as
-    # parquet TIMESTAMP(NANOS) in earlier testdata generations (Spark has no
-    # nanos type and refuses the file unless nanos surface as LongType) and
-    # as naive TIMESTAMP(MICROS) in the current one (which Spark would
-    # otherwise infer as TIMESTAMP_NTZ — a type ``unix_micros``/watermarks
-    # reject). Both confs are runtime-set so they hold even under a
-    # caller-provided SparkSession (the driver builds its own). Session tz
-    # is pinned UTC, so reading naive micros as TimestampType(LTZ) is
-    # exactly DuckDB's interpretation of the same values.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # Pin UTC even under a caller-provided session: naive parquet micros
-    # read as LTZ are then value-identical to DuckDB's naive interpretation
-    # in every tz-dependent expression (date_trunc, casts, formatting).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "timestamp_ntz":
-        # Defensive: schema captured before the conf took effect.
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    # events.ts is parquet TIMESTAMP(NANOS); with
-    # spark.sql.legacy.parquet.nanosAsLong it arrives as epoch-nanos LongType.
-    # Truncate to micros (exactly DuckDB's ns→us behavior) and restore a real
-    # TimestampType so downstream event-time logic is type-native.
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        cols = [
-            # integer `div` keeps the math in exact long arithmetic (epoch
-            # nanos exceed double's 2^53 mantissa)
-            F.timestamp_micros(F.expr(f"{c} div 1000")).alias(c) if c == "ts" else F.col(c)
-            for c in df.columns
-        ]
-        df = df.select(*cols)
-    return df
+    return read_normalized(spark, lambda: _read_parquet(spark, f"{sf_dir}/{name}.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

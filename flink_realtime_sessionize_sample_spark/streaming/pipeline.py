@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.sources.logs import parse_access_logs
+from flink_realtime_sessionize_sample_spark.sources.registry import read_normalized
 from flink_realtime_sessionize_sample_spark.streaming.sessionize_stream import (
     STATE_TTL_MS,
     sessionize_stream_bucketed,
@@ -34,39 +35,19 @@ from flink_realtime_sessionize_sample_spark.streaming.sessionize_stream import (
 WATERMARK_DELAY = "60 seconds"  # W1: RealtimeSessionize.scala:131
 
 
-def build_events_file_stream(spark: SparkSession, path: str, schema=None, max_files_per_trigger: int | None = None) -> DataFrame:
-    """S2 analog: file-replay source of the events table (parquet dir/glob).
+def build_events_file_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """S2 analog: file-replay source of the events table (parquet dir/glob),
+    with ``load_table``'s ts normalization (``sources.registry.read_normalized``)."""
 
-    Applies the same ts normalization as ``sources.registry.load_table``:
-    TIMESTAMP(NANOS) parquet (earlier testdata generations) surfaces as
-    epoch-nanos LongType under ``nanosAsLong`` and is truncated to micros;
-    naive TIMESTAMP(MICROS) (current generation) is read as TimestampType
-    via ``inferTimestampNTZ=false`` (session tz is pinned UTC)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(path)
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.select(
-            *[
-                F.timestamp_micros(F.expr(f"{c} div 1000")).alias(c) if c == "ts" else F.col(c)
-                for c in df.columns
-            ]
-        )
-    elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    def read() -> DataFrame:
+        reader = spark.readStream.schema(spark.read.parquet(path).schema)
+        if max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        return reader.parquet(path)
 
-
-def build_text_line_stream(spark: SparkSession, path: str) -> DataFrame:
-    """S2 analog for raw access-log lines (``env.readTextFile``,
-    ``RealtimeSessionize.scala:104-111``)."""
-    return spark.readStream.text(path).withColumnRenamed("value", "value")
+    return read_normalized(spark, read)
 
 
 def build_kafka_line_source(

@@ -90,7 +90,6 @@ def sessionize_stream_bucketed(
     gap_seconds: int = GAP_SECONDS,
     max_events: int = MAX_SESSION_EVENTS,
     max_duration_seconds: int = MAX_SESSION_DURATION_SECONDS,
-    output_mode: str = "append",
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """Streaming DataFrame → per-event (all columns + session_id + duration),
@@ -196,7 +195,7 @@ def sessionize_stream_bucketed(
         fn,
         outputStructType=inner_schema,
         stateStructType=_BUCKET_STATE_SCHEMA,
-        outputMode=output_mode,
+        outputMode="append",
         timeoutConf=(
             GroupStateTimeout.ProcessingTimeTimeout
             if state_ttl_ms is not None

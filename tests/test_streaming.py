@@ -863,7 +863,6 @@ def test_replay_split_stream_roundtrip(spark):
         "doc_id long, v long",
         lambda b: b.selectExpr("doc_id", "v + 1 as v1"),
         "replay_test_sink",
-        src_prefix="replay_test_src_",
     )
     rows = {r["doc_id"]: r["v1"] for r in out.collect()}
     assert len(rows) == 50  # every odd id, exactly once
