@@ -274,17 +274,12 @@ def main() -> None:
             # its [gc,alloc] warnings would interleave with the one-line
             # JSON contract below. Keep the warnings, move them to stderr.
             "spark.driver.extraJavaOptions": "-Xlog:all=warning:stderr:uptime,level,tags",
-            # r16 (judge item 5): the r15 close had to raise this to 4g
-            # after a late broadcast-build OOM ("Not enough memory to
-            # build and broadcast the table") — checkpoint blocks from
-            # 120+ query executions piled up in the one local-mode JVM.
-            # The root causes are now fixed at the source: materialize()
-            # pins at MEMORY_AND_DISK (blocks spill instead of squeezing
-            # the execution pool) and get_spark() defaults the periodic
-            # ContextCleaner GC to 2 minutes (dead blocks reclaimed
-            # during the run, not at the 30-minute default), so the heap
-            # is back at the 1g default to PROVE the OOM class is gone
-            # rather than papered over.
+            # The driver heap stays at the 1g default. A bench run at 1g
+            # can still die with "Not enough memory to build and
+            # broadcast the table": it reproduces with SPARK_GRAFT_CPUS
+            # 8 and 32 and completes at 4. MEMORY_AND_DISK pins and the
+            # 2-minute periodic ContextCleaner GC did not remove it; the
+            # cause is open (ROADMAP item A).
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,43 +1,41 @@
-"""Mid-plan materialization for multi-consumer lineage (round-15 optimization).
+"""The one pin policy: every mid-plan checkpoint in the package goes
+through this module.
 
-The round-15 plan audit found the dominant wall cost of every composed
-query was LINEAGE RECOMPUTE, not any single operator: a frame consumed by
-N plan branches re-runs its whole lineage up to N times unless AQE's
-ReusedExchange happens to deduplicate the branches (the same failure mode
-that motivated ``with_global_rank(checkpoint_banded=True)``, round 7).
-Measured static plans before the fix: ``dedup_survivor_corpus`` scanned
-documents 16x, ``customer_rfm_segments`` scanned orders 24x,
-``bpe_train_merges`` rendered a 2^rounds plan tree with 62 scans.
+A frame read by N plan branches re-runs its whole lineage up to N times
+unless AQE's exchange reuse happens to deduplicate the branches. Pinning
+it — a ``localCheckpoint`` — truncates the plan to an RDD leaf that every
+branch reads instead. Two helpers, one per kind of pin:
 
-:func:`materialize` is the one-line fix applied at every such fan-out
-point: a LAZY ``localCheckpoint`` —
+* :func:`materialize` for **fan-out**: a frame with two or more consumers
+  (per-key aggregates, bounded grids, candidate-pair frames, the input of
+  a rank pass). ``SPARK_GRAFT_NO_MAT=1`` turns it into the identity, so
+  plan inspection (the registry-wide lint in ``tests/test_plan_lint.py``,
+  the plan-shape tests) sees the full lineage; rows are the same either
+  way (``tests/test_mat.py``).
+* :func:`materialize_loop` for **fixpoint state**: the per-round state of
+  an iterative loop whose round r is built on round r-1 (star contraction
+  in ``dedup.connected_components``, the Newton–Schulz steps of
+  ``zca_whitening_newton_schulz``). It pins even under NO_MAT, because
+  without truncation such a plan grows exponentially with the round
+  count.
 
-* **truncates the logical plan** to an RDD leaf, so every consumer branch
-  reads the persisted blocks instead of re-running scan + tokenize +
-  aggregate lineage (optimization-guide §2.4 "remove shuffles outright" /
-  §5 caching: reuse > recompute when lineage dominates);
-* **lazy** (``eager=False``): the blocks are written inside the first
-  action that needs them, once, and are shared by all later stages of
-  the same (or a later) action via the persisted RDD. Lazy does NOT mean
-  jobless at plan-build time: under AQE, ``localCheckpoint`` builds the
-  frame's ``executedPlan``, and that runs every shuffle-map stage of the
-  checkpointed lineage right then (``dedup_minhash_lsh``: 4 jobs while
-  its DataFrame is built, 1 when it executes). Nothing survives the
-  query's lifetime, so bench/oracle runs still compute everything from
-  the parquet inputs;
-* **AQE-compatible**: downstream exchanges re-plan from runtime shuffle
-  statistics, so join-strategy selection (broadcast vs shuffled) is
-  unaffected even though an RDD leaf carries no static size estimate.
-  Where a broadcast is structurally required the call sites already hint
-  it explicitly.
+Every pin is **lazy** (``eager=False``): its blocks are written inside
+the first action that needs them and shared by every later stage. No pin
+spends a job of its own while the query is being built, although under
+AQE building the checkpoint's ``executedPlan`` still runs the shuffle-map
+stages of its lineage at build time. Because the pin is lazy, the
+pinned lineage's inputs must still exist at the query's first action.
 
-Scale discipline: ONLY materialize frames that are bounded or already
-reduced (per-key aggregates, shingle/token projections feeding >= 2
-consumers, vocabulary/state tables) — the same space-for-passes trade a
-shuffle makes, paid once instead of N times. The standing caveat from
-``connected_components``/``checkpoint_banded`` applies: localCheckpoint
-blocks do not survive executor loss; acceptable for ephemeral
-query-internal frames where recompute-on-failure restarts the query.
+Every pin is **MEMORY_AND_DISK**: blocks that outgrow the storage pool
+spill to disk instead of evicting other blocks or failing an executor.
+The blocks die with the query's DataFrame (ContextCleaner; session.py's
+periodic GC reclaims them in long-lived sessions), and they do not
+survive executor loss: a failed query is recomputed from its inputs.
+
+Pin only bounded or already-reduced frames, or frames the query reads
+several times anyway: the trade is the space of one copy for N-1 lineage
+passes. Outside this module no package code calls ``localCheckpoint`` or
+``checkpoint`` (``tests/test_mat.py::test_only_mat_checkpoints``).
 """
 
 from __future__ import annotations
@@ -47,26 +45,11 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-# Explicit pressure valve (r16, judge item 5): checkpoint blocks that
-# outgrow the storage pool SPILL TO DISK instead of evicting hot blocks
-# or OOMing an executor. MEMORY_AND_DISK is localCheckpoint's documented
-# default; pinning it here makes the spill behaviour part of this
-# module's contract (the dedup base frames are corpus-sized projections —
-# the one class of pin that grows with N) rather than an upstream
-# default. Block lifetime is bounded by the ContextCleaner: the pinned
-# RDD dies with the query's DataFrame, and session.py's 2-minute
-# periodicGC reclaims the blocks promptly in long-lived sessions.
+# Pinned explicitly (it is also localCheckpoint's default) so that
+# spilling is part of this module's contract, not an upstream default.
 _LEVEL = StorageLevel.MEMORY_AND_DISK
 
-# Plan-inspection escape hatch: a localCheckpoint truncates the visible
-# plan to an RDD leaf, which would blind the registry-wide plan lint
-# (tests/test_plan_lint.py: no CartesianProduct / BatchEvalPython
-# anywhere) and the per-family plan-shape tests to everything inside the
-# checkpointed lineage. With SPARK_GRAFT_NO_MAT=1 :func:`materialize`
-# becomes identity, so lint/shape tests assert over the FULL logical
-# tree — the results are identical either way (materialization is
-# semantics-neutral by contract; pinned by tests/test_mat.py), only the
-# physical reuse differs.
+# Set to any value to make materialize() the identity (plan inspection).
 _DISABLE_ENV = "SPARK_GRAFT_NO_MAT"
 
 
@@ -83,13 +66,14 @@ def materialize_loop(df: DataFrame) -> DataFrame:
 
     Unlike :func:`materialize`, this is NOT disabled by
     ``SPARK_GRAFT_NO_MAT``: a loop whose round r is built on round r-1
-    (star contraction in ``dedup.connected_components``) grows its plan
+    (star contraction in ``dedup.connected_components``, the
+    Newton–Schulz steps of ``zca_whitening_newton_schulz``) grows its plan
     tree exponentially without truncation (each round references its
     input several times), so "restore full lineage" is not a meaningful
     mode for it — a 6-edge toy input already takes ~45 s to plan and the
     driver dies on real inputs. Plan-lint visibility is preserved anyway:
     round 1's input is un-truncated under NO_MAT, so every operator shape
     in the loop body appears in full in round 1's plan; later rounds
-    repeat the same two operators."""
+    repeat the same operators."""
     return df.localCheckpoint(eager=False, storageLevel=_LEVEL)
 

@@ -3241,7 +3241,7 @@ def chisq_source_language(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bounded |S| x |L| frame with four downstream references (ms, ml,
     # tot, grid's left join) — checkpoint so the corpus scan runs once
     # under every config, including exchange.reuse=false.
-    cell = cell.localCheckpoint()
+    cell = materialize(cell)
     ms = cell.groupBy("source").agg(F.sum("nsl").cast("long").alias("ns"))
     ml = cell.groupBy("lang").agg(F.sum("nsl").cast("long").alias("nl"))
     tot = cell.agg(F.sum("nsl").cast("long").alias("nn"))

@@ -23,7 +23,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
-from flink_realtime_sessionize_sample_spark.operators.mat import materialize
+from flink_realtime_sessionize_sample_spark.operators.mat import (
+    materialize,
+    materialize_loop,
+)
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
 
@@ -1961,7 +1964,8 @@ def zca_whitening_newton_schulz(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration is two d×d equi-join matmuls + one elementwise map on
     d² = {_PCA_DIM * _PCA_DIM}-row frames — O(d³) work per step regardless
     of corpus size, the same contract as ``embedding_pca_power_iteration``.
-    Frames are localCheckpoint()ed per step to keep the unrolled plan flat.
+    Each step's frames are pinned (``materialize_loop``) to keep the
+    unrolled plan flat.
 
     Cross-engine exactness: the covariance is 6dp-rounded and e6-quantized
     (the verified ``embedding_covariance`` numbers); every matmul
@@ -1992,7 +1996,7 @@ def zca_whitening_newton_schulz(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t",
     )
     trr = rdg.select((F.col("t") + _PCA_DIM * F.col("r")).cast("long").alias("tr2"))
-    y = (
+    y = materialize(
         cfull.crossJoin(F.broadcast(rdg))
         .crossJoin(F.broadcast(trr))
         .select(
@@ -2009,7 +2013,6 @@ def zca_whitening_newton_schulz(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("v"),
         )
-        .localCheckpoint()
     )
     z = (
         spark.range(_PCA_DIM)
@@ -2051,9 +2054,10 @@ def zca_whitening_newton_schulz(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("v"),
-        ).localCheckpoint()
-        y = _matmul(y, t_half).localCheckpoint()
-        z = _matmul(t_half, z).localCheckpoint()
+        )
+        t_half = materialize_loop(t_half)
+        y = materialize_loop(_matmul(y, t_half))
+        z = materialize_loop(_matmul(t_half, z))
 
     return z.crossJoin(F.broadcast(trr)).select(
         "i",

@@ -3483,17 +3483,14 @@ def ccnet_buckets_frame(docs: DataFrame) -> DataFrame:
         .cast("long")
         .alias("avg_micro"),
     )
+    # The per-doc frame's lineage (corpus explode + bigram-model join) is
+    # the dominant cost; the rank pass reads its input along three plan
+    # branches (cut-point sample, local window, band totals), so pin it.
     ranked = with_global_rank(
-        pd2,
+        materialize(pd2),
         [F.col("avg_micro").desc(), F.col("doc_id").asc()],
         rank_col="rnk",
         total_col="ntot",
-        # The per-doc frame's lineage (corpus explode + bigram-model join)
-        # is the dominant cost and would otherwise be recomputed by each
-        # of the rank pass's three plan branches whenever AQE exchange
-        # reuse fails to deduplicate them — materialize it once (see the
-        # with_global_rank docstring for the measured range).
-        checkpoint_banded=True,
     )
     bucketed = ranked.withColumn(
         "bucket", ntile_from_rank(F.col("rnk"), F.col("ntot"), 10)
@@ -3847,17 +3844,15 @@ def dedup_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the verified-pair frame is computed ONCE
     (``minhash_lsh_pairs``, bucketed LSH candidates, never all-pairs) and
-    ``localCheckpoint``ed — the component rounds, the leakage counts and
+    pinned (``materialize``) — the component rounds, the leakage counts and
     the split audit all reuse the materialized pairs instead of re-running
     the LSH; components contract in O(log²) alternating-star rounds
     (operators/dedup.py::connected_components); the assignment join is a
     left join on doc_id. At 100 TB the parity gate becomes a hash of the
     canonical id — same one-sided property, same plan."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        D.minhash_lsh_pairs(docs, threshold=0.5)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
+    pairs = materialize(
+        D.minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
     )
     comp = D.connected_components(pairs)  # (node, label)
     assign = (
@@ -4058,15 +4053,11 @@ def ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(_query_pred_s())
-    exact = (
-        cosine_topk(emb, q, k=5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-    )
+    exact = materialize(cosine_topk(emb, q, k=5).select("query_id", "neighbor_id"))
     # The index build (corpus → cell assignment) is nprobe-independent:
     # compute it ONCE and share it across all four sweep points (round-7
     # review — the sweep previously re-assigned the corpus per point).
-    cells = ivf_corpus_cells(emb, n_centroids=8).localCheckpoint()
+    cells = materialize(ivf_corpus_cells(emb, n_centroids=8))
     n_q = q.agg(F.count(F.lit(1)).cast("long").alias("n_queries"))
     n_ex = exact.agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
     out = None
@@ -4275,7 +4266,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage is the final 6dp division."""
     ranked = _vocab_ranked_frame(load_table(spark, sf_dir, "documents"))
     # The ranked vocab is consumed once per curve point: materialize it.
-    ranked = ranked.localCheckpoint()
+    ranked = materialize(ranked)
     out = None
     for k in _VOCAB_KS:
         row = ranked.filter(F.col("r") <= k).agg(

@@ -27,6 +27,7 @@ from flink_realtime_sessionize_sample_spark.functions import text as T
 from flink_realtime_sessionize_sample_spark.operators.global_order import (
     with_global_rank,
 )
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
 
@@ -210,8 +211,6 @@ def _nb_prediction_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize(): the bucketed token frame feeds the train aggregates
     # AND the test scorer — one corpus tokenize+explode instead of two
     # (r15 opt).
-    from flink_realtime_sessionize_sample_spark.operators.mat import materialize
-
     bk = materialize(_nb_bucketed_tokens(docs))
     model, prior = _nb_model_frames(docs, bk=bk)
     test = (
@@ -271,7 +270,7 @@ def naive_bayes_eval_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     conf = pred.groupBy("true_lang", "pred_lang").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    conf = conf.localCheckpoint()  # |classes|^2 frame feeds 4 readouts
+    conf = materialize(conf)  # |classes|^2 frame feeds 4 readouts
     tp = (
         conf.filter(F.col("pred_lang") == F.col("true_lang"))
         .groupBy(F.col("true_lang").alias("lang"))

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
 
@@ -119,7 +120,7 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both candidate sides, both intersection re-joins): without a
     # materialization each branch re-scans + re-explodes + re-distincts
     # the corpus (measured 20 parquet scans in the lazy plan).
-    s = s.localCheckpoint()
+    s = materialize(s)
     n = s.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("sz"))
     df = s.groupBy("sh").agg(F.count(F.lit(1)).cast("long").alias("df"))
     # Rarest-first total order (df, shingle) per doc; prefix keeps the
@@ -1286,7 +1287,7 @@ def kaplan_meier_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame
     # checkpointed, and n_total derives from it (every observation
     # leaves the risk set exactly once) instead of from a second
     # aggregation branch over the corpus-sized observation frame.
-    bytime = bytime.localCheckpoint()
+    bytime = materialize(bytime)
     tot = bytime.agg(F.sum("removed").cast("long").alias("n_total"))
     w_before = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     risk = bytime.crossJoin(F.broadcast(tot)).select(

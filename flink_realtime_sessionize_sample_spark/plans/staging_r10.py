@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
 
@@ -148,7 +149,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", F.expr("n_chars div 200").alias("len_band"), "lang")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    cell = cell.localCheckpoint()  # feeds grp/ml/tot/pres
+    cell = materialize(cell)  # feeds grp/ml/tot/pres
     grp = cell.groupBy("source", "len_band").agg(
         F.sum("c").cast("long").alias("gs")
     )
@@ -181,7 +182,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("t_e9"),
         )
     )
-    tg = tg.localCheckpoint()  # feeds the band aggregate and the max
+    tg = materialize(tg)  # feeds the band aggregate and the max
     agg = tg.groupBy(F.expr(_TC_BANDS).alias("t_band")).agg(
         F.count(F.lit(1)).cast("long").alias("n_groups"),
         F.sum("gs").cast("long").alias("n_docs"),
@@ -805,7 +806,7 @@ def logrank_test_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame
     # rows) is checkpointed, and the arm totals derive from it (every
     # observation leaves the risk set exactly once) instead of from a
     # second pass over the corpus-sized observation frame.
-    bytime = bytime.localCheckpoint()
+    bytime = materialize(bytime)
     tot = bytime.agg(
         F.sum("removed").cast("long").alias("n_all"),
         F.sum("removed1").cast("long").alias("n_arm1"),
@@ -937,7 +938,7 @@ def session_bot_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("gap").cast("long").alias("s"),
         F.sum(F.expr("gap * gap")).cast("long").alias("q"),
     )
-    per = per.localCheckpoint()  # feeds the total and the band aggregate
+    per = materialize(per)  # feeds the total and the band aggregate
     tot = per.agg(F.count(F.lit(1)).cast("long").alias("n_sessions"))
     b = per.groupBy(F.expr(_BOT_BAND).alias("band")).agg(
         F.count(F.lit(1)).cast("long").alias("n_sessions_b"),
@@ -1079,7 +1080,7 @@ def intersession_return_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window AND both banded passes' upstream — without this checkpoint
     # the Arrow sessionize kernel re-expands ~10x through the banding
     # self-references (measured 40 corpus scans in the plan tree).
-    se = se.localCheckpoint()
+    se = materialize(se)
     # Batch end = max session end (every event's sec <= its session's
     # max, so the global max survives the per-session aggregation).
     gmx = se.agg(F.max("end_sec").cast("long").alias("mx"))
@@ -1102,7 +1103,7 @@ def intersession_return_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("censored"), 0).otherwise(1)).cast("long").alias("d"),
         F.count(F.lit(1)).cast("long").alias("removed"),
     )
-    bytime = bytime.localCheckpoint()  # |distinct t| frame; feeds the
+    bytime = materialize(bytime)  # |distinct t| frame; feeds the
     # total AND the banding's sample/main self-references.
     # n_total = sum of removals (every observation leaves the risk set
     # exactly once) — no separate corpus pass.
@@ -1130,7 +1131,7 @@ def intersession_return_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_KM_FACTOR_E6).alias("f_e6"),
         F.expr("CASE WHEN n_risk <= d THEN 1 ELSE 0 END").alias("zflag"),
     )
-    death = death.localCheckpoint()  # death-time frame; pass 2's
+    death = materialize(death)  # death-time frame; pass 2's
     # banding self-references would otherwise re-run pass 1.
     # Banded pass 2: cumulative log-factors + zero flags over death times.
     cum = with_global_rank(
@@ -1357,7 +1358,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tk = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.expr(sh_s)).alias("token")
     )
-    tk = tk.localCheckpoint()  # feeds firsts AND per-doc counts
+    tk = materialize(tk)  # feeds firsts AND per-doc counts
     firsts = tk.groupBy("token").agg(F.min("doc_id").alias("first_doc"))
     docs = tk.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("ntok"))
     # Distributed doc rank + running token total in ONE banded pass (the
@@ -1494,7 +1495,7 @@ def cramers_v_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "lang")
         .agg(F.count(F.lit(1)).cast("long").alias("nsl"))
     )
-    cell = cell.localCheckpoint()
+    cell = materialize(cell)
     ms = cell.groupBy("source").agg(F.sum("nsl").cast("long").alias("ns"))
     ml = cell.groupBy("lang").agg(F.sum("nsl").cast("long").alias("nl"))
     tot = cell.agg(F.sum("nsl").cast("long").alias("nn"))
@@ -1776,7 +1777,7 @@ def jackknife_source_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s_en"),
         )
     )
-    per = per.localCheckpoint()
+    per = materialize(per)
     tot = per.agg(
         F.sum("n_s").cast("long").alias("n"),
         F.sum("s_chars").cast("long").alias("sc"),
@@ -1868,12 +1869,10 @@ def capture_recapture_dedup_estimate(
     # pair count, far below corpus size) are checkpointed before feeding
     # both their marginal count and the intersection join — otherwise
     # the shingle+MinHash and SimHash pipelines each re-expand twice.
-    pa = (
-        D.minhash_lsh_pairs(docs, threshold=0.5)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
+    pa = materialize(
+        D.minhash_lsh_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
     )
-    pb = D.simhash_pairs(docs).select("doc_a", "doc_b").localCheckpoint()
+    pb = materialize(D.simhash_pairs(docs).select("doc_a", "doc_b"))
     n1 = pa.agg(F.count(F.lit(1)).cast("long").alias("n1"))
     n2 = pb.agg(F.count(F.lit(1)).cast("long").alias("n2"))
     nb = (
@@ -2313,7 +2312,7 @@ def pii_cooccurrence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("hn").cast("long").alias("nn"),
         F.sum(F.col("he") * F.col("hn")).cast("long").alias("nb"),
     )
-    g = g.localCheckpoint()  # QI-group frame feeds the total and the tiers
+    g = materialize(g)  # QI-group frame feeds the total and the tiers
     t = g.agg(
         F.sum("gs").cast("long").alias("n_docs"),
         F.sum("ne").cast("long").alias("ne_t"),
@@ -2435,7 +2434,7 @@ def mcc_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("true_lang", "pred_lang")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    conf = conf.localCheckpoint()  # |classes|^2 frame feeds 3 readouts
+    conf = materialize(conf)  # |classes|^2 frame feeds 3 readouts
     tk = conf.groupBy(F.col("true_lang").alias("cls")).agg(
         F.sum("n").cast("long").alias("t_n")
     )

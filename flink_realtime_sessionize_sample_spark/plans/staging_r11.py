@@ -43,6 +43,7 @@ from flink_realtime_sessionize_sample_spark.functions import text as T
 from flink_realtime_sessionize_sample_spark.operators.global_order import (
     with_global_rank,
 )
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
 
@@ -124,7 +125,7 @@ def goodman_kruskal_lambda_source_lang(
         .groupBy("source", "lang")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    cell = cell.localCheckpoint()  # bounded |S| x |L|; 4 readouts
+    cell = materialize(cell)  # bounded |S| x |L|; 4 readouts
     rowmax = cell.groupBy("source").agg(F.max("n").cast("long").alias("m"))
     colmax = cell.groupBy("lang").agg(F.max("n").cast("long").alias("m"))
     rowtot = cell.groupBy("source").agg(F.sum("n").cast("long").alias("t"))
@@ -262,7 +263,7 @@ def kruskal_wallis_length_by_source(spark: SparkSession, sf_dir: str) -> DataFra
         .groupBy("source", F.col("n_chars").alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    sg = sg.localCheckpoint()  # bounded |S| x |values|; feeds g + the join
+    sg = materialize(sg)  # bounded |S| x |values|; feeds g + the join
     g = sg.groupBy("v").agg(F.sum("c").cast("long").alias("cnt"))
     rk = with_global_rank(g, ["v"], rank_col="_rk", sum_col="cnt", cum_col="cum_all")
     a2 = rk.select(
@@ -403,7 +404,7 @@ def mann_kendall_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.expr("unix_micros(ts) div 86400000000").alias("day"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    d = d.localCheckpoint()  # bounded |days|; feeds pair join + ties + count
+    d = materialize(d)  # bounded |days|; feeds pair join + ties + count
     a = d.select(F.col("day").alias("da"), F.col("c").alias("ca"))
     b = d.select(F.col("day").alias("db"), F.col("c").alias("cb"))
     p = (
@@ -749,7 +750,7 @@ def _ev_readout(d: DataFrame) -> DataFrame:
     re-executes the upstream (the corpus aggregate in the batch query —
     measured 4 'Scan parquet' nodes in the formatted plan; 0 after) —
     the plan-scan discipline's checkpoint-bounded-frames rule."""
-    d = d.localCheckpoint()
+    d = materialize(d)
     wd = Window.orderBy("day")
     o = d.select(
         "day",
@@ -1182,7 +1183,7 @@ def dunn_posthoc_length_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", F.col("n_chars").alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    sg = sg.localCheckpoint()  # bounded |S| x |values|; feeds g + the join
+    sg = materialize(sg)  # bounded |S| x |values|; feeds g + the join
     g = sg.groupBy("v").agg(F.sum("c").cast("long").alias("cnt"))
     rk = with_global_rank(g, ["v"], rank_col="_rk", sum_col="cnt", cum_col="cum_all")
     a2 = rk.select(
@@ -1196,7 +1197,7 @@ def dunn_posthoc_length_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("c") * F.col("r2")).cast("long").alias("r2j"),
         )
     )
-    per = per.localCheckpoint()  # k rows; feeds both sides of the pair join
+    per = materialize(per)  # k rows; feeds both sides of the pair join
     tot = g.agg(
         F.sum("cnt").cast("long").alias("nn"),
         F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
@@ -1372,7 +1373,7 @@ def cvm_drift_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # totals and the banded CDF pass) — checkpoint so the corpus
     # aggregate runs once under every config, incl. exchange.reuse=false
     # (round-10 review finding; the chisq/GK/KW pattern).
-    grouped = grouped.localCheckpoint()
+    grouped = materialize(grouped)
     tot = grouped.agg(
         F.sum("c1").cast("long").alias("n1"),
         (F.sum("c_all") - F.sum("c1")).cast("long").alias("n2"),
@@ -1667,7 +1668,7 @@ def _sdd_readout(d: DataFrame) -> DataFrame:
     the streaming twin and any batch caller. The merged frame is
     checkpointed (bounded |days x distinct values|): the day-rank tagging
     and the value grouping are two branches over it."""
-    d = d.localCheckpoint()
+    d = materialize(d)
     wd = Window.orderBy("day")
     dd = (
         d.select("day")

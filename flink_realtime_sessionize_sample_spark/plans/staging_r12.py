@@ -81,6 +81,7 @@ from flink_realtime_sessionize_sample_spark.functions import text as T
 from flink_realtime_sessionize_sample_spark.operators.global_order import (
     with_global_rank,
 )
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.plans.round9_queries import (
     _session_obs,
@@ -521,7 +522,7 @@ def stratified_logrank_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bounded (stratum x duration) frame, <= 4 x 43201 rows by the 12-h
     # cap; checkpointed so the sessionize kernel runs once under every
     # config (the KM/logrank round-10 debt-1c pattern).
-    bytime = bytime.localCheckpoint()
+    bytime = materialize(bytime)
     tot = bytime.groupBy("st").agg(
         F.sum("removed").cast("long").alias("n_all"),
         F.sum("removed1").cast("long").alias("n_arm1"),
@@ -884,7 +885,7 @@ def nelson_aalen_cumhaz(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("censored"), 0).otherwise(1)).cast("long").alias("d"),
         F.count(F.lit(1)).cast("long").alias("removed"),
     )
-    bytime = bytime.localCheckpoint()
+    bytime = materialize(bytime)
     tot = bytime.agg(F.sum("removed").cast("long").alias("n_total"))
     w_before = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     risk = bytime.crossJoin(F.broadcast(tot)).select(
@@ -1060,7 +1061,7 @@ def jonckheere_terpstra_daily_trend(spark: SparkSession, sf_dir: str) -> DataFra
     # Bounded |bands| x |cent values| frame with three consumers (vals,
     # bands, grid): checkpoint so the corpus scan runs once under every
     # config (exchange.reuse=false included).
-    gv = gv.localCheckpoint()
+    gv = materialize(gv)
     vals = gv.groupBy("v").agg(F.sum("c").cast("long").alias("tv"))
     bands = gv.groupBy("b").agg(F.sum("c").cast("long").alias("nb"))
     grid = (
@@ -1277,7 +1278,7 @@ def energy_distance_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross join run once under every config — measured 10 "Scan
     # parquet" nodes in the executed plan before, 0 after (the cvm
     # round-10 review finding, same shape).
-    grouped = grouped.localCheckpoint()
+    grouped = materialize(grouped)
     cdf = with_global_rank(
         grouped,
         ["v"],
@@ -1518,7 +1519,7 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", F.col("n_chars").alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    sg = sg.localCheckpoint()
+    sg = materialize(sg)
     g = sg.groupBy("v").agg(F.sum("c").cast("long").alias("cnt"))
     tot = g.agg(F.sum("cnt").cast("long").alias("nn"))
     rk = with_global_rank(g, ["v"], rank_col="_rk", sum_col="cnt", cum_col="cum")
@@ -1540,7 +1541,7 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "side")
         .agg(F.sum("c").cast("long").alias("nsl"))
     )
-    cell = cell.localCheckpoint()  # bounded k x 2; feeds ms/ml/grid
+    cell = materialize(cell)  # bounded k x 2; feeds ms/ml/grid
     ms = cell.groupBy("source").agg(F.sum("nsl").cast("long").alias("ns"))
     ml = cell.groupBy("side").agg(F.sum("nsl").cast("long").alias("nl"))
     dims = ms.agg(F.count(F.lit(1)).cast("long").alias("r")).crossJoin(
@@ -1784,7 +1785,7 @@ def rmst_survival_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("removed"),
         F.sum(F.when(F.col("censored"), 0).otherwise(1)).cast("long").alias("d"),
     )
-    bytime = bytime.localCheckpoint()  # bounded 2 x 43201
+    bytime = materialize(bytime)  # bounded 2 x 43201
     tot = bytime.groupBy("g").agg(F.sum("removed").cast("long").alias("n_all"))
     w_before = (
         Window.partitionBy("g")
@@ -2059,7 +2060,7 @@ def brunner_munzel_en_vs_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    sg = sg.localCheckpoint()
+    sg = materialize(sg)
     p = sg.groupBy("v").agg(F.sum("c").cast("long").alias("cnt"))
     rk = with_global_rank(p, ["v"], rank_col="_rk", sum_col="cnt", cum_col="cum")
     a2 = rk.select(
@@ -2257,7 +2258,7 @@ def hosmer_lemeshow_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage (corpus scan + CDF rank pass + join-back): checkpoint so
     # that pipeline runs exactly once under every config — measured 5
     # "Scan parquet" nodes in the executed plan before, 0 after.
-    bins = bins.localCheckpoint()
+    bins = materialize(bins)
     terms = bins.select(
         "bin",
         "nb",
@@ -2587,7 +2588,7 @@ def kuiper_tod_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once under every config (exchange-reuse-independent — the
     # registered ks_drift_detection predates this discipline and leans
     # on runtime exchange reuse instead).
-    grouped = grouped.localCheckpoint()
+    grouped = materialize(grouped)
     tot = grouped.agg(
         F.sum("c1").cast("long").alias("n1"),
         (F.sum("c_all") - F.sum("c1")).cast("long").alias("n2"),
@@ -3097,7 +3098,7 @@ def _dl_readout(cells_all: DataFrame) -> DataFrame:
     # Bounded frame (|days| rows) feeding four downstream branches (k_all
     # count, vmin pass, weight pass A, weight pass B): checkpoint so the
     # upstream pipeline runs exactly once under every config.
-    cells_all = cells_all.localCheckpoint()
+    cells_all = materialize(cells_all)
     cells = cells_all.filter(
         ((F.col("a") + F.col("b")) > 0)
         & ((F.col("c") + F.col("d")) > 0)
@@ -3336,7 +3337,7 @@ def delong_auc_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global-rank pass's branches: checkpoint so the corpus scans once
     # under every config (the kuiper_tod_drift discipline; the
     # registered roc_auc_token_count predates it).
-    g = g.localCheckpoint()
+    g = materialize(g)
     cdf = with_global_rank(
         g,
         ["dl"],
@@ -3651,7 +3652,7 @@ def weighted_logrank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE sessionize execution feeding totals + risk windows (the
     # registered test's checkpoint discipline).
-    bytime = bytime.localCheckpoint()
+    bytime = materialize(bytime)
     tot = bytime.agg(
         F.sum("removed").cast("long").alias("n_all"),
         F.sum("removed1").cast("long").alias("n_arm1"),

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.plans.round9_queries import (
     _OBF_Z_MICRO,
@@ -353,7 +354,7 @@ def bca_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bounded 100-row frame with three consumers (ranked, cnt, sel):
     # checkpoint so the corpus-sized replicate aggregate runs once under
     # every config (exchange.reuse=false included).
-    means = means.localCheckpoint()
+    means = materialize(means)
     ranked = means.withColumn(
         "rk", F.row_number().over(Window.orderBy("mean_rep", "rep"))
     )
@@ -369,7 +370,8 @@ def bca_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(0.0)
         ).alias("point_mean"),
         F.expr("s1 div n_orders").alias("xbarq"),
-    ).localCheckpoint()
+    )
+    point = materialize(point)
     mom = (
         orders.select(_cents("o_totalprice").alias("cents"))
         .crossJoin(F.broadcast(point.select("xbarq")))
@@ -976,7 +978,7 @@ def alpha_spending_gst_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bounded <=4-row frame with two consumers (the total row and the
     # per-look spending chain): checkpoint so the corpus scans once
     # under every config.
-    c = c.localCheckpoint()
+    c = materialize(c)
     tot = c.agg(F.max(F.col("n0") + F.col("n1")).alias("ntot"))
     ti = c.crossJoin(F.broadcast(tot)).select(
         "*",
@@ -1407,7 +1409,7 @@ def fligner_killeen_scale_by_source(spark: SparkSession, sf_dir: str) -> DataFra
         docs.groupBy("source", F.col("n_chars").alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    sg = sg.localCheckpoint()  # bounded |S| x |values|; 3 consumers
+    sg = materialize(sg)  # bounded |S| x |values|; 3 consumers
     njf = sg.groupBy("source").agg(F.sum("c").cast("long").alias("nj"))
     wsrc = (
         Window.partitionBy("source")
@@ -1429,7 +1431,7 @@ def fligner_killeen_scale_by_source(spark: SparkSession, sf_dir: str) -> DataFra
         .groupBy("source", "d")
         .agg(F.sum("c").cast("long").alias("c"))
     )
-    sd = sd.localCheckpoint()  # bounded deviation grid; 2 consumers
+    sd = materialize(sd)  # bounded deviation grid; 2 consumers
     g = sd.groupBy("d").agg(F.sum("c").cast("long").alias("cnt"))
     rk = with_global_rank(
         g, ["d"], rank_col="_rk", sum_col="cnt", cum_col="cum_all"
@@ -1443,7 +1445,7 @@ def fligner_killeen_scale_by_source(spark: SparkSession, sf_dir: str) -> DataFra
     aqt = a2.crossJoin(F.broadcast(tot)).select(
         "d", "cnt", "nn", F.expr(aq_expr).alias("aq")
     )
-    aqt = aqt.localCheckpoint()  # bounded; feeds pool + the per-group join
+    aqt = materialize(aqt)  # bounded; feeds pool + the per-group join
     pool = aqt.agg(
         F.expr(
             "CAST(sum(CAST(cnt AS DECIMAL(38,0)) * aq) AS DOUBLE)"
@@ -1584,7 +1586,7 @@ def _hl_frame(e: DataFrame) -> DataFrame:
     # shared (arm, value) aggregate so the corpus scans once under
     # every config).
     av = e.groupBy("arm", "cents").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    av = av.localCheckpoint()
+    av = materialize(av)
     v0 = av.filter(F.col("arm") == 0).select(F.col("cents").alias("v"), "c")
     v1 = av.filter(F.col("arm") == 1).select(
         F.col("cents").alias("v1"), F.col("c").alias("c1")
@@ -1597,7 +1599,7 @@ def _hl_frame(e: DataFrame) -> DataFrame:
     cum = with_global_rank(
         grid, ["d"], rank_col="_rk", sum_col="w", cum_col="cw"
     ).select("d", "w", "cw")
-    cum = cum.localCheckpoint()  # bounded diff grid; three rank lookups
+    cum = materialize(cum)  # bounded diff grid; three rank lookups
     tot = av.agg(
         F.sum(F.when(F.col("arm") == 0, F.col("c")).otherwise(0))
         .cast("long")
@@ -1800,7 +1802,7 @@ def page_trend_test_tod(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").cast("long").alias("s"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )
-    cells = cells.localCheckpoint()  # bounded |types| x 4; 3 consumers
+    cells = materialize(cells)  # bounded |types| x 4; 3 consumers
     kb = cells.agg(F.countDistinct("band").cast("long").alias("kk"))
     blocks = (
         cells.groupBy("event_type")
@@ -1998,7 +2000,7 @@ def wilcoxon_signed_rank_prepost(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("d")
         )
     )
-    per_user = per_user.localCheckpoint()  # two consumers: count + rank path
+    per_user = materialize(per_user)  # two consumers: count + rank path
     n_users = per_user.agg(F.count(F.lit(1)).cast("long").alias("n_users"))
     nz = per_user.filter(F.col("d") != 0).select(
         F.abs(F.col("d")).alias("ad"),
@@ -2429,7 +2431,7 @@ def theil_sen_ci_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.expr(_fdiv_spark("unix_micros(ts)", _DAY_US)).alias("d"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    d = d.localCheckpoint()  # day frame: pair join twice + the n_days count
+    d = materialize(d)  # day frame: pair join twice + the n_days count
     a = d.select(F.col("d").alias("da"), F.col("c").alias("ca"))
     b = d.select(F.col("d").alias("db"), F.col("c").alias("cb"))
     # nullif: same ANSI divide-by-zero pushdown guard as the registered
@@ -2447,7 +2449,7 @@ def theil_sen_ci_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_col="r",
         total_col="t",
     )
-    r = r.localCheckpoint()  # bounded pair frame; median + two rank lookups
+    r = materialize(r)  # bounded pair frame; median + two rank lookups
     nn = d.agg(F.count(F.lit(1)).cast("long").alias("nn"))
     kk = nn.crossJoin(
         F.broadcast(

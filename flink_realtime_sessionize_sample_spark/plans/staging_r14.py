@@ -65,6 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.plans.staging_r12 import (
     _dec_sum_bigint,
@@ -529,7 +530,7 @@ def cox_ph_score_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("dx"),
     )
-    bytime = bytime.localCheckpoint()  # bounded t-grid; 2 consumers
+    bytime = materialize(bytime)  # bounded t-grid; 2 consumers
     return _cox_readout(_cox_terms(bytime), "o_hours", "e_hours")
 
 
@@ -671,7 +672,7 @@ def mantel_logrank_trend_tod(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("removed_g"),
         F.sum(F.when(F.col("censored"), 0).otherwise(1)).cast("long").alias("d_g"),
     )
-    grid = grid.localCheckpoint()  # bounded t x 4 grid; 3 consumers
+    grid = materialize(grid)  # bounded t x 4 grid; 3 consumers
     bytime = grid.groupBy("t").agg(
         F.sum("removed_g").cast("long").alias("removed"),
         F.sum(F.col("g") * F.col("removed_g")).cast("long").alias("rx"),
@@ -681,7 +682,7 @@ def mantel_logrank_trend_tod(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("d_g").cast("long").alias("d"),
         F.sum(F.col("g") * F.col("d_g")).cast("long").alias("dx"),
     )
-    bytime = bytime.localCheckpoint()  # bounded; terms + the band join
+    bytime = materialize(bytime)  # bounded; terms + the band join
     terms = _cox_terms(bytime)
     # Per-band O/E over the same grid: band risk sets from
     # band-partitioned suffix windows, E against the time-level totals.
@@ -1010,7 +1011,7 @@ def ansari_bradley_scale_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("c"),
         F.sum("arm").cast("long").alias("c1"),
     )
-    g = g.localCheckpoint()  # bounded value grid; rank pass + totals
+    g = materialize(g)  # bounded value grid; rank pass + totals
     from flink_realtime_sessionize_sample_spark.operators.global_order import (
         with_global_rank,
     )
@@ -1230,7 +1231,7 @@ def breslow_day_or_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(
         (F.col("n1") > 0) & (F.col("n0") > 0) & (F.col("m1") > 0) & (F.col("m0") > 0)
     )
-    m = m.localCheckpoint()  # bounded 5-row stratum frame; 2 consumers
+    m = materialize(m)  # bounded 5-row stratum frame; 2 consumers
     pt = m.agg(
         F.sum(
             F.expr("CAST(round(1000000000 * (1e0 * a * d) / nt) AS BIGINT)")
@@ -1826,7 +1827,7 @@ def ljung_box_daily_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.expr(_fdiv_spark("unix_micros(ts)", 86400000000)).alias("d"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    d = d.localCheckpoint()  # bounded day frame; den + 7 lag joins
+    d = materialize(d)  # bounded day frame; den + 7 lag joins
     tot = d.agg(
         F.count(F.lit(1)).cast("long").alias("nn"),
         F.sum("c").cast("long").alias("ss"),

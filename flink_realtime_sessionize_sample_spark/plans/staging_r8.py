@@ -30,6 +30,7 @@ from flink_realtime_sessionize_sample_spark.functions import text as T
 from flink_realtime_sessionize_sample_spark.operators.global_order import (
     with_global_rank,
 )
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
 
@@ -1050,7 +1051,7 @@ def label_prop_neardup_communities(spark: SparkSession, sf_dir: str) -> DataFram
     edges = D.minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"), threshold=0.5
     ).select("doc_a", "doc_b")
-    edges = edges.localCheckpoint()
+    edges = materialize(edges)
     sym = edges.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
@@ -1869,7 +1870,7 @@ def wasserstein_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The grouped frame feeds three consumers (totals + two banded
     # passes): materialize the distinct-length frame once.
-    g = g.localCheckpoint()
+    g = materialize(g)
     tot = g.agg(
         F.sum("ca").cast("long").alias("na"), F.sum("cb").cast("long").alias("nb")
     )
@@ -1988,7 +1989,7 @@ def kendall_tau_chars_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"size({_TOKS_S}) div {_KT_YW}").alias("by"),
     )
     cells = b.groupBy("bx", "by").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    cells = cells.localCheckpoint()  # grid feeds 4 consumers
+    cells = materialize(cells)  # grid feeds 4 consumers
     a, p = cells.alias("a"), cells.alias("p")
     pq = (
         a.join(F.broadcast(p), F.col("p.bx") > F.col("a.bx"))
@@ -2211,7 +2212,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "source", F.expr("n_chars div 200").alias("len_band"))
         .agg(F.count(F.lit(1)).cast("long").alias("gs"))
     )
-    g = g.localCheckpoint()  # QI-group frame feeds the total and the bands
+    g = materialize(g)  # QI-group frame feeds the total and the bands
     t = g.agg(
         F.sum("gs").cast("long").alias("n_docs"),
         F.min("gs").cast("long").alias("min_k"),
@@ -2386,7 +2387,7 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.expr(f"unix_micros(ts) div {_DAY_US}").alias("d"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    d = d.localCheckpoint()  # day frame feeds the pair join twice + OLS
+    d = materialize(d)  # day frame feeds the pair join twice + OLS
     a = d.select(F.col("d").alias("da"), F.col("c").alias("ca"))
     b = d.select(F.col("d").alias("db"), F.col("c").alias("cb"))
     # nullif guard: the banding gate filter downstream references slope_e6
@@ -2551,7 +2552,7 @@ def retrieval_known_item_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("term") != "")
     )
-    qt = qt.localCheckpoint()  # feeds the vocab broadcast and the score join
+    qt = materialize(qt)  # feeds the vocab broadcast and the score join
     terms = qt.select("term").distinct()
     hits = (
         toks.select("doc_id", "dl", F.explode("t").alias("term"))
@@ -2582,7 +2583,7 @@ def retrieval_known_item_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score")
         )
     )
-    scored = scored.localCheckpoint()  # feeds the true-score frame and the rank count
+    scored = materialize(scored)  # feeds the true-score frame and the rank count
     tru = scored.filter(F.col("doc_id") == F.col("q_id")).select(
         "q_id", F.col("score").alias("s_true")
     )
@@ -2715,7 +2716,7 @@ def knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.count("neighbor_id").cast("long").alias("d"))
     )
-    indeg = indeg.localCheckpoint()  # feeds totals and the histogram
+    indeg = materialize(indeg)  # feeds totals and the histogram
     t = indeg.agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
         F.sum("d").cast("long").alias("n_edges"),
@@ -2789,7 +2790,7 @@ def source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.lit(1).alias("_one"))
         .drop("_one")
     )
-    sv = sv.localCheckpoint()  # feeds the sizes and both join sides
+    sv = materialize(sv)  # feeds the sizes and both join sides
     vs = sv.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("v"))
     a = sv.select(F.col("source").alias("source_a"), "w")
     b = sv.select(F.col("source").alias("source_b"), "w")
@@ -3126,7 +3127,7 @@ def quantile_normalize_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    docs = docs.localCheckpoint()  # feeds the pooled pass, the composite pass, the total
+    docs = materialize(docs)  # feeds the pooled pass, the composite pass, the total
     tot = docs.agg(F.count(F.lit(1)).cast("long").alias("n_all"))
     pooled = with_global_rank(
         docs.select("doc_id", "n_chars"),
@@ -3244,7 +3245,7 @@ def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("cast(round(cosine * 1000000) as bigint)").alias("c_e6"),
         F.expr(f"cast(floor(cosine * {_ANISO_BANDS}) as bigint)").alias("band"),
     )
-    q = q.localCheckpoint()  # feeds the total and the band histogram
+    q = materialize(q)  # feeds the total and the band histogram
     t = q.agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.sum("c_e6").cast("long").alias("sum_c_e6"),
@@ -3362,7 +3363,7 @@ def brown_forsythe_length_variance(spark: SparkSession, sf_dir: str) -> DataFram
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    docs = docs.localCheckpoint()  # feeds the rank pass and the z join
+    docs = materialize(docs)  # feeds the rank pass and the z join
     ckf = docs.withColumn(
         "ck",
         F.concat(
@@ -3504,7 +3505,7 @@ def shard_rebalance_preview(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_hrw_spark(_SH_A)).cast("long").alias("s_old"),
         F.expr(_hrw_spark(_SH_B)).cast("long").alias("s_new"),
     )
-    a = a.localCheckpoint()  # feeds the total and the per-shard breakdown
+    a = materialize(a)  # feeds the total and the per-shard breakdown
     t = a.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.when(F.col("s_old") != F.col("s_new"), 1).otherwise(0))
@@ -3588,7 +3589,7 @@ def join_skew_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    k = k.localCheckpoint()  # key frame feeds totals, histogram, top-k
+    k = materialize(k)  # key frame feeds totals, histogram, top-k
     t = k.agg(
         F.count(F.lit(1)).cast("long").alias("n_keys"),
         F.sum("c").cast("long").alias("total_rows"),
@@ -3682,7 +3683,7 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("lang").cast("long").alias("l_div"),
         )
     )
-    g = g.localCheckpoint()  # QI frame feeds the total and the histogram
+    g = materialize(g)  # QI frame feeds the total and the histogram
     t = g.agg(
         F.sum("gs").cast("long").alias("n_docs"),
         F.min("l_div").cast("long").alias("min_l"),
@@ -3774,7 +3775,7 @@ def linear_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
         "event_type",
         F.expr("cast(round(value * 100) as bigint)").alias("cents"),
     )
-    ev = ev.localCheckpoint()  # feeds the conversion and touch filters
+    ev = materialize(ev)  # feeds the conversion and touch filters
     conv = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("conv_id"),
         F.col("user_id").alias("cu"),

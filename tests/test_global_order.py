@@ -12,6 +12,7 @@ from flink_realtime_sessionize_sample_spark.operators.global_order import (
     ntile_from_rank,
     with_global_rank,
 )
+from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 
 
 def _sample(spark, n=997, seed=7):
@@ -328,8 +329,8 @@ def test_unrecognized_sort_rendering_raises(spark):
         _primary_key([F.upper(F.col("v")).desc()])
 
 
-def test_checkpoint_banded_identical_results(spark):
-    # checkpoint_banded only changes WHEN lineage is computed, never what
+def test_materialized_input_identical_results(spark):
+    # A pinned input only changes WHEN its lineage is computed, never what
     # the rank/cumsum pass produces.
     df = _sample(spark, n=600)
     kwargs = dict(
@@ -337,7 +338,7 @@ def test_checkpoint_banded_identical_results(spark):
     )
     keys = [F.col("amt").desc(), F.col("id").asc()]
     base = with_global_rank(df, keys, **kwargs)
-    ckpt = with_global_rank(df, keys, checkpoint_banded=True, **kwargs)
+    ckpt = with_global_rank(materialize(df), keys, **kwargs)
     assert ckpt.exceptAll(base).count() == 0
     assert base.exceptAll(ckpt).count() == 0
 

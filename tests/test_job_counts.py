@@ -47,11 +47,16 @@ def _noop(df):
 # (query, build jobs, exec jobs). Build: bpe_train_merges collects its
 # vocabulary (the word aggregate's shuffle stage + the top-k collect);
 # bpe_encode_corpus adds the lazy (doc, word) checkpoint's shuffle stage;
-# q5's table schemas are all cached after the warm call.
+# q5's table schemas are all cached after the warm call. The ccnet and
+# Newton–Schulz pins are lazy: their build jobs are the shuffle-map
+# stages AQE runs to plan each checkpoint, none is a job spent only to
+# pin a frame. Same counts at SPARK_GRAFT_CPUS 1, 4 and 32.
 _PINS = [
     ("bpe_train_merges", 2, 1),
     ("bpe_encode_corpus", 3, 4),
     ("local_supplier_volume_q5", 0, 7),
+    ("ccnet_perplexity_buckets", 4, 10),
+    ("zca_whitening_newton_schulz", 153, 9),
 ]
 
 

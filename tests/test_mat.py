@@ -1,14 +1,24 @@
-"""The r15 materialize() helpers must be SEMANTICS-NEUTRAL: a
-localCheckpoint pins physical reuse but may never change any row. Pinned
-here on the operator family whose internals lean on it hardest (the exact
-PPJoin pipeline with its aggregated positional/suffix bounds and the
-barrier-verified intersect) plus the iterative BPE trainer, by running
-each twice — checkpoints on vs SPARK_GRAFT_NO_MAT=1 — and requiring
-identical rows. This is also what licenses the plan-lint/shape tests to
-assert over the NO_MAT plan (tests/test_plan_lint.py)."""
+"""``materialize`` must be SEMANTICS-NEUTRAL: a pin changes physical
+reuse but never a row. Pinned here on the operator family whose
+internals lean on it hardest (the exact PPJoin pipeline with its
+aggregated positional/suffix bounds and the barrier-verified intersect),
+the iterative BPE trainer and a spread of registered queries whose
+fan-out frames are pinned, by running each twice — pins on vs
+SPARK_GRAFT_NO_MAT=1 — and requiring identical rows. This is also what
+licenses the plan-lint/shape tests to assert over the NO_MAT plan
+(tests/test_plan_lint.py). ``operators/mat.py`` is the only module that
+checkpoints a DataFrame; the last test enforces that.
+"""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
+import pytest
+
+import flink_realtime_sessionize_sample_spark as pkg
+from flink_realtime_sessionize_sample_spark import plans
 from flink_realtime_sessionize_sample_spark.operators import dedup as D
 from flink_realtime_sessionize_sample_spark.plans.llm_queries import bpe_train_frame
 
@@ -75,3 +85,54 @@ def test_connected_components_identical_with_and_without_checkpoints(
     assert with_mat == without
     labels = {n: l for n, l in with_mat}
     assert labels[4] == 1 and labels[6] == 5 and labels[8] == 8
+
+
+# One registered query per module that pins fan-out frames, plus the
+# Newton–Schulz loop (materialize_loop state), the pinned rank-pass input
+# and the pinned LSH pairs ahead of connected_components.
+_PINNED_QUERIES = [
+    "zca_whitening_newton_schulz",  # feature_queries
+    "ccnet_perplexity_buckets",  # llm_queries
+    "dedup_aware_split",  # llm_queries
+    "kendall_tau_chars_words",  # staging_r8
+    "t_closeness_audit",  # staging_r10
+    "goodman_kruskal_lambda_source_lang",  # staging_r11
+    "stream_e_value_monitor",  # staging_r11, pin over a replay sink table
+    "mood_median_test",  # staging_r12
+    "fligner_killeen_scale_by_source",  # staging_r13
+    "mantel_logrank_trend_tod",  # staging_r14
+    "prefix_filter_jaccard_join",  # round9_queries
+]
+
+
+def _query_rows(spark, sf_dir, name):
+    return sorted(map(tuple, plans.QUERIES[name](spark, sf_dir).collect()), key=repr)
+
+
+@pytest.mark.parametrize("name", _PINNED_QUERIES)
+def test_registered_query_identical_with_and_without_checkpoints(
+    spark, sf_small, monkeypatch, name
+):
+    with_mat = _query_rows(spark, sf_small, name)
+    monkeypatch.setenv("SPARK_GRAFT_NO_MAT", "1")
+    assert _query_rows(spark, sf_small, name) == with_mat
+    assert with_mat
+
+
+def test_only_mat_checkpoints():
+    """No package module but ``operators/mat.py`` calls ``.localCheckpoint(``
+    or ``.checkpoint(``: a direct pin is eager (one job while the query is
+    still being built) and hides its lineage from the NO_MAT plan lint."""
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "operators" / "mat.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, f"checkpoint outside operators/mat.py: {offenders}"

@@ -1,6 +1,5 @@
-"""Registry-wide physical-plan lint — the two invariants every one of the
-241 registered queries must satisfy, as a single test instead of a per-round
-grep:
+"""Registry-wide physical-plan lint — the two invariants every registered
+query must satisfy, as a single test instead of a per-module grep:
 
 * no ``BatchEvalPython`` — a row-at-a-time Python UDF in any query plan is
   the 10-100x slow path; every Python boundary in this repo is Arrow-
@@ -30,12 +29,13 @@ def _explain(df) -> str:
 
 
 def test_no_cartesian_or_rowwise_python_anywhere(spark, sf_small, monkeypatch):
-    # SPARK_GRAFT_NO_MAT: build every plan WITHOUT the r15 materialize()
-    # checkpoints — a localCheckpoint truncates the visible plan to an RDD
-    # leaf, which would blind this lint to everything inside the
-    # checkpointed lineage (the dedup candidate pipelines, the iterative
-    # BPE/kmeans/Weiszfeld states). The flag is plan-inspection-only:
-    # results are identical either way (operators/mat.py, test_mat.py).
+    # SPARK_GRAFT_NO_MAT: build every plan WITHOUT the materialize() pins
+    # — a localCheckpoint truncates the visible plan to an RDD leaf, which
+    # would blind this lint to everything inside the pinned lineage. Every
+    # pin in the package goes through operators/mat.py, so this covers
+    # every lineage except materialize_loop's per-round fixpoint state
+    # (whose round-1 input stays visible). Results are identical either
+    # way (test_mat.py).
     monkeypatch.setenv("SPARK_GRAFT_NO_MAT", "1")
     offenders = {}
     for name, fn in plans.QUERIES.items():

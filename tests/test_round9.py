@@ -429,11 +429,14 @@ from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
 
-def _tmp_sf(**tables) -> str:
-    d = tempfile.mkdtemp(prefix="r9_prop_")
-    for name, df in tables.items():
-        df.to_parquet(f"{d}/{name}.parquet", index=False)
-    return d
+def _query_rows(spark, name, **tables) -> list:
+    """Collect query ``name`` over ``tables`` written to a temp dir. The
+    dir is removed only after the rows are collected: the query's pins
+    are lazy, so its inputs are read at the collect."""
+    with tempfile.TemporaryDirectory(prefix="r9_prop_") as d:
+        for table, df in tables.items():
+            df.to_parquet(f"{d}/{table}.parquet", index=False)
+        return plans.QUERIES[name](spark, d).collect()
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
@@ -455,10 +458,9 @@ def test_runs_test_property_random_daily_cents(spark, cents):
         (i + 1, 1, "O", c / 100.0, f"2024-03-{i + 1:02d}", "1-URGENT")
         for i, c in enumerate(cents)
     ]
-    sf = _tmp_sf(orders=_orders_pdf(rows))
     runs = 1 + sum(1 for a, b in zip(signs, signs[1:]) if a != b)
     n = n1 + n2
-    out = plans.QUERIES["runs_test_daily_revenue"](spark, sf).collect()[0]
+    out = _query_rows(spark, "runs_test_daily_revenue", orders=_orders_pdf(rows))[0]
     assert (out["n1"], out["n2"], out["runs"]) == (n1, n2, runs)
     if n >= 2 and 2 * n1 * n2 * (2 * n1 * n2 - n) > 0:
         mean = 1 + 2 * n1 * n2 / n
@@ -481,7 +483,6 @@ def test_mutual_info_property_random_contingency(spark, pairs):
     rows = [
         (i + 1, "x", lang, src, 1) for i, (src, lang) in enumerate(pairs)
     ]
-    sf = _tmp_sf(documents=_docs_pdf(rows))
     cells = Counter((src, lang) for src, lang in pairs)
     N = len(pairs)
     ns = Counter(src for src, _ in pairs)
@@ -490,7 +491,7 @@ def test_mutual_info_property_random_contingency(spark, pairs):
         (c / N) * math.log(c * N / (ns[s] * nl[l]))
         for (s, l), c in cells.items()
     )
-    out = plans.QUERIES["mutual_info_source_lang"](spark, sf).collect()[0]
+    out = _query_rows(spark, "mutual_info_source_lang", documents=_docs_pdf(rows))[0]
     assert out["n_cells"] == len(cells)
     assert abs(out["mi_nats"] - mi) < 1e-5
     assert out["mi_nats"] >= -1e-9  # MI is nonnegative
@@ -522,9 +523,8 @@ def test_kaplan_meier_property_monotone_and_risk_consistent(spark, vals):
     eid += 1
     far = 10000 * (len(vals) + 2)
     ev.append((eid, (base + pd.Timedelta(seconds=far)).isoformat(), 9999, "view", 1.0, "{}"))
-    sf = _tmp_sf(events=_events_pdf(ev))
     out = sorted(
-        plans.QUERIES["kaplan_meier_session_survival"](spark, sf).collect(),
+        _query_rows(spark, "kaplan_meier_session_survival", events=_events_pdf(ev)),
         key=lambda r: r["t_sec"],
     )
     assume(out)

@@ -354,11 +354,14 @@ from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
 
-def _tmp_sf(**tables) -> str:
-    d = tempfile.mkdtemp(prefix="staged_prop_")
-    for name, df in tables.items():
-        df.to_parquet(f"{d}/{name}.parquet", index=False)
-    return d
+def _query_rows(spark, name, **tables) -> list:
+    """Collect query ``name`` over ``tables`` written to a temp dir. The
+    dir is removed only after the rows are collected: the query's pins
+    are lazy, so its inputs are read at the collect."""
+    with tempfile.TemporaryDirectory(prefix="staged_prop_") as d:
+        for table, df in tables.items():
+            df.to_parquet(f"{d}/{table}.parquet", index=False)
+        return plans.QUERIES[name](spark, d).collect()
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
@@ -370,7 +373,6 @@ def test_wasserstein_property_random_lengths(spark, lengths):
     a = sorted(r[4] for r in rows if _h48(str(r[0])) % 2 == 0)
     b = sorted(r[4] for r in rows if _h48(str(r[0])) % 2 == 1)
     assume(a and b)
-    sf = _tmp_sf(documents=_docs_pdf(rows))
     na, nb = len(a), len(b)
     vals = sorted(set(a) | set(b))
     w1, ks = Fraction(0), Fraction(0)
@@ -383,7 +385,7 @@ def test_wasserstein_property_random_lengths(spark, lengths):
         cb += b.count(v)
         ks = max(ks, abs(Fraction(ca, na) - Fraction(cb, nb)))
         prev = v
-    out = plans.QUERIES["wasserstein_split_drift"](spark, sf).collect()[0]
+    out = _query_rows(spark, "wasserstein_split_drift", documents=_docs_pdf(rows))[0]
     assert out["n_a"] == na and out["n_b"] == nb
     assert abs(out["w1_chars"] - float(w1)) < 5e-4
     assert abs(out["ks_d"] - float(ks)) < 2e-6
@@ -405,7 +407,6 @@ def test_kendall_property_random_grids(spark, pts):
         (i + 1, " ".join(f"w{j}" for j in range(by * 16 + 1)), "en", "s", bx * 64)
         for i, (bx, by) in enumerate(pts)
     ]
-    sf = _tmp_sf(documents=_docs_pdf(rows))
     grid = [(bx, (by * 16 + 1) // 16) for bx, by in pts]
     conc = disc = tx = ty = 0
     n = len(grid)
@@ -420,7 +421,7 @@ def test_kendall_property_random_grids(spark, pts):
             elif dx * dy < 0:
                 disc += 1
     n0 = n * (n - 1) // 2
-    out = plans.QUERIES["kendall_tau_chars_words"](spark, sf).collect()[0]
+    out = _query_rows(spark, "kendall_tau_chars_words", documents=_docs_pdf(rows))[0]
     assert (out["concordant"], out["discordant"]) == (conc, disc)
     assert (out["ties_x_pairs"], out["ties_y_pairs"]) == (tx, ty)
     if n0 - tx <= 0 or n0 - ty <= 0:
@@ -444,7 +445,6 @@ def test_theil_sen_property_random_daily_counts(spark, daily):
             rows.append(
                 (eid, f"2024-03-{d + 1:02d} 06:{k % 60:02d}:07", 7, "view", 1.0, "{}")
             )
-    sf = _tmp_sf(events=_events_pdf(rows))
     days = list(range(len(daily)))
     slopes = sorted(
         Fraction(daily[j] - daily[i], j - i) for i in days for j in days if j > i
@@ -455,7 +455,7 @@ def test_theil_sen_property_random_daily_counts(spark, daily):
         if m % 2
         else Fraction(slopes[m // 2 - 1] + slopes[m // 2], 2)
     )
-    out = plans.QUERIES["theil_sen_daily_trend"](spark, sf).collect()[0]
+    out = _query_rows(spark, "theil_sen_daily_trend", events=_events_pdf(rows))[0]
     assert out["n_pairs"] == m
     assert abs(out["theil_sen_slope"] - float(med)) < 2e-6
 
