@@ -22,16 +22,19 @@ The size/duration caps make exact sessionization inherently sequential
 *within* a gap-session (each cut moves the anchor the next cut is measured
 from) — not expressible in window functions. But the whole cut chain is
 **forward-only**, so the operator is ONE shuffle on the key, ONE
-in-partition sort, and ONE Arrow-streamed ``mapInPandas`` pass with O(1)
-state carried across batches (``sessionize``). The cut chain itself is one
-numpy kernel, ``make_session_kernel``: rows sorted by key and time plus a
-carried state per key in, per-row session start/duration plus state out.
-Batch carries state between Arrow batches; the streaming sessionizer
-(``streaming.sessionize_stream_bucketed``) carries it between micro-batches.
-The common case is pure vectorized numpy; only cap-tripping segments loop.
-The gap-only rule IS window-expressible and ships as the zero-Python
-``sessionize_gap_only`` — the shape Catalyst optimizes end-to-end — for
-workloads that don't need the caps.
+in-partition sort, and ONE scalar-iterator ``pandas_udf`` pass with O(1)
+state carried across Arrow batches (``sessionize``). Only two columns cross
+the Arrow/Python boundary — the key and ``unix_micros(ts)`` — and only two
+come back (session start micros, duration); every other column stays in the
+JVM, where Catalyst prunes whatever the consumer never reads. The cut chain
+itself is one numpy kernel, ``make_session_kernel``: rows sorted by key and
+time plus a carried state per key in, per-row session start/duration plus
+state out. Batch carries state between Arrow batches; the streaming
+sessionizer (``streaming.sessionize_stream_bucketed``) carries it between
+micro-batches. The common case is pure vectorized numpy; only cap-tripping
+segments loop. The gap-only rule IS window-expressible and ships as the
+zero-Python ``sessionize_gap_only`` — the shape Catalyst optimizes
+end-to-end — for workloads that don't need the caps.
 
 Late data: batch mode sorts by ``(ts, tiebreaker)`` within key, which is the
 deterministic formulation the oracle checks (SURVEY §2.4 — the reference's
@@ -41,13 +44,12 @@ with MAX(duration); after that collapse, both formulations agree).
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Iterator, Tuple
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 # Constants from SessionizeGroupMapFunction.scala:113-115 (intended units).
 GAP_SECONDS = 1800
@@ -189,49 +191,40 @@ def sessionize(
     reference's ``"{ip}-{timestamp}"`` (quirk Q8), using the numeric instant so
     Spark and DuckDB render identically.
 
-    Implementation: ONE shuffle on ``key``, ONE in-partition sort, ONE
-    Arrow-streamed ``mapInPandas`` pass through ``make_session_kernel``. The
-    cut chain (SessionizeGroupMapFunction.scala:35-83) is **forward-only** —
-    every event's session assignment depends only on earlier events of the
-    same key — so a single streaming pass that hands the last key run's
-    carry-out to the next Arrow batch computes it exactly; nothing ever needs
-    to look ahead or buffer. This replaced a window-function fast-path +
-    ``applyInPandas`` refinement design whose DAG branch point recomputed the
-    sort+window stack per branch (Catalyst column pruning specializes each
-    branch's subtree, defeating ReuseExchange) — measured 1.9× slower than
-    this single pass at 1M rows / local[32].
-    """
-    tiebreakers = list(tiebreakers)
-    in_cols = list(df.columns)
-    # Fresh StructType — StructType.add MUTATES in place, and df.schema is
-    # cached on the DataFrame, so .add would corrupt the caller's df.
-    # The kernel emits the numeric session start; session_id's string concat
-    # happens JVM-side after the pass (codegen'd, and the Arrow return ships
-    # one int64 instead of a string column).
-    kernel_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("_start_us", LongType(), False),
-            StructField("duration", IntegerType(), False),
-        ]
-    )
+    Implementation: ONE shuffle on ``key``, ONE in-partition sort on
+    ``(key, ts, *tiebreakers)``, then ONE scalar-iterator ``pandas_udf``
+    over just ``(key, unix_micros(ts))`` that returns
+    ``struct<start_us bigint, duration int>`` per row through
+    ``make_session_kernel``. The cut chain (SessionizeGroupMapFunction.scala:35-83)
+    is **forward-only** — every event's session assignment depends only on
+    earlier events of the same key — so a single streaming pass that hands
+    the last key run's carry-out to the next Arrow batch computes it exactly;
+    nothing ever needs to look ahead or buffer. ``session_id``'s string
+    concat happens JVM-side after the pass.
 
-    d = (
-        df.withColumn("_us", F.unix_micros(F.col(ts)))
-        .repartition(F.col(key))
-        .sortWithinPartitions(key, ts, *tiebreakers)
-    )
+    The UDF is a projection, so the other input columns never cross the
+    Arrow boundary and Catalyst prunes the ones the consumer drops (a
+    ``mapInPandas`` pass would hide its columns from Catalyst and ship them
+    all through Python and back). The UDF is marked nondeterministic because
+    its result depends on row ORDER, which Catalyst does not model for a
+    deterministic expression: with a deterministic UDF, ``EliminateSorts``
+    removes the in-partition ``Sort`` under an order-insensitive consumer
+    such as ``user_total_durations`` and the kernel silently sessionizes
+    rows in file order. Nondeterminism also keeps a filter on the output
+    above the kernel, where it cannot change which events a session sees.
+    """
     key_runs, cut_sessions = make_session_kernel(gap_seconds, max_events, max_duration_seconds)
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+    def run(batches: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         ck = carry = None  # last key of the previous batch and its carry-out
-        for pdf in batches:
-            if len(pdf) == 0:
+        for keys, us in batches:
+            if len(keys) == 0:
+                yield pd.DataFrame({"start_us": us, "duration": us.astype("int32")})
                 continue
-            k = pdf[key].to_numpy()
-            us = pdf.pop("_us").to_numpy()
+            k = keys.to_numpy()
+            us = us.to_numpy()
             # floor-division == the reference's ts/1000 integer math (_sec)
             sec = us // 1_000_000
             r0 = key_runs(k)
@@ -240,17 +233,22 @@ def sessionize(
                 c[:, 0] = carry
             start_us, dur, c = cut_sessions(r0, sec, us, c)
             ck, carry = k[-1], c[:, -1]
-            pdf["_start_us"] = start_us
-            pdf["duration"] = dur.astype("int32")
-            yield pdf
+            yield pd.DataFrame({"start_us": start_us, "duration": dur.astype("int32")})
 
-    out = d.mapInPandas(run, schema=kernel_schema)
-    return out.select(
-        *in_cols,
-        F.concat_ws("-", F.col(key).cast("string"), F.col("_start_us").cast("string")).alias(
+    kernel = F.pandas_udf(run, "start_us bigint, duration int").asNondeterministic()
+    s = (
+        df.repartition(F.col(key))
+        .sortWithinPartitions(key, ts, *tiebreakers)
+        .withColumn("_session", kernel(F.col(key), F.unix_micros(F.col(ts))))
+    )
+    return s.select(
+        *df.columns,
+        F.concat_ws("-", F.col(key).cast("string"), F.col("_session.start_us").cast("string")).alias(
             "session_id"
         ),
-        "duration",
+        # The kernel never returns a null; coalesce only restores the
+        # non-nullable ``duration`` of the output schema.
+        F.coalesce(F.col("_session.duration"), F.lit(0)).alias("duration"),
     )
 
 

@@ -6,10 +6,13 @@ field 0 as the verbatim timestamp string, parse it to epoch instants, and
 keep field 2 as the client address (the session key). The joda pattern is
 ``yyyy-MM-dd'T'HH:mm:ss.SSSZZ`` (``Parse.scala:8``).
 
-Spark-first formulation: the ``Option``/``flatMap`` becomes a
-``filter(size(tokens) == 15)`` plus a projection — all JVM-side built-ins,
-fully inside whole-stage codegen, so Catalyst prunes the untouched 12 fields
-before they ever materialize.
+Spark-first formulation: the ``Option``/``flatMap`` becomes a filter plus a
+projection, all JVM-side built-ins inside whole-stage codegen. The filter
+splits each line once, with a limit of 16: 15 elements means exactly 15
+fields, a 16th means more (everything past the 15th space stays one string).
+The projection cuts fields 0 and 2 out with ``substring_index`` and builds
+no array. Catalyst does not prune the elements of a ``split`` array, and a
+``split`` read by both the filter and the projection is built by each.
 
 ``fake_ts_shift`` is the reference's ``--debug`` replay shift
 (``Parse.scala:19-21``, applied at ``RealtimeSessionize.scala:124-128``).
@@ -35,15 +38,12 @@ def parse_access_logs(lines: DataFrame, value_col: str = "value") -> DataFrame:
     TimestampType (the reference keeps epoch millis in a Long; a timestamp
     column is the Spark-native equivalent and converts losslessly).
     """
-    toks = F.split(F.col(value_col), " ")
-    return (
-        lines.select(toks.alias("_toks"))
-        .filter(F.size("_toks") == N_FIELDS)
-        .select(
-            F.col("_toks")[0].alias("timestamp"),
-            F.to_timestamp(F.col("_toks")[0]).alias("ts"),
-            F.col("_toks")[2].alias("ip"),
-        )
+    v = F.col(value_col)
+    field0 = F.substring_index(v, " ", 1)
+    return lines.filter(F.size(F.split(v, " ", N_FIELDS + 1)) == N_FIELDS).select(
+        field0.alias("timestamp"),
+        F.to_timestamp(field0).alias("ts"),
+        F.substring_index(F.substring_index(v, " ", 3), " ", -1).alias("ip"),
     )
 
 

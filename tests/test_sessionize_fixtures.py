@@ -159,6 +159,39 @@ def test_f12_malformed_lines_dropped(spark):
     assert out[0].ts is not None
 
 
+def test_parse_keeps_exactly_the_lines_a_full_split_keeps(spark):
+    """The one-split filter and the ``substring_index`` fields agree with
+    splitting every line on single spaces: 14, 15 and 16 fields, empty fields
+    from double spaces, and a trailing space (one more, empty, field)."""
+    from flink_realtime_sessionize_sample_spark.sources.logs import parse_access_logs
+
+    ts = "2024-01-01T00:00:00.000000Z"
+    fill = [f"f{i}" for i in range(13)]
+    values = [
+        " ".join([ts, "a", "1.2.3.4:80"] + fill[:n - 3]) for n in (14, 15, 16)
+    ] + [
+        " ".join([ts, "a", "1.2.3.4:81"] + fill[:11]) + " ",  # 14 + trailing space: 15
+        " ".join([ts, "a", "1.2.3.4:82"] + fill[:12]) + " ",  # 15 + trailing space: 16
+        " ".join([ts, "", "1.2.3.4:83"] + fill[:12]),  # empty field 1
+        " ".join([ts, "a", ""] + fill[:12]),  # empty field 2
+        " ".join([ts, "a", "1.2.3.4:85", ""] + fill[:11]),  # 15, empty field 3
+        " ".join([ts, "a", "1.2.3.4:86", "", ""] + fill[:11]),  # 16, two empty
+        " ".join([ts, "a", "1.2.3.4:87"] + fill[:12]).replace(" f5 ", "  "),  # double space: 15
+        " ".join([ts, "a", "1.2.3.4:88"] + fill[:11]).replace(" f5 ", "  "),  # double space: 14
+        "",
+    ]
+    lines = spark.createDataFrame([(v,) for v in values], "value string")
+    toks = F.split("value", " ")
+    old = lines.filter(F.size(toks) == 15).select(
+        toks[0].alias("timestamp"), F.to_timestamp(toks[0]).alias("ts"), toks[2].alias("ip")
+    )
+    got = sorted(parse_access_logs(lines).collect(), key=repr)
+    assert got == sorted(old.collect(), key=repr)
+    assert {r.ip for r in got} == {
+        "1.2.3.4:80", "1.2.3.4:81", "1.2.3.4:83", "", "1.2.3.4:85", "1.2.3.4:87"
+    }
+
+
 def test_mixed_gap_and_caps_across_users(spark):
     # user 1: plain gap cut; user 2: size-cap path; both in one frame so the
     # fast/refined union is exercised together.

@@ -151,3 +151,38 @@ def test_kernel_late_row_cap_cut_drops_carried_last():
     assert got == reference_sessionize(rows, chunks=chunks, max_events=3)
     assert got[3] == (f"1-{50 * s}", 0)
     assert got[4] == (f"1-{1851 * s}", 0)
+
+
+@pytest.mark.parametrize(
+    "key_type, keys",
+    [("string", ["10.0.0.7:80", "10.0.0.8:443", "10.0.1.7:80"]), ("long", [7, 8, 1007])],
+)
+def test_key_run_straddling_arrow_batches_matches_reference(spark, key_type, keys):
+    """With 3 rows per Arrow batch, every key's 11-row run spans 4 batches,
+    and gap, event-cap and duration-cap cuts fall inside and across them;
+    the carry between batches must make that invisible."""
+    caps = {"max_events": 4, "max_duration_seconds": 6}
+    deltas_s = [0, 1, 1801, 5, 5, 0, 3000, 2, 2, 2, 2]
+    events, eid = [], 0
+    for key in keys:
+        us = BASE_US
+        for d in deltas_s:
+            us += d * 1_000_000
+            events.append((key, us, eid))
+            eid += 1
+    df = spark.createDataFrame(
+        [(k, dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=us), e) for k, us, e in events],
+        f"user_id {key_type}, ts timestamp, event_id long",
+    )
+    old = spark.conf.get(_ARROW_BATCH, None)
+    spark.conf.set(_ARROW_BATCH, "3")
+    try:
+        rows = sessionize(df, **caps).collect()
+    finally:
+        if old is None:
+            spark.conf.unset(_ARROW_BATCH)
+        else:
+            spark.conf.set(_ARROW_BATCH, old)
+    got = {r["event_id"]: (r["session_id"], r["duration"]) for r in rows}
+    assert got == reference_sessionize(events, **caps)
+    assert len({s for s, _ in got.values()}) > 3 * len(keys)

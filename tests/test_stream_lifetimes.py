@@ -69,35 +69,41 @@ def test_stream_query_list_is_complete():
     assert starts == set(STREAM_QUERIES)
 
 
-def _snapshot(spark) -> tuple[set[str], set[str]]:
-    return set(os.listdir(tempfile.gettempdir())), _temp_views(spark)
+@pytest.fixture
+def own_tempdir(tmp_path, monkeypatch) -> str:
+    """Point ``tempfile`` (and so ``streaming/replay.scratch_dir``) at a fresh
+    directory of this test's own, so a file another process writes to the
+    system temp dir meanwhile cannot fail the diff."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return str(tmp_path)
 
 
-def _assert_cleaned_up(spark, name: str, before: tuple[set[str], set[str]]) -> None:
+def _snapshot(spark, tmp: str) -> tuple[set[str], set[str]]:
+    return set(os.listdir(tmp)), _temp_views(spark)
+
+
+def _assert_cleaned_up(spark, name: str, tmp: str, before: tuple[set[str], set[str]]) -> None:
     tmp_before, views_before = before
     allowed = JVM_ONCE_PREFIXES
     if name == "pipeline_json_sink_roundtrip":
         allowed += (PIPELINE_OUT_PREFIX,)
-    new_tmp = {
-        e for e in set(os.listdir(tempfile.gettempdir())) - tmp_before
-        if not e.startswith(allowed)
-    }
-    assert not new_tmp, f"{name} left {sorted(new_tmp)} in {tempfile.gettempdir()}"
+    new_tmp = {e for e in set(os.listdir(tmp)) - tmp_before if not e.startswith(allowed)}
+    assert not new_tmp, f"{name} left {sorted(new_tmp)} in {tmp}"
     assert _temp_views(spark) == views_before
     assert not spark.streams.active
 
 
 @pytest.mark.parametrize("name", STREAM_QUERIES)
-def test_stream_query_cleans_up(spark, sf_small, name):
-    before = _snapshot(spark)
+def test_stream_query_cleans_up(spark, sf_small, name, own_tempdir):
+    before = _snapshot(spark, own_tempdir)
     compare_query(spark, name, sf_small)
-    _assert_cleaned_up(spark, name, before)
+    _assert_cleaned_up(spark, name, own_tempdir, before)
 
 
 @pytest.mark.parametrize("name", STREAM_QUERIES)
-def test_stream_query_hang_raises(spark, sf_small, name, monkeypatch):
+def test_stream_query_hang_raises(spark, sf_small, name, monkeypatch, own_tempdir):
     monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
-    before = _snapshot(spark)
+    before = _snapshot(spark, own_tempdir)
     with pytest.raises(RuntimeError):
         plans.QUERIES[name](spark, sf_small)
-    _assert_cleaned_up(spark, name, before)
+    _assert_cleaned_up(spark, name, own_tempdir, before)
