@@ -14,8 +14,16 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_SF_ORACLE", "/root/testdata/sf0.01")
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark(app_name="tests", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # The JVM's temp dir (codec libraries, temporary streaming checkpoints)
+    # is the test session's own, so tests can diff it without seeing files
+    # other processes write to the system temp dir.
+    jvm_tmp = tmp_path_factory.mktemp("jvm-tmp")
+    s = get_spark(
+        app_name="tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={jvm_tmp}"},
+    )
     yield s
 
 

@@ -78,17 +78,25 @@ def own_tempdir(tmp_path, monkeypatch) -> str:
     return str(tmp_path)
 
 
-def _snapshot(spark, tmp: str) -> tuple[set[str], set[str]]:
-    return set(os.listdir(tmp)), _temp_views(spark)
+def _temp_dirs(spark, py_tmp: str) -> tuple[str, str]:
+    """The Python temp dir and the JVM's (where Spark makes the
+    ``temporary-*`` checkpoint dirs of streams started without a
+    ``checkpointLocation``); the test session gives the JVM its own."""
+    return py_tmp, spark.sparkContext._jvm.java.lang.System.getProperty("java.io.tmpdir")
 
 
-def _assert_cleaned_up(spark, name: str, tmp: str, before: tuple[set[str], set[str]]) -> None:
-    tmp_before, views_before = before
+def _snapshot(spark, tmp: str) -> tuple[dict[str, set[str]], set[str]]:
+    return {d: set(os.listdir(d)) for d in _temp_dirs(spark, tmp)}, _temp_views(spark)
+
+
+def _assert_cleaned_up(spark, name: str, before: tuple[dict[str, set[str]], set[str]]) -> None:
+    dirs_before, views_before = before
     allowed = JVM_ONCE_PREFIXES
     if name == "pipeline_json_sink_roundtrip":
         allowed += (PIPELINE_OUT_PREFIX,)
-    new_tmp = {e for e in set(os.listdir(tmp)) - tmp_before if not e.startswith(allowed)}
-    assert not new_tmp, f"{name} left {sorted(new_tmp)} in {tmp}"
+    for d, entries in dirs_before.items():
+        new = {e for e in set(os.listdir(d)) - entries if not e.startswith(allowed)}
+        assert not new, f"{name} left {sorted(new)} in {d}"
     assert _temp_views(spark) == views_before
     assert not spark.streams.active
 
@@ -97,7 +105,7 @@ def _assert_cleaned_up(spark, name: str, tmp: str, before: tuple[set[str], set[s
 def test_stream_query_cleans_up(spark, sf_small, name, own_tempdir):
     before = _snapshot(spark, own_tempdir)
     compare_query(spark, name, sf_small)
-    _assert_cleaned_up(spark, name, own_tempdir, before)
+    _assert_cleaned_up(spark, name, before)
 
 
 @pytest.mark.parametrize("name", STREAM_QUERIES)
@@ -106,4 +114,4 @@ def test_stream_query_hang_raises(spark, sf_small, name, monkeypatch, own_tempdi
     before = _snapshot(spark, own_tempdir)
     with pytest.raises(RuntimeError):
         plans.QUERIES[name](spark, sf_small)
-    _assert_cleaned_up(spark, name, own_tempdir, before)
+    _assert_cleaned_up(spark, name, before)
