@@ -748,7 +748,7 @@ def main() -> None:
     # the clones, so the ratio measures the plan: explode + one
     # fingerprint exchange + broadcast bench join.
     from flink_realtime_sessionize_sample_spark.operators.dedup import fan_out
-    from flink_realtime_sessionize_sample_spark.plans.staging_r11 import (
+    from flink_realtime_sessionize_sample_spark.plans.corpus_stats_queries import (
         _winnow_contamination_frame,
     )
 
@@ -824,7 +824,7 @@ def main() -> None:
     # round-13 close: 133.0 s 1x / 154.3 s 10x, ratio 0.116 — recorded
     # in SURVEY; the REGISTERED query keeps the exact 2dp domain).
     from flink_realtime_sessionize_sample_spark.functions import text as TXT
-    from flink_realtime_sessionize_sample_spark.plans.staging_r13 import _hl_frame
+    from flink_realtime_sessionize_sample_spark.plans.hypothesis_test_queries import _hl_frame
 
     ev_hl = load_table(spark, sf_dir, "events").select(
         F.expr(f"pmod({TXT.h48_spark('cast(user_id as string)')}, 2)").alias("arm"),

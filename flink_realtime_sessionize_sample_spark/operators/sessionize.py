@@ -180,7 +180,6 @@ def sessionize(
     key: str = "user_id",
     ts: str = "ts",
     tiebreakers: Iterable[str] = ("event_id",),
-    gap_seconds: int = GAP_SECONDS,
     max_events: int = MAX_SESSION_EVENTS,
     max_duration_seconds: int = MAX_SESSION_DURATION_SECONDS,
 ) -> DataFrame:
@@ -213,7 +212,9 @@ def sessionize(
     rows in file order. Nondeterminism also keeps a filter on the output
     above the kernel, where it cannot change which events a session sees.
     """
-    key_runs, cut_sessions = make_session_kernel(gap_seconds, max_events, max_duration_seconds)
+    key_runs, cut_sessions = make_session_kernel(
+        max_events=max_events, max_duration_seconds=max_duration_seconds
+    )
 
     def run(batches: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -280,15 +281,15 @@ def sessionize_gap_only(
     key: str = "user_id",
     ts: str = "ts",
     tiebreakers: Iterable[str] = ("event_id",),
-    gap_seconds: int = GAP_SECONDS,
 ) -> DataFrame:
-    """Pure window-function sessionization with only the inactivity-gap rule.
+    """Pure window-function sessionization with only the inactivity-gap rule
+    (``GAP_SECONDS``).
 
     This is the canonical single-shuffle, zero-Python formulation — the shape
     Catalyst optimizes end-to-end — and matches the reference whenever no
     session reaches the 1499-event / 12 h caps.
     """
-    return _gap_window(df, key, ts, tiebreakers, F.lit(gap_seconds))
+    return _gap_window(df, key, ts, tiebreakers, F.lit(GAP_SECONDS))
 
 
 def session_durations(sessionized: DataFrame, key: str = "user_id") -> DataFrame:

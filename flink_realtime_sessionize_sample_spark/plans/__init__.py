@@ -18,12 +18,9 @@ from flink_realtime_sessionize_sample_spark.plans import analytics_queries  # no
 from flink_realtime_sessionize_sample_spark.plans import tpch_queries  # noqa: F401
 from flink_realtime_sessionize_sample_spark.plans import feature_queries  # noqa: F401
 from flink_realtime_sessionize_sample_spark.plans import ml_eval_queries  # noqa: F401
-from flink_realtime_sessionize_sample_spark.plans import staging_r8  # noqa: F401
-from flink_realtime_sessionize_sample_spark.plans import round9_queries  # noqa: F401
-from flink_realtime_sessionize_sample_spark.plans import staging_r10  # noqa: F401
-from flink_realtime_sessionize_sample_spark.plans import staging_r11  # noqa: F401
-from flink_realtime_sessionize_sample_spark.plans import staging_r12  # noqa: F401
-from flink_realtime_sessionize_sample_spark.plans import staging_r13  # noqa: F401
-from flink_realtime_sessionize_sample_spark.plans import staging_r14  # noqa: F401
+from flink_realtime_sessionize_sample_spark.plans import hypothesis_test_queries  # noqa: F401
+from flink_realtime_sessionize_sample_spark.plans import corpus_stats_queries  # noqa: F401
+from flink_realtime_sessionize_sample_spark.plans import experiment_queries  # noqa: F401
+from flink_realtime_sessionize_sample_spark.plans import survival_queries  # noqa: F401
 
 __all__ = ["QUERIES", "ORACLES", "query"]

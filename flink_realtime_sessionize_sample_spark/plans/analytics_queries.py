@@ -2839,7 +2839,7 @@ _AS_ERFC_POLY = (
 # The per-segment two-proportion p-value battery (seg -> per -> zs ->
 # xt -> pv), shared by ab_segment_bh_fdr and the staged FDR-family
 # siblings (Storey pi0/q-values, Benjamini-Yekutieli — plans/
-# staging_r14.py): 20 segments (event_type x user bucket), arm =
+# experiment_queries.py): 20 segments (event_type x user bucket), arm =
 # event_id % 2, a planted treatment effect in the arm-1 purchase
 # segments, z from the pooled two-proportion test, p = erfc(|z|/sqrt 2)
 # via the shared A&S polynomial on the ROUNDED z. Factored at round 13
@@ -2990,7 +2990,7 @@ def _ab_seg_pvalues(events: DataFrame) -> DataFrame:
     frame — the Spark twin of ``_AB_SEG_P_CTES`` (ends at the ``pv``
     shape: segment, n0, c0, n1, c1, z_stat, p_value). Shared by
     ``ab_segment_bh_fdr`` and the staged FDR-family siblings
-    (plans/staging_r14.py); factored at round 13."""
+    (plans/experiment_queries.py); factored at round 13."""
     ev = events.select(
         F.concat(
             F.col("event_type"), F.lit("_"), (F.col("user_id") % 4).cast("string")
@@ -3088,7 +3088,7 @@ _CHISQ_Z = (
 # e9-quantized through shared text (double-promoted products inside —
 # int64 ns*nl overflows near 1e12 docs; the double product is correctly
 # rounded in both engines). SINGLE SOURCE OF TRUTH: cramers_v_source_lang
-# (plans/staging_r10.py, where the full-grid form was first proven)
+# (plans/hypothesis_test_queries.py, where the full-grid form was first proven)
 # imports this constant, so the two queries' statistics can never
 # desynchronize.
 _CHISQ_CELL_E9 = (
@@ -3212,7 +3212,7 @@ def chisq_source_language(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to the observed cells, absent cells coalesced to 0), in the
     cross-multiplied per-cell form ``_CHISQ_CELL_E9`` whose obs = 0 branch
     reduces exactly to the expected mass — the recipe first proven in the
-    staged ``cramers_v_source_lang`` (plans/staging_r10.py). Pinned by an
+    staged ``cramers_v_source_lang`` (plans/hypothesis_test_queries.py). Pinned by an
     incomplete-grid brute-force test (a synthetic corpus with a
     structurally absent cell) in tests/test_plans.py, so the bug class is
     now caught by intent, not parity.

@@ -4,7 +4,13 @@ Reference contract (``processes/Parse.scala:10-17``): split each line on a
 single space; silently DROP lines that don't have exactly 15 fields; keep
 field 0 as the verbatim timestamp string, parse it to epoch instants, and
 keep field 2 as the client address (the session key). The joda pattern is
-``yyyy-MM-dd'T'HH:mm:ss.SSSZZ`` (``Parse.scala:8``).
+``yyyy-MM-dd'T'HH:mm:ss.SSSZZ`` (``Parse.scala:8``); Spark's timestamp cast
+reads the same ISO-offset form.
+
+A 15-field line whose field 0 is not a timestamp (empty, or any other text)
+is dropped like a wrong-field-count line: ``try_to_timestamp`` gives NULL
+where the reference's joda parse would throw, and one such line must not
+fail the whole job. Valid lines parse exactly as ``to_timestamp`` does.
 
 Spark-first formulation: the ``Option``/``flatMap`` becomes a filter plus a
 projection, all JVM-side built-ins inside whole-stage codegen. The filter
@@ -13,19 +19,15 @@ fields, a 16th means more (everything past the 15th space stays one string).
 The projection cuts fields 0 and 2 out with ``substring_index`` and builds
 no array. Catalyst does not prune the elements of a ``split`` array, and a
 ``split`` read by both the filter and the projection is built by each.
-
-``fake_ts_shift`` is the reference's ``--debug`` replay shift
-(``Parse.scala:19-21``, applied at ``RealtimeSessionize.scala:124-128``).
+Catalyst pushes the ``ts IS NOT NULL`` filter below the projection, so the
+timestamp parse runs in both.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# joda "yyyy-MM-dd'T'HH:mm:ss.SSSZZ" ≙ Spark's ISO-offset pattern; the test
-# lines carry 6 fractional digits, which Spark parses with SSSSSS.
-TIMESTAMP_PATTERN = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS[XXX][X]"
 N_FIELDS = 15
 
 
@@ -33,28 +35,23 @@ def parse_access_logs(lines: DataFrame, value_col: str = "value") -> DataFrame:
     """``DataFrame[value: string]`` → ``DataFrame[timestamp, ts, ip]``.
 
     Mirrors ``Parse.parse`` (``Parse.scala:10-17``): malformed lines (field
-    count != 15) are dropped, well-formed lines project to the 3-column
+    count != 15, or a field 0 that does not parse as a timestamp) are
+    dropped, well-formed lines project to the 3-column
     ``Parsed`` schema (``schema/Parsed.scala:3``) with ``ts`` as a proper
     TimestampType (the reference keeps epoch millis in a Long; a timestamp
     column is the Spark-native equivalent and converts losslessly).
     """
     v = F.col(value_col)
     field0 = F.substring_index(v, " ", 1)
-    return lines.filter(F.size(F.split(v, " ", N_FIELDS + 1)) == N_FIELDS).select(
-        field0.alias("timestamp"),
-        F.to_timestamp(field0).alias("ts"),
-        F.substring_index(F.substring_index(v, " ", 3), " ", -1).alias("ip"),
+    return (
+        lines.filter(F.size(F.split(v, " ", N_FIELDS + 1)) == N_FIELDS)
+        .select(
+            field0.alias("timestamp"),
+            F.try_to_timestamp(field0).alias("ts"),
+            F.substring_index(F.substring_index(v, " ", 3), " ", -1).alias("ip"),
+        )
+        .filter(F.col("ts").isNotNull())
     )
-
-
-def fake_ts_shift(df: DataFrame, offset_seconds: Column | float, ts_col: str = "ts") -> DataFrame:
-    """Debug replay shift: add a constant offset to event time.
-
-    ≙ ``Parse.fakeTs`` (``Parse.scala:19-21``) which adds ``now() − baseline``
-    so historical logs replay as if live.
-    """
-    off = offset_seconds if isinstance(offset_seconds, Column) else F.lit(offset_seconds)
-    return df.withColumn(ts_col, F.timestamp_seconds(F.unix_micros(F.col(ts_col)) / 1e6 + off))
 
 
 def synthesize_access_log_lines(events: DataFrame, malformed_every: int = 50) -> DataFrame:

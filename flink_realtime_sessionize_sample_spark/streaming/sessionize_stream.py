@@ -51,17 +51,15 @@ from pyspark.sql.types import (
 )
 
 from flink_realtime_sessionize_sample_spark.operators.sessionize import (
-    GAP_SECONDS,
     MAX_SESSION_DURATION_SECONDS,
-    MAX_SESSION_EVENTS,
     make_session_kernel,
 )
 
 STATE_TTL_MS = MAX_SESSION_DURATION_SECONDS * 1000  # 12 h, :93-104
 
-# Default coarse-key bucket count for sessionize_stream_bucketed. The
+# Coarse-key bucket count of sessionize_stream_bucketed. The
 # reference keys by ``ip.hashCode % 1200`` with parallelism 120 (10 buckets
-# per subtask, conf/sessionize.conf:19); we default to 4 buckets per local
+# per subtask, conf/sessionize.conf:19); we use 4 buckets per local
 # core at 32 shuffle partitions. The bucket count does NOT affect results
 # (state is still per user within a bucket) — only parallelism granularity
 # and per-batch Arrow-channel amortization.
@@ -86,15 +84,11 @@ def sessionize_stream_bucketed(
     key: str = "user_id",
     ts: str = "ts",
     tiebreakers: Iterable[str] = ("event_id",),
-    n_buckets: int = DEFAULT_SESSION_BUCKETS,
-    gap_seconds: int = GAP_SECONDS,
-    max_events: int = MAX_SESSION_EVENTS,
-    max_duration_seconds: int = MAX_SESSION_DURATION_SECONDS,
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """Streaming DataFrame → per-event (all columns + session_id + duration),
     with the reference's COARSE-KEY state layout: group by
-    ``pmod(xxhash64(key), n_buckets)`` (≙ ``Sessionize.scala:5``'s
+    ``pmod(xxhash64(key), DEFAULT_SESSION_BUCKETS)`` (≙ ``Sessionize.scala:5``'s
     ``hashCode % 1200``, non-negative) and keep a per-user map within each
     bucket (≙ ``SessionizeGroupMapFunction.scala:13``'s
     ``MapState[ip, SessionState]``).
@@ -120,7 +114,7 @@ def sessionize_stream_bucketed(
     longer than the TTL relative to the bucket's max observed event time are
     dropped, mirroring the reference's per-entry 12 h MapState TTL
     (``SessionizeGroupMapFunction.scala:93-104``). Pruning is
-    semantics-neutral: any later event for a pruned user is > gap_seconds
+    semantics-neutral: any later event for a pruned user is > GAP_SECONDS
     stale by construction, so it would open a new session with or without
     the state entry. Leave ``None`` for bounded replays: with processing-time
     timers armed, an ``availableNow`` run keeps scheduling state-cleanup
@@ -135,7 +129,7 @@ def sessionize_stream_bucketed(
         + [StructField("session_start_us", LongType()), StructField("duration", IntegerType())]
     )
     ttl_sec = (state_ttl_ms // 1000) if state_ttl_ms is not None else None
-    key_runs, cut_sessions = make_session_kernel(gap_seconds, max_events, max_duration_seconds)
+    key_runs, cut_sessions = make_session_kernel()
 
     def fn(
         key_tuple: Tuple[Any, ...],
@@ -189,7 +183,7 @@ def sessionize_stream_bucketed(
             state.setTimeoutDuration(state_ttl_ms)
 
     bucketed = df.withColumn("_us", F.unix_micros(F.col(ts))).withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets))
+        "_bucket", F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(DEFAULT_SESSION_BUCKETS))
     )
     inner = bucketed.groupBy("_bucket").applyInPandasWithState(
         fn,

@@ -87,21 +87,22 @@ def test_connected_components_identical_with_and_without_checkpoints(
     assert labels[4] == 1 and labels[6] == 5 and labels[8] == 8
 
 
-# One registered query per module that pins fan-out frames, plus the
+# Registered queries that pin fan-out frames (at least one per plan
+# module that pins), plus the
 # Newton–Schulz loop (materialize_loop state), the pinned rank-pass input
 # and the pinned LSH pairs ahead of connected_components.
 _PINNED_QUERIES = [
     "zca_whitening_newton_schulz",  # feature_queries
     "ccnet_perplexity_buckets",  # llm_queries
     "dedup_aware_split",  # llm_queries
-    "kendall_tau_chars_words",  # staging_r8
-    "t_closeness_audit",  # staging_r10
-    "goodman_kruskal_lambda_source_lang",  # staging_r11
-    "stream_e_value_monitor",  # staging_r11, pin over a replay sink table
-    "mood_median_test",  # staging_r12
-    "fligner_killeen_scale_by_source",  # staging_r13
-    "mantel_logrank_trend_tod",  # staging_r14
-    "prefix_filter_jaccard_join",  # round9_queries
+    "kendall_tau_chars_words",  # hypothesis_test_queries
+    "t_closeness_audit",  # corpus_stats_queries
+    "goodman_kruskal_lambda_source_lang",  # hypothesis_test_queries
+    "stream_e_value_monitor",  # experiment_queries, pin over a replay sink table
+    "mood_median_test",  # hypothesis_test_queries
+    "fligner_killeen_scale_by_source",  # hypothesis_test_queries
+    "mantel_logrank_trend_tod",  # survival_queries
+    "prefix_filter_jaccard_join",  # corpus_stats_queries
 ]
 
 

@@ -1,6 +1,6 @@
-"""Round-9 queries (plans/round9_queries.py): independent Python
-brute-force references pinning each statistic/operator against INTENT,
-not just cross-engine agreement (the staging_r8 discipline). Handwritten
+"""Queries added in round 9 (now in the family modules under plans/):
+independent Python brute-force references pinning each statistic/operator
+against INTENT, not just cross-engine agreement. Handwritten
 tiny tables go through parquet so the full query surface — load_table
 included — is exercised."""
 
@@ -373,7 +373,7 @@ def test_obf_looks_match_python_welch(spark, tmp_path):
 def test_sprt_constants_and_decisions(spark, sf_small):
     """The e6 constants are the true Wald quantities, and the emitted LLR
     and decisions satisfy the exact integer recurrences."""
-    from flink_realtime_sessionize_sample_spark.plans import round9_queries as R9
+    from flink_realtime_sessionize_sample_spark.plans import experiment_queries as R9
 
     assert R9._SPRT_L1 == round(1e6 * math.log(0.25 / 0.15))
     assert R9._SPRT_L0 == round(1e6 * math.log(0.75 / 0.85))

@@ -159,6 +159,26 @@ def test_f12_malformed_lines_dropped(spark):
     assert out[0].ts is not None
 
 
+def test_parse_drops_15_field_lines_whose_timestamp_does_not_parse(spark):
+    """A 15-field line with an empty or non-time field 0 is dropped like a
+    wrong-field-count line instead of failing the job under ANSI casts, and
+    the valid line parses exactly as ``to_timestamp`` parses it."""
+    from flink_realtime_sessionize_sample_spark.sources.logs import parse_access_logs
+
+    rest = "a 1.2.3.4:80 " + " ".join(f"f{i}" for i in range(12))
+    valid = "2024-01-01T00:00:00.123456Z " + rest
+    lines = spark.createDataFrame(
+        [(" " + rest,), ("not-a-time " + rest,), (valid,)], "value string"
+    )
+    got = parse_access_logs(lines).collect()
+    toks = F.split("value", " ")
+    want = spark.createDataFrame([(valid,)], "value string").select(
+        toks[0].alias("timestamp"), F.to_timestamp(toks[0]).alias("ts"), toks[2].alias("ip")
+    ).collect()
+    assert got == want
+    assert got[0].ts is not None
+
+
 def test_parse_keeps_exactly_the_lines_a_full_split_keeps(spark):
     """The one-split filter and the ``substring_index`` fields agree with
     splitting every line on single spaces: 14, 15 and 16 fields, empty fields

@@ -1,7 +1,7 @@
-"""Round-10 queries (plans/staging_r10.py): plan shape and independent
-Python brute-force references (the staging_r8/round9 discipline —
-cross-engine parity proves the engines AGREE, these pin the statistics
-against INTENT). Oracle parity runs through the registry-wide
+"""Queries added in round 10 (now in the family modules under plans/):
+plan shape and independent Python brute-force references (cross-engine
+parity proves the engines AGREE, these pin the statistics against
+INTENT). Oracle parity runs through the registry-wide
 ``tests/test_oracle_parity.py``."""
 
 from __future__ import annotations
@@ -14,7 +14,8 @@ import pandas as pd
 import pytest
 
 from flink_realtime_sessionize_sample_spark import plans
-from flink_realtime_sessionize_sample_spark.plans import staging_r10 as S
+from flink_realtime_sessionize_sample_spark.plans import corpus_stats_queries as CS
+from flink_realtime_sessionize_sample_spark.plans import experiment_queries as EX
 
 
 def _h48(s: str) -> int:
@@ -374,7 +375,7 @@ def test_reciprocal_nn_is_mutual_subset(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     edges = {
         (r["query_id"], r["neighbor_id"])
-        for r in knn_join_cosine(emb, k=S._RNN_K, nbits=4)
+        for r in knn_join_cosine(emb, k=CS._RNN_K, nbits=4)
         .select("query_id", "neighbor_id")
         .collect()
     }
@@ -422,8 +423,8 @@ def test_heaps_fit_matches_python(spark, tmp_path):
     docs = sorted(ntok)
     nd = len(docs)
     pts = []
-    for c in range(1, S._HEAPS_CKPTS + 1):
-        r = (c * nd) // S._HEAPS_CKPTS
+    for c in range(1, CS._HEAPS_CKPTS + 1):
+        r = (c * nd) // CS._HEAPS_CKPTS
         if r == 0:
             continue
         cut_doc = docs[r - 1]
@@ -664,14 +665,14 @@ def test_filter_disparity_rates_and_flags(spark, sf_small):
 
 
 def test_rbo_c_table_matches_formula():
-    p, k = S._RBO_P, S._RBO_K
+    p, k = CS._RBO_P, CS._RBO_K
     for m in range(1, k + 1):
         want = (1 - p) * sum(p ** (d - 1) / d for d in range(m, k + 1))
-        assert S._RBO_C_E9[m - 1] == round(1e9 * want)
+        assert CS._RBO_C_E9[m - 1] == round(1e9 * want)
     # Identical lists => truncated RBO = (1-p) * sum_d p^{d-1} * 1 ... with
     # overlap d at every depth: sum over docs of C[rank] telescopes to
     # (1-p) * sum_{d} p^{d-1} (each depth contributes overlap/d = 1).
-    full = sum(S._RBO_C_E9[m - 1] for m in range(1, k + 1)) / 1e9
+    full = sum(CS._RBO_C_E9[m - 1] for m in range(1, k + 1)) / 1e9
     want_full = (1 - p) * sum(p ** (d - 1) for d in range(1, k + 1))
     assert abs(full - want_full) < 1e-6
 
@@ -695,18 +696,18 @@ def test_rbo_matches_python_from_leg_frames(spark, sf_small):
         for i, r in enumerate(
             bm25_scored_frame(docs)
             .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            .limit(S._RBO_K)
+            .limit(CS._RBO_K)
             .collect()
         )
     }
     dense = {
         r["neighbor_id"]: r["rank"]
-        for r in cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=S._RBO_K).collect()
+        for r in cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=CS._RBO_K).collect()
     }
     common = set(sparse) & set(dense)
-    rbo_e9 = sum(S._RBO_C_E9[max(sparse[d], dense[d]) - 1] for d in common)
+    rbo_e9 = sum(CS._RBO_C_E9[max(sparse[d], dense[d]) - 1] for d in common)
     out = plans.QUERIES["rbo_sparse_vs_dense"](spark, sf_small).collect()[0]
-    assert out[f"overlap_at_{S._RBO_K}"] == len(common)
+    assert out[f"overlap_at_{CS._RBO_K}"] == len(common)
     assert abs(out["rbo_p9"] - round(rbo_e9 / 1e9, 6)) < 1e-9
     assert 0.0 <= out["rbo_p9"] <= 1.0
 
@@ -926,11 +927,11 @@ def _ph_python(day_means):
         x = math.floor(1e9 * mean + 0.5)  # half-up, the engines' round
         sx += x
         xbar = math.floor(sx / t + 0.5)
-        m += x - xbar - S._PH_DELTA_E9
+        m += x - xbar - EX._PH_DELTA_E9
         mn = m if mn is None or m < mn else mn
         p = m - mn
         ph_max = max(ph_max, p)
-        if alarm is None and p > S._PH_LAMBDA_E9:
+        if alarm is None and p > EX._PH_LAMBDA_E9:
             alarm = day
     return round(ph_max / 1e9, 6), alarm
 

@@ -1,7 +1,7 @@
-"""Round-11 queries (plans/staging_r11.py): plan shape and
-independent Python brute-force references (the staging_r8/r10
-discipline — cross-engine parity proves the engines AGREE, these pin the
-statistics against INTENT)."""
+"""Queries added in round 11 (now in the family modules under plans/):
+plan shape and independent Python brute-force references (cross-engine
+parity proves the engines AGREE, these pin the statistics against
+INTENT)."""
 
 from __future__ import annotations
 
@@ -59,7 +59,7 @@ def test_stream_twin_readout_plan_lint(spark):
     directly over small static frames — the exact post-merge shapes the
     twins feed them ((day, n, k) for the e-value monitor, (day, value, n)
     for the distribution-drift monitor) — and lint those plans."""
-    from flink_realtime_sessionize_sample_spark.plans.staging_r11 import (
+    from flink_realtime_sessionize_sample_spark.plans.experiment_queries import (
         _ev_readout,
         _sdd_readout,
     )

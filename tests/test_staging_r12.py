@@ -1,7 +1,7 @@
-"""Round-12 queries (plans/staging_r12.py): plan shape and
-independent Python brute-force references (the staging_r8/r10/r11
-discipline — cross-engine parity proves the engines AGREE, these pin the
-statistics against INTENT)."""
+"""Queries added in round 12 (now in the family modules under plans/):
+plan shape and independent Python brute-force references (cross-engine
+parity proves the engines AGREE, these pin the statistics against
+INTENT)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,8 @@ from collections import Counter, defaultdict
 import pandas as pd
 
 from flink_realtime_sessionize_sample_spark import plans
-from flink_realtime_sessionize_sample_spark.plans import staging_r12 as S
+from flink_realtime_sessionize_sample_spark.plans import experiment_queries as EX
+from flink_realtime_sessionize_sample_spark.plans import hypothesis_test_queries as HT
 
 
 def _h48(s: str) -> int:
@@ -98,7 +99,7 @@ def _sessions_py(pdf: pd.DataFrame):
 def test_stream_twin_readout_plan_lint(spark):
     # The ADVICE r10 #4 rule applied from birth: the streaming twin's
     # shared readout lints directly over a static (user_id, x, y) frame.
-    df = S._dmr_readout(
+    df = EX._dmr_readout(
         spark.createDataFrame(
             [(u, 2 + u % 5, 20 + u % 7) for u in range(40)],
             "user_id long, x long, y long",
@@ -1708,7 +1709,7 @@ def test_dl_readout_plan_lint(spark):
     """ADVICE r10 #4 from birth: the DL twin's shared readout lints
     directly over a small static (day, a, b, c, d) cell frame, with no
     replay."""
-    df = S._dl_readout(
+    df = EX._dl_readout(
         spark.createDataFrame(
             [(d, 2 + d % 3, 3, 1 + d % 2, 4) for d in range(6)],
             "day long, a long, b long, c long, d long",
@@ -1930,7 +1931,7 @@ def test_delong_decimal_product_guard_symmetric(spark):
     import duckdb
 
     term = "CAST(p AS DECIMAL(38,0)) * u10 * u10"
-    expr = S._dec_sum_bigint(term)
+    expr = HT._dec_sum_bigint(term)
     df = spark.createDataFrame(
         [(3_000_000_000, 6_000_000_000)], "p long, u10 long"
     )
@@ -1957,7 +1958,7 @@ def test_lin_moment_guard_symmetric(spark):
     DuckDB would raise) and stay exact integer in range."""
     import duckdb
 
-    expr = S._dec_sum_bigint(S._LIN_MOM.format(a="0", u="x", v="x"))
+    expr = HT._dec_sum_bigint(HT._LIN_MOM.format(a="0", u="x", v="x"))
     df = spark.createDataFrame([(0, 6_000_000_000, 0)], "arm long, x long, y long")
     df.createOrReplaceTempView("_lin_guard_t")
     s_over = spark.sql(f"SELECT {expr} AS s FROM _lin_guard_t").collect()[0]["s"]
@@ -1994,10 +1995,10 @@ def test_bucketing_floor_consistent_pre_epoch(spark):
 
     us_vals = [-86400000001, -86400000000, -999999, -1, 0, 1, 999999,
                86399999999, 1700000000123456]
-    tod_spark = f"pmod({S._fdiv_spark('us', 1000000)}, 86400)"
-    tod_duck = S._pmod_duck(S._fdiv_duck("us", 1000000), 86400)
-    day_spark = S._fdiv_spark("us", 86400000000)
-    day_duck = S._fdiv_duck("us", 86400000000)
+    tod_spark = f"pmod({HT._fdiv_spark('us', 1000000)}, 86400)"
+    tod_duck = HT._pmod_duck(HT._fdiv_duck("us", 1000000), 86400)
+    day_spark = HT._fdiv_spark("us", 86400000000)
+    day_duck = HT._fdiv_duck("us", 86400000000)
     df = spark.createDataFrame([(u,) for u in us_vals], "us long")
     df.createOrReplaceTempView("_bkt_t")
     s_rows = spark.sql(

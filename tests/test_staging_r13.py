@@ -1,7 +1,7 @@
-"""Round-13 queries (plans/staging_r13.py): plan shape, probit-machinery
-pins, and independent Python brute-force references (the
-staging_r8/r10/r11/r12 discipline — cross-engine parity proves the engines AGREE, these pin the
-statistics against INTENT)."""
+"""Queries added in round 13 (now in the family modules under plans/):
+plan shape, probit-machinery pins, and independent Python brute-force
+references (cross-engine parity proves the engines AGREE, these pin
+the statistics against INTENT)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,8 @@ import math
 import pandas as pd
 
 from flink_realtime_sessionize_sample_spark import plans
-from flink_realtime_sessionize_sample_spark.plans import staging_r13 as S
+from flink_realtime_sessionize_sample_spark.plans import experiment_queries as EX
+from flink_realtime_sessionize_sample_spark.plans import hypothesis_test_queries as HT
 
 
 def _h48(s: str) -> int:
@@ -106,7 +107,7 @@ def test_stream_twin_readout_plan_lint(spark):
         [(10, 12, 1000, 1100, 200000, 230000)],
         "n0 long, n1 long, s0 long, s1 long, q0 long, q1 long",
     )
-    p = _explain(S._tost_readout(m))
+    p = _explain(EX._tost_readout(m))
     bad = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
     assert not bad, f"tost readout lint failed: {bad}"
 
@@ -122,7 +123,7 @@ def test_probit_text_matches_python_both_engines(spark):
 
     ps = [0.0005, 0.001, 0.01, 0.024, 0.025, 0.2, 0.5, 0.8, 0.975,
           0.976, 0.99, 0.999, 0.9995]
-    expr = S._probit("pq")
+    expr = HT._probit("pq")
     df = spark.createDataFrame([(p,) for p in ps], "pq double")
     df.createOrReplaceTempView("_pb_t")
     s_rows = spark.sql(f"SELECT pq, {expr} AS z FROM _pb_t ORDER BY pq").collect()
@@ -584,8 +585,8 @@ def test_gs_q_guard_symmetric_past_int64(spark):
     the exact integer."""
     import duckdb
 
-    dq = S._GS_DQ.format(a=0)
-    wq = S._GS_WQ.format(a=0)
+    dq = EX._GS_DQ.format(a=0)
+    wq = EX._GS_WQ.format(a=0)
     inner = "SELECT look, {dq} AS dq0 FROM {t} GROUP BY look"
     outer = f"SELECT look, {wq} AS q0 FROM ({{g}}) g ORDER BY look"
     # cents = 4e9 -> cents^2 = 1.6e19 > int64 max at look 1; the

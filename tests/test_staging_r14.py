@@ -1,7 +1,7 @@
-"""Round-14 queries (plans/staging_r14.py): plan shape and
-independent Python brute-force references (the staging_r8/r10/r11/r12/r13
-discipline — cross-engine parity proves the engines AGREE, these pin the
-statistics against INTENT)."""
+"""Queries added in round 14 (now in the family modules under plans/):
+plan shape and independent Python brute-force references (cross-engine
+parity proves the engines AGREE, these pin the statistics against
+INTENT)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import math
 import pandas as pd
 
 from flink_realtime_sessionize_sample_spark import plans
-from flink_realtime_sessionize_sample_spark.plans import staging_r14 as S
+from flink_realtime_sessionize_sample_spark.plans import experiment_queries as S
 
 
 def _h48(s: str) -> int:

@@ -1,5 +1,5 @@
-"""Round-8 queries (plans/staging_r8.py): plan shape and handcrafted
-semantics.
+"""Queries added in round 8 (now in the family modules under plans/):
+plan shape and handcrafted semantics.
 
 Oracle parity for these queries runs through the registry-wide
 ``tests/test_oracle_parity.py`` and the full-registry sweep; this module
@@ -503,9 +503,11 @@ def test_vocab_jaccard_joins_on_word(spark, sf_small):
 def test_stream_cusum_twin_equals_batch_on_same_half(spark, sf_small):
     """The streaming twin's readout must equal the batch scan applied to
     the same odd-event_id half directly (mergeability, end to end)."""
-    from flink_realtime_sessionize_sample_spark.plans.staging_r8 import (
-        _HOUR_US,
+    from flink_realtime_sessionize_sample_spark.plans.experiment_queries import (
         _cusum_readout,
+    )
+    from flink_realtime_sessionize_sample_spark.plans.hypothesis_test_queries import (
+        _HOUR_US,
     )
     from flink_realtime_sessionize_sample_spark.sources.registry import load_table
     from pyspark.sql import functions as F

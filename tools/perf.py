@@ -24,6 +24,21 @@ neither) and two verdicts:
 A run that fails its output check or exits non-zero is reported and counted
 as a failed run; its metrics are left out. The exit code is 0 only when no
 run failed.
+
+Plan capture and diff:
+
+    python3 tools/perf.py plans CHECKOUT SF_DIR OUT.json
+    python3 tools/perf.py plans --diff A.json B.json
+
+The first form builds every registered query of CHECKOUT on the tables in
+SF_DIR (the sf0.001 set the tests use) with ``SPARK_GRAFT_NO_MAT=1``, so
+pins do not cut the lineage, and writes each
+query's optimized logical plan to OUT.json with expression ids (``#123``,
+``#123L``), RDD ids and the counters in lambda-variable and
+common-subexpression names (``x_211``, ``_common_expr_11``) stripped. A
+query whose build fails is recorded as ``ERROR <type>``. The second form
+prints the name of every query whose text differs between two such files
+(or is missing from one) and exits 1 if any does.
 """
 
 from __future__ import annotations
@@ -31,9 +46,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
+import tempfile
 
 
 def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict | None:
@@ -79,7 +96,78 @@ def summarize(metric: dict, pairs: list[tuple[float, float]], pairs_run: int, no
             f"  gain={'yes' if claim else 'no'}  bound={verdict}")
 
 
+_PLAN_IDS = re.compile(r"#\d+L?\b|(?<=RDD)\[\d+\]")
+# Lambda variables and common subexpressions are named from per-process
+# counters (``lambda x_211``, ``_common_expr_11``).
+_LAMBDA_IDS = re.compile(r"(lambda \w+?|_common_expr)_\d+\b")
+
+
+def normalize_plan(text: str) -> str:
+    """Plan text without the ids that depend on what the process built before."""
+    return _LAMBDA_IDS.sub(r"\1", _PLAN_IDS.sub("", text))
+
+
+_CAPTURE = """
+import json, os, sys
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[4]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.sql.session.timeZone", "UTC")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.debug.maxToStringFields", "100000")
+         .config("spark.sql.warehouse.dir", sys.argv[3]).getOrCreate())
+from flink_realtime_sessionize_sample_spark import plans
+out = {}
+for name, fn in plans.QUERIES.items():
+    try:
+        out[name] = fn(spark, sys.argv[1])._jdf.queryExecution().optimizedPlan().toString()
+    except Exception as e:  # noqa: BLE001
+        out[name] = "ERROR " + type(e).__name__
+with open(sys.argv[2], "w") as f:
+    json.dump(out, f)
+"""
+
+
+def capture_plans(checkout: str, sf_dir: str, out: str) -> int:
+    """Write {query: optimized logical plan} of every query in ``checkout``."""
+    env = dict(os.environ, SPARK_GRAFT_NO_MAT="1", PYTHONPATH=os.path.abspath(checkout))
+    with tempfile.TemporaryDirectory() as tmp:
+        raw = os.path.join(tmp, "raw.json")
+        proc = subprocess.run([sys.executable, "-c", _CAPTURE, sf_dir, raw, os.path.join(tmp, "wh")],
+                              cwd=tmp, env=env)
+        if proc.returncode != 0:
+            return proc.returncode
+        with open(raw) as f:
+            captured = json.load(f)
+    with open(out, "w") as f:
+        json.dump({k: normalize_plan(v) for k, v in captured.items()}, f, indent=1, sort_keys=True)
+    errors = sorted(k for k, v in captured.items() if v.startswith("ERROR "))
+    print(f"{len(captured)} plans written to {out}; build errors: {errors}")
+    return 0
+
+
+def diff_plans(a_path: str, b_path: str) -> int:
+    """Print each query whose plan text differs between two capture files."""
+    with open(a_path) as f:
+        a = json.load(f)
+    with open(b_path) as f:
+        b = json.load(f)
+    differ = sorted(n for n in set(a) | set(b) if a.get(n) != b.get(n))
+    for name in differ:
+        print(f"{name}: {'missing' if name not in a or name not in b else 'differs'}")
+    print(f"{len(differ)} of {len(set(a) | set(b))} plans differ")
+    return 1 if differ else 0
+
+
 def main(argv=None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    if argv[:1] == ["plans"]:
+        if len(argv) == 4 and argv[1] == "--diff":
+            return diff_plans(argv[2], argv[3])
+        if len(argv) == 4 and not argv[1].startswith("-"):
+            return capture_plans(*argv[1:])
+        sys.stderr.write(__doc__[__doc__.index("Plan capture"):])
+        return 2
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent", help="checkout of the parent commit")
     ap.add_argument("change", help="checkout of the change")
