@@ -28,7 +28,7 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions.text import (
@@ -2836,6 +2836,13 @@ _AS_ERFC_POLY = (
 )
 
 
+def with_erfc_args(df: DataFrame, z: str | Column = "z_stat") -> DataFrame:
+    """``df`` plus the ``_x`` = |z|/sqrt(2) and ``_t`` columns that
+    ``_AS_ERFC_POLY`` reads (the oracles' ``xt`` CTE)."""
+    x = F.abs(F.col(z) if isinstance(z, str) else z) / F.sqrt(F.lit(2.0))
+    return df.withColumn("_x", x).withColumn("_t", 1 / (1 + 0.3275911 * x))
+
+
 # The per-segment two-proportion p-value battery (seg -> per -> zs ->
 # xt -> pv), shared by ab_segment_bh_fdr and the staged FDR-family
 # siblings (Storey pi0/q-values, Benjamini-Yekutieli — plans/
@@ -2985,12 +2992,10 @@ def ab_segment_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ab_seg_pvalues(events: DataFrame) -> DataFrame:
-    """The per-segment two-proportion p-value battery over an events
-    frame — the Spark twin of ``_AB_SEG_P_CTES`` (ends at the ``pv``
-    shape: segment, n0, c0, n1, c1, z_stat, p_value). Shared by
-    ``ab_segment_bh_fdr`` and the staged FDR-family siblings
-    (plans/experiment_queries.py); factored at round 13."""
+def _ab_seg_counts(events: DataFrame, prefix: str = "") -> DataFrame:
+    """Per segment: the arm-0 and arm-1 event and conversion counts
+    (``n0``, ``c0``, ``n1``, ``c1``, each name led by ``prefix``) — the
+    battery's ``seg`` and ``per`` CTEs."""
     ev = events.select(
         F.concat(
             F.col("event_type"), F.lit("_"), (F.col("user_id") % 4).cast("string")
@@ -3008,17 +3013,29 @@ def _ab_seg_pvalues(events: DataFrame) -> DataFrame:
         .otherwise(0)
         .alias("converted"),
     )
-    per = ev.groupBy("segment").agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("long").alias("n0"),
+    return ev.groupBy("segment").agg(
+        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
+        .cast("long")
+        .alias(f"{prefix}n0"),
         F.sum(F.when(F.col("arm") == 0, F.col("converted")).otherwise(0))
         .cast("long")
-        .alias("c0"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("long").alias("n1"),
+        .alias(f"{prefix}c0"),
+        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
+        .cast("long")
+        .alias(f"{prefix}n1"),
         F.sum(F.when(F.col("arm") == 1, F.col("converted")).otherwise(0))
         .cast("long")
-        .alias("c1"),
+        .alias(f"{prefix}c1"),
     )
-    return _ab_seg_pvalues_from_counts(per)
+
+
+def _ab_seg_pvalues(events: DataFrame) -> DataFrame:
+    """The per-segment two-proportion p-value battery over an events
+    frame — the Spark twin of ``_AB_SEG_P_CTES`` (ends at the ``pv``
+    shape: segment, n0, c0, n1, c1, z_stat, p_value). Shared by
+    ``ab_segment_bh_fdr`` and the FDR-family siblings
+    (plans/experiment_queries.py)."""
+    return _ab_seg_pvalues_from_counts(_ab_seg_counts(events))
 
 
 def _ab_seg_pvalues_from_counts(per: DataFrame) -> DataFrame:
@@ -3042,9 +3059,7 @@ def _ab_seg_pvalues_from_counts(per: DataFrame) -> DataFrame:
         )
         + F.lit(0.0),
     )
-    xt = zs.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zs)
     return xt.select(
         "segment",
         "n0",
@@ -3119,6 +3134,27 @@ _CHISQ_SUM_E9 = (
     " > 9223372036854775807 THEN CAST(NULL AS BIGINT)"
     f" ELSE CAST(sum(CAST({_CHISQ_CELL_E9} AS DECIMAL(38,0))) AS BIGINT) END"
 )
+
+
+def _source_lang_margins(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, ...]:
+    """The source x language contingency table and its margins: (cell:
+    source, lang, nsl; ms: source, ns; ml: lang, nl; tot: nn; dims: r, c)
+    — the ``cell``/``ms``/``ml``/``tot``/``dims`` CTEs."""
+    docs = load_table(spark, sf_dir, "documents")
+    cell = docs.groupBy("source", "lang").agg(
+        F.count(F.lit(1)).cast("long").alias("nsl")
+    )
+    # Bounded |S| x |L| frame with four downstream references (ms, ml,
+    # tot, grid's left join) — checkpoint so the corpus scan runs once
+    # under every config, including exchange.reuse=false.
+    cell = materialize(cell)
+    ms = cell.groupBy("source").agg(F.sum("nsl").cast("long").alias("ns"))
+    ml = cell.groupBy("lang").agg(F.sum("nsl").cast("long").alias("nl"))
+    tot = cell.agg(F.sum("nsl").cast("long").alias("nn"))
+    dims = ms.agg(F.count(F.lit(1)).cast("long").alias("r")).crossJoin(
+        ml.agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    return cell, ms, ml, tot, dims
 
 
 @query(
@@ -3234,20 +3270,7 @@ def chisq_source_language(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed the former unpartitioned-window marginals (three WindowExec
     all-to-one-partition passes) in favor of bounded groupBys + broadcast
     joins."""
-    docs = load_table(spark, sf_dir, "documents")
-    cell = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("nsl")
-    )
-    # Bounded |S| x |L| frame with four downstream references (ms, ml,
-    # tot, grid's left join) — checkpoint so the corpus scan runs once
-    # under every config, including exchange.reuse=false.
-    cell = materialize(cell)
-    ms = cell.groupBy("source").agg(F.sum("nsl").cast("long").alias("ns"))
-    ml = cell.groupBy("lang").agg(F.sum("nsl").cast("long").alias("nl"))
-    tot = cell.agg(F.sum("nsl").cast("long").alias("nn"))
-    dims = ms.agg(F.count(F.lit(1)).cast("long").alias("r")).crossJoin(
-        ml.agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
+    cell, ms, ml, tot, dims = _source_lang_margins(spark, sf_dir)
     grid = (
         ms.crossJoin(F.broadcast(ml))
         .join(cell, ["source", "lang"], "left")
@@ -3268,11 +3291,7 @@ def chisq_source_language(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     zz = st.withColumn("z_stat", F.expr(_CHISQ_Z))
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         "n_docs",
         "n_sources",

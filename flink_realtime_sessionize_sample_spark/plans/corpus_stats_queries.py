@@ -31,36 +31,42 @@ from flink_realtime_sessionize_sample_spark.operators.global_order import (
 )
 from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.operators.similarity import (
-    cosine_topk,
     knn_join_cosine,
 )
 from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
     _AS_ERFC_POLY,
     _CHISQ_Z,
-    bm25_scored_frame,
+    with_erfc_args,
 )
 from flink_realtime_sessionize_sample_spark.plans.hypothesis_test_queries import (
     _EMB_DIM,
-    _TOKS_D,
-    _TOKS_S,
+    _source_ranks,
     _dec_sum_bigint,
 )
 from flink_realtime_sessionize_sample_spark.plans.llm_queries import (
-    _CJK,
     _DOC_SHINGLES_CTE,
     _GOPHER_RULES,
+    _TOKS_D,
+    _TOKS_S,
+    _doc_quality_terms,
     _gopher_doc_ctes,
     _gopher_flag_frame,
-    _langid_case,
     _minhash_bands_duck,
 )
 from flink_realtime_sessionize_sample_spark.plans.ml_eval_queries import (
+    _HEUR_LANG_D,
+    _HEUR_LANG_S,
     _NB_PRED_CTES,
     _RELIABILITY_CTES,
+    _heldout_marker_ctes,
+    _heldout_marker_scores,
     _nb_bucketed_tokens,
     _nb_model_frames,
     _nb_prediction_frame,
     _reliability_bin_agg,
+    _reliability_score_frame,
+    _retrieval_legs,
+    _retrieval_legs_ctes,
 )
 from flink_realtime_sessionize_sample_spark.plans.pipeline_queries import (
     _EMAIL_RE,
@@ -347,25 +353,7 @@ def curriculum_pacing_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one corpus scan computes the score; the global rank is
     the banded two-branch pass (one balanced hash exchange + one local
     sort); the final rollup is a 4-group hash aggregate."""
-    docs = load_table(spark, sf_dir, "documents")
-    m = (
-        docs.withColumn("t", F.expr(_TOKS_S))
-        .filter(F.size("t") > 0)
-        .select(
-            "doc_id",
-            F.size("t").alias("n_tokens"),
-            F.expr(T.stopword_count_spark("t")).alias("stop_cnt"),
-            (
-                F.length(F.regexp_replace("text", r"[^.,;:!?]", "")).cast("double")
-                / F.length("text")
-            ).alias("punct_ratio"),
-        )
-    )
-    quality = (
-        F.least(F.lit(1.0), F.col("n_tokens") / 100.0)
-        * (1.0 - F.col("punct_ratio"))
-        * (0.25 + 0.75 * F.least(F.lit(1.0), F.col("stop_cnt") / 10.0))
-    )
+    m, quality = _doc_quality_terms(spark, sf_dir)
     q = m.select(
         "doc_id",
         (F.round(F.round(quality, 6) * 1000000)).cast("long").alias("qe6"),
@@ -1595,24 +1583,8 @@ def quantile_normalize_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("n_chars").asc(), F.col("doc_id").asc()],
         rank_col="gr",
     ).select("gr", F.col("n_chars").alias("norm_chars"))
-    ckf = docs.withColumn(
-        "ck",
-        F.concat(
-            F.col("source"),
-            F.lit("|"),
-            F.lpad(F.col("n_chars").cast("string"), 13, "0"),
-            F.lpad(F.col("doc_id").cast("string"), 13, "0"),
-        ),
-    )
-    cr = with_global_rank(ckf, [F.col("ck").asc()], rank_col="cr").drop("ck")
-    offs = cr.groupBy(F.col("source").alias("_src")).agg(
-        F.min("cr").cast("long").alias("off"),
-        F.count(F.lit(1)).cast("long").alias("ns"),
-    )
     j = (
-        cr.join(F.broadcast(offs), cr.source == offs._src)
-        .drop("_src")
-        .withColumn("rs", (F.col("cr") - F.col("off") + 1).cast("long"))
+        _source_ranks(docs)
         .crossJoin(F.broadcast(tot))
         .withColumn(
             "kk", F.expr("(rs * n_all + ns - 1) div ns").cast("long")
@@ -2204,23 +2176,11 @@ def token_drift_top_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kripp_oracle() -> str:
-
-    case = _langid_case(
-        "men", "mde", "mfr", "mes", f"regexp_matches(text, '{_CJK}')"
-    )
     return (
         _NB_PRED_CTES
+        + _heldout_marker_ctes("doc_id, text")
         + f"""
-, toks2 AS (
-  SELECT doc_id, text, {_TOKS_D} AS t FROM documents WHERE doc_id % 2 = 1
-),
-hs AS (
-  SELECT doc_id, text,
-         {T.marker_score_duck('t', 'en')} AS men, {T.marker_score_duck('t', 'de')} AS mde,
-         {T.marker_score_duck('t', 'fr')} AS mfr, {T.marker_score_duck('t', 'es')} AS mes
-  FROM toks2
-),
-heur AS (SELECT doc_id, ({case}) AS r2 FROM hs),
+heur AS (SELECT doc_id, ({_HEUR_LANG_D}) AS r2 FROM hs),
 pr AS (
   SELECT p.doc_id, p.pred_lang AS r1, h.r2
   FROM pred p JOIN heur h USING (doc_id)
@@ -2274,25 +2234,8 @@ def krippendorff_alpha_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = _nb_prediction_frame(spark, sf_dir).select(
         "doc_id", F.col("pred_lang").alias("r1")
     )
-    docs = load_table(spark, sf_dir, "documents")
-    hs = (
-        docs.filter(F.col("doc_id") % 2 == 1)
-        .withColumn("t", F.expr(_TOKS_S))
-        .select(
-            "doc_id",
-            "text",
-            F.expr(T.marker_score_spark("t", "en")).alias("men"),
-            F.expr(T.marker_score_spark("t", "de")).alias("mde"),
-            F.expr(T.marker_score_spark("t", "fr")).alias("mfr"),
-            F.expr(T.marker_score_spark("t", "es")).alias("mes"),
-        )
-    )
-    heur = hs.select(
-        "doc_id",
-        F.expr(_langid_case("men", "mde", "mfr", "mes", f"text rlike '{_CJK}'")).alias(
-            "r2"
-        ),
-    )
+    hs = _heldout_marker_scores(spark, sf_dir, "doc_id", "text")
+    heur = hs.select("doc_id", F.expr(_HEUR_LANG_S).alias("r2"))
     pr = pred.join(heur, "doc_id")
     u = pr.agg(
         F.count(F.lit(1)).cast("long").alias("n_units"),
@@ -3074,9 +3017,7 @@ def filter_disparity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_FD_Z_MICRO).alias("z_micro"),
     )
     zs = zz.withColumn("z_stat", F.round(F.col("z_micro") / 1e6, 6) + F.lit(0.0))
-    xt = zs.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zs)
     pv = F.round(F.expr(poly), 6) + F.lit(0.0)
     return xt.select(
         "lang",
@@ -3122,45 +3063,7 @@ _RBO_CASE = (
 
 
 def _rbo_oracle() -> str:
-    toks_d = T.tokens_duck("text")
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {toks_d} AS t FROM documents
-),
-lens AS (SELECT doc_id, len(t)::BIGINT AS dl FROM toks),
-stats AS (SELECT count(*)::BIGINT AS n_docs, avg(dl) AS avgdl FROM lens),
-hits AS (SELECT doc_id, unnest(t) AS term, len(t)::BIGINT AS dl FROM toks),
-tf AS (
-  SELECT doc_id, term, count(*)::BIGINT AS tf, max(dl) AS dl
-  FROM hits WHERE term IN ('spark', 'join', 'stream', 'window')
-  GROUP BY doc_id, term
-),
-dfreq AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY term),
-bm AS (
-  SELECT tf.doc_id,
-         round(sum(ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-             * tf.tf * (1.2 + 1)
-             / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * tf.dl / s.avgdl))), 4) AS score
-  FROM tf JOIN dfreq d USING (term) CROSS JOIN stats s
-  GROUP BY tf.doc_id
-),
-sparse AS (
-  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS sr
-  FROM bm ORDER BY score DESC, doc_id ASC LIMIT {_RBO_K}
-),
-e AS (
-  SELECT vec_id, embedding AS v, {T.norm_duck('embedding')} AS nrm FROM embeddings
-),
-q AS (SELECT * FROM e WHERE vec_id = 0),
-cos AS (
-  SELECT e.vec_id AS doc_id,
-         round({T.dot_duck('e.v', 'q.v')} / (e.nrm * q.nrm), 6) AS cosine
-  FROM e CROSS JOIN q WHERE e.vec_id <> 0
-),
-dense AS (
-  SELECT doc_id, row_number() OVER (ORDER BY cosine DESC, doc_id ASC) AS dr
-  FROM cos ORDER BY cosine DESC, doc_id ASC LIMIT {_RBO_K}
-),
+    return _retrieval_legs_ctes(_RBO_K) + f"""
 common AS (
   SELECT s.doc_id, s.sr, d.dr, {_RBO_CASE} AS c_e9
   FROM sparse s JOIN dense d USING (doc_id)
@@ -3197,23 +3100,7 @@ def rbo_sparse_vs_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine); everything after the two top-{_RBO_K}s is
     bounded-row arithmetic."""
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    emb = load_table(spark, sf_dir, "embeddings")
-    bm = bm25_scored_frame(docs)
-    sparse = (
-        bm.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-        .limit(_RBO_K)
-        .withColumn(
-            "sr",
-            F.row_number().over(
-                Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            ),
-        )
-        .select("doc_id", "sr")
-    )
-    dense = cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=_RBO_K).select(
-        F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("dr")
-    )
+    sparse, dense = _retrieval_legs(spark, sf_dir, _RBO_K)
     common = sparse.join(dense, "doc_id").select(
         "doc_id", "sr", "dr", F.expr(_RBO_CASE).alias("c_e9")
     )
@@ -4015,11 +3902,7 @@ def hosmer_lemeshow_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" ELSE ({_CHISQ_Z}) END"
         ).alias("z_stat"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_bins",
@@ -4113,34 +3996,7 @@ def spiegelhalter_z_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     length aggregate and the score join as two thin column-pruned
     branches (the documented ab_test_cuped-class shape — corpus-sized,
     so deliberately NOT checkpointed)."""
-    # Spark-side score frame mirrors ml_eval_queries._reliability_bin_agg
-    # lines ~886-905 (the oracle REUSES _RELIABILITY_CTES, so any drift
-    # here fails the cross-engine parity check loudly). Planned r12-open
-    # refactor: factor an unbinned _reliability_score_frame helper in
-    # ml_eval_queries shared by both — deferred because editing that
-    # module NOW would rotate its registered consumers (brier/ECE) into
-    # the already-full round-11 window (the function-local-import lesson,
-    # SURVEY round-11 notes).
-    docs = load_table(spark, sf_dir, "documents")
-    d = docs.select(
-        (F.col("lang") == "en").cast("int").alias("pos"),
-        F.size(F.expr(T.tokens_spark("text"))).cast("long").alias("dl"),
-    )
-    g = d.groupBy("dl").agg(F.count(F.lit(1)).alias("cnt"))
-    cdf = with_global_rank(
-        g,
-        ["dl"],
-        rank_col="_rk",
-        sum_col="cnt",
-        cum_col="cum_all",
-        sum_total_col="n_all",
-    ).select("dl", "cum_all", "n_all")
-    s = d.join(F.broadcast(cdf), "dl").select(
-        "pos",
-        F.round(F.col("cum_all") * 1000000.0 / F.col("n_all"))
-        .cast("long")
-        .alias("sm"),
-    )
+    s = _reliability_score_frame(spark, sf_dir)
     sp = s.select(
         F.expr(_SPZ_NUM_TERM).alias("tnum"),
         F.expr(_SPZ_DEN_TERM_E9).alias("tden"),
@@ -4151,11 +4007,7 @@ def spiegelhalter_z_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_dec_sum_bigint("tden")).alias("den_e9"),
     )
     zz = t.select("n_docs", "num_e12", "den_e9", F.expr(_SPZ_Z).alias("z_stat"))
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_docs",
@@ -4348,12 +4200,7 @@ def delong_auc_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" ELSE round(({_DLG_AUC} - 0.5e0) / sqrt({_DLG_VAR}), 6) + 0.0 END"
         ).alias("z_vs_chance"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_vs_chance")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t",
-        1 / (1 + 0.3275911 * (F.abs(F.col("z_vs_chance")) / F.sqrt(F.lit(2.0)))),
-    )
+    xt = with_erfc_args(zz, "z_vs_chance")
     return xt.select(
         "n_pos",
         "n_neg",

@@ -32,21 +32,31 @@ from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
     _AB_SEG_P_CTES,
     _AS_ERFC_POLY,
+    _ab_seg_counts,
     _ab_seg_pvalues,
     _ab_seg_pvalues_from_counts,
     _cents,
     _pois_case,
+    with_erfc_args,
 )
 from flink_realtime_sessionize_sample_spark.plans.hypothesis_test_queries import (
+    _DOC_ARM_DUCK,
+    _DOC_ARM_SPARK,
+    _USER_ARM_DUCK,
+    _USER_ARM_SPARK,
     _CVM_TERM_E6,
     _CVM_Z,
     _HOUR_US,
     _LIN_MOM,
+    _PREPOST_EV_CTES,
+    _STRATA_2X2_CTES,
     _dec_sum_bigint,
     _fdiv_duck,
     _fdiv_spark,
     _jb_oracle,
     _jb_readout,
+    _prepost_events,
+    _strata_2x2,
     _probit,
 )
 from flink_realtime_sessionize_sample_spark.plans.registry import query
@@ -93,11 +103,9 @@ _WT_DF_GUARDED = (
 )
 
 
-# The oracle's moments->readout chain, shared by the batch Welch query
-# (over documents) and the streaming guardrail twin (over events): input
-# CTE ``d`` must provide (arm, y); trailing SELECT columns appended per
-# query.
-_WELCH_CHAIN = """
+# Input CTE ``d`` (arm, y) -> the six exact integer moments ``s`` and the
+# per-arm counts, sums and variance numerators ``x``.
+_MOMENTS_CTES = """
 s AS (
   SELECT count(*)::BIGINT AS n, sum(arm)::BIGINT AS n1,
          sum(y)::BIGINT AS sall, CAST(sum(arm * y) AS BIGINT) AS s1,
@@ -111,7 +119,13 @@ x AS (
            AS vn0,
          CAST(n1 * q1 - s1 * s1 AS BIGINT) AS vn1
   FROM s
-),
+)"""
+
+# The oracle's moments->readout chain, shared by the batch Welch query
+# (over documents) and the streaming guardrail twin (over events): input
+# CTE ``d`` must provide (arm, y); trailing SELECT columns appended per
+# query.
+_WELCH_CHAIN = _MOMENTS_CTES + """,
 zz AS (
   SELECT n0, n1, s0, s1, vn0, vn1,
          round(CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
@@ -127,6 +141,23 @@ xt AS (
   FROM zz
 )
 """
+
+
+def _doc_arm_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The six exact integer moments (n, n1, sall, s1, qall, q1) of
+    document length over the document-hash split — the Spark twin of
+    ``_MOMENTS_CTES``' ``s`` over the doc-arm ``d``."""
+    d = load_table(spark, sf_dir, "documents").select(
+        F.expr(_DOC_ARM_SPARK).alias("arm"), F.col("n_chars").alias("y")
+    )
+    return d.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("arm").cast("long").alias("n1"),
+        F.sum("y").cast("long").alias("sall"),
+        F.sum(F.col("arm") * F.col("y")).cast("long").alias("s1"),
+        F.sum(F.col("y") * F.col("y")).cast("long").alias("qall"),
+        F.sum(F.col("arm") * F.col("y") * F.col("y")).cast("long").alias("q1"),
+    )
 
 
 def _welch_from_moments(s: DataFrame) -> DataFrame:
@@ -162,19 +193,16 @@ def _welch_from_moments(s: DataFrame) -> DataFrame:
         F.expr(_WT_T_GUARDED).alias("t_stat"),
         F.expr(_WT_DF_GUARDED).alias("welch_df"),
     )
-    xt = zz.withColumn("_x", F.abs(F.col("t_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("t_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz, "t_stat")
     return xt.withColumn("p_normal", F.round(F.expr(poly), 6) + F.lit(0.0))
 
 
 def _welch_oracle() -> str:
     poly = _AS_ERFC_POLY
-    arm = T.h48_duck("doc_id::VARCHAR")
     chain = _WELCH_CHAIN.format(t_guard=_WT_T_GUARDED, df_guard=_WT_DF_GUARDED)
     return f"""
 WITH d AS (
-  SELECT {arm} % 2 AS arm, n_chars AS y FROM documents
+  SELECT {_DOC_ARM_DUCK} AS arm, n_chars AS y FROM documents
 ),{chain}
 SELECT n0, n1, s0, s1, vn0, vn1, mean_diff, t_stat, welch_df,
        round({poly}, 6) + 0.0 AS p_normal
@@ -208,18 +236,7 @@ def welch_t_chars_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     n * 4e6 caps at ~2e12 docs; the arm hash is the shared portable
     48-bit md5 (functions/text.py), so retries and both engines agree
     row-for-row."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(doc_id as string)')}, 2)")
-    d = load_table(spark, sf_dir, "documents").select(
-        arm.alias("arm"), F.col("n_chars").alias("y")
-    )
-    s = d.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("arm").cast("long").alias("n1"),
-        F.sum("y").cast("long").alias("sall"),
-        F.sum(F.col("arm") * F.col("y")).cast("long").alias("s1"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("qall"),
-        F.sum(F.col("arm") * F.col("y") * F.col("y")).cast("long").alias("q1"),
-    )
+    s = _doc_arm_moments(spark, sf_dir)
     return _welch_from_moments(s).select(
         "n0",
         "n1",
@@ -256,25 +273,10 @@ _PW_NREQ = (
 
 
 def _power_oracle() -> str:
-    arm = T.h48_duck("doc_id::VARCHAR")
     return f"""
 WITH d AS (
-  SELECT {arm} % 2 AS arm, n_chars AS y FROM documents
-),
-s AS (
-  SELECT count(*)::BIGINT AS n, sum(arm)::BIGINT AS n1,
-         sum(y)::BIGINT AS sall, CAST(sum(arm * y) AS BIGINT) AS s1,
-         CAST(sum(y * y) AS BIGINT) AS qall,
-         CAST(sum(arm * y * y) AS BIGINT) AS q1
-  FROM d
-),
-x AS (
-  SELECT n - n1 AS n0, n1, sall - s1 AS s0, s1,
-         CAST((n - n1) * (qall - q1) - (sall - s1) * (sall - s1) AS BIGINT)
-           AS vn0,
-         CAST(n1 * q1 - s1 * s1 AS BIGINT) AS vn1
-  FROM s
-)
+  SELECT {_DOC_ARM_DUCK} AS arm, n_chars AS y FROM documents
+),{_MOMENTS_CTES}
 SELECT n0, n1,
        round({_PW_MEAN}, 6) + 0.0 AS grand_mean,
        {_PW_SD} AS pooled_sd,
@@ -305,18 +307,7 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one corpus scan, one map-side-combined 1-row aggregate;
     nothing else."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(doc_id as string)')}, 2)")
-    d = load_table(spark, sf_dir, "documents").select(
-        arm.alias("arm"), F.col("n_chars").alias("y")
-    )
-    s = d.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("arm").cast("long").alias("n1"),
-        F.sum("y").cast("long").alias("sall"),
-        F.sum(F.col("arm") * F.col("y")).cast("long").alias("s1"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("qall"),
-        F.sum(F.col("arm") * F.col("y") * F.col("y")).cast("long").alias("q1"),
-    )
+    s = _doc_arm_moments(spark, sf_dir)
     x = s.select(
         (F.col("n") - F.col("n1")).alias("n0"),
         "n1",
@@ -350,11 +341,10 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stream_guardrail_oracle() -> str:
     poly = _AS_ERFC_POLY
-    arm = T.h48_duck("user_id::VARCHAR")
     chain = _WELCH_CHAIN.format(t_guard=_WT_T_GUARDED, df_guard=_WT_DF_GUARDED)
     return f"""
 WITH d AS (
-  SELECT {arm} % 2 AS arm, CAST(round(value * 100) AS BIGINT) AS y
+  SELECT {_USER_ARM_DUCK} AS arm, CAST(round(value * 100) AS BIGINT) AS y
   FROM events WHERE event_id % 2 = 1
 ),{chain}
 SELECT 2::BIGINT AS n_batches, n0, n1, s0, s1, vn0, vn1, mean_diff,
@@ -385,7 +375,7 @@ def stream_ab_guardrail_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizes to integer cents per row BEFORE any sum (both per the
     established rules), so task retries, batch boundaries, and both
     engines agree exactly."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
+    arm = F.expr(_USER_ARM_SPARK)
     held = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 2 == 1)
@@ -764,11 +754,10 @@ _OBF_Z_MICRO = (
 )
 
 
-def _obf_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
-    return f"""
-WITH e AS (
-  SELECT {arm} % 2 AS arm, epoch_us(ts) AS us,
+# Each event's look (four equal event-time quarters, 1..4), user-hash arm
+# and value in cents: the sequential monitors' input frame.
+_LOOK_CTES = f"""WITH e AS (
+  SELECT {_USER_ARM_DUCK} AS arm, epoch_us(ts) AS us,
          CAST(round(value * 100) AS BIGINT) AS cents
   FROM events
 ),
@@ -777,7 +766,30 @@ lk AS (
   SELECT ((4 * (us - mn)) // (mx - mn + 1)) + 1 AS look,
          arm, cents
   FROM e CROSS JOIN rng
-),
+),"""
+
+
+def _look_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(look, arm, cents) — the Spark twin of ``_LOOK_CTES``."""
+    e = load_table(spark, sf_dir, "events").select(
+        F.expr(_USER_ARM_SPARK).alias("arm"),
+        F.unix_micros("ts").alias("us"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    )
+    rng = e.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
+    # Integer FLOOR division on both sides (DuckDB `//`, Spark `div`):
+    # plain `/` is float division in DuckDB and its BIGINT cast ROUNDS,
+    # which pushed the us == mx row into a phantom 5th look.
+    return e.crossJoin(F.broadcast(rng)).select(
+        (F.expr("(4 * (us - mn)) div (mx - mn + 1)") + 1).alias("look"),
+        "arm",
+        "cents",
+    )
+
+
+def _obf_oracle() -> str:
+    return f"""
+{_LOOK_CTES}
 g AS (
   SELECT look,
          CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS dn0,
@@ -832,21 +844,7 @@ def obrien_fleming_ab_looks(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combined aggregate to the 4-look frame, then
     bounded-frame windows — no corpus-sized shuffle beyond the look
     aggregate."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
-    e = load_table(spark, sf_dir, "events").select(
-        arm.alias("arm"),
-        F.unix_micros("ts").alias("us"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    rng = e.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    # Integer FLOOR division on both sides (DuckDB `//`, Spark `div`):
-    # plain `/` is float division in DuckDB and its BIGINT cast ROUNDS,
-    # which pushed the us == mx row into a phantom 5th look.
-    lk = e.crossJoin(F.broadcast(rng)).select(
-        (F.expr("(4 * (us - mn)) div (mx - mn + 1)") + 1).alias("look"),
-        "arm",
-        "cents",
-    )
+    lk = _look_frame(spark, sf_dir)
     g = lk.groupBy("look").agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("long").alias("dn0"),
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("long").alias("dn1"),
@@ -1024,22 +1022,9 @@ _MH_Z = (
 
 
 def _mh_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     return f"""
-WITH e AS (
-  SELECT event_type AS stratum, {arm} % 2 AS g,
-         CASE WHEN value > 60 THEN 1 ELSE 0 END AS y
-  FROM events
-),
-s AS (
-  SELECT stratum,
-         CAST(sum(g * y) AS BIGINT) AS a,
-         CAST(sum(g * (1 - y)) AS BIGINT) AS b,
-         CAST(sum((1 - g) * y) AS BIGINT) AS c,
-         CAST(sum((1 - g) * (1 - y)) AS BIGINT) AS d
-  FROM e GROUP BY stratum
-),
+{_STRATA_2X2_CTES}
 m AS (
   SELECT stratum, a, b, c, d,
          a + b AS n1, c + d AS n0, a + c AS m1, b + d AS m0,
@@ -1096,19 +1081,8 @@ def mantel_haenszel_stratified_ab(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: one corpus scan -> bounded |strata| frame; everything
     after is bounded re-aggregation. The arm is the portable 48-bit md5
     of user_id (unit of randomization = user)."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
     poly = _AS_ERFC_POLY
-    e = load_table(spark, sf_dir, "events").select(
-        F.col("event_type").alias("stratum"),
-        arm.alias("g"),
-        F.when(F.col("value") > 60, 1).otherwise(0).alias("y"),
-    )
-    s = e.groupBy("stratum").agg(
-        F.sum(F.expr("g * y")).cast("long").alias("a"),
-        F.sum(F.expr("g * (1 - y)")).cast("long").alias("b"),
-        F.sum(F.expr("(1 - g) * y")).cast("long").alias("c"),
-        F.sum(F.expr("(1 - g) * (1 - y)")).cast("long").alias("d"),
-    )
+    s = _strata_2x2(spark, sf_dir)
     m = s.filter(
         ((F.col("a") + F.col("b")) > 0)
         & ((F.col("c") + F.col("d")) > 0)
@@ -1139,9 +1113,7 @@ def mantel_haenszel_stratified_ab(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("or_mh"),
         F.expr(_MH_Z).alias("z_stat"),
     )
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         "n_strata",
         "a_sum",
@@ -1156,10 +1128,9 @@ def mantel_haenszel_stratified_ab(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _qte_oracle() -> str:
-    arm = T.h48_duck("doc_id::VARCHAR")
     return f"""
 WITH d AS (
-  SELECT {arm} % 2 AS g, n_chars AS y, doc_id FROM documents
+  SELECT {_DOC_ARM_DUCK} AS g, n_chars AS y, doc_id FROM documents
 ),
 rk AS (
   SELECT g, y,
@@ -1200,7 +1171,7 @@ def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort); the 9-row decile grid joins by broadcast; the final join is
     9x9-row. The oracle's plain windowed row_number is the
     single-node semantic mirror."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(doc_id as string)')}, 2)")
+    arm = F.expr(_DOC_ARM_SPARK)
     d = load_table(spark, sf_dir, "documents").select(
         arm.alias("g"), F.col("n_chars").alias("y"), "doc_id"
     )
@@ -1246,11 +1217,10 @@ _SMD = (
 
 
 def _smd_oracle() -> str:
-    arm = T.h48_duck("doc_id::VARCHAR")
     toks_d = T.tokens_duck("text")
     return f"""
 WITH d AS (
-  SELECT {arm} % 2 AS g,
+  SELECT {_DOC_ARM_DUCK} AS g,
          n_chars AS c1,
          CAST(length({toks_d}) AS BIGINT) AS c2,
          CAST(length(list_distinct({toks_d})) AS BIGINT) AS c3
@@ -1297,10 +1267,9 @@ def smd_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one corpus scan -> 3-row unpivoted moment frame (the
     unpivot triples rows before the map-side combine but adds no
     shuffle width); no joins, no windows."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(doc_id as string)')}, 2)")
     toks_s = T.tokens_spark("text")
     d = load_table(spark, sf_dir, "documents").select(
-        arm.alias("g"),
+        F.expr(_DOC_ARM_SPARK).alias("g"),
         F.col("n_chars").alias("c1"),
         F.expr(f"cast(size({toks_s}) as bigint)").alias("c2"),
         F.expr(f"cast(size(array_distinct({toks_s})) as bigint)").alias("c3"),
@@ -1555,7 +1524,6 @@ _CUPED_STRATUM = (
 
 
 def _cuped_s_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     return f"""
 WITH ev AS (
   SELECT user_id, epoch_us(ts) AS us, CAST(round(value * 100) AS BIGINT) AS cents
@@ -1563,7 +1531,7 @@ WITH ev AS (
 ),
 bounds AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
 per_user AS (
-  SELECT user_id, {arm} % 2 AS arm,
+  SELECT user_id, {_USER_ARM_DUCK} AS arm,
          sum(CASE WHEN us < (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT AS x,
          sum(CASE WHEN us >= (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT AS y,
          sum(CASE WHEN us < (SELECT mid FROM bounds) THEN 1 ELSE 0 END)::BIGINT AS npre
@@ -2209,7 +2177,6 @@ _CR_DEFF = (
 
 
 def _crab_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     return (
         _SESSIONIZE_CTE
@@ -2220,7 +2187,7 @@ sess_end AS (
   FROM sess GROUP BY user_id, start_us
 ),
 peruser AS (
-  SELECT user_id, {arm} % 2 AS g,
+  SELECT user_id, {_USER_ARM_DUCK} AS g,
          count(*)::BIGINT AS nc,
          sum(dur)::BIGINT AS sc,
          sum(dur * dur)::BIGINT AS d2c
@@ -2303,7 +2270,7 @@ def cluster_robust_ab_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     by), and one scalar reduce takes the 14 arm moments — no second
     corpus pass, no window, no join. Reference provenance: sessions per
     SessionizeGroupMapFunction.scala:90-130 session semantics."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
+    arm = F.expr(_USER_ARM_SPARK)
     # Direct session_end build (NOT _session_obs): the metric needs no
     # censor flag, and _session_obs's batch-end scalar would add a second
     # (gmx) corpus scan for a column this query never reads — measured 2
@@ -2372,11 +2339,7 @@ def cluster_robust_ab_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_CR_DEFF).alias("design_effect"),
         F.expr(_CR_Z).alias("z_stat"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         F.col("nu0").alias("n_users0"),
@@ -2440,11 +2403,10 @@ _DM_DEFF = (
 
 
 def _dmr_oracle(where: str = "") -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     return f"""
 WITH peruser AS (
-  SELECT user_id, {arm} % 2 AS g,
+  SELECT user_id, {_USER_ARM_DUCK} AS g,
          count(*)::BIGINT AS y,
          CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
               AS BIGINT) AS x
@@ -2543,7 +2505,7 @@ def _dmr_readout(peruser: DataFrame) -> DataFrame:
     ``_ev_readout`` pattern): the arm hash derives HERE from user_id, so
     late-arriving partials re-arm correctly on every re-scan of the
     merged frame."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
+    arm = F.expr(_USER_ARM_SPARK)
     peruser = peruser.select(arm.alias("g"), "x", "y")
     g = F.col("g")
     m = peruser.agg(
@@ -2590,11 +2552,7 @@ def _dmr_readout(peruser: DataFrame) -> DataFrame:
         F.expr(_DM_DEFF).alias("design_effect"),
         F.expr(_DM_Z).alias("z_stat"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         F.col("nu0").alias("n_users0"),
@@ -2780,11 +2738,7 @@ def _lin_readout(mu: DataFrame, betas: dict[str, str]) -> DataFrame:
             " ELSE round((mu1 - mu0) / sqrt(var_adj), 6) + 0.0 END"
         ).alias("z_stat"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         F.col("n0").alias("n_users0"),
         F.col("n1").alias("n_users1"),
@@ -2803,7 +2757,6 @@ def _lin_readout(mu: DataFrame, betas: dict[str, str]) -> DataFrame:
 
 
 def _lin_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     b0 = _LIN_BETA.format(a="0")
     b1 = _LIN_BETA.format(a="1")
@@ -2812,13 +2765,9 @@ def _lin_oracle() -> str:
     syy0 = _LIN_SYY.format(a="0")
     syy1 = _LIN_SYY.format(a="1")
     return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS us, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-),
-bounds AS (SELECT {_fdiv_duck("min(us) + max(us)", 2)} AS mid FROM ev),
+{_PREPOST_EV_CTES}
 per_user AS (
-  SELECT user_id, {arm} % 2 AS arm,
+  SELECT user_id, {_USER_ARM_DUCK} AS arm,
          sum(CASE WHEN us < (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT AS x,
          sum(CASE WHEN us >= (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT AS y
   FROM ev GROUP BY user_id
@@ -2894,17 +2843,9 @@ def lin_regression_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row midpoint, then ONE conditional aggregate straight to
     a 14-column single row — no per-stratum frames, no second corpus
     pass (strictly cheaper than the stratified CUPED sibling)."""
-    arm = F.pmod(F.expr(T.h48_spark("cast(user_id as string)")), F.lit(2))
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros("ts").alias("us"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    bounds = ev.agg(
-        F.expr(_fdiv_spark("min(us) + max(us)", 2)).alias("mid")
-    )
+    arm = F.expr(_USER_ARM_SPARK)
     per_user = (
-        ev.crossJoin(F.broadcast(bounds))
+        _prepost_events(spark, sf_dir)
         .groupBy("user_id")
         .agg(
             F.sum(F.when(F.col("us") < F.col("mid"), F.col("cents")).otherwise(0))
@@ -3006,11 +2947,10 @@ _DL_TAU2 = (
 
 
 def _dl_oracle(where: str = "") -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     return f"""
 WITH e AS (
-  SELECT {_fdiv_duck("epoch_us(ts)", 86400000000)} AS day, {arm} % 2 AS g,
+  SELECT {_fdiv_duck("epoch_us(ts)", 86400000000)} AS day, {_USER_ARM_DUCK} AS g,
          CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
   FROM events {where}
 ),
@@ -3129,7 +3069,7 @@ def dersimonian_laird_daily_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     (checkpointed — |days| rows, ~366/year); everything downstream is
     bounded re-aggregation over that frame, twice (pass A for tau^2,
     pass B for the re-weighted pool)."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
+    arm = F.expr(_USER_ARM_SPARK)
     e = load_table(spark, sf_dir, "events").select(
         F.expr(_fdiv_spark("unix_micros(ts)", 86400000000)).alias("day"),
         arm.alias("g"),
@@ -3240,11 +3180,7 @@ def _dl_readout(cells_all: DataFrame) -> DataFrame:
             " / sqrt(1000000 * (vmin + tau2) / swb), 6) + 0.0 END"
         ).alias("z_stat"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         "k_strata",
         "k_dropped",
@@ -3291,7 +3227,7 @@ def stream_dersimonian_laird_monitor(
     its <= |days|*2 rows; the managed table holds batches x cells rows
     (bounded); the merge is one (day, g)-keyed groupBy and the readout
     is the batch query's bounded two-pass pipeline."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
+    arm = F.expr(_USER_ARM_SPARK)
     held = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 2 == 1)
@@ -3365,12 +3301,11 @@ def _pc_pday() -> str:
 
 
 def _pc_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     pday = _pc_pday()
     return f"""
 WITH e AS (
-  SELECT {_fdiv_duck("epoch_us(ts)", 86400000000)} AS day, {arm} % 2 AS g,
+  SELECT {_fdiv_duck("epoch_us(ts)", 86400000000)} AS day, {_USER_ARM_DUCK} AS g,
          CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
   FROM events
 ),
@@ -3464,12 +3399,11 @@ def combined_pvalue_daily_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     single linear pipeline here — no multi-branch fan-out, so no
     checkpoint is needed; executed-plan census matches the single-scan
     baseline, e.g. pricing_summary / mantel_haenszel)."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
     poly = _AS_ERFC_POLY
     pday = _pc_pday()
     e = load_table(spark, sf_dir, "events").select(
         F.expr(_fdiv_spark("unix_micros(ts)", 86400000000)).alias("day"),
-        arm.alias("g"),
+        F.expr(_USER_ARM_SPARK).alias("g"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
     cells = e.groupBy("day").agg(
@@ -3520,12 +3454,7 @@ def combined_pvalue_daily_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             " + 0.0 END"
         ).alias("fisher_z"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("stouffer_z")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t",
-        1 / (1 + 0.3275911 * (F.abs(F.col("stouffer_z")) / F.sqrt(F.lit(2.0)))),
-    )
+    xt = with_erfc_args(zz, "stouffer_z")
     ps = xt.select(
         "k",
         "stouffer_z",
@@ -3537,12 +3466,7 @@ def combined_pvalue_daily_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" ELSE round(({poly}), 6) + 0.0 END"
         ).alias("p_stouffer"),
     )
-    xf = ps.withColumn(
-        "_x", F.abs(F.col("fisher_z")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t",
-        1 / (1 + 0.3275911 * (F.abs(F.col("fisher_z")) / F.sqrt(F.lit(2.0)))),
-    )
+    xf = with_erfc_args(ps, "fisher_z")
     return xf.select(
         F.col("k").alias("k_days"),
         "stouffer_z",
@@ -3908,7 +3832,6 @@ def _a2(text: str, a: str) -> str:
 
 
 def _a2_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     mom = []
     for a in ("0", "1"):
@@ -3930,13 +3853,9 @@ def _a2_oracle() -> str:
     cyy0 = _a2(_A2_CYY, "0")
     cyy1 = _a2(_A2_CYY, "1")
     return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS us, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-),
-bounds AS (SELECT {_fdiv_duck("min(us) + max(us)", 2)} AS mid FROM ev),
+{_PREPOST_EV_CTES}
 per_user AS (
-  SELECT user_id, {arm} % 2 AS arm,
+  SELECT user_id, {_USER_ARM_DUCK} AS arm,
          sum(CASE WHEN us < (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT AS x1,
          sum(CASE WHEN us < (SELECT mid FROM bounds) THEN 1 ELSE 0 END)::BIGINT AS x2,
          sum(CASE WHEN us >= (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT AS y
@@ -4011,17 +3930,9 @@ def lin_ancova_two_cov_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate to the per-user frame (broadcast 1-row midpoint), then
     ONE conditional aggregate straight to a single 20-moment row; no
     per-stratum frames, no second corpus pass."""
-    arm = F.pmod(F.expr(T.h48_spark("cast(user_id as string)")), F.lit(2))
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros("ts").alias("us"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    bounds = ev.agg(
-        F.expr(_fdiv_spark("min(us) + max(us)", 2)).alias("mid")
-    )
+    arm = F.expr(_USER_ARM_SPARK)
     per_user = (
-        ev.crossJoin(F.broadcast(bounds))
+        _prepost_events(spark, sf_dir)
         .groupBy("user_id")
         .agg(
             F.sum(F.when(F.col("us") < F.col("mid"), F.col("cents")).otherwise(0))
@@ -4161,20 +4072,9 @@ _GS_CROSS = (
 
 
 def _gs_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly_o = _AS_ERFC_POLY.replace("_t", "_to").replace("_x", "_xo")
     return f"""
-WITH e AS (
-  SELECT {arm} % 2 AS arm, epoch_us(ts) AS us,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-),
-rng AS (SELECT min(us) AS mn, max(us) AS mx FROM e),
-lk AS (
-  SELECT ((4 * (us - mn)) // (mx - mn + 1)) + 1 AS look,
-         arm, cents
-  FROM e CROSS JOIN rng
-),
+{_LOOK_CTES}
 g AS (
   SELECT look,
          CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS dn0,
@@ -4282,18 +4182,7 @@ def alpha_spending_gst_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the registered sibling — one scan + 1-row
     min/max broadcast to assign looks, one map-side-combined aggregate
     to the <=4-row look frame, then bounded-frame windows only."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
-    e = load_table(spark, sf_dir, "events").select(
-        arm.alias("arm"),
-        F.unix_micros("ts").alias("us"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    rng = e.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
-    lk = e.crossJoin(F.broadcast(rng)).select(
-        (F.expr("(4 * (us - mn)) div (mx - mn + 1)") + 1).alias("look"),
-        "arm",
-        "cents",
-    )
+    lk = _look_frame(spark, sf_dir)
     g = lk.groupBy("look").agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("long").alias("dn0"),
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("long").alias("dn1"),
@@ -4427,12 +4316,11 @@ def _p_upper(z: str, xcol: str, tcol: str) -> str:
 
 
 def _tost_oracle(where: str = "") -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     pl = _p_upper("zl", "_xl", "_tl")
     pu = _p_upper("zu", "_xh", "_th")
     return f"""
 WITH e AS (
-  SELECT {arm} % 2 AS arm, CAST(round(value * 100) AS BIGINT) AS cents
+  SELECT {_USER_ARM_DUCK} AS arm, CAST(round(value * 100) AS BIGINT) AS cents
   FROM events {where}
 ),
 m AS (
@@ -4568,7 +4456,7 @@ def tost_equivalence_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE conditional aggregate straight from the scan to a
     single 6-moment row — no joins, no windows, nothing bounded by more
     than one output row."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
+    arm = F.expr(_USER_ARM_SPARK)
     e = load_table(spark, sf_dir, "events").select(
         arm.alias("arm"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -4633,10 +4521,9 @@ def stream_tost_guardrail(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("long").alias("cents"),
         )
     )
-    arm_expr = f"pmod({T.h48_spark('cast(user_id as string)')}, 2)"
 
     def _cell_batch(batch_df: DataFrame) -> DataFrame:
-        return batch_df.groupBy(F.expr(arm_expr).alias("arm")).agg(
+        return batch_df.groupBy(F.expr(_USER_ARM_SPARK).alias("arm")).agg(
             F.count(F.lit(1)).cast("long").alias("dn"),
             F.sum("cents").cast("long").alias("ds"),
             F.expr(
@@ -4705,10 +4592,8 @@ _ST_PI0 = "least(1e0, (1e0 * r_tail) / (5e-1 * m))"
 _ST_QRAW = "(pi0 * m * p_value) / p_rank"
 
 
-def _storey_oracle() -> str:
-    return (
-        _AB_SEG_P_CTES
-        + f""",
+# DuckDB twin of ``_storey_readout``, continuing a battery's ``pv`` CTE.
+_STOREY_CTES = f""",
 rk AS (
   SELECT *, row_number() OVER (ORDER BY p_value ASC, segment ASC) AS p_rank,
          count(*) OVER () AS m,
@@ -4728,7 +4613,10 @@ SELECT segment, n0, c0, n1, c1, z_stat, p_value,
        q_raw <= 5e-2 AS rejected_q05
 FROM qv
 """
-    )
+
+
+def _storey_oracle() -> str:
+    return _AB_SEG_P_CTES + _STOREY_CTES
 
 
 @query("storey_qvalue_segments", oracle=_storey_oracle())
@@ -4900,29 +4788,7 @@ def _stream_storey_oracle() -> str:
         "FROM events\n", "FROM events WHERE user_id % 2 = 1\n"
     )
     assert "WHERE user_id % 2 = 1" in restricted
-    return (
-        restricted
-        + f""",
-rk AS (
-  SELECT *, row_number() OVER (ORDER BY p_value ASC, segment ASC) AS p_rank,
-         count(*) OVER () AS m,
-         sum(CASE WHEN p_value > 5e-1 THEN 1 ELSE 0 END) OVER () AS r_tail
-  FROM pv
-),
-p0 AS (SELECT *, {_ST_PI0} AS pi0 FROM rk),
-qv AS (
-  SELECT *, min({_ST_QRAW}) OVER (ORDER BY p_rank DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS q_raw
-  FROM p0
-)
-SELECT segment, n0, c0, n1, c1, z_stat, p_value,
-       p_rank::BIGINT AS p_rank,
-       round(pi0, 6) + 0.0 AS pi0,
-       round(q_raw, 6) + 0.0 AS q_value,
-       q_raw <= 5e-2 AS rejected_q05
-FROM qv
-"""
-    )
+    return restricted + _STOREY_CTES
 
 
 @query("stream_storey_qvalue_monitor", oracle=_stream_storey_oracle())
@@ -4957,44 +4823,11 @@ def stream_storey_qvalue_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "event_type", "value")
     )
 
-    def _cell_batch(batch_df: DataFrame) -> DataFrame:
-        seg = batch_df.select(
-            F.concat(
-                F.col("event_type"), F.lit("_"), (F.col("user_id") % 4).cast("string")
-            ).alias("segment"),
-            (F.col("event_id") % 2).alias("arm"),
-            F.when(
-                (F.col("value") > 60)
-                | (
-                    (F.col("event_id") % 2 == 1)
-                    & (F.col("event_type") == "purchase")
-                    & (F.col("value") > 30)
-                ),
-                1,
-            )
-            .otherwise(0)
-            .alias("converted"),
-        )
-        return seg.groupBy("segment").agg(
-            F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-            .cast("long")
-            .alias("dn0"),
-            F.sum(F.when(F.col("arm") == 0, F.col("converted")).otherwise(0))
-            .cast("long")
-            .alias("dc0"),
-            F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
-            .cast("long")
-            .alias("dn1"),
-            F.sum(F.when(F.col("arm") == 1, F.col("converted")).otherwise(0))
-            .cast("long")
-            .alias("dc1"),
-        )
-
     partials = replay_split_stream(
         spark,
         held,
         "event_id long, user_id long, event_type string, value double",
-        _cell_batch,
+        lambda batch_df: _ab_seg_counts(batch_df, "d"),
         "storey_seg_partials",
         split_col="user_id",
     )

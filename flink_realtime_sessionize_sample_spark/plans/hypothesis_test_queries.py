@@ -43,10 +43,16 @@ from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
     _AS_ERFC_POLY,
     _CHISQ_SUM_E9,
     _CHISQ_Z,
+    _source_lang_margins,
+    with_erfc_args,
 )
-from flink_realtime_sessionize_sample_spark.plans.llm_queries import _CJK, _langid_case
+from flink_realtime_sessionize_sample_spark.plans.llm_queries import _TOKS_D, _TOKS_S
 from flink_realtime_sessionize_sample_spark.plans.ml_eval_queries import (
+    _HEUR_LANG_D,
+    _HEUR_LANG_S,
     _NB_PRED_CTES,
+    _heldout_marker_ctes,
+    _heldout_marker_scores,
     _nb_prediction_frame,
 )
 from flink_realtime_sessionize_sample_spark.plans.registry import query
@@ -55,9 +61,13 @@ from flink_realtime_sessionize_sample_spark.plans.sessionize_queries import (
 )
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
 
-
-_TOKS_S = T.tokens_spark("text")
-_TOKS_D = T.tokens_duck("text")
+# The A/B arm of an experiment unit keyed by user: a portable 48-bit hash
+# of user_id, mod 2, so all of a user's rows share an arm.
+_USER_ARM_DUCK = f"{T.h48_duck('user_id::VARCHAR')} % 2"
+_USER_ARM_SPARK = f"pmod({T.h48_spark('cast(user_id as string)')}, 2)"
+# The same split keyed by document.
+_DOC_ARM_DUCK = f"{T.h48_duck('doc_id::VARCHAR')} % 2"
+_DOC_ARM_SPARK = f"pmod({T.h48_spark('cast(doc_id as string)')}, 2)"
 
 
 # --- Mann-Whitney U (tie-corrected) ---------------------------------------
@@ -188,9 +198,7 @@ def mann_whitney_en_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         "st",
     )
     zz = x.withColumn("z_stat", F.expr(_MW_Z_GUARDED))
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     pv = F.round(F.expr(poly), 6) + F.lit(0.0)
     return xt.select(
         F.col("n1").alias("n_en"),
@@ -209,14 +217,13 @@ _PERM_K = 64
 
 
 def _perm_oracle() -> str:
-    arm = T.h48_duck("doc_id::VARCHAR")
     parm = T.h48_duck("doc_id::VARCHAR || '#' || k::VARCHAR")
     return f"""
 WITH d AS (SELECT doc_id, n_chars AS y FROM documents),
 obs AS (
   SELECT count(*)::BIGINT AS n, sum(y)::BIGINT AS s,
-         CAST(sum({arm} % 2) AS BIGINT) AS n1,
-         CAST(sum(({arm} % 2) * y) AS BIGINT) AS s1
+         CAST(sum({_DOC_ARM_DUCK}) AS BIGINT) AS n1,
+         CAST(sum(({_DOC_ARM_DUCK}) * y) AS BIGINT) AS s1
   FROM d
 ),
 ob AS (
@@ -472,10 +479,9 @@ _HOUR_US = 3600 * 1000000
 
 
 def _wass_oracle() -> str:
-    arm = T.h48_duck("doc_id::VARCHAR")
     return f"""
 WITH d AS (
-  SELECT n_chars, {arm} % 2 AS arm FROM documents
+  SELECT n_chars, {_DOC_ARM_DUCK} AS arm FROM documents
 ),
 g AS (
   SELECT n_chars, sum(1 - arm)::BIGINT AS ca, sum(arm)::BIGINT AS cb
@@ -535,7 +541,7 @@ def wasserstein_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 is exhausted only past ~3e9 docs per arm (the |gap|*1e6 cross
     product), where ANSI Spark and DuckDB both fail LOUD.
     """
-    arm = F.expr(f"pmod({T.h48_spark('cast(doc_id as string)')}, 2)")
+    arm = F.expr(_DOC_ARM_SPARK)
     d = load_table(spark, sf_dir, "documents").select(
         "n_chars", arm.alias("arm")
     )
@@ -951,9 +957,7 @@ def event_overdispersion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = s.withColumn("kk", (F.col("n") - 1).cast("long"))
     d0 = k.withColumn("d", F.expr(_DISP_D))
     z0 = d0.withColumn("z_stat", F.expr(_DISP_Z))
-    xt = z0.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(z0)
     poly = _AS_ERFC_POLY
     return xt.select(
         F.col("n").alias("n_hours"),
@@ -1044,6 +1048,33 @@ FROM xt
 """
 
 
+def _source_ranks(docs: DataFrame) -> DataFrame:
+    """``docs`` (doc_id, source, n_chars, ...) plus ``ns``, the size of the
+    document's source, and ``rs``, its 1-based rank by (n_chars, doc_id)
+    within that source: one global pass over the composite
+    (source, n_chars, doc_id) key, offset per source. Assumes source
+    names contain no '|' (the testdata invariant)."""
+    ckf = docs.withColumn(
+        "ck",
+        F.concat(
+            F.col("source"),
+            F.lit("|"),
+            F.lpad(F.col("n_chars").cast("string"), 13, "0"),
+            F.lpad(F.col("doc_id").cast("string"), 13, "0"),
+        ),
+    )
+    cr = with_global_rank(ckf, [F.col("ck").asc()], rank_col="cr").drop("ck")
+    offs = cr.groupBy(F.col("source").alias("_src")).agg(
+        F.min("cr").cast("long").alias("off"),
+        F.count(F.lit(1)).cast("long").alias("ns"),
+    )
+    return (
+        cr.join(F.broadcast(offs), cr.source == offs._src)
+        .drop("_src")
+        .withColumn("rs", (F.col("cr") - F.col("off") + 1).cast("long"))
+    )
+
+
 @query("brown_forsythe_length_variance", oracle=_bf_oracle())
 def brown_forsythe_length_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe test for equality of document-length VARIANCE
@@ -1069,25 +1100,7 @@ def brown_forsythe_length_variance(spark: SparkSession, sf_dir: str) -> DataFram
         "doc_id", "source", "n_chars"
     )
     docs = materialize(docs)  # feeds the rank pass and the z join
-    ckf = docs.withColumn(
-        "ck",
-        F.concat(
-            F.col("source"),
-            F.lit("|"),
-            F.lpad(F.col("n_chars").cast("string"), 13, "0"),
-            F.lpad(F.col("doc_id").cast("string"), 13, "0"),
-        ),
-    )
-    cr = with_global_rank(ckf, [F.col("ck").asc()], rank_col="cr").drop("ck")
-    offs = cr.groupBy(F.col("source").alias("_src")).agg(
-        F.min("cr").cast("long").alias("off"),
-        F.count(F.lit(1)).cast("long").alias("ns"),
-    )
-    rs = (
-        cr.join(F.broadcast(offs), cr.source == offs._src)
-        .drop("_src")
-        .withColumn("rs", (F.col("cr") - F.col("off") + 1).cast("long"))
-    )
+    rs = _source_ranks(docs)
     med = rs.groupBy("source").agg(
         (
             F.max(F.when(F.col("rs") == F.expr("(ns + 1) div 2"), F.col("n_chars")))
@@ -1124,9 +1137,7 @@ def brown_forsythe_length_variance(spark: SparkSession, sf_dir: str) -> DataFram
         F.expr("cast(1000000 * qt - terms_e6 as bigint)").alias("den_e6"),
     )
     z1 = f0.withColumn("f_stat", F.expr(_BF_F)).withColumn("z_stat", F.expr(_BF_Z))
-    xt = z1.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(z1)
     poly = _AS_ERFC_POLY
     return xt.select(
         F.col("k").alias("k_sources"),
@@ -1260,9 +1271,7 @@ def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     zz = m.withColumn("z_micro", F.expr(_RUNS_Z_MICRO)).withColumn(
         "z_stat", F.round(F.col("z_micro") / 1e6, 6) + F.lit(0.0)
     )
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         "n1",
         "n2",
@@ -1707,9 +1716,7 @@ def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     zz = s.withColumn("z_micro", F.expr(_CA_Z_MICRO)).withColumn(
         "z_stat", F.round(F.col("z_micro") / 1e6, 6) + F.lit(0.0)
     )
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         "n_buckets",
         F.col("bn").alias("n_docs"),
@@ -1735,27 +1742,14 @@ _CQ_Q_MICRO = (
 
 
 def _cq_oracle() -> str:
-
-    toks_d = T.tokens_duck("text")
-    case = _langid_case(
-        "men", "mde", "mfr", "mes", f"regexp_matches(text, '{_CJK}')"
-    )
     return (
         _NB_PRED_CTES
+        + _heldout_marker_ctes("doc_id, lang, text")
         + f"""
-, toks2 AS (
-  SELECT doc_id, lang, text, {toks_d} AS t FROM documents WHERE doc_id % 2 = 1
-),
-hs AS (
-  SELECT doc_id, lang, text,
-         {T.marker_score_duck('t', 'en')} AS men, {T.marker_score_duck('t', 'de')} AS mde,
-         {T.marker_score_duck('t', 'fr')} AS mfr, {T.marker_score_duck('t', 'es')} AS mes
-  FROM toks2
-),
 r AS (
   SELECT p.doc_id,
          (p.pred_lang = p.true_lang)::INT AS x1,
-         (({case}) = h.lang)::INT AS x2,
+         (({_HEUR_LANG_D}) = h.lang)::INT AS x2,
          (h.lang = 'en')::INT AS x3
   FROM pred p JOIN hs h USING (doc_id)
 ),
@@ -1796,31 +1790,14 @@ def cochran_q_three_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row plans; one doc_id equi-join pairs them, one
     map-side-combined scalar aggregate ends it."""
 
-    toks_s = T.tokens_spark("text")
     pred = _nb_prediction_frame(spark, sf_dir).select(
         "doc_id",
         (F.col("pred_lang") == F.col("true_lang")).cast("int").alias("x1"),
     )
-    docs = load_table(spark, sf_dir, "documents")
-    hs = (
-        docs.filter(F.col("doc_id") % 2 == 1)
-        .withColumn("t", F.expr(toks_s))
-        .select(
-            "doc_id",
-            "lang",
-            "text",
-            F.expr(T.marker_score_spark("t", "en")).alias("men"),
-            F.expr(T.marker_score_spark("t", "de")).alias("mde"),
-            F.expr(T.marker_score_spark("t", "fr")).alias("mfr"),
-            F.expr(T.marker_score_spark("t", "es")).alias("mes"),
-        )
-    )
+    hs = _heldout_marker_scores(spark, sf_dir, "doc_id", "lang", "text")
     h = hs.select(
         "doc_id",
-        (
-            F.expr(_langid_case("men", "mde", "mfr", "mes", f"text rlike '{_CJK}'"))
-            == F.col("lang")
-        )
+        (F.expr(_HEUR_LANG_S) == F.col("lang"))
         .cast("int")
         .alias("x2"),
         (F.col("lang") == "en").cast("int").alias("x3"),
@@ -1848,8 +1825,6 @@ def cochran_q_three_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cv_oracle() -> str:
-    # Local import: only this oracle uses the guarded-sum constant.
-
     return f"""
 WITH cell AS (
   SELECT source, lang, count(*)::BIGINT AS nsl
@@ -1912,18 +1887,7 @@ def cramers_v_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to mutual_info_source_lang — one scan to
     the bounded cell frame, bounded re-aggregates, broadcast totals."""
-    cell = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("source", "lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("nsl"))
-    )
-    cell = materialize(cell)
-    ms = cell.groupBy("source").agg(F.sum("nsl").cast("long").alias("ns"))
-    ml = cell.groupBy("lang").agg(F.sum("nsl").cast("long").alias("nl"))
-    tot = cell.agg(F.sum("nsl").cast("long").alias("nn"))
-    dims = ms.agg(F.count(F.lit(1)).cast("long").alias("r")).crossJoin(
-        ml.agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
+    cell, ms, ml, tot, dims = _source_lang_margins(spark, sf_dir)
     grid = (
         ms.crossJoin(F.broadcast(ml))
         .join(cell, ["source", "lang"], "left")
@@ -2213,6 +2177,38 @@ _KW_Z = (
 )
 
 
+def _kw_rank_sums(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Document length pooled over sources and ranked (doubled average
+    ranks): (per: source, nj, r2j; tot: nn, tt = sum of t^3 - t over
+    tie groups) — the Kruskal-Wallis and Dunn ``per``/``tot`` CTEs."""
+    sg = (
+        load_table(spark, sf_dir, "documents")
+        .groupBy("source", F.col("n_chars").alias("v"))
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    sg = materialize(sg)  # bounded |S| x |values|; feeds g + the join
+    g = sg.groupBy("v").agg(F.sum("c").cast("long").alias("cnt"))
+    rk = with_global_rank(g, ["v"], rank_col="_rk", sum_col="cnt", cum_col="cum_all")
+    a2 = rk.select(
+        "v", (2 * (F.col("cum_all") - F.col("cnt")) + F.col("cnt") + 1).alias("r2")
+    )
+    per = (
+        sg.join(a2, "v")
+        .groupBy("source")
+        .agg(
+            F.sum("c").cast("long").alias("nj"),
+            F.sum(F.col("c") * F.col("r2")).cast("long").alias("r2j"),
+        )
+    )
+    tot = g.agg(
+        F.sum("cnt").cast("long").alias("nn"),
+        F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
+        .cast("long")
+        .alias("tt"),
+    )
+    return per, tot
+
+
 def _kw_oracle() -> str:
     poly = _AS_ERFC_POLY
     return f"""
@@ -2297,31 +2293,7 @@ def kruskal_wallis_length_by_source(spark: SparkSession, sf_dir: str) -> DataFra
     frame (checkpointed — bounded by |S| × |length domain|); value ranks
     ride the banded global-rank pass over the |length domain| frame; the
     per-group frame is k rows; the statistic is a scalar reduce."""
-    sg = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("source", F.col("n_chars").alias("v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    sg = materialize(sg)  # bounded |S| x |values|; feeds g + the join
-    g = sg.groupBy("v").agg(F.sum("c").cast("long").alias("cnt"))
-    rk = with_global_rank(g, ["v"], rank_col="_rk", sum_col="cnt", cum_col="cum_all")
-    a2 = rk.select(
-        "v", (2 * (F.col("cum_all") - F.col("cnt")) + F.col("cnt") + 1).alias("r2")
-    )
-    per = (
-        sg.join(a2, "v")
-        .groupBy("source")
-        .agg(
-            F.sum("c").cast("long").alias("nj"),
-            F.sum(F.col("c") * F.col("r2")).cast("long").alias("r2j"),
-        )
-    )
-    tot = g.agg(
-        F.sum("cnt").cast("long").alias("nn"),
-        F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
-        .cast("long")
-        .alias("tt"),
-    )
+    per, tot = _kw_rank_sums(spark, sf_dir)
     terms = per.crossJoin(F.broadcast(tot)).select(
         "nj",
         "r2j",
@@ -2344,11 +2316,7 @@ def kruskal_wallis_length_by_source(spark: SparkSession, sf_dir: str) -> DataFra
         "tt",
     )
     zz = st.withColumn("z_stat", F.expr(_KW_Z))
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_docs",
@@ -2486,11 +2454,7 @@ def mann_kendall_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "var18",
         F.expr(_MK_Z).alias("z_stat"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_days",
@@ -2599,32 +2563,8 @@ def dunn_posthoc_length_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative for ranks), then a |k|x|k| self-join and the BH windows
     on the bounded 190-row pair frame (documented bounded-global-window
     exception)."""
-    sg = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("source", F.col("n_chars").alias("v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    sg = materialize(sg)  # bounded |S| x |values|; feeds g + the join
-    g = sg.groupBy("v").agg(F.sum("c").cast("long").alias("cnt"))
-    rk = with_global_rank(g, ["v"], rank_col="_rk", sum_col="cnt", cum_col="cum_all")
-    a2 = rk.select(
-        "v", (2 * (F.col("cum_all") - F.col("cnt")) + F.col("cnt") + 1).alias("r2")
-    )
-    per = (
-        sg.join(a2, "v")
-        .groupBy("source")
-        .agg(
-            F.sum("c").cast("long").alias("nj"),
-            F.sum(F.col("c") * F.col("r2")).cast("long").alias("r2j"),
-        )
-    )
+    per, tot = _kw_rank_sums(spark, sf_dir)
     per = materialize(per)  # k rows; feeds both sides of the pair join
-    tot = g.agg(
-        F.sum("cnt").cast("long").alias("nn"),
-        F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
-        .cast("long")
-        .alias("tt"),
-    )
     pa = per.select(
         F.col("source").alias("source_a"),
         F.col("nj").alias("na"),
@@ -2642,11 +2582,7 @@ def dunn_posthoc_length_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     zz = pairs.select(
         "source_a", "source_b", "na", "nb", F.expr(_DUNN_Z).alias("z_stat")
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     pv = xt.select(
         "source_a",
@@ -3059,11 +2995,7 @@ def jonckheere_terpstra_daily_trend(spark: SparkSession, sf_dir: str) -> DataFra
             F.expr(_JT_Z).alias("z_stat"),
         )
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_events",
@@ -3439,11 +3371,7 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "z_stat",
         F.expr(f"CASE WHEN dof < 1 THEN NULL ELSE ({_CHISQ_Z}) END"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_docs",
@@ -3673,11 +3601,7 @@ def brunner_munzel_en_vs_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s0",
         "s1",
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("w_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("w_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz, "w_stat")
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_rest",
@@ -4175,11 +4099,7 @@ def fligner_killeen_scale_by_source(spark: SparkSession, sf_dir: str) -> DataFra
         "k",
     )
     zz = st.withColumn("z_stat", F.expr(_FK_Z))
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_docs",
@@ -4222,10 +4142,9 @@ _HL_K = (
 
 
 def _hl_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     return f"""
 WITH e AS (
-  SELECT {arm} % 2 AS arm, CAST(round(value * 100) AS BIGINT) AS cents
+  SELECT {_USER_ARM_DUCK} AS arm, CAST(round(value * 100) AS BIGINT) AS cents
   FROM events
 ),
 v0 AS (SELECT cents AS v, count(*)::BIGINT AS c FROM e WHERE arm = 0 GROUP BY cents),
@@ -4352,7 +4271,7 @@ def hodges_lehmann_shift_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks ride one banded global-order pass over that grid. Nothing
     downstream of the first aggregate scales with corpus rows (pinned
     by bench.py's ``scale_smoke_hl_grid`` 10x ratio)."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
+    arm = F.expr(_USER_ARM_SPARK)
     e = load_table(spark, sf_dir, "events").select(
         arm.alias("arm"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -4552,6 +4471,59 @@ def page_trend_test_tod(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- paired pre/post frames --------------------------------------------------------
+
+# Each event with the batch's midpoint time ``mid``, which splits a user's
+# events into a pre and a post period.
+_PREPOST_EV_CTES = f"""WITH ev AS (
+  SELECT user_id, epoch_us(ts) AS us, CAST(round(value * 100) AS BIGINT) AS cents
+  FROM events
+),
+bounds AS (SELECT {_fdiv_duck("min(us) + max(us)", 2)} AS mid FROM ev),"""
+# Per user: post-period minus pre-period spend in cents.
+_PREPOST_DIFF_CTES = _PREPOST_EV_CTES + """
+per_user AS (
+  SELECT user_id,
+         sum(CASE WHEN us >= (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT
+           - sum(CASE WHEN us < (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT
+           AS d
+  FROM ev GROUP BY user_id
+),"""
+
+
+def _prepost_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, us, cents, mid) — the Spark twin of ``_PREPOST_EV_CTES``."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        F.unix_micros("ts").alias("us"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    )
+    bounds = ev.agg(
+        F.expr(_fdiv_spark("min(us) + max(us)", 2)).alias("mid")
+    )
+    return ev.crossJoin(F.broadcast(bounds))
+
+
+def _prepost_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, d) — the Spark twin of ``_PREPOST_DIFF_CTES``' ``per_user``."""
+    return (
+        _prepost_events(spark, sf_dir)
+        .groupBy("user_id")
+        .agg(
+            (
+                F.sum(
+                    F.when(F.col("us") >= F.col("mid"), F.col("cents")).otherwise(0)
+                )
+                - F.sum(
+                    F.when(F.col("us") < F.col("mid"), F.col("cents")).otherwise(0)
+                )
+            )
+            .cast("long")
+            .alias("d")
+        )
+    )
+
+
 # --- Wilcoxon signed-rank (paired pre/post) ----------------------------------------
 
 # Wilcoxon (1945) signed-rank on PAIRED per-user spend: pre-midpoint vs
@@ -4578,18 +4550,7 @@ _WS_Z = (
 def _ws_oracle() -> str:
     poly = _AS_ERFC_POLY
     return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS us, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-),
-bounds AS (SELECT {_fdiv_duck("min(us) + max(us)", 2)} AS mid FROM ev),
-per_user AS (
-  SELECT user_id,
-         sum(CASE WHEN us >= (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT
-           - sum(CASE WHEN us < (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT
-           AS d
-  FROM ev GROUP BY user_id
-),
+{_PREPOST_DIFF_CTES}
 nz AS (SELECT abs(d) AS ad, CASE WHEN d > 0 THEN 1 ELSE 0 END AS pos
        FROM per_user WHERE d <> 0),
 g AS (
@@ -4653,30 +4614,7 @@ def wilcoxon_signed_rank_prepost(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded global-order pass over that grid, then a scalar reduce —
     the KW shape on a per-user domain."""
     poly = _AS_ERFC_POLY
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros("ts").alias("us"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    bounds = ev.agg(
-        F.expr(_fdiv_spark("min(us) + max(us)", 2)).alias("mid")
-    )
-    per_user = (
-        ev.crossJoin(F.broadcast(bounds))
-        .groupBy("user_id")
-        .agg(
-            (
-                F.sum(
-                    F.when(F.col("us") >= F.col("mid"), F.col("cents")).otherwise(0)
-                )
-                - F.sum(
-                    F.when(F.col("us") < F.col("mid"), F.col("cents")).otherwise(0)
-                )
-            )
-            .cast("long")
-            .alias("d")
-        )
-    )
+    per_user = _prepost_diff(spark, sf_dir)
     per_user = materialize(per_user)  # two consumers: count + rank path
     n_users = per_user.agg(F.count(F.lit(1)).cast("long").alias("n_users"))
     nz = per_user.filter(F.col("d") != 0).select(
@@ -4700,12 +4638,7 @@ def wilcoxon_signed_rank_prepost(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("tt"),
     ).crossJoin(F.broadcast(n_users))
     zz = s.withColumn("z_micro", F.expr(_WS_Z))
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_micro") / 1e6) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t",
-        1 / (1 + 0.3275911 * (F.abs(F.col("z_micro") / 1e6) / F.sqrt(F.lit(2.0)))),
-    )
+    xt = with_erfc_args(zz, F.col("z_micro") / 1e6)
     return xt.select(
         "n_users",
         F.coalesce(F.col("n"), F.lit(0)).alias("n_nonzero"),
@@ -4882,11 +4815,7 @@ def bartlett_variance_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "*",
     )
     zz = st.withColumn("z_stat", F.expr(_BL_Z))
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         "n_docs",
         "n_groups",
@@ -5098,18 +5027,7 @@ _SG_Z = (
 def _sg_oracle() -> str:
     poly = _AS_ERFC_POLY
     return f"""
-WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS us, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-),
-bounds AS (SELECT {_fdiv_duck("min(us) + max(us)", 2)} AS mid FROM ev),
-per_user AS (
-  SELECT user_id,
-         sum(CASE WHEN us >= (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT
-           - sum(CASE WHEN us < (SELECT mid FROM bounds) THEN cents ELSE 0 END)::BIGINT
-           AS d
-  FROM ev GROUP BY user_id
-),
+{_PREPOST_DIFF_CTES}
 s AS (
   SELECT count(*)::BIGINT AS n_users,
          sum(CASE WHEN d <> 0 THEN 1 ELSE 0 END)::BIGINT AS n,
@@ -5153,42 +5071,14 @@ def sign_test_prepost(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one corpus aggregate to the per-user frame (broadcast
     1-row midpoint), then ONE count aggregate to a single row."""
     poly = _AS_ERFC_POLY
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_micros("ts").alias("us"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    bounds = ev.agg(
-        F.expr(_fdiv_spark("min(us) + max(us)", 2)).alias("mid")
-    )
-    per_user = (
-        ev.crossJoin(F.broadcast(bounds))
-        .groupBy("user_id")
-        .agg(
-            (
-                F.sum(
-                    F.when(F.col("us") >= F.col("mid"), F.col("cents")).otherwise(0)
-                )
-                - F.sum(
-                    F.when(F.col("us") < F.col("mid"), F.col("cents")).otherwise(0)
-                )
-            )
-            .cast("long")
-            .alias("d")
-        )
-    )
+    per_user = _prepost_diff(spark, sf_dir)
     s = per_user.agg(
         F.count(F.lit(1)).cast("long").alias("n_users"),
         F.sum(F.when(F.col("d") != 0, 1).otherwise(0)).cast("long").alias("n"),
         F.sum(F.when(F.col("d") > 0, 1).otherwise(0)).cast("long").alias("pos"),
     )
     zz = s.withColumn("z_micro", F.expr(_SG_Z))
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_micro") / 1e6) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t",
-        1 / (1 + 0.3275911 * (F.abs(F.col("z_micro") / 1e6) / F.sqrt(F.lit(2.0)))),
-    )
+    xt = with_erfc_args(zz, F.col("z_micro") / 1e6)
     return xt.select(
         "n_users",
         F.col("n").alias("n_nonzero"),
@@ -5365,11 +5255,10 @@ _AB_Z = (
 
 
 def _ab_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     return f"""
 WITH e AS (
-  SELECT {arm} % 2 AS arm, CAST(round(value * 100) AS BIGINT) AS cents
+  SELECT {_USER_ARM_DUCK} AS arm, CAST(round(value * 100) AS BIGINT) AS cents
   FROM events
 ),
 g AS (
@@ -5439,9 +5328,8 @@ def ansari_bradley_scale_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks are one cumulative window over it; two guarded reduces end
     it. Nothing downstream of the first aggregate scales with corpus
     rows."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
     e = load_table(spark, sf_dir, "events").select(
-        arm.alias("arm"),
+        F.expr(_USER_ARM_SPARK).alias("arm"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     g = e.groupBy(F.col("cents").alias("v")).agg(
@@ -5474,9 +5362,7 @@ def ansari_bradley_scale_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     zz = s.crossJoin(F.broadcast(tot)).select(
         "nn", "n0", "n1", "w2", "a1", "a2d", F.expr(_AB_Z).alias("z_stat")
     )
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         F.col("nn").alias("n_events"),
         "n0",
@@ -5527,12 +5413,11 @@ _BD_Z = (
 )
 
 
-def _bd_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
-    poly = _AS_ERFC_POLY
-    return f"""
-WITH e AS (
-  SELECT event_type AS stratum, {arm} % 2 AS g,
+# Per event type: the 2x2 table of user-hash arm ``g`` against the
+# outcome value > 60 (a = treated yes, b = treated no, c = control yes,
+# d = control no).
+_STRATA_2X2_CTES = f"""WITH e AS (
+  SELECT event_type AS stratum, {_USER_ARM_DUCK} AS g,
          CASE WHEN value > 60 THEN 1 ELSE 0 END AS y
   FROM events
 ),
@@ -5543,7 +5428,28 @@ s AS (
          CAST(sum((1 - g) * y) AS BIGINT) AS c,
          CAST(sum((1 - g) * (1 - y)) AS BIGINT) AS d
   FROM e GROUP BY stratum
-),
+),"""
+
+
+def _strata_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(stratum, a, b, c, d) — the Spark twin of ``_STRATA_2X2_CTES``."""
+    e = load_table(spark, sf_dir, "events").select(
+        F.col("event_type").alias("stratum"),
+        F.expr(_USER_ARM_SPARK).alias("g"),
+        F.when(F.col("value") > 60, 1).otherwise(0).alias("y"),
+    )
+    return e.groupBy("stratum").agg(
+        F.sum(F.col("g") * F.col("y")).cast("long").alias("a"),
+        F.sum(F.col("g") * (1 - F.col("y"))).cast("long").alias("b"),
+        F.sum((1 - F.col("g")) * F.col("y")).cast("long").alias("c"),
+        F.sum((1 - F.col("g")) * (1 - F.col("y"))).cast("long").alias("d"),
+    )
+
+
+def _bd_oracle() -> str:
+    poly = _AS_ERFC_POLY
+    return f"""
+{_STRATA_2X2_CTES}
 m AS (
   SELECT stratum, a, b, c, d,
          a + b AS n1, c + d AS n0, a + c AS m1, b + d AS m0,
@@ -5643,18 +5549,7 @@ def breslow_day_or_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side-combined aggregate over the event scan to
     the 5-row stratum frame; everything downstream is bounded-frame
     algebra."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
-    e = load_table(spark, sf_dir, "events").select(
-        F.col("event_type").alias("stratum"),
-        arm.alias("g"),
-        F.when(F.col("value") > 60, 1).otherwise(0).alias("y"),
-    )
-    s = e.groupBy("stratum").agg(
-        F.sum(F.col("g") * F.col("y")).cast("long").alias("a"),
-        F.sum(F.col("g") * (1 - F.col("y"))).cast("long").alias("b"),
-        F.sum((1 - F.col("g")) * F.col("y")).cast("long").alias("c"),
-        F.sum((1 - F.col("g")) * (1 - F.col("y"))).cast("long").alias("d"),
-    )
+    s = _strata_2x2(spark, sf_dir)
     m = s.select(
         "*",
         (F.col("a") + F.col("b")).alias("n1"),
@@ -5731,9 +5626,7 @@ def breslow_day_or_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     poly = _AS_ERFC_POLY
     zz = st.withColumn("z_stat", F.expr(_BD_Z))
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         "n_strata",
         "dof",
@@ -5782,7 +5675,6 @@ _FZ_Z = (
 
 
 def _fz_oracle() -> str:
-    arm = T.h48_duck("doc_id::VARCHAR")
     toks = T.tokens_duck("text")
     poly = _AS_ERFC_POLY
     mom = {
@@ -5792,7 +5684,7 @@ def _fz_oracle() -> str:
     }
     return f"""
 WITH d AS (
-  SELECT {arm} % 2 AS arm,
+  SELECT {_DOC_ARM_DUCK} AS arm,
          n_chars AS x,
          CAST(length({toks}) AS BIGINT) AS y
   FROM documents
@@ -5853,7 +5745,7 @@ def fisher_z_corr_diff_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one scan -> one map-side-combined scalar aggregate
     (12 integers); 1-row algebra after."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(doc_id as string)')}, 2)")
+    arm = F.expr(_DOC_ARM_SPARK)
     toks = T.tokens_spark("text")
     d = load_table(spark, sf_dir, "documents").select(
         arm.alias("arm"),
@@ -5895,9 +5787,7 @@ def fisher_z_corr_diff_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_FZ_ATANH.format(a=1)).alias("z1"),
     )
     zz = zf.withColumn("z_stat", F.expr(_FZ_Z))
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         F.col("n0").alias("n_a"),
@@ -6083,9 +5973,7 @@ def ljung_box_daily_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qq = agg.withColumn("q", F.expr(_LB_Q))
     zz = qq.withColumn("z_stat", F.expr(_LB_Z))
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         F.col("nn").alias("n_days"),
         F.expr(
@@ -6236,9 +6124,7 @@ def bowker_symmetry_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("t").cast("long").alias("x2_e9"),
     )
     zz = agg.select("dof", "n_offdiag", "x2_e9", F.expr(_BW_Z).alias("z_stat"))
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         F.coalesce(F.col("n_offdiag"), F.lit(0))
         .cast("long")

@@ -12,7 +12,7 @@ checks the full pipeline, not a lookalike.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
@@ -97,6 +97,31 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_quality_terms(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """Per non-empty document: (doc_id, n_tokens, stop_cnt, punct_ratio),
+    and the unrounded quality score over those columns."""
+    docs = load_table(spark, sf_dir, "documents")
+    m = (
+        docs.withColumn("t", F.expr(_TOKS_S))
+        .filter(F.size("t") > 0)
+        .select(
+            "doc_id",
+            F.size("t").alias("n_tokens"),
+            F.expr(T.stopword_count_spark("t")).alias("stop_cnt"),
+            (
+                F.length(F.regexp_replace("text", r"[^.,;:!?]", "")).cast("double")
+                / F.length("text")
+            ).alias("punct_ratio"),
+        )
+    )
+    quality = (
+        F.least(F.lit(1.0), F.col("n_tokens") / 100.0)
+        * (1.0 - F.col("punct_ratio"))
+        * (0.25 + 0.75 * F.least(F.lit(1.0), F.col("stop_cnt") / 10.0))
+    )
+    return m, quality
+
+
 @query(
     "doc_quality_score",
     oracle=f"""
@@ -118,25 +143,7 @@ FROM m
 def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic document quality: length saturation × punctuation penalty ×
     stopword-presence bonus (natural prose carries closed-class words)."""
-    docs = load_table(spark, sf_dir, "documents")
-    m = (
-        docs.withColumn("t", F.expr(_TOKS_S))
-        .filter(F.size("t") > 0)
-        .select(
-            "doc_id",
-            F.size("t").alias("n_tokens"),
-            F.expr(T.stopword_count_spark("t")).alias("stop_cnt"),
-            (
-                F.length(F.regexp_replace("text", r"[^.,;:!?]", "")).cast("double")
-                / F.length("text")
-            ).alias("punct_ratio"),
-        )
-    )
-    quality = (
-        F.least(F.lit(1.0), F.col("n_tokens") / 100.0)
-        * (1.0 - F.col("punct_ratio"))
-        * (0.25 + 0.75 * F.least(F.lit(1.0), F.col("stop_cnt") / 10.0))
-    )
+    m, quality = _doc_quality_terms(spark, sf_dir)
     return m.select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),

@@ -28,11 +28,16 @@ from flink_realtime_sessionize_sample_spark.operators.global_order import (
     with_global_rank,
 )
 from flink_realtime_sessionize_sample_spark.operators.mat import materialize
+from flink_realtime_sessionize_sample_spark.operators.similarity import cosine_topk
+from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
+    _AS_ERFC_POLY,
+    bm25_scored_frame,
+    with_erfc_args,
+)
+from flink_realtime_sessionize_sample_spark.plans.llm_queries import _CJK, _TOKS_D, _TOKS_S, _langid_case
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
-
-_TOKS_S = T.tokens_spark("text")
-_TOKS_D = T.tokens_duck("text")
+from flink_realtime_sessionize_sample_spark.streaming.replay import replay_split_stream
 
 # --- hashed multinomial naive Bayes --------------------------------------
 
@@ -406,9 +411,10 @@ _RRF_DEPTH = 20
 _RRF_TOP = 10
 
 
-@query(
-    "hybrid_rrf_retrieval",
-    oracle=f"""
+def _retrieval_legs_ctes(depth: int) -> str:
+    """DuckDB ``sparse`` (BM25, ``sr``) and ``dense`` (cosine to vec_id 0,
+    ``dr``) top-``depth`` rankings, ending in a comma for the caller's CTEs."""
+    return f"""
 WITH toks AS (
   SELECT doc_id, {_TOKS_D} AS t FROM documents
 ),
@@ -431,7 +437,7 @@ bm AS (
 ),
 sparse AS (
   SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC) AS sr
-  FROM bm ORDER BY score DESC, doc_id ASC LIMIT {_RRF_DEPTH}
+  FROM bm ORDER BY score DESC, doc_id ASC LIMIT {depth}
 ),
 e AS (
   SELECT vec_id, embedding AS v, {T.norm_duck('embedding')} AS nrm FROM embeddings
@@ -444,8 +450,39 @@ cos AS (
 ),
 dense AS (
   SELECT doc_id, row_number() OVER (ORDER BY cosine DESC, doc_id ASC) AS dr
-  FROM cos ORDER BY cosine DESC, doc_id ASC LIMIT {_RRF_DEPTH}
-),
+  FROM cos ORDER BY cosine DESC, doc_id ASC LIMIT {depth}
+),"""
+
+
+def _retrieval_legs(spark: SparkSession, sf_dir: str, depth: int) -> tuple[DataFrame, DataFrame]:
+    """Spark twin of ``_retrieval_legs_ctes``: (sparse (doc_id, sr),
+    dense (doc_id, dr)), each ranked on its rounded score with doc_id
+    tiebreaks."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    emb = load_table(spark, sf_dir, "embeddings")
+    bm = bm25_scored_frame(docs)
+    sparse = (
+        bm.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
+        .limit(depth)
+        .withColumn(
+            "sr",
+            F.row_number().over(
+                Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
+            ),
+        )
+        .select("doc_id", "sr")
+    )
+    dense = (
+        cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=depth)
+        .select(F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("dr"))
+    )
+    return sparse, dense
+
+
+@query(
+    "hybrid_rrf_retrieval",
+    oracle=_retrieval_legs_ctes(_RRF_DEPTH)
+    + f"""
 fused AS (
   SELECT coalesce(s.doc_id, d.doc_id) AS doc_id, s.sr, d.dr,
          round((coalesce(1.0 / ({_RRF_K} + s.sr), 0.0)
@@ -473,32 +510,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fused top-10 all run on driver-negligible row counts. Scale
     shape: both legs are the already-verified index patterns — the corpus
     shuffles once per leg, never crossJoins."""
-    from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
-        bm25_scored_frame,
-    )
-    from flink_realtime_sessionize_sample_spark.operators.similarity import (
-        cosine_topk,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    bm = bm25_scored_frame(docs)  # (doc_id, bm25 rounded 4dp)
-    sparse = (
-        bm.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-        .limit(_RRF_DEPTH)
-        .withColumn(
-            "sr",
-            F.row_number().over(
-                Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-            ),
-        )
-        .select("doc_id", "sr")
-    )
-    dense = (
-        cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=_RRF_DEPTH)
-        .select(F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("dr"))
-    )
+    sparse, dense = _retrieval_legs(spark, sf_dir, _RRF_DEPTH)
     fused = (
         sparse.join(dense, "doc_id", "full_outer")
         .select(
@@ -556,10 +568,6 @@ def stream_naive_bayes_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     math is the byte-identical `_nb_score` the batch query uses. Oracle:
     the SAME full held-out-half SQL as ``naive_bayes_lang_classify`` —
     streaming scoring ≡ batch scoring, value-hash checked."""
-    from flink_realtime_sessionize_sample_spark.streaming.replay import (
-        replay_split_stream,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     model, prior = _nb_model_frames(docs)
     model = model.cache()
@@ -717,31 +725,54 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- the marker-word heuristic as a second labeler --------------------------
+
+# ``doc_lang_id``'s rule, in each dialect, over the marker-score columns of
+# ``_heldout_marker_ctes`` / ``_heldout_marker_scores``.
+_HEUR_LANG_D = _langid_case("men", "mde", "mfr", "mes", f"regexp_matches(text, '{_CJK}')")
+_HEUR_LANG_S = _langid_case("men", "mde", "mfr", "mes", f"text rlike '{_CJK}'")
+
+
+def _heldout_marker_ctes(cols: str) -> str:
+    """DuckDB ``toks2``/``hs`` CTEs appended to ``_NB_PRED_CTES``: the
+    held-out half (odd ``doc_id``) with ``cols`` and its four marker scores."""
+    return f"""
+, toks2 AS (
+  SELECT {cols}, {_TOKS_D} AS t FROM documents WHERE doc_id % 2 = 1
+),
+hs AS (
+  SELECT {cols},
+         {T.marker_score_duck('t', 'en')} AS men, {T.marker_score_duck('t', 'de')} AS mde,
+         {T.marker_score_duck('t', 'fr')} AS mfr, {T.marker_score_duck('t', 'es')} AS mes
+  FROM toks2
+),"""
+
+
+def _heldout_marker_scores(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """Spark twin of ``_heldout_marker_ctes``' ``hs``."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.filter(F.col("doc_id") % 2 == 1)
+        .withColumn("t", F.expr(_TOKS_S))
+        .select(
+            *cols,
+            F.expr(T.marker_score_spark("t", "en")).alias("men"),
+            F.expr(T.marker_score_spark("t", "de")).alias("mde"),
+            F.expr(T.marker_score_spark("t", "fr")).alias("mfr"),
+            F.expr(T.marker_score_spark("t", "es")).alias("mes"),
+        )
+    )
+
+
 # --- inter-rater agreement: Cohen's kappa ---------------------------------
 
 
 def _kappa_oracle() -> str:
-    from flink_realtime_sessionize_sample_spark.plans.llm_queries import (
-        _CJK,
-        _langid_case,
-    )
-
-    case = _langid_case(
-        "men", "mde", "mfr", "mes", f"regexp_matches(text, '{_CJK}')"
-    )
     return (
         _NB_PRED_CTES
+        + _heldout_marker_ctes("doc_id, text")
         + f"""
-, toks2 AS (
-  SELECT doc_id, text, {_TOKS_D} AS t FROM documents WHERE doc_id % 2 = 1
-),
-hs AS (
-  SELECT doc_id, text,
-         {T.marker_score_duck('t', 'en')} AS men, {T.marker_score_duck('t', 'de')} AS mde,
-         {T.marker_score_duck('t', 'fr')} AS mfr, {T.marker_score_duck('t', 'es')} AS mes
-  FROM toks2
-),
-heur AS (SELECT doc_id, {case} AS pb FROM hs),
+heur AS (SELECT doc_id, {_HEUR_LANG_D} AS pb FROM hs),
 pairs AS (
   SELECT p.doc_id, p.pred_lang AS pa, h.pb
   FROM pred p JOIN heur h USING (doc_id)
@@ -785,33 +816,11 @@ def cohens_kappa_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline; the pair frame is ONE doc_id equi-join; the kappa inputs are
     two |labels|-row aggregates full-outer-joined and collapsed to one
     row, cross-joined as 1-row broadcasts."""
-    from flink_realtime_sessionize_sample_spark.plans.llm_queries import (
-        _CJK,
-        _langid_case,
-    )
-
     pred = _nb_prediction_frame(spark, sf_dir).select(
         "doc_id", F.col("pred_lang").alias("pa")
     )
-    docs = load_table(spark, sf_dir, "documents")
-    hs = (
-        docs.filter(F.col("doc_id") % 2 == 1)
-        .withColumn("t", F.expr(_TOKS_S))
-        .select(
-            "doc_id",
-            "text",
-            F.expr(T.marker_score_spark("t", "en")).alias("men"),
-            F.expr(T.marker_score_spark("t", "de")).alias("mde"),
-            F.expr(T.marker_score_spark("t", "fr")).alias("mfr"),
-            F.expr(T.marker_score_spark("t", "es")).alias("mes"),
-        )
-    )
-    heur = hs.select(
-        "doc_id",
-        F.expr(
-            _langid_case("men", "mde", "mfr", "mes", f"text rlike '{_CJK}'")
-        ).alias("pb"),
-    )
+    hs = _heldout_marker_scores(spark, sf_dir, "doc_id", "text")
+    heur = hs.select("doc_id", F.expr(_HEUR_LANG_S).alias("pb"))
     return kappa_from_pairs(pred.join(heur, "doc_id"))
 
 
@@ -888,12 +897,11 @@ b AS (SELECT least((sm // 100000), 9)::INT AS bin, pos, sm FROM s)
 """
 
 
-def _reliability_bin_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-bin calibration aggregate (bin, n_docs, n_pos, sum_score_micro,
-    _sse) — the Spark twin of ``_RELIABILITY_CTES``, shared by the
-    reliability diagram and the ECE summary. One corpus aggregate to
-    |distinct lengths| rows, the CDF on the distributed global-rank pass,
-    a broadcast join back, one 10-bin hash aggregate."""
+def _reliability_score_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document (pos, sm) calibration score — the Spark twin of
+    ``_RELIABILITY_CTES``' ``s``. One corpus aggregate to |distinct
+    lengths| rows, the CDF on the distributed global-rank pass, a
+    broadcast join back."""
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         (F.col("lang") == "en").cast("int").alias("pos"),
@@ -914,6 +922,15 @@ def _reliability_bin_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("sm"),
     )
+    return s
+
+
+def _reliability_bin_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-bin calibration aggregate (bin, n_docs, n_pos, sum_score_micro,
+    _sse) — the Spark twin of ``_RELIABILITY_CTES``, shared by the
+    reliability diagram and the ECE summary: the score frame and one
+    10-bin hash aggregate."""
+    s = _reliability_score_frame(spark, sf_dir)
     b = s.select(
         F.least(F.expr("sm div 100000"), F.lit(9)).cast("int").alias("bin"),
         "pos",
@@ -1071,30 +1088,11 @@ def expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mcnemar_oracle() -> str:
-    from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
-        _AS_ERFC_POLY,
-    )
-    from flink_realtime_sessionize_sample_spark.plans.llm_queries import (
-        _CJK,
-        _langid_case,
-    )
-
-    case = _langid_case(
-        "men", "mde", "mfr", "mes", f"regexp_matches(text, '{_CJK}')"
-    )
     return (
         _NB_PRED_CTES
+        + _heldout_marker_ctes("doc_id, lang, text")
         + f"""
-, toks2 AS (
-  SELECT doc_id, lang, text, {_TOKS_D} AS t FROM documents WHERE doc_id % 2 = 1
-),
-hs AS (
-  SELECT doc_id, lang, text,
-         {T.marker_score_duck('t', 'en')} AS men, {T.marker_score_duck('t', 'de')} AS mde,
-         {T.marker_score_duck('t', 'fr')} AS mfr, {T.marker_score_duck('t', 'es')} AS mes
-  FROM toks2
-),
-heur AS (SELECT doc_id, (({case}) = lang)::INT AS hb FROM hs),
+heur AS (SELECT doc_id, (({_HEUR_LANG_D}) = lang)::INT AS hb FROM hs),
 pairs AS (
   SELECT p.doc_id, (p.pred_lang = p.true_lang)::INT AS nb, h.hb
   FROM pred p JOIN heur h USING (doc_id)
@@ -1146,37 +1144,13 @@ def mcnemar_nb_vs_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     polynomial text from the rounded z. Scale: both label pipelines are
     verified per-row plans; the pairing is ONE doc_id equi-join and one
     map-side-combined scalar aggregate."""
-    from flink_realtime_sessionize_sample_spark.plans.analytics_queries import (
-        _AS_ERFC_POLY,
-    )
-    from flink_realtime_sessionize_sample_spark.plans.llm_queries import (
-        _CJK,
-        _langid_case,
-    )
-
     pred = _nb_prediction_frame(spark, sf_dir).select(
         "doc_id", (F.col("pred_lang") == F.col("true_lang")).cast("int").alias("nb")
     )
-    docs = load_table(spark, sf_dir, "documents")
-    hs = (
-        docs.filter(F.col("doc_id") % 2 == 1)
-        .withColumn("t", F.expr(_TOKS_S))
-        .select(
-            "doc_id",
-            "lang",
-            "text",
-            F.expr(T.marker_score_spark("t", "en")).alias("men"),
-            F.expr(T.marker_score_spark("t", "de")).alias("mde"),
-            F.expr(T.marker_score_spark("t", "fr")).alias("mfr"),
-            F.expr(T.marker_score_spark("t", "es")).alias("mes"),
-        )
-    )
+    hs = _heldout_marker_scores(spark, sf_dir, "doc_id", "lang", "text")
     heur = hs.select(
         "doc_id",
-        (
-            F.expr(_langid_case("men", "mde", "mfr", "mes", f"text rlike '{_CJK}'"))
-            == F.col("lang")
-        )
+        (F.expr(_HEUR_LANG_S) == F.col("lang"))
         .cast("int")
         .alias("hb"),
     )
@@ -1198,9 +1172,7 @@ def mcnemar_nb_vs_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(0.0)
         ),
     )
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     pv = F.round(F.expr(_AS_ERFC_POLY), 6) + F.lit(0.0)
     return xt.select(
         "n_docs",

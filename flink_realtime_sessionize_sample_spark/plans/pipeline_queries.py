@@ -16,11 +16,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_realtime_sessionize_sample_spark.functions import text as T
+from flink_realtime_sessionize_sample_spark.plans.llm_queries import _TOKS_D, _TOKS_S
 from flink_realtime_sessionize_sample_spark.plans.registry import query
 from flink_realtime_sessionize_sample_spark.sources.registry import load_table
-
-_TOKS_D = T.tokens_duck("text")
-_TOKS_S = T.tokens_spark("text")
 
 # --- deterministic stratified sampling ------------------------------------
 

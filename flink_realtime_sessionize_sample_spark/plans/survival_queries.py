@@ -21,14 +21,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_realtime_sessionize_sample_spark.functions import text as T
 from flink_realtime_sessionize_sample_spark.operators.global_order import (
     with_global_rank,
 )
 from flink_realtime_sessionize_sample_spark.operators.mat import materialize
 from flink_realtime_sessionize_sample_spark.operators.sessionize import GAP_SECONDS
-from flink_realtime_sessionize_sample_spark.plans.analytics_queries import _AS_ERFC_POLY
+from flink_realtime_sessionize_sample_spark.plans.analytics_queries import _AS_ERFC_POLY, with_erfc_args
 from flink_realtime_sessionize_sample_spark.plans.hypothesis_test_queries import (
+    _USER_ARM_DUCK,
+    _USER_ARM_SPARK,
     _fdiv_duck,
     _fdiv_spark,
     _pmod_duck,
@@ -232,12 +233,9 @@ def _risk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _km_oracle() -> str:
-    return (
-        _surv_obs_cte()
-        + f""",
-{_RISK_CTES},
-death AS (
+# The Kaplan-Meier product and its readout over a ``risk`` (t, d, n_risk)
+# CTE, shared by the session-lifetime and the return-time estimators.
+_KM_TAIL = f"""death AS (
   SELECT t, CAST(n_risk AS BIGINT) AS n_risk, d, {_KM_FACTOR_E6} AS f_e6,
          CASE WHEN n_risk <= d THEN 1 ELSE 0 END AS zflag
   FROM risk WHERE d > 0
@@ -251,6 +249,14 @@ cum AS (
 SELECT t AS t_sec, n_risk, d AS n_events, {_KM_SURV} AS survival
 FROM cum
 """
+
+
+def _km_oracle() -> str:
+    return (
+        _surv_obs_cte()
+        + f""",
+{_RISK_CTES},
+{_KM_TAIL}"""
     )
 
 
@@ -325,24 +331,45 @@ _LR_Z = (
 )
 
 
+# Per duration t: removals and deaths, overall and in arm 1.
+_TWO_ARM_BYTIME_CTE = """bytime AS (
+  SELECT t, count(*)::BIGINT AS removed,
+         CAST(sum(g) AS BIGINT) AS removed1,
+         CAST(sum(CASE WHEN censored THEN 0 ELSE 1 END) AS BIGINT) AS d,
+         CAST(sum(CASE WHEN censored THEN 0 ELSE g END) AS BIGINT) AS d1
+  FROM obs GROUP BY t
+)"""
+
+
+def _two_arm_bytime(obs: DataFrame, *keys: str) -> DataFrame:
+    """Spark twin of ``_TWO_ARM_BYTIME_CTE`` per (``keys``, t). The frame
+    is bounded (<= 43201 durations per key by the 12-h cap) and
+    checkpointed: the sessionize kernel runs once, and the arm totals
+    derive from it (every observation leaves the risk set exactly once)
+    instead of from a second pass over the corpus-sized observation
+    frame."""
+    bytime = obs.groupBy(*keys, "t").agg(
+        F.count(F.lit(1)).cast("long").alias("removed"),
+        F.sum("g").cast("long").alias("removed1"),
+        F.sum(F.when(F.col("censored"), 0).otherwise(1)).cast("long").alias("d"),
+        F.sum(F.when(F.col("censored"), 0).otherwise(F.col("g")))
+        .cast("long")
+        .alias("d1"),
+    )
+    return materialize(bytime)
+
+
 def _lr_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     return (
-        _surv_obs_cte(f"{arm} % 2 AS g")
+        _surv_obs_cte(f"{_USER_ARM_DUCK} AS g")
         + f""",
 tot AS (
   SELECT count(*)::BIGINT AS n_all,
          CAST(sum(g) AS BIGINT) AS n_arm1
   FROM obs
 ),
-bytime AS (
-  SELECT t, count(*)::BIGINT AS removed,
-         CAST(sum(g) AS BIGINT) AS removed1,
-         CAST(sum(CASE WHEN censored THEN 0 ELSE 1 END) AS BIGINT) AS d,
-         CAST(sum(CASE WHEN censored THEN 0 ELSE g END) AS BIGINT) AS d1
-  FROM obs GROUP BY t
-),
+{_TWO_ARM_BYTIME_CTE},
 risk AS (
   SELECT t, d, d1,
          n_all - coalesce(sum(removed) OVER w, 0) AS nr,
@@ -395,23 +422,10 @@ def logrank_test_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame
     corpus size) so the risk-set windows ride the documented
     bounded-global-window pattern; one scalar reduce ends it."""
     poly = _AS_ERFC_POLY
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
     obs = _session_obs(spark, sf_dir).select(
-        "t", "censored", arm.alias("g")
+        "t", "censored", F.expr(_USER_ARM_SPARK).alias("g")
     )
-    bytime = obs.groupBy("t").agg(
-        F.count(F.lit(1)).cast("long").alias("removed"),
-        F.sum("g").cast("long").alias("removed1"),
-        F.sum(F.when(F.col("censored"), 0).otherwise(1)).cast("long").alias("d"),
-        F.sum(F.when(F.col("censored"), 0).otherwise(F.col("g")))
-        .cast("long")
-        .alias("d1"),
-    )
-    # ONE sessionize execution: the bounded per-time frame (<= 43201
-    # rows) is checkpointed, and the arm totals derive from it (every
-    # observation leaves the risk set exactly once) instead of from a
-    # second pass over the corpus-sized observation frame.
-    bytime = materialize(bytime)
+    bytime = _two_arm_bytime(obs)
     tot = bytime.agg(
         F.sum("removed").cast("long").alias("n_all"),
         F.sum("removed1").cast("long").alias("n_arm1"),
@@ -440,9 +454,7 @@ def logrank_test_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.round(F.col("e_e9") / 1e9, 6) + F.lit(0.0)).alias("e1"),
         F.expr(_LR_Z).alias("z_stat"),
     )
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         "n_death_times",
         "o1",
@@ -592,20 +604,7 @@ risk AS (
              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
   FROM bytime CROSS JOIN tot
 ),
-death AS (
-  SELECT t, CAST(n_risk AS BIGINT) AS n_risk, d, {_KM_FACTOR_E6} AS f_e6,
-         CASE WHEN n_risk <= d THEN 1 ELSE 0 END AS zflag
-  FROM risk WHERE d > 0
-),
-cum AS (
-  SELECT t, n_risk, d,
-         CAST(sum(f_e6) OVER w AS BIGINT) AS cum_e6,
-         CAST(sum(zflag) OVER w AS BIGINT) AS zcum
-  FROM death WINDOW w AS (ORDER BY t ROWS UNBOUNDED PRECEDING)
-)
-SELECT t AS t_sec, n_risk, d AS n_events, {_KM_SURV} AS survival
-FROM cum
-"""
+{_KM_TAIL}"""
     )
 
 
@@ -734,11 +733,10 @@ def intersession_return_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _slr_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     return (
         _surv_obs_cte(
-            f"{arm} % 2 AS g",
+            f"{_USER_ARM_DUCK} AS g",
             f"{_pmod_duck(_fdiv_duck('last_sec - dur', 21600), 4)} AS st",
         )
         + f""",
@@ -826,23 +824,11 @@ def stratified_logrank_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-stratum totals, the PARTITIONED cumulative window (no
     unpartitioned WindowExec: the stratum key partitions it), and the
     scalar pooled reduce."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
     stratum = F.expr(f"pmod({_fdiv_spark('last_sec - dur', 21600)}, 4)")
     obs = _session_obs(spark, sf_dir, stratum.alias("st")).select(
-        "t", "censored", arm.alias("g"), "st"
+        "t", "censored", F.expr(_USER_ARM_SPARK).alias("g"), "st"
     )
-    bytime = obs.groupBy("st", "t").agg(
-        F.count(F.lit(1)).cast("long").alias("removed"),
-        F.sum("g").cast("long").alias("removed1"),
-        F.sum(F.when(F.col("censored"), 0).otherwise(1)).cast("long").alias("d"),
-        F.sum(F.when(F.col("censored"), 0).otherwise(F.col("g")))
-        .cast("long")
-        .alias("d1"),
-    )
-    # Bounded (stratum x duration) frame, <= 4 x 43201 rows by the 12-h
-    # cap; checkpointed so the sessionize kernel runs once under every
-    # config (the KM/logrank round-10 debt-1c pattern).
-    bytime = materialize(bytime)
+    bytime = _two_arm_bytime(obs, "st")
     tot = bytime.groupBy("st").agg(
         F.sum("removed").cast("long").alias("n_all"),
         F.sum("removed1").cast("long").alias("n_arm1"),
@@ -878,11 +864,7 @@ def stratified_logrank_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(F.col("e_e9") / 1e9, 6) + F.lit(0.0)).alias("e1"),
         F.expr(_LR_Z).alias("z_stat"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_strata",
@@ -1011,11 +993,10 @@ _RMST_Z = (
 
 
 def _rmst_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     tau = _RMST_TAU
     return (
-        _surv_obs_cte(f"{arm} % 2 AS g")
+        _surv_obs_cte(f"{_USER_ARM_DUCK} AS g")
         + f""",
 bytime AS (
   SELECT g, t, count(*)::BIGINT AS removed,
@@ -1137,10 +1118,9 @@ def rmst_survival_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 12-h cap — which is checkpointed and feeds per-arm totals and
     all four PARTITIONED windows (risk, cumulative, lead, suffix area);
     the pivot and readout are scalar."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
     tau = _RMST_TAU
     obs = _session_obs(spark, sf_dir).select(
-        arm.alias("g"), "t", "censored"
+        F.expr(_USER_ARM_SPARK).alias("g"), "t", "censored"
     )
     bytime = obs.groupBy("g", "t").agg(
         F.count(F.lit(1)).cast("long").alias("removed"),
@@ -1256,11 +1236,7 @@ def rmst_survival_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v0_e6"),
         F.col("v1_e6"),
     )
-    xt = zz.withColumn(
-        "_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))
-    ).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     poly = _AS_ERFC_POLY
     return xt.select(
         "n_sessions0",
@@ -1323,7 +1299,6 @@ _WLR_W = {"lr": "1e0", "ge": "(1e0 * nr) / n_all", "tw": "sqrt((1e0 * nr) / n_al
 
 
 def _wlr_oracle() -> str:
-    arm = T.h48_duck("user_id::VARCHAR")
     poly = _AS_ERFC_POLY
     term_cols = ",\n         ".join(
         f"CAST(sum({_wlr_num_e9(w)}) AS BIGINT) AS num_{s},"
@@ -1345,15 +1320,9 @@ def _wlr_oracle() -> str:
         for sfx in _WLR_W
     )
     return (
-        _surv_obs_cte(f"{arm} % 2 AS g")
+        _surv_obs_cte(f"{_USER_ARM_DUCK} AS g")
         + f""",
-bytime AS (
-  SELECT t, count(*)::BIGINT AS removed,
-         CAST(sum(g) AS BIGINT) AS removed1,
-         CAST(sum(CASE WHEN censored THEN 0 ELSE 1 END) AS BIGINT) AS d,
-         CAST(sum(CASE WHEN censored THEN 0 ELSE g END) AS BIGINT) AS d1
-  FROM obs GROUP BY t
-),
+{_TWO_ARM_BYTIME_CTE},
 tot AS (
   SELECT CAST(sum(removed) AS BIGINT) AS n_all,
          CAST(sum(removed1) AS BIGINT) AS n_arm1
@@ -1407,19 +1376,10 @@ def weighted_logrank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, the bounded (<= 43201-row) per-time frame checkpointed,
     risk sets on the documented bounded-global-window pattern, one
     scalar reduce emitting all six statistics."""
-    arm = F.expr(f"pmod({T.h48_spark('cast(user_id as string)')}, 2)")
-    obs = _session_obs(spark, sf_dir).select("t", "censored", arm.alias("g"))
-    bytime = obs.groupBy("t").agg(
-        F.count(F.lit(1)).cast("long").alias("removed"),
-        F.sum("g").cast("long").alias("removed1"),
-        F.sum(F.when(F.col("censored"), 0).otherwise(1)).cast("long").alias("d"),
-        F.sum(F.when(F.col("censored"), 0).otherwise(F.col("g")))
-        .cast("long")
-        .alias("d1"),
+    obs = _session_obs(spark, sf_dir).select(
+        "t", "censored", F.expr(_USER_ARM_SPARK).alias("g")
     )
-    # ONE sessionize execution feeding totals + risk windows (the
-    # registered test's checkpoint discipline).
-    bytime = materialize(bytime)
+    bytime = _two_arm_bytime(obs)
     tot = bytime.agg(
         F.sum("removed").cast("long").alias("n_all"),
         F.sum("removed1").cast("long").alias("n_arm1"),
@@ -1514,6 +1474,29 @@ _HR_DUCK = f"{_pmod_duck(_fdiv_duck('st', 3600), 24)} AS hr"
 _HR_SPARK = f"pmod({_fdiv_spark('st', 3600)}, 24)"
 
 
+# DuckDB twin of ``_cox_terms``: ``bytime`` -> ``tot``, ``risk``, ``terms``.
+_CX_TERMS_CTES = f"""tot AS (
+  SELECT sum(removed)::BIGINT AS n_all, sum(rx)::BIGINT AS sx_all,
+         sum(rx2)::BIGINT AS sx2_all
+  FROM bytime
+),
+risk AS (
+  SELECT t, d, dx,
+         n_all - coalesce(sum(removed) OVER w, 0) AS nr,
+         sx_all - coalesce(sum(rx) OVER w, 0) AS sxr,
+         sx2_all - coalesce(sum(rx2) OVER w, 0) AS sx2r
+  FROM bytime CROSS JOIN tot
+  WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+),
+terms AS (
+  SELECT CAST(sum(dx) AS BIGINT) AS o,
+         CAST(sum({_CX_E_E9}) AS BIGINT) AS e_e9,
+         CAST(sum({_CX_V_E9}) AS BIGINT) AS v_e9,
+         count(*)::BIGINT AS n_death_times
+  FROM risk WHERE d > 0 AND nr > 0
+)"""
+
+
 def _cox_terms(bytime: DataFrame) -> DataFrame:
     """Score-test reduction over a per-death-time moment frame
     (t, removed, rx, rx2, d, dx) — returns the 1-row (n_death_times, o,
@@ -1556,9 +1539,7 @@ def _cox_readout(terms: DataFrame, o_name: str, e_name: str) -> DataFrame:
         (F.round(F.col("e_e9") / 1e9, 6) + F.lit(0.0)).alias(e_name),
         F.expr(_CX_Z).alias("z_stat"),
     )
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.select(
         "n_death_times",
         o_name,
@@ -1584,26 +1565,7 @@ bytime AS (
          CAST(sum(CASE WHEN censored THEN 0 ELSE hr END) AS BIGINT) AS dx
   FROM obs GROUP BY t
 ),
-tot AS (
-  SELECT sum(removed)::BIGINT AS n_all, sum(rx)::BIGINT AS sx_all,
-         sum(rx2)::BIGINT AS sx2_all
-  FROM bytime
-),
-risk AS (
-  SELECT t, d, dx,
-         n_all - coalesce(sum(removed) OVER w, 0) AS nr,
-         sx_all - coalesce(sum(rx) OVER w, 0) AS sxr,
-         sx2_all - coalesce(sum(rx2) OVER w, 0) AS sx2r
-  FROM bytime CROSS JOIN tot
-  WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-terms AS (
-  SELECT CAST(sum(dx) AS BIGINT) AS o,
-         CAST(sum({_CX_E_E9}) AS BIGINT) AS e_e9,
-         CAST(sum({_CX_V_E9}) AS BIGINT) AS v_e9,
-         count(*)::BIGINT AS n_death_times
-  FROM risk WHERE d > 0 AND nr > 0
-),
+{_CX_TERMS_CTES},
 zz AS (
   SELECT n_death_times, o AS o_hours,
          round(e_e9 / 1e9, 6) + 0.0 AS e_hours, {_CX_Z} AS z_stat
@@ -1683,26 +1645,7 @@ bytime AS (
          CAST(sum(g * d_g) AS BIGINT) AS dx
   FROM grid GROUP BY t
 ),
-tot AS (
-  SELECT sum(removed)::BIGINT AS n_all, sum(rx)::BIGINT AS sx_all,
-         sum(rx2)::BIGINT AS sx2_all
-  FROM bytime
-),
-risk AS (
-  SELECT t, d, dx,
-         n_all - coalesce(sum(removed) OVER w, 0) AS nr,
-         sx_all - coalesce(sum(rx) OVER w, 0) AS sxr,
-         sx2_all - coalesce(sum(rx2) OVER w, 0) AS sx2r
-  FROM bytime CROSS JOIN tot
-  WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-),
-terms AS (
-  SELECT CAST(sum(dx) AS BIGINT) AS o,
-         CAST(sum({_CX_E_E9}) AS BIGINT) AS e_e9,
-         CAST(sum({_CX_V_E9}) AS BIGINT) AS v_e9,
-         count(*)::BIGINT AS n_death_times
-  FROM risk WHERE d > 0 AND nr > 0
-),
+{_CX_TERMS_CTES},
 btot AS (SELECT g, sum(removed_g)::BIGINT AS n_g FROM grid GROUP BY g),
 dense AS (
   -- DENSIFY: a band with no removal at a death time still sits in the
@@ -1876,9 +1819,7 @@ def mantel_logrank_trend_tod(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     poly = _AS_ERFC_POLY
     zz = terms.select("n_death_times", F.expr(_CX_Z).alias("z_stat"))
-    xt = zz.withColumn("_x", F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))).withColumn(
-        "_t", 1 / (1 + 0.3275911 * (F.abs(F.col("z_stat")) / F.sqrt(F.lit(2.0))))
-    )
+    xt = with_erfc_args(zz)
     return xt.crossJoin(F.broadcast(piv)).select(
         "n_death_times",
         "o_b0",
